@@ -673,6 +673,13 @@ case class PqDecode(child: Expression,
   * corpus-fraction-scale path that made the former interpreted UDF the
   * worst remaining per-row cost at volume. Accumulation is in-order
   * double sum, bit-identical to the UDF it replaces.
+  *
+  * Both inputs may declare null elements (`searchAdc` builds its LUT
+  * through a UDF and reads codes from parquet), so the types are not
+  * rejected at analysis. A null LUT row, a null LUT entry or a null
+  * code element instead fails the row with an
+  * IllegalArgumentException, in both the interpreted and the codegen
+  * path; reading it would silently score 0.
   */
 case class PqAdcScore(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -691,7 +698,12 @@ case class PqAdcScore(left: Expression, right: Expression)
     val codes = r.asInstanceOf[ArrayData]
     var acc = 0.0; var s = 0
     while (s < codes.numElements()) {
-      acc += lut.getArray(s).getDouble(codes.getByte(s) & 0xff)
+      if (codes.isNullAt(s) || lut.isNullAt(s))
+        throw PqAdcScore.nullInput(s)
+      val row = lut.getArray(s)
+      val c = codes.getByte(s) & 0xff
+      if (row.isNullAt(c)) throw PqAdcScore.nullInput(s)
+      acc += row.getDouble(c)
       s += 1
     }
     acc
@@ -699,18 +711,35 @@ case class PqAdcScore(left: Expression, right: Expression)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (lut, codes) => {
       val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-      val s = ctx.freshName("s")
+      val s = ctx.freshName("s"); val row = ctx.freshName("row")
+      val c = ctx.freshName("c")
+      val fail = s"throw graft.functions.PqAdcScore.nullInput($s);"
       s"""
          |int $n = $codes.numElements();
          |double $acc = 0.0;
          |for (int $s = 0; $s < $n; $s++) {
-         |  $acc += $lut.getArray($s).getDouble($codes.getByte($s) & 0xff);
+         |  if ($codes.isNullAt($s) || $lut.isNullAt($s)) $fail
+         |  org.apache.spark.sql.catalyst.util.ArrayData $row =
+         |    $lut.getArray($s);
+         |  int $c = $codes.getByte($s) & 0xff;
+         |  if ($row.isNullAt($c)) $fail
+         |  $acc += $row.getDouble($c);
          |}
          |${ev.value} = $acc;
          |""".stripMargin
     })
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
+}
+
+object PqAdcScore {
+  /** The error for a null LUT row, LUT entry or code element at split
+    * `s`; called from generated code too.
+    */
+  def nullInput(s: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"pq_adc_score: null LUT row, LUT entry or code element at split " +
+        s"$s; PQ codes and lookup tables must be complete")
 }
 
 /** Residual-quantization encode: per level, the integer-grid argmin

@@ -86,11 +86,37 @@ import graft.operators.Knn
   * get 401 + `WWW-Authenticate`. Credential compare is constant-time.
   * `maxBodyBytes` bounds declared request bodies (413 past it) — the
   * reference's request-size limit (`mod.rs:153-157`).
+  *
+  * Concurrency: requests run on a fixed pool of one thread per core
+  * (the reference serves on a multi-worker actix server,
+  * `http_server/search.rs:87-126`). Searches overlap: every GET route
+  * and the four search routes (`search`, `search_text`,
+  * `search_sparse`, `search_hybrid`) share a read lock. Every other
+  * route (index builds, compaction, deletes, inserts, summaries,
+  * capture) takes the write lock, so it runs alone: it waits for the
+  * searches in flight, and searches that arrive after it wait for it.
+  * A search therefore sees an index either wholly before or wholly
+  * after a write. [[stop]] shuts the pool down.
   */
 class HttpApi(spark: SparkSession, port: Int = 0,
     auth: Option[(String, String)] = None,
     maxBodyBytes: Long = 32L * 1024 * 1024) {
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+
+  // the concurrency model of the class doc; the lock is fair, so a
+  // waiting write is not starved by a steady stream of searches
+  private val routeLock =
+    new java.util.concurrent.locks.ReentrantReadWriteLock(true)
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(
+    Runtime.getRuntime.availableProcessors(), {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      (r: Runnable) => {
+        val t = new Thread(r,
+          s"graft-http-${server.getAddress.getPort}-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }
+    })
 
   /** Minimal OpenAPI 3 skeleton: one entry per route (summaries only —
     * parameter schemas live in the class scaladoc). Served at `/` and
@@ -369,6 +395,13 @@ class HttpApi(spark: SparkSession, port: Int = 0,
     out.toString
   }
 
+  // the "k" of the four search routes: 10 when absent, -1 (a 400 at the
+  // route) when malformed, so callers only check k >= 1
+  private def parseK(body: String): Int =
+    jsonField(body, "k")
+      .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
+      .getOrElse(10)
+
   // shared by /search and /search_hybrid: explicit "vector" wins,
   // else "text" embedded with the (default hash/bow-64) model
   private def resolveQueryVector(body: String): Option[Array[Float]] =
@@ -445,10 +478,30 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         s"""{"error":"request body exceeds $maxBodyBytes bytes"}""")
       return
     }
-    val path = ex.getRequestURI.getPath.stripSuffix("/")
     val method = ex.getRequestMethod
-    val parts = path.split("/").filter(_.nonEmpty)
-    (method, parts.toList) match {
+    val parts = ex.getRequestURI.getPath.stripSuffix("/").split("/")
+      .filter(_.nonEmpty).toList
+    val lock = parts match {
+      case _ if method == "GET" => routeLock.readLock()
+      case List("collections", _, r) if method == "POST" &&
+          searchRoutes(r) => routeLock.readLock()
+      case _ => routeLock.writeLock()
+    }
+    lock.lock()
+    try route(ex, method, parts) finally lock.unlock()
+  } catch {
+    case e: Throwable =>
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+      respond(ex, 500,
+        s"""{"error":"${graft.util.Json.escape(msg)}"}""")
+  }
+
+  private val searchRoutes =
+    Set("search", "search_text", "search_sparse", "search_hybrid")
+
+  private def route(ex: HttpExchange, method: String,
+      parts: List[String]): Unit =
+    (method, parts) match {
       // machine-readable API doc (the reference serves Swagger at its
       // root, http_server/mod.rs:77-106): a minimal OpenAPI 3 skeleton
       // enumerating every route, enough for client generation/discovery
@@ -1284,15 +1337,16 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         tableOr404(ex, name).foreach { df =>
           val body = new String(ex.getRequestBody.readAllBytes(),
             StandardCharsets.UTF_8)
-          val k = jsonField(body, "k").map(_.toDouble.toInt).getOrElse(10)
+          val k = parseK(body)
           val textCol = jsonField(body, "text_column").getOrElse("text")
           val idCol = jsonField(body, "id_column").getOrElse("doc_id")
           val q = jsonField(body, "query").getOrElse("")
           val words = q.split("\\s+").filter(_.nonEmpty).distinct.toSeq
-          if (words.isEmpty || !validIdent(textCol) || !validIdent(idCol) ||
+          if (words.isEmpty || k < 1 ||
+              !validIdent(textCol) || !validIdent(idCol) ||
               !df.columns.contains(textCol) || !df.columns.contains(idCol))
             respond(ex, 400,
-              """{"error":"need \"query\" and valid id/text columns"}""")
+              """{"error":"need \"query\", positive \"k\" and valid id/text columns"}""")
           else {
             val res = graft.operators.TextSearch
               .bm25TopK(df, idCol, textCol, words, k)
@@ -1312,9 +1366,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         tableOr404(ex, name).foreach { df =>
           val body = new String(ex.getRequestBody.readAllBytes(),
             StandardCharsets.UTF_8)
-          val k = jsonField(body, "k")
-            .map(v => scala.util.Try(v.toDouble.toInt).getOrElse(-1))
-            .getOrElse(10)
+          val k = parseK(body)
           val textCol = jsonField(body, "text_column").getOrElse("text")
           val idCol = jsonField(body, "id_column").getOrElse("doc_id")
           val q = jsonField(body, "query").getOrElse("")
@@ -1342,7 +1394,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         tableOr404(ex, name).foreach { df =>
           val body = new String(ex.getRequestBody.readAllBytes(),
             StandardCharsets.UTF_8)
-          val k = jsonField(body, "k").map(_.toDouble.toInt).getOrElse(10)
+          val k = parseK(body)
           val textCol = jsonField(body, "text_column").getOrElse("text")
           val idCol = jsonField(body, "id_column").getOrElse("doc_id")
           val vecCol = jsonField(body, "vector_column")
@@ -1360,7 +1412,8 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               validIdent(vecCol) && validIdent(vecIdCol) &&
               df.columns.contains(textCol) && df.columns.contains(idCol) &&
               vdf.columns.contains(vecCol) && vdf.columns.contains(vecIdCol)
-            (words.nonEmpty && colsOk, resolveQueryVector(body)) match {
+            (words.nonEmpty && colsOk && k >= 1,
+                resolveQueryVector(body)) match {
               case (true, Some(v)) =>
                 import spark.implicits._
                 val qv = Seq(v).toDF("qv")
@@ -1376,7 +1429,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                 respond(ex, 200, s"""{"results":$items}""")
               case _ =>
                 respond(ex, 400,
-                  """{"error":"need \"query\", \"vector\" (or \"text\"), and valid columns on both collections"}""")
+                  """{"error":"need \"query\", \"vector\" (or \"text\"), positive \"k\", and valid columns on both collections"}""")
             }
           }
         }
@@ -1385,9 +1438,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         tableOr404(ex, name).foreach { df =>
           val body = new String(ex.getRequestBody.readAllBytes(),
             StandardCharsets.UTF_8)
-          val k = jsonField(body, "k")
-            .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
-            .getOrElse(10)
+          val k = parseK(body)
           val vecCol = jsonField(body, "vector_column")
             .getOrElse("embedding")
           val idCol = jsonField(body, "id_column").getOrElse("vec_id")
@@ -1559,10 +1610,15 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                         Knn.topK(pred.foldLeft(df)(_.where(_)), queries,
                           idCol, vecCol, math.max(4 * k, 20), metric)
                     }
+                    // k rows with distinct ranks: sort them here, not
+                    // with a Spark sort (a sampling job and a stage)
                     graft.operators.Knn.mmrRerank(wide, df, idCol,
                         vecCol, l, k)
-                      .orderBy(col("mmr_rank")).collect()
-                  case None => ranked.orderBy(col("rank")).collect()
+                      .collect()
+                      .sortBy(r => r.getInt(r.fieldIndex("mmr_rank")))
+                  case None =>
+                    ranked.collect()
+                      .sortBy(r => r.getInt(r.fieldIndex("rank")))
                 }
                 val items = res.map { r =>
                   val id = r.get(1) match {
@@ -2384,19 +2440,21 @@ class HttpApi(spark: SparkSession, port: Int = 0,
 
       case _ => respond(ex, 404, """{"error":"not found"}""")
     }
-  } catch {
-    case e: Throwable =>
-      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-      respond(ex, 500,
-        s"""{"error":"${graft.util.Json.escape(msg)}"}""")
-  }
 
   def start(): HttpApi = {
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(null)
+    server.setExecutor(pool)
     server.start()
     this
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stop accepting requests, let in-flight handlers finish (up to 30 s,
+    * then interrupt them), and shut the handler pool down.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS))
+      pool.shutdownNow()
+  }
 }

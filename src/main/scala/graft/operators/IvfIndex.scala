@@ -385,6 +385,10 @@ object IvfIndex {
     n
   }
 
+  /** The index's data files, sorted by path: listing order is up to the
+    * filesystem, and [[merge]] numbers its staged files by position, so
+    * a retried merge must see the same order to overwrite its own files.
+    */
   private def listPartFiles(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
     val out = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]()
@@ -397,7 +401,7 @@ object IvfIndex {
           !name.startsWith("_") && !name.startsWith("."))
         out += f.getPath
     }
-    out.toSeq
+    out.toSeq.sortBy(_.toString)
   }
 
   /** Rewrite an index whose cells have accumulated many small files —
@@ -636,41 +640,81 @@ object IvfIndex {
     Model(cents, assigned, idCol, vecCol, path)
   }
 
-  /** Restrict a cell-partitioned corpus to the cells a probe set
-    * touches. The distinct probed-cell list is bounded by nCells (a
-    * model PARAMETER, not a data-scale quantity), so collecting it to
-    * drive a partition-pruning IN filter is safe at any corpus size.
+  /** Restrict a cell-partitioned corpus to the cells a probe plan
+    * touches. The cell list is bounded by nCells (a model PARAMETER,
+    * not a data-scale quantity), so an IN filter over it is safe at any
+    * corpus size; it reaches the scan as a PartitionFilter.
     */
   private def pruneToProbedCells(corpus: DataFrame,
-      probes: DataFrame): DataFrame = {
-    val cells = probes.select(col("cell_id")).distinct()
-      .collect().map(_.getInt(0))
-    corpus.where(col("cell_id").isin(cells.map(Int.box).toSeq: _*))
-  }
+      cells: Seq[Int]): DataFrame =
+    corpus.where(col("cell_id").isin(cells.map(Int.box): _*))
 
-  /** Cells each query must probe: the nprobe nearest centroids. Small
-    * (|queries| x nprobe rows) → broadcast into the candidate join.
+  /** One query batch's probe plan: the probe rows (qid, qvec, cell_id)
+    * as a driver-local relation, and the sorted distinct cells they
+    * touch.
+    */
+  private case class ProbePlan(rows: DataFrame, cells: Seq[Int])
+
+  /** Plan the probes on the driver: each query's nprobe nearest
+    * centroids, ranked by the double sum of squared float differences
+    * and tie-broken by the lower cell index.
+    *
+    * Jobs: the query rows are collected once. A local query batch (a
+    * `LocalRelation`, e.g. `Seq(...).toDF` or one HTTP request) collects
+    * without a Spark job; any other batch costs that one collect. The
+    * returned relation is local too, so building a search plan launches
+    * nothing else.
+    *
+    * Memory bound: the driver holds |queries| x nprobe probe rows, each
+    * carrying its query vector — the same table the candidate join's
+    * broadcast already materializes on the driver, so planning here
+    * adds no new bound.
     */
   private def probeCells(model: Model, queries: DataFrame,
-      nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val bc = spark.sparkContext.broadcast(model.centroids)
-    val probesU = udf((v: Seq[Float]) => {
-      val q = v.toArray
-      bc.value.zipWithIndex
-        .map { case (c, i) =>
-          var acc = 0.0; var d = 0
-          while (d < q.length) {
-            val x = q(d).toDouble - c(d); acc += x * x; d += 1
-          }
-          (acc, i)
-        }
-        .sortBy(identity).take(nprobe).map(_._2)
-    })
-    queries.select(col(model.idCol).cast("long").as("qid"),
-        col(model.vecCol).as("qvec"),
-        explode(probesU(col(model.vecCol))).as("cell_id"))
+      nprobe: Int): ProbePlan = {
+    val q = queries.select(col(model.idCol).cast("long").as("qid"),
+      col(model.vecCol).as("qvec"),
+      col(model.vecCol).cast("array<float>").as("qf"))
+    val dim = model.centroids.head.length
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    val cells = scala.collection.mutable.SortedSet[Int]()
+    q.collect().foreach { r =>
+      val qid = r.get(0)
+      if (r.isNullAt(2) || r.getSeq[Any](2).contains(null))
+        throw new IllegalArgumentException(
+          s"query qid=$qid has a null '${model.vecCol}' vector or a null " +
+            "element in it; IVF search needs a complete query vector")
+      val qf = r.getSeq[Float](2).toArray
+      if (qf.length != dim)
+        throw new IllegalArgumentException(
+          s"query qid=$qid has dimension ${qf.length}, the index " +
+            s"centroids have $dim")
+      nearestCells(model.centroids, qf, nprobe).foreach { c =>
+        rows.add(org.apache.spark.sql.Row(qid, r.get(1), c))
+        cells += c
+      }
+    }
+    val schema = org.apache.spark.sql.types.StructType(
+      q.schema.fields.take(2) :+ org.apache.spark.sql.types.StructField(
+        "cell_id", org.apache.spark.sql.types.IntegerType, nullable = false))
+    ProbePlan(queries.sparkSession.createDataFrame(rows, schema),
+      cells.toSeq)
   }
+
+  /** The nprobe nearest cells of one query vector, nearest first; ties
+    * in distance go to the lower cell index.
+    */
+  private def nearestCells(centroids: Array[Array[Float]],
+      q: Array[Float], nprobe: Int): Array[Int] =
+    centroids.zipWithIndex
+      .map { case (c, i) =>
+        var acc = 0.0; var d = 0
+        while (d < q.length) {
+          val x = q(d).toDouble - c(d); acc += x * x; d += 1
+        }
+        (acc, i)
+      }
+      .sortBy(identity).take(nprobe).map(_._2)
 
   /** ANN top-k: probe nprobe cells, exact distances within candidates,
     * bounded top-k aggregation. Same output shape as `Knn.topK`.
@@ -685,15 +729,13 @@ object IvfIndex {
   def search(model: Model, queries: DataFrame, k: Int, nprobe: Int,
       metric: String = "l2sq",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // probes are |queries| x nprobe rows — small enough that the one
-    // recomputation (pruning collect + join lineage) is cheaper than
-    // leaking a cached block per call
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0)
+    // probes are |queries| x nprobe rows, planned on the driver
+    val plan = probeCells(model, queries, nprobe)
+    val probes = broadcast(plan.rows)
     // cell_id IN (probed) reaches the scan as a PartitionFilter on the
     // cell-partitioned index — unprobed cells are never read
     val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         col(model.vecCol).as("cvec"))
@@ -734,10 +776,10 @@ object IvfIndex {
       nprobe: Int, metric: String = "l2sq",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(radius > 0, s"radius must be positive (got $radius)")
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0)
+    val plan = probeCells(model, queries, nprobe)
+    val probes = broadcast(plan.rows)
     val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         col(model.vecCol).as("cvec"))
@@ -765,8 +807,17 @@ object IvfIndex {
     */
   def searchAdc(model: Model, quantized: DataFrame, pqCol: String,
       codebook: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int, lutScale: Option[Double] = None): DataFrame = {
-    val spark = queries.sparkSession
+      nprobe: Int, lutScale: Option[Double] = None): DataFrame =
+    adcTopK(model, quantized, pqCol, codebook,
+      probeCells(model, queries, nprobe), k, lutScale)
+
+  /** [[searchAdc]] over an already planned probe set, so the refine
+    * path plans its probes once for both stages.
+    */
+  private def adcTopK(model: Model, quantized: DataFrame, pqCol: String,
+      codebook: DataFrame, plan: ProbePlan, k: Int,
+      lutScale: Option[Double]): DataFrame = {
+    val spark = plan.rows.sparkSession
     val cb = ProductQuantizer.localize(codebook)
     val cbBc = spark.sparkContext.broadcast(cb)
     val subdims = cb.map(_.head.length)
@@ -793,14 +844,13 @@ object IvfIndex {
         }.toSeq
       }.toSeq
     })
-    val probes0 = probeCells(model, queries, nprobe)
+    val probes = broadcast(plan.rows
       .withColumn("lut", lutU(col("qvec")))
-      .drop("qvec")
-    val probes = broadcast(probes0)
+      .drop("qvec"))
     // same storage-level pruning as `search`: quantized is a projection
     // over the cell-partitioned index, so the IN filter still pushes
     // down to the scan as a PartitionFilter
-    val corpus = pruneToProbedCells(quantized, probes0)
+    val corpus = pruneToProbedCells(quantized, plan.cells)
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"), col(pqCol).as("codes"))
     // codegen ADC table-sum (PqAdcScore): this runs once per
@@ -845,8 +895,9 @@ object IvfIndex {
       shortlist: Int, metric: String = "l2sq",
       lutScale: Option[Double] = None): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val pool = searchAdc(model, quantized, pqCol, codebook, queries,
-        shortlist, nprobe, lutScale)
+    val plan = probeCells(model, queries, nprobe)
+    val pool = adcTopK(model, quantized, pqCol, codebook, plan,
+        shortlist, lutScale)
       .select(col("qid"), col("nid"))
     val qv = queries.select(
       col(model.idCol).cast("long").as("qid"), col(model.vecCol).as("qvec"))
@@ -854,8 +905,7 @@ object IvfIndex {
     // float read can carry the same cell PartitionFilter as stage 1 —
     // without it the rescore would scan the float column of EVERY cell
     // and undo the nprobe/nCells read reduction the shortlist pass earns
-    val cv = pruneToProbedCells(model.assigned,
-        probeCells(model, queries, nprobe))
+    val cv = pruneToProbedCells(model.assigned, plan.cells)
       .select(
         col(model.idCol).cast("long").as("nid"), col(model.vecCol).as("cvec"))
     val exact = cv.join(broadcast(pool), "nid")
@@ -1022,13 +1072,13 @@ object IvfIndex {
     require(model.assigned.columns.contains("half"),
       s"index at ${model.indexPath} carries no 'half' column — build " +
         "it with buildF16WithCentroids")
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0
+    val plan = probeCells(model, queries, nprobe)
+    val probes = broadcast(plan.rows
       .withColumn("qdec", VectorFunctions.fp16_decode(
         VectorFunctions.fp16_encode(col("qvec"))))
       .drop("qvec"))
     val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         VectorFunctions.fp16_decode(col("half")).as("cdec"))
@@ -1067,15 +1117,15 @@ object IvfIndex {
     require(model.assigned.columns.contains("bits"),
       s"index at ${model.indexPath} carries no 'bits' column — build " +
         "it with buildBqWithCentroids")
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0
+    val plan = probeCells(model, queries, nprobe)
+    val probes = broadcast(plan.rows
       .withColumn("qbits", VectorFunctions.bq_encode(col("qvec")))
       .drop("qvec"))
     // bits-only projection: the float vector column must NOT appear in
     // this scan's ReadSchema (asserted in IvfSpec); a metadata filter
     // adds its own column to the scan but still never the floats
     val bitsScan = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"), col("bits"))
     val pool = bitsScan.join(probes, "cell_id")
@@ -1092,7 +1142,7 @@ object IvfIndex {
     // fetch-back is pruned by the SAME probe set as the bits scan —
     // this is what makes "floats solely for the shortlist" literal:
     // unprobed cells contribute neither bits pages nor float pages
-    val cv = pruneToProbedCells(model.assigned, probes0).select(
+    val cv = pruneToProbedCells(model.assigned, plan.cells).select(
       col(model.idCol).cast("long").as("nid"), col(model.vecCol).as("cvec"))
     val exact = cv.join(broadcast(pool), "nid")
       .join(broadcast(qv), "qid")
@@ -1286,10 +1336,10 @@ object IvfIndex {
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val qm = Model(model.centroids, model.assigned, model.idCol,
       queryVecCol, model.indexPath)
-    val probes0 = probeCells(qm, queries, nprobe)
-    val probes = broadcast(probes0)
+    val plan = probeCells(qm, queries, nprobe)
+    val probes = broadcast(plan.rows)
     val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         VectorFunctions.col(graft.functions.Sq8Decode(

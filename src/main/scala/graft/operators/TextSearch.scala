@@ -53,9 +53,22 @@ object TextSearch {
       .select(col(idCol).as("id"),
         explode(split(col(textCol), " ")).as("word"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (wordsMemo.size < 32) wordsMemo.put(key, (plan, built))
+    if (wordsMemo.size < 32) memoize(wordsMemo, key, (plan, built))
     built
   }
+
+  // Concurrent callers (the HTTP search routes overlap) can build the
+  // same entry twice; the entry this replaces would otherwise stay
+  // cached with nothing left to release it.
+  private def memoize[K](
+      memo: java.util.concurrent.ConcurrentHashMap[K,
+        (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+          DataFrame)],
+      key: K,
+      entry: (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+        DataFrame)): Unit =
+    Option(memo.put(key, entry)).filter(_._2 ne entry._2)
+      .foreach(_._2.unpersist())
 
   // The finished per-document score relation is also memoized (small:
   // one row per doc containing a query term): q_bm25-style ranking and
@@ -90,7 +103,7 @@ object TextSearch {
     val built = raw
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     built.count()
-    scoreMemo.put(key, (plan, built))
+    memoize(scoreMemo, key, (plan, built))
     built
   }
 

@@ -246,9 +246,12 @@ object IndexedKnnRule extends Rule[LogicalPlan] {
 
   /** Re-entrancy latch. [[searchPlan]] optimizes the probe subplan
     * (`queryExecution.optimizedPlan`), which runs this very rule on the
-    * inner plan; and `IvfIndex.search` launches a small bounded Spark
-    * job at plan time (centroid argmin over |queries| rows — bounded by
-    * nCells, a parameter, never data scale). The latch makes the inner
+    * inner plan. `IvfIndex.search` plans its probes on the driver at
+    * plan time: it collects the query rows and picks each query's
+    * nearest centroids (|queries| x nCells distances, bounded by a
+    * parameter, never data scale). The rewrite's query is a local
+    * relation, so that collect launches no Spark job; a non-local query
+    * batch would cost one collect job. The latch makes the inner
     * optimization a guaranteed no-op instead of relying on the probe
     * plan not matching the sort-limit shape.
     */

@@ -37,6 +37,42 @@ class QuantExpressionsSpec extends SparkSuite {
     assert(got.toSeq == want)
   }
 
+  test("PqAdcScore fails loudly on a null LUT row, LUT entry or code " +
+      "element, with whole-stage codegen on and off") {
+    val lutRow = "array(0.5D, 1.5D, 2.5D)"
+    // `id >= 0` keeps each input non-foldable, so it is evaluated in
+    // the query's projection rather than constant-folded at planning
+    def score(lut: String, codes: String): Array[Double] =
+      spark.range(2).select(V.col(PqAdcScore(
+        V.expr(expr(s"if(id >= 0, $lut, null)")),
+        V.expr(expr(s"if(id >= 0, cast($codes as array<tinyint>), null)")))))
+        .as[Double].collect()
+    val modes = Seq(
+      Map("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "FALLBACK"),
+      Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (mode <- modes) {
+      mode.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        // containsNull types with no null present still score
+        assert(score(s"array($lutRow, $lutRow)", "array(1, 2)").toSeq ===
+          Seq(4.0, 4.0), mode)
+        for ((lut, codes) <- Seq(
+            (s"array($lutRow, null)", "array(1, 2)"),
+            (s"array($lutRow, array(0.5D, 1.5D, null))", "array(1, 2)"),
+            (s"array($lutRow, $lutRow)", "array(1, null)"))) {
+          val e = intercept[Exception](score(lut, codes))
+          val root = Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).toSeq.last
+          assert(root.isInstanceOf[IllegalArgumentException] &&
+            root.getMessage.contains("pq_adc_score: null"),
+            s"$mode $lut $codes: $e")
+        }
+      } finally mode.keys.foreach(spark.conf.unset)
+    }
+  }
+
   test("PqDecode == the centroid-concat UDF it replaced (u8 wrap, " +
       "null propagation)") {
     val cb = new FloatCubeParam(

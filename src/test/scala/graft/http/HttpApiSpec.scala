@@ -1448,4 +1448,132 @@ class HttpApiSpec extends SparkSuite {
       assert(ok.body().contains("\"embeddings\""))
     } finally secured.stop()
   }
+
+  /** Send every body concurrently, one thread each, released together;
+    * returns the responses in body order.
+    */
+  private def postAll(path: String, bodies: Seq[String])
+      : Seq[HttpResponse[String]] = {
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      bodies.size)
+    try {
+      val futures = bodies.map(b => pool.submit(
+        (() => { go.await(); post(path, b) })
+          : java.util.concurrent.Callable[HttpResponse[String]]))
+      go.countDown()
+      futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+  }
+
+  private def concurrencyCollection(name: String): Unit = {
+    spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .createOrReplaceTempView(name)
+    assert(post(s"/collections/$name/index", """{"n_cells":8}""")
+      .statusCode() === 201)
+  }
+
+  private def vecBody(seed: Int, extra: String = ""): String = {
+    val r = new scala.util.Random(seed)
+    val vec = Seq.fill(64)(f"${r.nextFloat() * 0.2f}%.4f").mkString(",")
+    s"""{"vector":[$vec],"k":5,"nprobe":2$extra}"""
+  }
+
+  test("concurrent searches answer byte-identically to the same " +
+      "requests sent serially") {
+    concurrencyCollection("conc_vecs")
+    val bodies = Seq(vecBody(1), vecBody(2), vecBody(3), vecBody(4),
+      """{"text":"fast key order scan","model":"hash/bow-64","k":5}""",
+      """{"text":"table scan","k":4,"nprobe":3}""",
+      vecBody(5, ""","filter_column":"label","filter_value":"3""""),
+      vecBody(6, ""","filter_column":"label","filter_value":"1""""))
+    val serial = bodies.map(b => post("/collections/conc_vecs/search", b))
+    assert(serial.forall(_.statusCode() === 200),
+      serial.map(_.body()).mkString("\n"))
+    val parallel = postAll("/collections/conc_vecs/search", bodies)
+    assert(parallel.map(_.statusCode()) === serial.map(_.statusCode()))
+    assert(parallel.map(_.body()) === serial.map(_.body()))
+  }
+
+  test("a write route waits for in-flight searches: every search " +
+      "answers 200 against the old or the new index") {
+    concurrencyCollection("conc_write")
+    // the same rows without an index: its answers are what the
+    // collection serves once its index is dropped
+    spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .createOrReplaceTempView("conc_write_brute")
+    val bodies = (1 to 8).map(vecBody(_))
+    val indexed = bodies.map(b =>
+      post("/collections/conc_write/search", b).body())
+    val brute = bodies.map(b =>
+      post("/collections/conc_write_brute/search", b).body())
+
+    def searchesDuring(write: => HttpResponse[String])
+        : (HttpResponse[String], Seq[HttpResponse[String]]) = {
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+      try {
+        val searches = pool.submit(
+          (() => postAll("/collections/conc_write/search",
+            bodies ++ bodies))
+            : java.util.concurrent.Callable[Seq[HttpResponse[String]]])
+        Thread.sleep(50)
+        val w = write
+        (w, searches.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+    }
+
+    // compaction deletes the files a concurrent search would be reading
+    val (compact, during) = searchesDuring(
+      post("/collections/conc_write/compact", "{}"))
+    assert(compact.statusCode() === 200, compact.body())
+    assert(during.map(_.statusCode()).toSet === Set(200),
+      during.map(_.body()).mkString("\n"))
+    assert(during.map(_.body()) === indexed ++ indexed)
+
+    val (dropped, around) = searchesDuring(
+      delete("/collections/conc_write/index"))
+    assert(dropped.statusCode() === 200, dropped.body())
+    assert(around.map(_.statusCode()).toSet === Set(200),
+      around.map(_.body()).mkString("\n"))
+    around.zip(bodies.indices ++ bodies.indices).foreach { case (r, i) =>
+      assert(r.body() === indexed(i) || r.body() === brute(i),
+        s"request $i answered neither index: ${r.body()}")
+    }
+  }
+
+  test("stop() shuts the handler pool down: no pool thread stays alive") {
+    import scala.jdk.CollectionConverters._
+    val own = new HttpApi(spark).start()
+    val prefix = s"graft-http-${own.boundPort}-"
+    val threads = try {
+      val r = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${own.boundPort}/collections"))
+        .GET().build(), HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() === 200)
+      Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName.startsWith(prefix)).toSeq
+    } finally own.stop()
+    assert(threads.nonEmpty, "the request ran on no pool thread")
+    threads.foreach(_.join(10000))
+    assert(threads.forall(!_.isAlive),
+      s"alive after stop(): ${threads.filter(_.isAlive).map(_.getName)}")
+  }
+
+  test("search_text and search_hybrid answer 400 on a malformed or " +
+      "non-positive k") {
+    spark.read.parquet(s"$sf0001/documents.parquet")
+      .createOrReplaceTempView("docs_k_api")
+    val vec = (1 to 64).map(_ => "0.1").mkString(",")
+    for (k <- Seq("\"abc\"", "0", "-2")) {
+      val t = post("/collections/docs_k_api/search_text",
+        s"""{"query":"table scan","k":$k}""")
+      assert(t.statusCode() === 400, s"search_text k=$k: ${t.body()}")
+      val h = post("/collections/docs_k_api/search_hybrid",
+        s"""{"query":"table scan","vector":[$vec],"k":$k,""" +
+          """"vector_collection":"embeddings","vector_id_column":"vec_id"}""")
+      assert(h.statusCode() === 400, s"search_hybrid k=$k: ${h.body()}")
+    }
+    assert(post("/collections/docs_k_api/search_text",
+      """{"query":"table scan","k":2}""").statusCode() === 200)
+  }
 }

@@ -208,9 +208,37 @@ class IvfCompactSpec extends SparkSuite {
       "vec_id", "embedding", cents, Some(s"$tmp/dest"))
     IvfIndex.buildWithCentroids(emb.where($"vec_id" % 2 =!= 0),
       "vec_id", "embedding", cents, Some(s"$tmp/src"))
+    // staged files are numbered in the src files' path order: file i
+    // of the sorted src listing lands as part-merge-<tag>-i in the same
+    // cell dir, so a retry finds and overwrites its own names
+    def dataFiles(root: String): Seq[java.io.File] = {
+      import scala.jdk.CollectionConverters._
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try w.iterator().asScala.map(_.toFile)
+        .filter(f => f.isFile && f.getParentFile.getName
+          .startsWith("cell_id=") && !f.getName.startsWith(".") &&
+          !f.getName.startsWith("_"))
+        .toSeq.sortBy(_.getPath)
+      finally w.close()
+    }
+    def assertStagedOrder(): Unit = {
+      val staged = dataFiles(s"$tmp/dest").flatMap { f =>
+        "part-merge-[0-9a-f]+-(\\d+)\\.parquet".r
+          .findFirstMatchIn(f.getName).map(m => m.group(1).toInt -> f)
+      }.toMap
+      val src = dataFiles(s"$tmp/src")
+      assert(staged.keySet === src.indices.toSet)
+      src.zipWithIndex.foreach { case (f, i) =>
+        assert(staged(i).getParentFile.getName === f.getParentFile.getName)
+        assert(java.nio.file.Files.readAllBytes(staged(i).toPath)
+          .sameElements(java.nio.file.Files.readAllBytes(f.toPath)),
+          s"staged file $i is not src file ${f.getPath}")
+      }
+    }
     val m1 = IvfIndex.merge(spark, s"$tmp/dest", s"$tmp/src",
       "vec_id", "embedding")
     assert(m1.assigned.count() === emb.count())
+    assertStagedOrder()
     // a crashed-and-retried (or doubly-invoked) merge of the SAME src
     // must not duplicate rows: the tag derives from srcPath, so the
     // rerun overwrites its own part-merge files
@@ -218,6 +246,7 @@ class IvfCompactSpec extends SparkSuite {
       "vec_id", "embedding")
     assert(m2.assigned.count() === emb.count(),
       "re-merging the same src must overwrite, not duplicate")
+    assertStagedOrder()
     // a DIFFERENT src under the same quantizer still appends
     IvfIndex.buildWithCentroids(emb.where($"vec_id" % 2 =!= 0)
       .withColumn("vec_id", $"vec_id" + 1000000),

@@ -583,4 +583,70 @@ class IvfSpec extends SparkSuite {
       assert(!served.contains(0L), s"deleted id served: ${served.toSeq}")
     } finally graft.plans.IndexedKnn.unregister(spark, dataDir)
   }
+
+  /** Jobs started while `f` runs (the listener bus is async, so let it
+    * drain before reading the count).
+    */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = try f finally {
+      Thread.sleep(500)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    (out, jobs.get())
+  }
+
+  test("probe ties in centroid distance go to the lower cell index") {
+    val a = emb.where($"vec_id" === 0L).select($"embedding").collect()
+      .head.getSeq[Float](0).toArray
+    // cells 0 and 1 are the same centroid; cell 2 is far from every
+    // row, so the assignment (lower index on ties) fills cell 0 only
+    val cents = Array(a, a.clone(), a.map(_ + 1000f))
+    val tmp = java.nio.file.Files
+      .createTempDirectory("ivf_probe_ties").toString
+    val m = IvfIndex.buildWithCentroids(emb, "vec_id", "embedding", cents,
+      Some(s"$tmp/idx"))
+    assert(m.assigned.where($"cell_id" =!= 0).count() === 0L)
+    // nprobe 1 must probe cell 0: probing the empty twin would return
+    // nothing, so the result equals exact kNN
+    val exact = pairs(Knn.topK(emb, queries, "vec_id", "embedding", 5))
+    assert(pairs(IvfIndex.search(m, queries, k = 5, nprobe = 1)) === exact)
+  }
+
+  test("an array<double> query column still searches") {
+    val dq = queries.select($"vec_id",
+      $"embedding".cast("array<double>").as("embedding"))
+    assert(pairs(IvfIndex.search(model, dq, k = 10, nprobe = 4)) ===
+      pairs(IvfIndex.search(model, queries, k = 10, nprobe = 4)))
+  }
+
+  test("a search over a local query batch plans its probes without a " +
+      "Spark job") {
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(queries.collect(): _*), queries.schema)
+    model.assigned.schema // the lazy build runs before counting
+    val (res, planned) = jobsDuring(
+      IvfIndex.search(model, local, k = 10, nprobe = 4))
+    assert(planned === 0, "building the search plan launched Spark jobs")
+    val (rows, ran) = jobsDuring(res.collect())
+    assert(ran > 0, "the listener saw no job for the search itself")
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      pairs(IvfIndex.search(model, queries, k = 10, nprobe = 4)))
+  }
+
+  test("a null query vector fails with an IllegalArgumentException " +
+      "naming the qid") {
+    val bad = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(7L, null)),
+      queries.select($"vec_id", $"embedding").schema)
+    val e = intercept[IllegalArgumentException](
+      IvfIndex.search(model, bad, k = 3, nprobe = 2))
+    assert(e.getMessage.contains("qid=7"), e.getMessage)
+  }
 }
