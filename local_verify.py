@@ -8,6 +8,9 @@ floats). Reports per-query PASS/FAIL. Run while iterating so the driver's
 CORRECTNESS_r{N}.json holds no surprises.
 
 Usage: python3 local_verify.py [sf_dir] [out_dir] [--skip-spark]
+
+With SPARK_GRAFT_ONLY=q_a,q_b set, Verify runs only the named faces and
+only those are compared.
 """
 import json
 import math
@@ -110,6 +113,12 @@ def main():
     if "--skip-spark" not in sys.argv:
         run_spark()
     oracles = json.load(open(f"{OUT}/oracle_sql.json"))
+    # SPARK_GRAFT_ONLY=q_a,q_b: Verify wrote only those faces, so only
+    # they are compared (the others would all report "no spark output")
+    only = set(filter(None, (x.strip() for x in
+        os.environ.get("SPARK_GRAFT_ONLY", "").split(","))))
+    if only:
+        oracles = {n: q for n, q in oracles.items() if n in only}
     # GRAFT_VERIFY_SKIP=q_a,q_b excludes oracles (the bespoke-math
     # restatements exhaust memory at sf0.1; they stay gated at sf0.01)
     skip = set(filter(None,

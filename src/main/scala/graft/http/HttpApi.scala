@@ -425,17 +425,6 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       Some(spark.table(name))
     else { respond(ex, 404, s"""{"error":"no collection $name"}"""); None }
 
-  /** The artifact's quantization kind, read off its payload column.
-    * Discriminating on column names is sound because every IvfIndex
-    * build path REFUSES source tables that carry one of the reserved
-    * names (cell_id/bits/half) — a collection cannot smuggle its own
-    * 'bits' column into an f32 artifact.
-    */
-  private def quantKind(m: graft.operators.IvfIndex.Model): String =
-    if (m.assigned.columns.contains("bits")) "bq"
-    else if (m.assigned.columns.contains("half")) "f16"
-    else "f32"
-
   // names and column types reach SQL text — admit identifiers and a
   // type whitelist only (the reference quotes table names instead;
   // same injection posture)
@@ -585,16 +574,9 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               """{"error":"quantization must be \"f32\", \"f16\" or \"bq\""}""")
           else
             try {
-              val model =
-                if (quant == "bq")
-                  graft.operators.IvfIndex.buildBq(
-                    df, idCol, vecCol, nCells, maxIter = 5)
-                else if (quant == "f16")
-                  graft.operators.IvfIndex.buildF16(
-                    df, idCol, vecCol, nCells, maxIter = 5)
-                else
-                  graft.operators.IvfIndex.build(
-                    df, idCol, vecCol, nCells, maxIter = 5)
+              val model = graft.operators.IvfIndex.build(df, idCol, vecCol,
+                nCells, maxIter = 5,
+                kind = graft.operators.IvfIndex.StorageKind.byName(quant))
               ivfModels.put(name, model)
               respond(ex, 201,
                 s"""{"index":"ivf","collection":"$name",""" +
@@ -620,22 +602,13 @@ class HttpApi(spark: SparkSession, port: Int = 0,
             case Some(m) =>
               // a quantized index must rebuild AS its kind, or the
               // declared quantization silently degrades to floats
-              val kind = quantKind(m)
-              val rebuilt = kind match {
-                case "bq" => graft.operators.IvfIndex.buildBq(
-                  df, m.idCol, m.vecCol, m.centroids.length,
-                  maxIter = 5, force = true)
-                case "f16" => graft.operators.IvfIndex.buildF16(
-                  df, m.idCol, m.vecCol, m.centroids.length,
-                  maxIter = 5, force = true)
-                case _ => graft.operators.IvfIndex.build(
-                  df, m.idCol, m.vecCol, m.centroids.length,
-                  maxIter = 5, force = true)
-              }
+              val rebuilt = graft.operators.IvfIndex.build(df, m.idCol,
+                m.vecCol, m.centroids.length, maxIter = 5, force = true,
+                kind = m.kind)
               ivfModels.put(name, rebuilt)
               respond(ex, 200,
                 s"""{"reindexed":"$name","n_cells":${rebuilt.centroids.length},""" +
-                  s""""quantization":"$kind"}""")
+                  s""""quantization":"${m.kind}"}""")
           }
         }
 
@@ -697,10 +670,9 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         import scala.jdk.CollectionConverters._
         val items = ivfModels.asScala.toSeq.sortBy(_._1).map {
           case (n, m) =>
-            val quant = quantKind(m)
             s"""{"collection":"$n","n_cells":${m.centroids.length},""" +
               s""""id_column":"${m.idCol}","vector_column":"${m.vecCol}",""" +
-              s""""quantization":"$quant"}"""
+              s""""quantization":"${m.kind}"}"""
         }.mkString("[", ",", "]")
         respond(ex, 200, items)
 
@@ -1480,7 +1452,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               Some("""{"error":"shortlist must be an integer >= k"}""")
             case _ if shortlistOpt.isDefined &&
                 !Option(ivfModels.get(name)).exists(m =>
-                  m.assigned.columns.contains("bits") &&
+                  m.kind == graft.operators.IvfIndex.StorageKind.Bq &&
                     m.idCol == idCol && m.vecCol == vecCol) =>
               // also rejects a column mismatch: silently falling to
               // brute force while discarding the parameter would hide
@@ -1520,35 +1492,25 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               // columns match; "nprobe" trades recall for probed cells
               // (default all cells == exact). Otherwise brute force.
               val nprobe = nprobeOpt
-              // lazy: the 400 guards below must fire before any plan
-              // construction can throw on a mismatched collection
-              def ranked = Option(ivfModels.get(name)) match {
-                case Some(m)
-                    if m.idCol == idCol && m.vecCol == vecCol &&
-                      m.assigned.columns.contains("bits") =>
-                  // bq index: hamming shortlist over the stored bits,
-                  // exact rescore; a metadata filter rides inside the
-                  // shortlist scan so it cannot starve the pool
-                  graft.operators.IvfIndex.searchBqRefine(m, queries, k,
-                    nprobe.getOrElse(m.centroids.length),
-                    shortlistOpt.getOrElse(math.max(4 * k, 40)), metric,
-                    filter = pred)
-                case Some(m)
-                    if m.idCol == idCol && m.vecCol == vecCol &&
-                      m.assigned.columns.contains("half") =>
-                  // f16 index: symmetric half-precision scoring over
-                  // the halved payload, single stage (no rescore)
-                  graft.operators.IvfIndex.searchF16(m, queries, k,
+              // the collection's index, when its columns match this
+              // request; searches without one fall back to brute force
+              val index = Option(ivfModels.get(name))
+                .filter(m => m.idCol == idCol && m.vecCol == vecCol)
+              // the n nearest, by the index or brute force; a def, so
+              // the 400 guards below fire before any plan construction
+              // can throw on a mismatched collection. A bq index given a
+              // shortlist rescores a hamming shortlist over its stored
+              // bits (a metadata filter rides inside the shortlist scan
+              // so it cannot starve the pool); otherwise every kind
+              // scores its stored vectors directly
+              def nearest(n: Int, shortlist: Int) = index match {
+                case Some(m) =>
+                  graft.operators.IvfIndex.search(m, queries, n,
                     nprobe.getOrElse(m.centroids.length), metric,
-                    filter = pred)
-                case Some(m)
-                    if m.idCol == idCol && m.vecCol == vecCol =>
-                  graft.operators.IvfIndex.search(m, queries, k,
-                    nprobe.getOrElse(m.centroids.length), metric,
-                    filter = pred)
-                case _ =>
+                    filter = pred, shortlist = shortlist)
+                case None =>
                   Knn.topK(pred.foldLeft(df)(_.where(_)), queries,
-                    idCol, vecCol, k, metric)
+                    idCol, vecCol, n, metric)
               }
               // optional MMR diversification: re-rank the top
               // max(4k, 20) candidates down to k with the given λ
@@ -1567,13 +1529,12 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                   """{"error":"radius requires an integral id column"}""")
               else if (radiusOpt.isDefined) {
                 val r = radiusOpt.get
-                val ranged = Option(ivfModels.get(name)) match {
-                  case Some(m)
-                      if m.idCol == idCol && m.vecCol == vecCol =>
+                val ranged = index match {
+                  case Some(m) =>
                     graft.operators.IvfIndex.rangeSearch(m, queries, r,
                       nprobe.getOrElse(m.centroids.length), metric,
                       filter = pred)
-                  case _ =>
+                  case None =>
                     val qcol = org.apache.spark.sql.functions
                       .typedlit(vec.get.toSeq)
                     val w = org.apache.spark.sql.expressions.Window
@@ -1599,17 +1560,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               } else {
                 val res = mmrLambda match {
                   case Some(l) =>
-                    val wide = Option(ivfModels.get(name)) match {
-                      case Some(m)
-                          if m.idCol == idCol && m.vecCol == vecCol =>
-                        graft.operators.IvfIndex.search(m, queries,
-                          math.max(4 * k, 20),
-                          nprobe.getOrElse(m.centroids.length), metric,
-                          filter = pred)
-                      case _ =>
-                        Knn.topK(pred.foldLeft(df)(_.where(_)), queries,
-                          idCol, vecCol, math.max(4 * k, 20), metric)
-                    }
+                    val wide = nearest(math.max(4 * k, 20), 0)
                     // k rows with distinct ranks: sort them here, not
                     // with a Spark sort (a sampling job and a stage)
                     graft.operators.Knn.mmrRerank(wide, df, idCol,
@@ -1617,7 +1568,8 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                       .collect()
                       .sortBy(r => r.getInt(r.fieldIndex("mmr_rank")))
                   case None =>
-                    ranked.collect()
+                    nearest(k, shortlistOpt.getOrElse(math.max(4 * k, 40)))
+                      .collect()
                       .sortBy(r => r.getInt(r.fieldIndex("rank")))
                 }
                 val items = res.map { r =>

@@ -255,8 +255,8 @@ object Autotune {
     val (corpus, queries, truth) =
       ivfSample(df, idCol, vecCol, sampleN, nQueries, k, metric)
     val t0 = System.nanoTime()
-    val model = IvfIndex.buildBq(corpus, idCol, vecCol, nCells,
-      maxIter = maxIter, seed = seed)
+    val model = IvfIndex.build(corpus, idCol, vecCol, nCells,
+      maxIter = maxIter, seed = seed, kind = IvfIndex.StorageKind.Bq)
     val buildMs = (System.nanoTime() - t0) / 1e6
     val results = Seq.newBuilder[BqResult]
     var stopped = false
@@ -269,8 +269,8 @@ object Autotune {
         // unclamped value through /search would 400)
         val sl = math.max(v.shortlist, k)
         val (res, searchMs) = timedSearch(
-          IvfIndex.searchBqRefine(model, queries, k, v.nprobe, sl,
-            metric))
+          IvfIndex.search(model, queries, k, v.nprobe, metric,
+            shortlist = sl))
         val recall = try recallPct(truth, res, k)
           finally res.unpersist()
         results += BqResult(i, v.nprobe, sl, recall,
@@ -324,6 +324,9 @@ object Autotune {
       recall: Double, latencyMs: Double, buildTimeMs: Double,
       bytesPerDim: Double)
 
+  private val bytesPerDim =
+    Map("f32" -> 4.0, "f16" -> 2.0, "sq8" -> 1.0, "bq" -> 1.0 / 8.0)
+
   /** Sweep every storage kind under one shared coarse quantizer:
     * per (kind, nprobe), recall vs brute-force truth, query latency,
     * build time, and the kind's bytes-per-dimension. The deterministic
@@ -343,45 +346,24 @@ object Autotune {
       clusters = nCells, splits = 1, maxIter = maxIter, seed = seed)
     val cents = ProductQuantizer.localize(cb)(0)
     // one build per kind, amortized across its nprobe points
-    case class Built(search: (DataFrame, Int) => DataFrame,
-        buildMs: Double, bytesPerDim: Double)
+    case class Built(model: IvfIndex.Model, buildMs: Double)
     val builds = scala.collection.mutable.Map[String, Built]()
     def built(kind: String): Built = builds.getOrElseUpdate(kind, {
       val t0 = System.nanoTime()
-      val b = kind match {
-        case "f32" =>
-          val m = IvfIndex.buildWithCentroids(corpus, idCol, vecCol,
-            cents)
-          Built((q, np) => IvfIndex.search(m, q, k, np, metric), 0, 4.0)
-        case "f16" =>
-          val m = IvfIndex.buildF16WithCentroids(corpus, idCol, vecCol,
-            cents)
-          Built((q, np) => IvfIndex.searchF16(m, q, k, np, metric), 0,
-            2.0)
-        case "sq8" =>
-          val (m, mn, mx) = IvfIndex.buildSq8WithCentroids(corpus,
-            idCol, vecCol, cents)
-          Built((q, np) => IvfIndex.searchSq8(m, mn, mx, q, vecCol, k,
-            np, metric), 0, 1.0)
-        case "bq" =>
-          val m = IvfIndex.buildBqWithCentroids(corpus, idCol, vecCol,
-            cents)
-          Built((q, np) => IvfIndex.searchBqRefine(m, q, k, np,
-            math.max(shortlist, k), metric), 0, 1.0 / 8.0)
-        case other => throw new IllegalArgumentException(
-          s"unknown storage kind '$other'")
-      }
-      b.copy(buildMs = (System.nanoTime() - t0) / 1e6)
+      val m = IvfIndex.buildWithCentroids(corpus, idCol, vecCol, cents,
+        kind = IvfIndex.StorageKind.byName(kind))
+      Built(m, (System.nanoTime() - t0) / 1e6)
     })
     val results = Seq.newBuilder[KindResult]
     kindGrid.zipWithIndex.foreach { case (v, i) =>
       if (isCanceled()) throw new RuntimeException("Job cancelled")
       val b = built(v.kind)
-      val (res, searchMs) = timedSearch(b.search(queries, v.nprobe))
+      val (res, searchMs) = timedSearch(IvfIndex.search(b.model, queries,
+        k, v.nprobe, metric, shortlist = math.max(shortlist, k)))
       val recall = try recallPct(truth, res, k)
         finally res.unpersist()
       results += KindResult(i, v.kind, v.nprobe, recall,
-        searchMs / nQueries, b.buildMs, b.bytesPerDim)
+        searchMs / nQueries, b.buildMs, bytesPerDim(v.kind))
     }
     results.result()
   }
@@ -486,13 +468,13 @@ object Autotune {
       k: Int = 10,
       grid: Seq[(Int, Int)] = bqGrid.map(v => (v.nprobe, v.shortlist)))
       : DataFrame = {
-    val model = IvfIndex.buildBqWithCentroids(corpus, idCol, vecCol,
-      centroids)
+    val model = IvfIndex.buildWithCentroids(corpus, idCol, vecCol,
+      centroids, kind = IvfIndex.StorageKind.Bq)
     val truth = materializedTruth(corpus, queries, idCol, vecCol, k)
     grid.zipWithIndex.map { case ((np, sl0), i) =>
       val sl = math.max(sl0, k)
       matchCount(
-        IvfIndex.searchBqRefine(model, queries, k, np, sl), truth)
+        IvfIndex.search(model, queries, k, np, shortlist = sl), truth)
         .select(lit(i).as("experiment_id"), lit(np).as("nprobe"),
           lit(sl).as("shortlist"), col("matches"))
     }.reduce(_ unionAll _)
@@ -506,24 +488,12 @@ object Autotune {
       idCol: String, vecCol: String, centroids: Array[Array[Float]],
       k: Int = 10, shortlist: Int = 40): DataFrame = {
     val truth = materializedTruth(corpus, queries, idCol, vecCol, k)
-    val I = IvfIndex
-    val f32 = I.buildWithCentroids(corpus, idCol, vecCol, centroids)
-    val f16 = I.buildF16WithCentroids(corpus, idCol, vecCol, centroids)
-    val (sq8, mn, mx) = I.buildSq8WithCentroids(corpus, idCol, vecCol,
-      centroids)
-    val bq = I.buildBqWithCentroids(corpus, idCol, vecCol, centroids)
-    def search(kind: String, q: DataFrame, np: Int): DataFrame =
-      kind match {
-        case "f32" => I.search(f32, q, k, np)
-        case "f16" => I.searchF16(f16, q, k, np)
-        case "sq8" => I.searchSq8(sq8, mn, mx, q, vecCol, k, np)
-        case "bq" => I.searchBqRefine(bq, q, k, np,
-          math.max(shortlist, k))
-        case other => throw new IllegalArgumentException(
-          s"unknown storage kind '$other'")
-      }
+    val models = kindGrid.map(_.kind).distinct.map(kind =>
+      kind -> IvfIndex.buildWithCentroids(corpus, idCol, vecCol, centroids,
+        kind = IvfIndex.StorageKind.byName(kind))).toMap
     kindGrid.zipWithIndex.map { case (v, i) =>
-      matchCount(search(v.kind, queries, v.nprobe), truth)
+      matchCount(IvfIndex.search(models(v.kind), queries, k, v.nprobe,
+          shortlist = math.max(shortlist, k)), truth)
         .select(lit(i).as("experiment_id"), lit(v.kind).as("kind"),
           lit(v.nprobe).as("nprobe"), col("matches"))
     }.reduce(_ unionAll _)

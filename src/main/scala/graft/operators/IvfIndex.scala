@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -20,22 +21,207 @@ import graft.functions.VectorFunctions
   * the scan skips the other cells' files entirely (PartitionFilters,
   * guarded by PlanSpec/IvfSpec).
   *
+  * How the cells store their vectors is one build parameter, a
+  * [[StorageKind]] (f32, f16, sq8 or bq — the reference index server's
+  * F32/F16/I8/B1, `external_index/server.rs:93-99`). Every lifecycle
+  * step has one entry point for all kinds: [[build]] /
+  * [[buildWithCentroids]], [[append]], [[load]], [[search]],
+  * [[rangeSearch]], [[delete]], [[compact]] and [[merge]] read the
+  * kind off the [[Model]].
+  *
   * Optionally combine with PQ codes (IVF-PQ): `searchAdc` scores
   * candidates with asymmetric-distance lookup tables over u8 codes
   * instead of raw vectors — 64x less data motion for 64-dim floats.
   */
 object IvfIndex {
 
-  case class Model(centroids: Array[Array[Float]], assigned: DataFrame,
-      idCol: String, vecCol: String, indexPath: String)
+  /** How an index stores its vectors. Cell assignment always runs on
+    * the original floats (full-precision coarse quantizer); only the
+    * stored payload differs. Each kind owns its name (the string
+    * Autotune and the HTTP `quantization` field use), its payload
+    * columns, its encode expression, how a candidate is scored, and any
+    * fitted sidecar.
+    */
+  sealed abstract class StorageKind(val name: String) {
 
-  // Builds are deterministic in (input plan, params); memoize the Model
-  // so repeated searches over the same corpus (the registry trio, an
-  // autotune sweep) share one k-means + one partitioned write per JVM.
+    /** The artifact columns holding the vector, the one `_meta` records
+      * first. `vecCol` is the float column the source and the queries
+      * carry.
+      */
+    def payloadCols(vecCol: String): Seq[String]
+
+    /** A cell-assigned frame (source columns plus `cell_id`) as the
+      * artifact stores it.
+      */
+    private[graft] def encode(df: DataFrame, idCol: String,
+        vecCol: String): DataFrame
+
+    /** The stored vector as candidates are scored. */
+    private[operators] def candidate(vecCol: String): Column
+
+    /** The query vector as candidates are scored against it. */
+    private[operators] def query(q: Column): Column = q
+
+    /** This kind with its data-derived model fitted on `df`, if it has
+      * one that is not fitted yet.
+      */
+    private[operators] def fitted(df: DataFrame,
+        vecCol: String): StorageKind = this
+
+    private[operators] def writeSidecars(conf: Configuration,
+        path: String): Unit = ()
+
+    override def toString: String = name
+  }
+
+  object StorageKind {
+
+    /** The floats as given. */
+    case object F32 extends StorageKind("f32") {
+      def payloadCols(vecCol: String): Seq[String] = Seq(vecCol)
+      private[graft] def encode(df: DataFrame, idCol: String,
+          vecCol: String): DataFrame = df
+      private[operators] def candidate(vecCol: String): Column =
+        col(vecCol)
+    }
+
+    /** IEEE binary16 halves ([[graft.functions.Fp16Encode]]) INSTEAD of
+      * the floats: every probed-cell scan moves half the bytes at ~2^-11
+      * relative rounding error, with no trained model and no sidecar.
+      * Scoring is SYMMETRIC — stored vector and query are both rounded
+      * through binary16 before the exact double fold — so a full probe
+      * reproduces q_f16_knn exactly and the q_ivf_f16_fixed oracle
+      * restates the grid. Single stage by design: at ~1e-3 relative
+      * error f16 ranking rarely diverges from f32, so there is no
+      * rescore to pay for (the reference's f16 kind re-ranks nothing
+      * either).
+      */
+    case object F16 extends StorageKind("f16") {
+      def payloadCols(vecCol: String): Seq[String] = Seq("half")
+      private[graft] def encode(df: DataFrame, idCol: String,
+          vecCol: String): DataFrame =
+        df.withColumn("half", VectorFunctions.fp16_encode(col(vecCol)))
+          .drop(vecCol)
+      private[operators] def candidate(vecCol: String): Column =
+        VectorFunctions.fp16_decode(col("half"))
+      override private[operators] def query(q: Column): Column =
+        VectorFunctions.fp16_decode(VectorFunctions.fp16_encode(q))
+    }
+
+    /** Packed sign bits ([[graft.functions.BqEncode]]) NEXT TO the
+      * floats. A [[search]] with a `shortlist` reads only (id, bits) in
+      * its shortlist pass — parquet column pruning skips the float
+      * pages, a dim·32/64 ≈ 32× byte reduction on the probed-cell scan
+      * — and fetches floats solely for the per-query shortlist. Without
+      * a shortlist the floats score exactly as in F32. Carrying the bits
+      * costs dim/64 longs per row ≈ 3% of a float vector.
+      */
+    case object Bq extends StorageKind("bq") {
+      def payloadCols(vecCol: String): Seq[String] = Seq(vecCol, "bits")
+      private[graft] def encode(df: DataFrame, idCol: String,
+          vecCol: String): DataFrame =
+        df.withColumn("bits", VectorFunctions.bq_encode(col(vecCol)))
+      private[operators] def candidate(vecCol: String): Column =
+        col(vecCol)
+    }
+
+    /** Per-dimension int8 codes INSTEAD of the floats: ~4x fewer bytes
+      * per probed cell. The scalar model is the per-dimension (min, max)
+      * of the build corpus, bounded by dim and persisted as the
+      * `_sqmodel` sidecar; arrivals encode under it frozen (out-of-range
+      * values saturate — the Sq8Encode clamp), candidates decode through
+      * the codegen'd Sq8Decode and score against the full-precision
+      * query. The artifact keeps only (id, sq). `Sq8()` — empty arrays —
+      * fits the model on the build's corpus.
+      */
+    final case class Sq8(mins: Array[Double], maxs: Array[Double])
+        extends StorageKind("sq8") {
+      def payloadCols(vecCol: String): Seq[String] = Seq("sq")
+      private[graft] def encode(df: DataFrame, idCol: String,
+          vecCol: String): DataFrame =
+        df.withColumn("sq", VectorFunctions.col(graft.functions.Sq8Encode(
+            VectorFunctions.expr(col(vecCol)),
+            new graft.functions.DoubleVecParam(mins),
+            new graft.functions.DoubleVecParam(maxs))))
+          .select(col(idCol), col("sq"), col("cell_id"))
+      private[operators] def candidate(vecCol: String): Column =
+        VectorFunctions.col(graft.functions.Sq8Decode(
+          VectorFunctions.expr(col("sq")),
+          new graft.functions.DoubleVecParam(mins),
+          new graft.functions.DoubleVecParam(maxs)))
+      override private[operators] def fitted(df: DataFrame,
+          vecCol: String): StorageKind =
+        if (mins.nonEmpty) this
+        else {
+          val rows = ScalarQuantizer.fit(df, vecCol).collect()
+            .sortBy(_.getInt(0))
+          Sq8(rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
+        }
+      override private[operators] def writeSidecars(conf: Configuration,
+          path: String): Unit =
+        graft.util.SidecarIO.writeSqModel(conf, s"$path/_sqmodel", mins,
+          maxs)
+      // by content: two shards share a scalar model only if every
+      // bound is equal
+      override def equals(o: Any): Boolean = o match {
+        case s: Sq8 => java.util.Arrays.equals(mins, s.mins) &&
+          java.util.Arrays.equals(maxs, s.maxs)
+        case _ => false
+      }
+      override def hashCode: Int =
+        31 * java.util.Arrays.hashCode(mins) + java.util.Arrays.hashCode(maxs)
+    }
+
+    object Sq8 {
+      /** SQ8 whose scalar model is fitted on the build corpus. */
+      def apply(): Sq8 = Sq8(Array.empty[Double], Array.empty[Double])
+    }
+
+    /** The kind named by `name` ("f32", "f16", "sq8" or "bq"); "sq8"
+      * fits its scalar model at build time.
+      */
+    def byName(name: String): StorageKind = name match {
+      case "f32" => F32
+      case "f16" => F16
+      case "sq8" => Sq8()
+      case "bq" => Bq
+      case other => throw new IllegalArgumentException(
+        s"unknown storage kind '$other'")
+    }
+
+    /** The kind of the artifact at `path` with data columns `columns`:
+      * a `_sqmodel` sidecar means SQ8, a `bits` column BQ, a `half`
+      * column F16, anything else F32. Reading columns is sound because
+      * every build refuses source tables that carry `bits` or `half`.
+      */
+    def of(conf: Configuration, path: String,
+        columns: Seq[String]): StorageKind = {
+      val sq = new org.apache.hadoop.fs.Path(s"$path/_sqmodel")
+      if (sq.getFileSystem(conf).exists(sq)) {
+        val (mn, mx) = graft.util.SidecarIO.readSqModel(conf, sq.toString)
+        require(mn.nonEmpty, s"empty scalar-model sidecar under $path")
+        Sq8(mn, mx)
+      } else if (columns.contains("bits")) Bq else if (columns.contains("half")) F16 else F32
+    }
+  }
+
+  /** An open index.
+    *
+    * @param vecCol the float vector column of the source and of every
+    *   query batch; F16 and SQ8 artifacts do not store it
+    * @param kind how the cells store their vectors
+    */
+  case class Model(centroids: Array[Array[Float]], assigned: DataFrame,
+      idCol: String, vecCol: String, indexPath: String, kind: StorageKind)
+
+  // Builds are deterministic in (input plan, centroids, kind); memoize
+  // the Model so repeated searches over the same corpus (the registry
+  // trio, an autotune sweep) share one partitioned write per JVM.
   // indexDir is part of the key: a caller asking for a durable path
-  // must not be served a memoized tmp-dir index.
+  // must not be served a memoized tmp-dir index. Maintenance that
+  // rewrites an index's files drops its entries ([[forget]]).
   private val buildMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Int, Long, Option[String]),
+    (Int, Int, String, String, Option[String], StorageKind),
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Model)]()
   // default index paths use a per-JVM directory + a build counter, so
   // no two builds (this JVM or another on the same box) can clobber a
@@ -46,106 +232,75 @@ object IvfIndex {
     s"${System.getProperty("java.io.tmpdir")}/graft-ivf-" +
       java.lang.ProcessHandle.current().pid()
 
-  /** Build: coarse k-means (reusing the PQ Lloyd with splits=1), assign
-    * every row to its nearest cell, and write the assignment as parquet
-    * partitioned by cell_id (the on-disk inverted file). `indexDir`
-    * overrides where the index lands; default is the JVM temp dir —
-    * production callers pass a durable path.
+  /** Memoized Models for `indexPath` cache a file listing that a
+    * rewrite is about to change; drop them so the next build re-lists.
     */
-  /** @param force bypass the build memo entirely (no lookup, no
-    *   store): a REINDEX must re-run k-means over the corpus as it is
-    *   NOW even though the table-scan plan is semantically unchanged,
-    *   and its result is about to be dir-swapped so memoizing it would
-    *   pin a stale path.
-    */
+  private def forget(indexPath: String): Unit =
+    buildMemo.entrySet.removeIf(e => e.getValue._2.indexPath == indexPath)
+
   /** The artifact's own columns: `cell_id` is the partition key every
-    * build adds, and `bits` is how a loaded/served artifact is
-    * recognized as binary-quantized (HttpApi, IndexedKnn.reindex, the
-    * merge guard all discriminate on its presence). A SOURCE table
-    * already carrying either would corrupt that discrimination — a
-    * plain f32 build over a table with its own `bits` column would be
-    * served as "bq" and then fail searchBqRefine's type check — so
-    * every build path refuses them up front (the HTTP surface maps
-    * this to a 400 at /index time).
+    * build adds, and `bits`/`half` are how [[StorageKind.of]] recognizes
+    * a loaded artifact as BQ/F16. A SOURCE table already carrying one
+    * would corrupt that recognition — a plain f32 build over a table
+    * with its own `bits` column would be served as "bq" and then fail
+    * the shortlist's type check — so every build refuses them up front
+    * (the HTTP surface maps this to a 400 at /index time). The id
+    * column must be integral: a TEXT/UUID id would build fine and then
+    * cast to null in every search.
     */
-  private def requireNoReservedCols(df: DataFrame): Unit =
+  private def requireBuildable(df: DataFrame, idCol: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(integral(t), s"IvfIndex requires an integral id column (got " +
+      s"${t.simpleString}); map TEXT/UUID ids to a surrogate key " +
+      "or use Knn.topK, which supports them directly")
     Seq("cell_id", "bits", "half").foreach { c =>
       if (df.columns.contains(c))
         throw new IllegalArgumentException(
           s"'$c' is a reserved index-artifact column name; rename the " +
             "source column before building an IVF index over this table")
     }
+  }
 
-  private def requireIntegralId(df: DataFrame, idCol: String): Unit =
-    df.schema(idCol).dataType match {
+  private def integral(t: org.apache.spark.sql.types.DataType): Boolean =
+    t match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => ()
-      case t => throw new IllegalArgumentException(
-        s"IvfIndex requires an integral id column (got " +
-          s"${t.simpleString}); map TEXT/UUID ids to a surrogate key " +
-          "or use Knn.topK, which supports them directly")
+           org.apache.spark.sql.types.ShortType => true
+      case _ => false
     }
 
+  /** Build: coarse k-means (the PQ Lloyd with splits=1, memoized by
+    * `ProductQuantizer.fitCodebook`), then [[buildWithCentroids]] under
+    * the fitted centroids. `indexDir` overrides where the index lands;
+    * default is the JVM temp dir — production callers pass a durable
+    * path.
+    *
+    * @param force bypass the build memo entirely (no lookup, no
+    *   store): a REINDEX must write the corpus as it is NOW even though
+    *   the table-scan plan is semantically unchanged, and its result is
+    *   about to be dir-swapped so memoizing it would pin a stale path.
+    * @param kind how the cells store their vectors
+    */
   def build(df: DataFrame, idCol: String, vecCol: String, nCells: Int,
       maxIter: Int = 10, seed: Long = 42L,
       indexDir: Option[String] = None,
-      force: Boolean = false): Model = graft.util.BuildTimer.timed {
-    requireIntegralId(df, idCol)
-    requireNoReservedCols(df)
-    val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, vecCol, nCells, maxIter, seed,
-      indexDir)
-    val hit = if (force) null else buildMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.assigned.sparkSession eq spark))
-      return hit._2
+      force: Boolean = false,
+      kind: StorageKind = StorageKind.F32): Model = graft.util.BuildTimer.timed {
+    requireBuildable(df, idCol)
     val cb = ProductQuantizer.fitCodebook(df, idCol, vecCol,
       clusters = nCells, splits = 1, maxIter = maxIter, seed = seed)
-    val local = ProductQuantizer.localize(cb)(0)
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, local)
-    val path = indexDir.getOrElse(
-      s"$tmpBase/ivf_${buildCounter.getAndIncrement()}" +
-        s"_c${nCells}_s$seed")
-    df.withColumn("cell_id", cellU(col(vecCol)))
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite").parquet(path)
-    val assigned = spark.read.parquet(path)
-    // persist the centroid table next to the inverted file, so the
-    // index is a self-contained durable artifact (the reference's
-    // saved-index analog): any later session loads it without
-    // re-running k-means or touching the source corpus
-    graft.util.SidecarIO.writeCentroids(
-      spark.sessionState.newHadoopConf(), s"$path/_centroids", local)
-    writeMeta(spark, path, idCol, vecCol)
-    val model = Model(local, assigned, idCol, vecCol, path)
-    if (!force && buildMemo.size < 32) buildMemo.put(key, (plan, model))
-    model
+    buildWithCentroids(df, idCol, vecCol, ProductQuantizer.localize(cb)(0),
+      indexDir, force, kind)
   }
 
-  /** Forget every memoized build handle — the long-lived-session
+  /** Release every memoized build handle — the long-lived-session
     * hygiene hook, mirroring `Dedup.releaseCaches` and
     * `Autotune.releaseSamples`. Correctness never depends on the
-    * memos (a fresh call rebuilds from lineage), and index
-    * DIRECTORIES on disk are untouched: only the in-JVM model handles
-    * are dropped, so `load(path)` keeps working.
+    * memo (a fresh call rebuilds from lineage), and index DIRECTORIES
+    * on disk are untouched: only the in-JVM model handles are dropped,
+    * so `load(path)` keeps working.
     */
-  def releaseModels(): Unit = {
-    buildMemo.clear()
-    fixedBuildMemo.clear()
-    sq8BuildMemo.clear()
-  }
-
-  // buildWithCentroids memo: several gate faces share one frozen
-  // quantizer over one corpus (the first-16 anchors) — they should
-  // share one artifact and one assignment write per JVM, like the
-  // k-means path's buildMemo. Keyed on (plan, centroid CONTENT, dir);
-  // compact/merge invalidate by dir since they rewrite the files.
-  private val fixedBuildMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, String, String, Option[String]),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Model)]()
+  def releaseModels(): Unit = buildMemo.clear()
 
   private def centroidsHash(cs: Array[Array[Float]]): Int =
     java.util.Arrays.deepHashCode(
@@ -153,9 +308,13 @@ object IvfIndex {
         .asInstanceOf[AnyRef]).asInstanceOf[Array[AnyRef]])
 
   /** Build the inverted file under CALLER-SUPPLIED frozen centroids —
-    * no k-means anywhere. Two uses: rebuilding an index under a
-    * previously trained coarse quantizer (the production pair of
-    * [[append]]), and deterministic-quantizer gate faces where
+    * no k-means anywhere: assign every row to its nearest cell, encode
+    * it as `kind` stores it, and write the rows as parquet partitioned
+    * by cell_id (the on-disk inverted file), with the centroid table,
+    * the `_meta` id record and the kind's fitted sidecar next to it.
+    * Two uses besides [[build]]: rebuilding an index under a previously
+    * trained coarse quantizer (the production pair of [[append]] and
+    * [[merge]]), and deterministic-quantizer gate faces where
     * partial-probe search must be restatable by an independent engine
     * (assignment and probing are both plain argmins over the given
     * centroid table).
@@ -169,99 +328,86 @@ object IvfIndex {
     */
   def buildWithCentroids(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Float]],
-      indexDir: Option[String] = None): Model = graft.util.BuildTimer.timed {
-    requireIntegralId(df, idCol)
-    requireNoReservedCols(df)
+      indexDir: Option[String] = None,
+      force: Boolean = false,
+      kind: StorageKind = StorageKind.F32): Model = graft.util.BuildTimer.timed {
+    requireBuildable(df, idCol)
     val spark = df.sparkSession
     val plan = df.queryExecution.optimizedPlan
     val key = (plan.semanticHash(), centroidsHash(centroids), idCol,
-      vecCol, indexDir)
-    val hit = fixedBuildMemo.get(key)
+      vecCol, indexDir, kind)
+    val hit = if (force) null else buildMemo.get(key)
     if (hit != null && hit._1.sameResult(plan) &&
         (hit._2.assigned.sparkSession eq spark))
       return hit._2
+    val stored = kind.fitted(df, vecCol)
+    val path = indexDir.getOrElse(
+      s"$tmpBase/ivf_${buildCounter.getAndIncrement()}" +
+        s"_c${centroids.length}")
     // codegen argmin assignment (NearestCentroid): no boxed-Seq UDF in
     // the corpus-sized write stage, centroid table rides as a constant
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, centroids)
-    val path = indexDir.getOrElse(
-      s"$tmpBase/ivffixed_${buildCounter.getAndIncrement()}" +
-        s"_c${centroids.length}")
-    df.withColumn("cell_id", cellU(col(vecCol)))
+    stored.encode(df.withColumn("cell_id",
+        VectorFunctions.nearest_centroid(col(vecCol), centroids)),
+        idCol, vecCol)
       .repartition(col("cell_id"))
       .write.partitionBy("cell_id").mode("overwrite").parquet(path)
-    val assigned = spark.read.parquet(path)
-    graft.util.SidecarIO.writeCentroids(
-      spark.sessionState.newHadoopConf(), s"$path/_centroids", centroids)
-    writeMeta(spark, path, idCol, vecCol)
-    val model = Model(centroids, assigned, idCol, vecCol, path)
-    if (fixedBuildMemo.size < 32) fixedBuildMemo.put(key, (plan, model))
+    // the centroid table (and any fitted model) persists next to the
+    // inverted file, so the index is a self-contained durable artifact
+    // (the reference's saved-index analog): any later session loads it
+    // without re-running k-means or touching the source corpus
+    val conf = spark.sessionState.newHadoopConf()
+    graft.util.SidecarIO.writeCentroids(conf, s"$path/_centroids",
+      centroids)
+    stored.writeSidecars(conf, path)
+    graft.util.SidecarIO.writeMeta(conf, s"$path/_meta", idCol,
+      stored.payloadCols(vecCol).head)
+    val model = Model(centroids, spark.read.parquet(path), idCol, vecCol,
+      path, stored)
+    if (!force && buildMemo.size < 96) buildMemo.put(key, (plan, model))
     model
   }
 
+  /** The index's live rows: every cell directory, tombstones applied. */
+  private def scanLive(spark: SparkSession, path: String): DataFrame =
+    minusDeleted(spark, path, spark.read
+      .option("basePath", path)
+      .parquet(s"$path/cell_id=*"))
+
   /** Incrementally add vectors to an EXISTING index: assign each new
-    * row to its nearest cell with the (broadcast) frozen centroids and
-    * append the rows into the cell partition directories — no k-means,
-    * no rebuild, no touch of the resident rows. This is how a 100 TB
-    * inverted file absorbs a daily batch: the coarse quantizer is
-    * frozen (standard IVF practice — faiss `add` vs `train`), appends
-    * are new parquet files inside existing `cell_id=` dirs, and
-    * searches over the returned model see old + new rows with the
-    * same PartitionFilters pruning. Periodic re-train (a fresh
+    * row to its nearest cell with the frozen centroids, encode it under
+    * the index's frozen kind (an SQ8 index quantizes with its stored
+    * scalar model), and append the rows into the cell partition
+    * directories — no k-means, no rebuild, no touch of the resident
+    * rows. This is how a 100 TB inverted file absorbs a daily batch:
+    * the quantizers are frozen (standard IVF practice — faiss `add` vs
+    * `train`), appends are new parquet files inside existing `cell_id=`
+    * dirs, and searches over the returned model see old + new rows with
+    * the same PartitionFilters pruning. Periodic re-train (a fresh
     * [[build]]) remains the answer to real distribution drift.
     */
   def append(model: Model, df: DataFrame): Model = graft.util.BuildTimer.timed {
-    val spark = df.sparkSession
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, model.centroids)
-    // a quantized index must absorb batches in ITS representation: a
-    // bits-bearing index without the arrivals' bits silently drops
-    // them from every BQ shortlist (null hamming → bounded aggregate
-    // discards); an f16 index appended with raw floats would drift the
-    // parquet schema (half null on arrivals → rows vanish from every
-    // probe). Cell assignment always runs on the arrival floats.
-    val withKind =
-      if (model.assigned.columns.contains("bits"))
-        df.withColumn("bits", VectorFunctions.bq_encode(col(model.vecCol)))
-      else if (model.assigned.columns.contains("half"))
-        df.withColumn("half",
-          VectorFunctions.fp16_encode(col(model.vecCol)))
-      else df
-    val celled = withKind.withColumn("cell_id", cellU(col(model.vecCol)))
-    val out =
-      if (model.assigned.columns.contains("half"))
-        celled.drop(model.vecCol)
-      else celled
-    out.repartition(col("cell_id"))
+    model.kind.encode(df.withColumn("cell_id",
+        VectorFunctions.nearest_centroid(col(model.vecCol), model.centroids)),
+        model.idCol, model.vecCol)
+      .repartition(col("cell_id"))
       .write.partitionBy("cell_id").mode("append")
       .parquet(model.indexPath)
     // fresh scan relation: the old `assigned` caches its file listing;
     // tombstones re-applied (a deleted id stays deleted even if the
     // batch re-appends it — see [[delete]])
-    val assigned = minusDeleted(spark, model.indexPath, spark.read
-      .option("basePath", model.indexPath)
-      .parquet(s"${model.indexPath}/cell_id=*"))
-    Model(model.centroids, assigned, model.idCol, model.vecCol,
-      model.indexPath)
+    model.copy(assigned = scanLive(df.sparkSession, model.indexPath))
   }
 
   case class CompactionStats(cells: Int, filesBefore: Int,
       filesAfter: Int)
 
-  /** Durable record of the index's id (and stored-vector) column name,
-    * written by every build path — [[delete]] validates its id column
-    * against this instead of trusting "any integral artifact column",
-    * which would let an integral payload column drive an anti-join
-    * against itself and silently remove the wrong rows.
-    */
-  private def writeMeta(spark: SparkSession, path: String,
-      idCol: String, vecCol: String): Unit =
-    graft.util.SidecarIO.writeMeta(spark.sessionState.newHadoopConf(),
-      s"$path/_meta", idCol, vecCol)
-
-  /** The id column recorded at build time, if this artifact carries a
-    * `_meta` sidecar (indexes built before the sidecar existed don't;
-    * [[delete]] falls back to its schema/type checks for those).
+  /** The id column recorded at build time in the `_meta` sidecar (the
+    * durable record every build writes), if this artifact carries one
+    * (indexes built before the sidecar existed don't; [[delete]] falls
+    * back to its schema/type checks for those). [[delete]] validates
+    * its id column against it instead of trusting "any integral
+    * artifact column", which would let an integral payload column drive
+    * an anti-join against itself and silently remove the wrong rows.
     */
   private[graft] def metaIdCol(spark: SparkSession, path: String)
       : Option[String] = {
@@ -269,6 +415,22 @@ object IvfIndex {
     val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
     if (!p.getFileSystem(conf).exists(p)) None
     else graft.util.SidecarIO.readMetaIdCol(conf, s"$path/_meta")
+  }
+
+  /** Copy the sidecars of the index at `from` that exist (`_centroids`,
+    * the SQ8 `_sqmodel`, the `_meta` id record) into `to`. Tombstones
+    * (`_deleted`) never travel: a rewrite purges the rows they name.
+    */
+  private[graft] def copySidecars(spark: SparkSession, from: String,
+      to: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    for (side <- Seq("_centroids", "_sqmodel", "_meta")) {
+      val src = new org.apache.hadoop.fs.Path(s"$from/$side")
+      val fs = src.getFileSystem(conf)
+      if (fs.exists(src))
+        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+          new org.apache.hadoop.fs.Path(s"$to/$side"), false, conf)
+    }
   }
 
   /** Tombstone-filtered assignment scan: `_deleted` (written by
@@ -303,13 +465,13 @@ object IvfIndex {
     * right-to-be-forgotten maintenance pass the build/append/compact/
     * merge lifecycle otherwise lacks. The ids land in a `_deleted`
     * tombstone sidecar (O(|ids|) write, no cell rewrite); every
-    * subsequent [[load]]/[[loadSq8]]/[[append]]/[[merge]] read
-    * anti-joins them out, and the next [[compact]] purges the rows
-    * physically and clears the sidecar. Contract: a tombstoned id
-    * stays invisible even if RE-APPENDED until a compact runs — run
-    * compact before re-ingesting a previously-deleted id. The id
-    * column's TYPE must match the index's; external PQ-code tables
-    * fed to [[searchAdc]] are the caller's to clean.
+    * subsequent [[load]]/[[append]]/[[merge]] read anti-joins them out,
+    * and the next [[compact]] purges the rows physically and clears the
+    * sidecar. Contract: a tombstoned id stays invisible even if
+    * RE-APPENDED until a compact runs — run compact before re-ingesting
+    * a previously-deleted id. The id column's TYPE must match the
+    * index's; external PQ-code tables fed to [[searchAdc]] are the
+    * caller's to clean.
     *
     * Returns the number of distinct ids recorded. Reference anchor:
     * the reference rebuilds its external index from a fresh table
@@ -332,7 +494,7 @@ object IvfIndex {
     // Only the index's id column may drive a tombstone: 'cell_id'
     // would anti-join away whole cells, and a payload/vector column
     // isn't an identity at all. The id column is integral by build
-    // contract (requireIntegralId), so enforce that here too.
+    // contract (requireBuildable), so enforce that here too.
     require(idName != "cell_id",
       "cannot tombstone by 'cell_id' — deletes are by document id")
     // the build-time _meta record is authoritative when present: only
@@ -345,14 +507,10 @@ object IvfIndex {
           s"('$recorded' per $indexPath/_meta) — deletes are by the " +
           "build-time id column")
     }
-    artifactSchema(idName).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => ()
-      case other => throw new IllegalArgumentException(
-        s"'$idName' has type ${other.simpleString} — the index id " +
-          "column is integral; a non-id column cannot drive a delete")
-    }
+    val idType = artifactSchema(idName).dataType
+    require(integral(idType), s"'$idName' has type ${idType.simpleString}" +
+      " — the index id column is integral; a non-id column cannot drive " +
+      "a delete")
     // The sidecar is self-describing via its single column name; two
     // appends with DIFFERENT names would produce mixed-schema parquet
     // whose merged read nulls out the older files and silently
@@ -371,12 +529,7 @@ object IvfIndex {
           s"'$existing'; a second delete must use the same id column " +
           s"(got '$idName')")
     }
-    buildMemo.entrySet.removeIf(e =>
-      e.getValue._2.indexPath == indexPath)
-    fixedBuildMemo.entrySet.removeIf(e =>
-      e.getValue._2.indexPath == indexPath)
-    sq8BuildMemo.entrySet.removeIf(e =>
-      e.getValue._2._1.indexPath == indexPath)
+    forget(indexPath)
     val del = ids.distinct()
     val n = del.count()
     del.coalesce(1).write.mode("append")
@@ -405,24 +558,24 @@ object IvfIndex {
   }
 
   /** Rewrite an index whose cells have accumulated many small files —
-    * the inevitable debt of [[append]]/[[appendSq8]], where every daily
-    * batch adds one file per touched cell and a year of batches turns
-    * each probe into hundreds of file opens. Compaction reads the
-    * cell-partitioned parquet and rewrites it with all of a cell's rows
-    * in one task, so each cell lands in `targetFilesPerCell` files
-    * (default 1); content, schema, and sidecars (`_centroids`,
-    * `_sqmodel`) are preserved byte-for-byte, only the file layout
-    * changes. At 100 TB this is the maintenance op that keeps probe
-    * latency flat as the index absorbs batches: scan cost per probed
-    * cell returns to O(bytes) instead of O(bytes + files·open_cost).
+    * the inevitable debt of [[append]], where every daily batch adds one
+    * file per touched cell and a year of batches turns each probe into
+    * hundreds of file opens. Compaction reads the cell-partitioned
+    * parquet and rewrites it with all of a cell's rows in one task, so
+    * each cell lands in `targetFilesPerCell` files (default 1); content,
+    * schema, and sidecars (`_centroids`, `_sqmodel`, `_meta`) are
+    * preserved byte-for-byte, only the file layout changes. At 100 TB
+    * this is the maintenance op that keeps probe latency flat as the
+    * index absorbs batches: scan cost per probed cell returns to
+    * O(bytes) instead of O(bytes + files·open_cost).
     *
     * Crash-safe: the rewrite lands in a `.rebuild` sibling and is
     * published over the live dir with [[graft.util.DirSwap]]'s
-    * two-rename swap; [[load]]/[[loadSq8]]/`IndexedKnn` heal an
-    * interrupted swap on next open. Reference anchor: the reference's
-    * external-index rebuild rewrites the full artifact the same
-    * swap-directory way (lantern_extras/src/external_index.rs:109-162);
-    * compaction is that rebuild minus the re-train.
+    * two-rename swap; [[load]]/`IndexedKnn` heal an interrupted swap on
+    * next open. Reference anchor: the reference's external-index
+    * rebuild rewrites the full artifact the same swap-directory way
+    * (lantern_extras/src/external_index.rs:109-162); compaction is that
+    * rebuild minus the re-train.
     *
     * @param targetFilesPerCell >1 splits each cell across that many
     *   shuffle keys — at real scale one 100 GB cell must not become a
@@ -433,13 +586,7 @@ object IvfIndex {
       targetFilesPerCell: Int = 1): CompactionStats = graft.util.BuildTimer.timed {
     require(targetFilesPerCell >= 1,
       s"targetFilesPerCell must be >= 1 (got $targetFilesPerCell)")
-    // memoized Models for this path cache a file listing the rewrite
-    // is about to delete — drop them so the next build/load re-lists
-    buildMemo.entrySet.removeIf(e => e.getValue._2.indexPath == indexPath)
-    fixedBuildMemo.entrySet.removeIf(
-      e => e.getValue._2.indexPath == indexPath)
-    sq8BuildMemo.entrySet.removeIf(
-      e => e.getValue._2._1.indexPath == indexPath)
+    forget(indexPath)
     val live = new org.apache.hadoop.fs.Path(indexPath)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     graft.util.DirSwap.recover(fs, live)
@@ -447,10 +594,8 @@ object IvfIndex {
     val before = listPartFiles(fs, live)
     // tombstoned rows ([[delete]]) are purged physically here: the
     // rewrite drops them and the _deleted sidecar is NOT copied into
-    // the fresh artifact (only _centroids/_sqmodel travel below)
-    val assigned = minusDeleted(spark, indexPath, spark.read
-      .option("basePath", indexPath)
-      .parquet(s"$indexPath/cell_id=*"))
+    // the fresh artifact
+    val assigned = scanLive(spark, indexPath)
     val fresh = graft.util.DirSwap.rebuildPath(indexPath)
     val keys: Seq[org.apache.spark.sql.Column] =
       if (targetFilesPerCell == 1) Seq(col("cell_id"))
@@ -463,14 +608,7 @@ object IvfIndex {
       }
     assigned.repartition(keys: _*)
       .write.partitionBy("cell_id").mode("overwrite").parquet(fresh)
-    // sidecars travel with the artifact
-    for (side <- Seq("_centroids", "_sqmodel", "_meta")) {
-      val src = new org.apache.hadoop.fs.Path(s"$indexPath/$side")
-      if (fs.exists(src))
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-          new org.apache.hadoop.fs.Path(s"$fresh/$side"),
-          false, spark.sessionState.newHadoopConf())
-    }
+    copySidecars(spark, indexPath, fresh)
     graft.util.DirSwap.publish(fs, live)
     val after = listPartFiles(fs, live)
     val cells = after.map(_.getParent.getName).distinct.size
@@ -478,10 +616,11 @@ object IvfIndex {
   }
 
   /** Merge the inverted file at `srcPath` into the one at `destPath`.
-    * Both must carry the SAME frozen coarse quantizer (the precondition
-    * that makes the merge a pure data move: every src row is already in
-    * its correct cell, so no assignment recomputes — cf. faiss
-    * `merge_into` for on-disk IVF). This is how a 100 TB index is
+    * Both must carry the SAME frozen coarse quantizer and the SAME
+    * storage kind — for SQ8 the same scalar model — which makes the
+    * merge a pure data move: every src row is already in its correct
+    * cell and encoded as dest decodes it, so nothing recomputes (cf.
+    * faiss `merge_into` for on-disk IVF). This is how a 100 TB index is
     * actually built: shards indexed IN PARALLEL with
     * [[buildWithCentroids]] under one shared quantizer, then folded
     * together; sequential [[append]] of raw vectors would serialize the
@@ -509,24 +648,18 @@ object IvfIndex {
       s"cannot merge: $srcPath and $destPath were built under " +
         "different coarse quantizers — rebuild one with the other's " +
         "centroids (buildWithCentroids) first")
-    require(dest.assigned.columns.contains("bits") ==
-      src.assigned.columns.contains("bits"),
-      s"cannot merge: exactly one of $srcPath / $destPath carries a " +
-        "BQ bits column — a mixed artifact would drop the bit-less " +
-        "rows from every BQ shortlist; rebuild the shards uniformly")
-    require(dest.assigned.columns.contains("half") ==
-      src.assigned.columns.contains("half"),
-      s"cannot merge: exactly one of $srcPath / $destPath stores f16 " +
-        "halves — a mixed artifact would null one side's payload on " +
-        "every probe; rebuild the shards uniformly")
-    require(dest.assigned.columns.contains("sq") ==
-      src.assigned.columns.contains("sq"),
-      s"cannot merge: exactly one of $srcPath / $destPath stores SQ8 " +
-        "codes — a mixed artifact would null one side's codes on " +
-        "every probe; rebuild the shards uniformly")
-    buildMemo.entrySet.removeIf(e => e.getValue._2.indexPath == destPath)
-    fixedBuildMemo.entrySet.removeIf(
-      e => e.getValue._2.indexPath == destPath)
+    // a mixed artifact would null one side's payload on every probe,
+    // drop bit-less rows from every BQ shortlist, or decode one side's
+    // SQ8 codes under the other side's scalar model
+    def stores(m: Model) =
+      s"'${m.kind}' vectors (${m.kind.payloadCols(vecCol).mkString(", ")})"
+    require(dest.kind == src.kind,
+      s"cannot merge: $srcPath stores ${stores(src)} and $destPath " +
+        s"stores ${stores(dest)} under ${
+          if (dest.kind.name == src.kind.name) "a different scalar model"
+          else "a different kind"} — rebuild the shards uniformly " +
+        "(one kind, and for sq8 one scalar model)")
+    forget(destPath)
     val conf = spark.sessionState.newHadoopConf()
     val destRoot = new org.apache.hadoop.fs.Path(destPath)
     val fs = destRoot.getFileSystem(conf)
@@ -543,18 +676,27 @@ object IvfIndex {
       // leaves the dest artifact's visible file set exactly as it was.
       //
       // Retry safety: the tag is derived DETERMINISTICALLY from the
-      // src path, so re-running a crashed (or repeated) merge of the
-      // same src overwrites its own staged/visible names instead of
-      // duplicating the already-renamed rows under a fresh random tag.
-      // Each rename's boolean result is checked — on filesystems with
-      // object-store rename semantics a false return would otherwise
-      // leave a hidden .merge-*.tmp silently absent from every scan.
+      // src path and its content (each part file's path under the src
+      // root and its length), so re-running a crashed (or repeated)
+      // merge of the same src overwrites its own staged/visible names
+      // instead of duplicating the already-renamed rows under a fresh
+      // random tag — while a later merge of NEW content at the same
+      // path gets its own names and cannot overwrite some of the
+      // earlier merge's rows and leave the rest. Each rename's boolean
+      // result is checked — on filesystems with object-store rename
+      // semantics a false return would otherwise leave a hidden
+      // .merge-*.tmp silently absent from every scan.
       val srcRoot = new org.apache.hadoop.fs.Path(srcPath)
       val fsrc = srcRoot.getFileSystem(conf)
+      val parts = listPartFiles(fsrc, srcRoot)
+      val rootPrefix = fsrc.makeQualified(srcRoot).toUri.getPath + "/"
+      val fingerprint = (srcPath +: parts.map(f =>
+        f.toUri.getPath.stripPrefix(rootPrefix) + ":" +
+          fsrc.getFileStatus(f).getLen)).mkString("\n")
       val tag =
-        f"${scala.util.hashing.MurmurHash3.stringHash(srcPath)}%08x" +
-          f"${scala.util.hashing.MurmurHash3.stringHash(srcPath.reverse)}%08x"
-      val staged = listPartFiles(fsrc, srcRoot).zipWithIndex.map {
+        f"${scala.util.hashing.MurmurHash3.stringHash(fingerprint)}%08x" +
+          f"${scala.util.hashing.MurmurHash3.stringHash(fingerprint.reverse)}%08x"
+      val staged = parts.zipWithIndex.map {
         case (f, i) =>
           val cellDir = new org.apache.hadoop.fs.Path(
             destPath, f.getParent.getName)
@@ -581,10 +723,7 @@ object IvfIndex {
     }
     // src rows arrive already tombstone-filtered (src was load()ed);
     // dest's own tombstones re-apply on the fresh scan
-    val assigned = minusDeleted(spark, destPath, spark.read
-      .option("basePath", destPath)
-      .parquet(s"$destPath/cell_id=*"))
-    Model(dest.centroids, assigned, idCol, vecCol, destPath)
+    dest.copy(assigned = scanLive(spark, destPath))
   }
 
   /** Operational stats of an inverted file: per-cell row count, share
@@ -615,29 +754,32 @@ object IvfIndex {
       .orderBy(col("cell_id"))
   }
 
-  /** Reopen a durable index written by [[build]]: centroids from the
-    * sidecar table, assignment straight off the cell-partitioned
-    * parquet. No k-means, no corpus scan — the load cost is two
-    * metadata reads, which is what makes the index an artifact rather
-    * than a cache. Heals an interrupted compaction/reindex swap first,
-    * so an index is openable after a crash at any point of either.
+  /** Reopen a durable index written by any build: centroids (and the
+    * kind's fitted model) from the sidecars, the kind from
+    * [[StorageKind.of]], the assignment straight off the
+    * cell-partitioned parquet. No k-means, no corpus scan — the load
+    * cost is a few metadata reads, which is what makes the index an
+    * artifact rather than a cache. Heals an interrupted
+    * compaction/reindex swap first, so an index is openable after a
+    * crash at any point of either.
+    *
+    * @param vecCol the float vector column queries will carry
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String): Model = graft.util.BuildTimer.timed {
+    val conf = spark.sessionState.newHadoopConf()
     locally {
       val p = new org.apache.hadoop.fs.Path(path)
-      graft.util.DirSwap.recover(
-        p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      graft.util.DirSwap.recover(p.getFileSystem(conf), p)
     }
-    val cents = graft.util.SidecarIO.readCentroids(
-      spark.sessionState.newHadoopConf(), s"$path/_centroids")
+    val cents = graft.util.SidecarIO.readCentroids(conf,
+      s"$path/_centroids")
     require(cents.nonEmpty, s"no centroid sidecar under $path")
-    // _centroids sits inside the index dir; exclude it from the
-    // assignment read by listing only cell_id partition dirs
-    val assigned = minusDeleted(spark, path, spark.read
-      .option("basePath", path)
-      .parquet(s"$path/cell_id=*"))
-    Model(cents, assigned, idCol, vecCol, path)
+    // _centroids sits inside the index dir; the assignment read lists
+    // only cell_id partition dirs
+    val assigned = scanLive(spark, path)
+    Model(cents, assigned, idCol, vecCol, path,
+      StorageKind.of(conf, path, assigned.columns.toSeq))
   }
 
   /** Restrict a cell-partitioned corpus to the cells a probe plan
@@ -650,14 +792,14 @@ object IvfIndex {
     corpus.where(col("cell_id").isin(cells.map(Int.box): _*))
 
   /** One query batch's probe plan: the probe rows (qid, qvec, cell_id)
-    * as a driver-local relation, and the sorted distinct cells they
-    * touch.
+    * as a driver-local relation, qvec as the model's kind scores it,
+    * and the sorted distinct cells they touch.
     */
   private case class ProbePlan(rows: DataFrame, cells: Seq[Int])
 
   /** Plan the probes on the driver: each query's nprobe nearest
-    * centroids, ranked by the double sum of squared float differences
-    * and tie-broken by the lower cell index.
+    * centroids, ranked by the double sum of squared differences of the
+    * query's own floats and tie-broken by the lower cell index.
     *
     * Jobs: the query rows are collected once. A local query batch (a
     * `LocalRelation`, e.g. `Seq(...).toDF` or one HTTP request) collects
@@ -673,7 +815,7 @@ object IvfIndex {
   private def probeCells(model: Model, queries: DataFrame,
       nprobe: Int): ProbePlan = {
     val q = queries.select(col(model.idCol).cast("long").as("qid"),
-      col(model.vecCol).as("qvec"),
+      model.kind.query(col(model.vecCol)).as("qvec"),
       col(model.vecCol).cast("array<float>").as("qf"))
     val dim = model.centroids.head.length
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
@@ -716,48 +858,96 @@ object IvfIndex {
       }
       .sortBy(identity).take(nprobe).map(_._2)
 
-  /** ANN top-k: probe nprobe cells, exact distances within candidates,
-    * bounded top-k aggregation. Same output shape as `Knn.topK`.
+  /** Per-query bounded top-k over scored (qid, nid, dist) rows, in the
+    * `Knn.topK` output shape (qid, nid, rank, dist).
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy(col("qid"))
+      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
+      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
+      .select(col("qid"), col("nn.id").as("nid"),
+        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+
+  /** Every probed candidate scored by the model kind's distance: (qid,
+    * nid, dist) over the probed cells of `scan`.
+    */
+  private def scoreProbed(model: Model, plan: ProbePlan, scan: DataFrame,
+      metric: String): DataFrame =
+    scan.select(col("cell_id"),
+        col(model.idCol).cast("long").as("nid"),
+        model.kind.candidate(model.vecCol).as("cvec"))
+      .join(broadcast(plan.rows), "cell_id")
+      .select(col("qid"), col("nid"),
+        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
+
+  /** ANN top-k: probe nprobe cells, score candidates by the model
+    * kind's distance, bounded top-k aggregation. Same output shape as
+    * `Knn.topK`; at nprobe = nCells the result is exact over the kind's
+    * decoded vectors.
     *
     * @param filter optional metadata predicate over the index's
     *   columns (the vector-db staple "WHERE label = 3 ORDER BY
     *   embedding <-> q"): applied to the probed-cell scan, so it
     *   rides down to parquet as a data filter NEXT TO the cell
     *   PartitionFilter — pruned cells stay unread AND non-matching
-    *   rows never reach the distance loop.
+    *   rows never reach the distance loop (for BQ, never occupy
+    *   shortlist slots, so a selective filter cannot starve the
+    *   rescore pool).
+    * @param shortlist for a BQ index, > 0 selects the two-stage search:
+    *   per query, the `shortlist` nearest candidates by hamming
+    *   distance over the STORED sign bits (XOR+POPCNT, map-side
+    *   bounded; the shortlist scan reads the bits column only), then
+    *   an exact re-rank of that pool over the floats — the BQ sibling
+    *   of [[searchAdcRefine]], whose compressed metric any SQL engine
+    *   restates as a sign-disagreement count (how the q_ivf_bq_fixed
+    *   oracle checks it hash-exactly). Must be >= k. 0 scores the
+    *   floats directly; other kinds ignore it.
     */
   def search(model: Model, queries: DataFrame, k: Int, nprobe: Int,
       metric: String = "l2sq",
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      filter: Option[org.apache.spark.sql.Column] = None,
+      shortlist: Int = 0): DataFrame = {
+    val twoStage = model.kind == StorageKind.Bq && shortlist > 0
+    require(!twoStage || shortlist >= k,
+      s"shortlist ($shortlist) must be >= k ($k)")
     // probes are |queries| x nprobe rows, planned on the driver
     val plan = probeCells(model, queries, nprobe)
-    val probes = broadcast(plan.rows)
     // cell_id IN (probed) reaches the scan as a PartitionFilter on the
     // cell-partitioned index — unprobed cells are never read
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
-      .select(col("cell_id"),
-        col(model.idCol).cast("long").as("nid"),
-        col(model.vecCol).as("cvec"))
-    val scored = corpus.join(probes, "cell_id")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+    val scan = filter.foldLeft(
+      pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
+    if (twoStage) {
+      val probes = broadcast(plan.rows
+        .withColumn("qbits", VectorFunctions.bq_encode(col("qvec")))
+        .drop("qvec"))
+      // bits-only projection: the float vector column must NOT appear
+      // in this scan's ReadSchema (asserted in IvfSpec); a metadata
+      // filter adds its own column to the scan but never the floats
+      val pool = scan
+        .select(col("cell_id"),
+          col(model.idCol).cast("long").as("nid"), col("bits"))
+        .join(probes, "cell_id")
+        .select(col("qid"), col("nid"),
+          VectorFunctions.bq_hamming(col("bits"), col("qbits"))
+            .cast("double").as("hd"))
+        .groupBy(col("qid"))
+        .agg(Knn.topk_by_score(col("hd"), col("nid"), shortlist).as("sl"))
+        .select(col("qid"), explode(col("sl")).as("e"))
+        .select(col("qid"), col("e.id").as("nid"))
+      rescore(model, queries, plan, pool, k, metric)
+    } else topK(scoreProbed(model, plan, scan, metric), k)
   }
 
   /** Vector RANGE query: every neighbor within `radius`, not a fixed
     * top-k — the reference's `WHERE embedding <-> q < r` shape
     * (pgvector/lantern distance-threshold scans). Same probe pruning
-    * as [[search]]: unprobed cells are never read; with
-    * nprobe = nCells the result is exact (and brute-force restatable).
-    * Unlike top-k there is no per-query result bound, so the output is
-    * a plain filtered join — no top-k aggregation state at all, the
-    * cheapest possible shape. Rows come back ranked within each query
-    * for presentation parity with [[search]].
+    * and kind-specific scoring as [[search]]: unprobed cells are never
+    * read; with nprobe = nCells the result is exact over the kind's
+    * decoded vectors (and brute-force restatable). Unlike top-k there
+    * is no per-query result bound, so the output is a plain filtered
+    * join — no top-k aggregation state at all, the cheapest possible
+    * shape. Rows come back ranked within each query for presentation
+    * parity with [[search]].
     */
   def rangeSearch(model: Model, queries: DataFrame, radius: Double,
       nprobe: Int, metric: String = "l2sq",
@@ -777,16 +967,31 @@ object IvfIndex {
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(radius > 0, s"radius must be positive (got $radius)")
     val plan = probeCells(model, queries, nprobe)
-    val probes = broadcast(plan.rows)
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
-      .select(col("cell_id"),
-        col(model.idCol).cast("long").as("nid"),
-        col(model.vecCol).as("cvec"))
-    corpus.join(probes, "cell_id")
+    val scan = filter.foldLeft(
+      pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
+    scoreProbed(model, plan, scan, metric).where(col("dist") <= radius)
+  }
+
+  /** The exact stage of a two-stage search: re-rank each query's
+    * candidate `pool` (qid, nid) by the model kind's distance and keep
+    * the top `k`. Every pooled id lives in a probed cell, so the
+    * vector fetch-back carries the same cell PartitionFilter as the
+    * first stage — unprobed cells contribute no vector pages, which is
+    * what keeps the nprobe/nCells read reduction the shortlist earns.
+    * The pool and the query vectors broadcast into the corpus scan, so
+    * the big side never shuffles.
+    */
+  private def rescore(model: Model, queries: DataFrame, plan: ProbePlan,
+      pool: DataFrame, k: Int, metric: String): DataFrame = {
+    val qv = queries.select(col(model.idCol).cast("long").as("qid"),
+      model.kind.query(col(model.vecCol)).as("qvec"))
+    val cv = pruneToProbedCells(model.assigned, plan.cells).select(
+      col(model.idCol).cast("long").as("nid"),
+      model.kind.candidate(model.vecCol).as("cvec"))
+    topK(cv.join(broadcast(pool), "nid")
+      .join(broadcast(qv), "qid")
       .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-      .where(col("dist") <= radius)
+        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist")), k)
   }
 
   /** IVF-PQ: score candidates by asymmetric distance (ADC) over PQ
@@ -858,16 +1063,11 @@ object IvfIndex {
     // corpus-fraction-scale path where the former interpreted UDF
     // boxed a Seq[Seq[Double]] LUT and a Seq[Byte] code row per call
     // and kept the whole shortlist stage out of whole-stage codegen
-    val scored = corpus.join(probes, "cell_id")
+    topK(corpus.join(probes, "cell_id")
       .select(col("qid"), col("nid"),
         graft.functions.VectorFunctions.col(graft.functions.PqAdcScore(
           graft.functions.VectorFunctions.expr(col("lut")),
-          graft.functions.VectorFunctions.expr(col("codes")))).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+          graft.functions.VectorFunctions.expr(col("codes")))).as("dist")), k)
   }
 
   /** Two-stage IVF-PQ search — ADC shortlist + exact re-rank (Jégou,
@@ -875,16 +1075,15 @@ object IvfIndex {
     * source coding", ICASSP 2011; faiss `IndexRefineFlat`). Stage 1
     * runs [[searchAdc]] to a `shortlist`-deep candidate pool per query
     * (codes only — no float vectors move through the probe join);
-    * stage 2 re-ranks ONLY that pool with exact distances over the
-    * original vectors and returns the top `k`.
+    * stage 2 re-ranks ONLY that pool with the model kind's distance
+    * and returns the top `k` — the same rescore stage as a BQ
+    * [[search]] with a shortlist.
     *
-    * Scale shape: the float read of stage 2 touches |queries|·shortlist
-    * rows instead of every row of every probed cell — the candidate
-    * (qid, nid) pool and the query vectors broadcast into the corpus
-    * scan, so the big side never shuffles. This is the standard answer
-    * to "PQ distortion flips neighbors at the top": ADC recall@shortlist
-    * is high even when ADC rank@k is wrong, and the exact pass restores
-    * the true order at negligible cost.
+    * Scale shape: the vector read of stage 2 touches |queries|·shortlist
+    * rows instead of every row of every probed cell. This is the
+    * standard answer to "PQ distortion flips neighbors at the top": ADC
+    * recall@shortlist is high even when ADC rank@k is wrong, and the
+    * exact pass restores the true order at negligible cost.
     *
     * Reference anchor: the reference's external index pairs its
     * compressed scan with full-precision re-ranking the same way
@@ -899,460 +1098,6 @@ object IvfIndex {
     val pool = adcTopK(model, quantized, pqCol, codebook, plan,
         shortlist, lutScale)
       .select(col("qid"), col("nid"))
-    val qv = queries.select(
-      col(model.idCol).cast("long").as("qid"), col(model.vecCol).as("qvec"))
-    // every shortlisted id lives in a probed cell, so the exact-rescore
-    // float read can carry the same cell PartitionFilter as stage 1 —
-    // without it the rescore would scan the float column of EVERY cell
-    // and undo the nprobe/nCells read reduction the shortlist pass earns
-    val cv = pruneToProbedCells(model.assigned, plan.cells)
-      .select(
-        col(model.idCol).cast("long").as("nid"), col(model.vecCol).as("cvec"))
-    val exact = cv.join(broadcast(pool), "nid")
-      .join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    exact.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
-  }
-
-  /** [[buildWithCentroids]] variant that ALSO stores the packed sign
-    * bits ([[graft.functions.BqEncode]]) of every vector alongside the
-    * floats — the B1 quantization kind of the reference's index server
-    * (`external_index/server.rs:93-99`) as an inverted-file column.
-    * The artifact keeps both representations so a two-stage search
-    * ([[searchBqRefine]]) reads ONLY (id, bits) in its shortlist pass
-    * — parquet column pruning skips the float column's pages, a
-    * dim·32/64 ≈ 32× byte reduction on the probed-cell scan — and
-    * fetches floats solely for the per-query shortlist. Storage cost
-    * of carrying bits next to floats is dim/64 longs per row ≈ 3% for
-    * float vectors.
-    */
-  def buildBqWithCentroids(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Float]],
-      indexDir: Option[String] = None,
-      force: Boolean = false): Model = graft.util.BuildTimer.timed {
-    // same guard as build(): a TEXT/UUID id would otherwise build fine
-    // and then cast to null in every search — silent empty results
-    requireIntegralId(df, idCol)
-    requireNoReservedCols(df)
-    val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    // shares fixedBuildMemo with buildWithCentroids; the complemented
-    // centroid hash keeps a bits-bearing artifact from ever being
-    // served where a plain one was requested (and vice versa)
-    val key = (plan.semanticHash(), ~centroidsHash(centroids), idCol,
-      vecCol, indexDir)
-    val hit = if (force) null else fixedBuildMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.assigned.sparkSession eq spark))
-      return hit._2
-    // codegen argmin assignment (NearestCentroid): no boxed-Seq UDF in
-    // the corpus-sized write stage, centroid table rides as a constant
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, centroids)
-    val path = indexDir.getOrElse(
-      s"$tmpBase/ivfbq_${buildCounter.getAndIncrement()}" +
-        s"_c${centroids.length}")
-    df.withColumn("cell_id", cellU(col(vecCol)))
-      .withColumn("bits", VectorFunctions.bq_encode(col(vecCol)))
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite").parquet(path)
-    val assigned = spark.read.parquet(path)
-    graft.util.SidecarIO.writeCentroids(
-      spark.sessionState.newHadoopConf(), s"$path/_centroids", centroids)
-    writeMeta(spark, path, idCol, vecCol)
-    val model = Model(centroids, assigned, idCol, vecCol, path)
-    if (!force && fixedBuildMemo.size < 32)
-      fixedBuildMemo.put(key, (plan, model))
-    model
-  }
-
-  /** [[build]] (k-means coarse quantizer) + the bits-bearing artifact
-    * of [[buildBqWithCentroids]] in one call — the entry point the
-    * HTTP surface uses when an index is created with
-    * `"quantization":"bq"`. The k-means runs on the floats exactly as
-    * in [[build]]; only the stored payload gains the packed-bits
-    * column. `force` has [[build]]'s reindex semantics: no memo
-    * lookup, no memo store — a rebuild into a swap dir must really
-    * write.
-    */
-  def buildBq(df: DataFrame, idCol: String, vecCol: String, nCells: Int,
-      maxIter: Int = 10, seed: Long = 42L,
-      indexDir: Option[String] = None, force: Boolean = false): Model = {
-    val cb = ProductQuantizer.fitCodebook(df, idCol, vecCol,
-      clusters = nCells, splits = 1, maxIter = maxIter, seed = seed)
-    buildBqWithCentroids(df, idCol, vecCol,
-      ProductQuantizer.localize(cb)(0), indexDir, force)
-  }
-
-  /** [[buildWithCentroids]] variant whose inverted file stores the
-    * vectors as IEEE binary16 ([[graft.functions.Fp16Encode]]) INSTEAD
-    * of floats — the F16 scalar-quantization kind of the reference's
-    * index server (`external_index/server.rs:93-99`), completing the
-    * kind set next to F32 (build), I8 (buildSq8) and B1 (buildBq).
-    * Unlike SQ8/PQ it needs no trained model and no sidecar: every
-    * probed-cell scan moves HALF the bytes of the float artifact at
-    * ~2^-11 relative rounding error, which is why f16 is the default
-    * storage kind for serving-scale ANN systems. Cell assignment runs
-    * on the ORIGINAL floats (full-precision quantizer), only the
-    * stored payload is halved.
-    */
-  def buildF16WithCentroids(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Float]],
-      indexDir: Option[String] = None,
-      force: Boolean = false): Model = graft.util.BuildTimer.timed {
-    requireIntegralId(df, idCol)
-    requireNoReservedCols(df)
-    val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    // shares fixedBuildMemo; a distinct centroid-hash tweak keeps an
-    // f16 artifact from ever being served where a float/bq one was
-    // requested (the bq variant uses ~hash; f16 rotates by 1)
-    val key = (plan.semanticHash(),
-      Integer.rotateLeft(centroidsHash(centroids), 1), idCol, vecCol,
-      indexDir)
-    val hit = if (force) null else fixedBuildMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.assigned.sparkSession eq spark))
-      return hit._2
-    // codegen argmin assignment (NearestCentroid): no boxed-Seq UDF in
-    // the corpus-sized write stage, centroid table rides as a constant
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, centroids)
-    val path = indexDir.getOrElse(
-      s"$tmpBase/ivff16_${buildCounter.getAndIncrement()}" +
-        s"_c${centroids.length}")
-    df.withColumn("cell_id", cellU(col(vecCol)))
-      .withColumn("half", VectorFunctions.fp16_encode(col(vecCol)))
-      .drop(vecCol)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite").parquet(path)
-    val assigned = spark.read.parquet(path)
-    graft.util.SidecarIO.writeCentroids(
-      spark.sessionState.newHadoopConf(), s"$path/_centroids", centroids)
-    writeMeta(spark, path, idCol, "half")
-    val model = Model(centroids, assigned, idCol, vecCol, path)
-    if (!force && fixedBuildMemo.size < 32)
-      fixedBuildMemo.put(key, (plan, model))
-    model
-  }
-
-  /** [[build]]'s k-means + the half-precision artifact of
-    * [[buildF16WithCentroids]] — the entry point the HTTP surface uses
-    * for `"quantization":"f16"`.
-    */
-  def buildF16(df: DataFrame, idCol: String, vecCol: String, nCells: Int,
-      maxIter: Int = 10, seed: Long = 42L,
-      indexDir: Option[String] = None, force: Boolean = false): Model = {
-    val cb = ProductQuantizer.fitCodebook(df, idCol, vecCol,
-      clusters = nCells, splits = 1, maxIter = maxIter, seed = seed)
-    buildF16WithCentroids(df, idCol, vecCol,
-      ProductQuantizer.localize(cb)(0), indexDir, force)
-  }
-
-  /** ANN top-k over an F16 inverted file: probe cells as in [[search]],
-    * score candidates by the SYMMETRIC half-precision distance — both
-    * the stored vector and the query are rounded through binary16
-    * before the exact double fold — and take the per-query top k.
-    * Symmetry makes the result independently restatable (the
-    * q_ivf_f16_fixed oracle re-derives the same grid in exact
-    * arithmetic) and means a full probe reproduces q_f16_knn exactly.
-    * Single-stage by design: at ~1e-3 relative error f16 ranking
-    * rarely diverges from f32, so unlike BQ/PQ there is no
-    * shortlist+refine stage to pay for — the reference's f16 index
-    * kind re-ranks nothing either.
-    */
-  def searchF16(model: Model, queries: DataFrame, k: Int, nprobe: Int,
-      metric: String = "l2sq",
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(model.assigned.columns.contains("half"),
-      s"index at ${model.indexPath} carries no 'half' column — build " +
-        "it with buildF16WithCentroids")
-    val plan = probeCells(model, queries, nprobe)
-    val probes = broadcast(plan.rows
-      .withColumn("qdec", VectorFunctions.fp16_decode(
-        VectorFunctions.fp16_encode(col("qvec"))))
-      .drop("qvec"))
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
-      .select(col("cell_id"),
-        col(model.idCol).cast("long").as("nid"),
-        VectorFunctions.fp16_decode(col("half")).as("cdec"))
-    val scored = corpus.join(probes, "cell_id")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cdec"), col("qdec")).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
-  }
-
-  /** Two-stage binary-quantized IVF search: probe cells as in
-    * [[search]], shortlist per query by hamming distance over the
-    * STORED sign bits (XOR+POPCNT, map-side-bounded — the probed-cell
-    * scan reads the bits column only), then re-rank the shortlist with
-    * exact distances over the floats. The BQ sibling of
-    * [[searchAdcRefine]]: same refine contract, but the compressed
-    * representation is 1 bit/dim instead of PQ codes, needs no trained
-    * codebook, and the compressed metric is restatable by any SQL
-    * engine as a sign-disagreement count (how the q_ivf_bq_fixed
-    * oracle checks it hash-exactly).
-    */
-  /** @param filter optional metadata predicate over the index's
-    *   columns, applied INSIDE the shortlist scan (next to the cell
-    *   PartitionFilter, like [[search]]): candidates that fail it
-    *   never occupy shortlist slots, so a selective filter cannot
-    *   starve the rescore pool. The rescore needs no second
-    *   application — every shortlisted id already passed.
-    */
-  def searchBqRefine(model: Model, queries: DataFrame, k: Int,
-      nprobe: Int, shortlist: Int, metric: String = "l2sq",
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    require(model.assigned.columns.contains("bits"),
-      s"index at ${model.indexPath} carries no 'bits' column — build " +
-        "it with buildBqWithCentroids")
-    val plan = probeCells(model, queries, nprobe)
-    val probes = broadcast(plan.rows
-      .withColumn("qbits", VectorFunctions.bq_encode(col("qvec")))
-      .drop("qvec"))
-    // bits-only projection: the float vector column must NOT appear in
-    // this scan's ReadSchema (asserted in IvfSpec); a metadata filter
-    // adds its own column to the scan but still never the floats
-    val bitsScan = filter.foldLeft(
-        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
-      .select(col("cell_id"),
-        col(model.idCol).cast("long").as("nid"), col("bits"))
-    val pool = bitsScan.join(probes, "cell_id")
-      .select(col("qid"), col("nid"),
-        VectorFunctions.bq_hamming(col("bits"), col("qbits"))
-          .cast("double").as("hd"))
-      .groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("hd"), col("nid"), shortlist).as("sl"))
-      .select(col("qid"), explode(col("sl")).as("e"))
-      .select(col("qid"), col("e.id").as("nid"))
-    val qv = queries.select(
-      col(model.idCol).cast("long").as("qid"), col(model.vecCol).as("qvec"))
-    // shortlisted ids can only come from probed cells, so the float
-    // fetch-back is pruned by the SAME probe set as the bits scan —
-    // this is what makes "floats solely for the shortlist" literal:
-    // unprobed cells contribute neither bits pages nor float pages
-    val cv = pruneToProbedCells(model.assigned, plan.cells).select(
-      col(model.idCol).cast("long").as("nid"), col(model.vecCol).as("cvec"))
-    val exact = cv.join(broadcast(pool), "nid")
-      .join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    exact.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
-  }
-
-  private val sq8BuildMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Int, Long, Option[String]),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      (Model, Array[Double], Array[Double]))]()
-
-  /** IVF over SQ8-COMPRESSED cells: the inverted file stores int8
-    * codes instead of float vectors, so a probe reads ~4x fewer bytes
-    * from each probed cell on top of skipping unprobed cells entirely
-    * — the composed I/O story for a 100 TB embedding corpus. Cell
-    * assignment (k-means on the ORIGINAL floats, full-precision
-    * centroids) is unchanged; only the stored payload is quantized.
-    * Returns the model plus the per-dimension (min, max) scalar model
-    * (bounded by dim; persisted as a `_sqmodel` sidecar so `loadSq8`
-    * reopens the artifact without the source corpus).
-    */
-  def buildSq8(df: DataFrame, idCol: String, vecCol: String, nCells: Int,
-      maxIter: Int = 10, seed: Long = 42L,
-      indexDir: Option[String] = None)
-      : (Model, Array[Double], Array[Double]) = graft.util.BuildTimer.timed {
-    requireIntegralId(df, idCol)
-    requireNoReservedCols(df)
-    val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, vecCol, nCells, maxIter, seed,
-      indexDir)
-    val hit = sq8BuildMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2._1.assigned.sparkSession eq spark))
-      return hit._2
-    val sqModel = ScalarQuantizer.fit(df, vecCol)
-    val rows = sqModel.collect().sortBy(_.getInt(0))
-    val mn = rows.map(_.getDouble(1)); val mx = rows.map(_.getDouble(2))
-    // float model: same coarse quantizer as the uncompressed index
-    val cb = ProductQuantizer.fitCodebook(df, idCol, vecCol,
-      clusters = nCells, splits = 1, maxIter = maxIter, seed = seed)
-    val local = ProductQuantizer.localize(cb)(0)
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, local)
-    val path = indexDir.getOrElse(
-      s"$tmpBase/ivfsq_${buildCounter.getAndIncrement()}" +
-        s"_c${nCells}_s$seed")
-    import spark.implicits._
-    ScalarQuantizer.quantize(df, vecCol, "sq",
-        spark.createDataset(rows.toSeq.map(r =>
-          (r.getInt(0), r.getDouble(1), r.getDouble(2))))
-          .toDF("pos", "mn", "mx"))
-      .withColumn("cell_id", cellU(col(vecCol)))
-      .select(col(idCol), col("sq"), col("cell_id"))
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite").parquet(path)
-    val assigned = spark.read.parquet(path)
-    locally {
-      val conf = spark.sessionState.newHadoopConf()
-      graft.util.SidecarIO.writeCentroids(conf, s"$path/_centroids",
-        local)
-      graft.util.SidecarIO.writeSqModel(conf, s"$path/_sqmodel", mn, mx)
-    }
-    writeMeta(spark, path, idCol, "sq")
-    val result = (Model(local, assigned, idCol, "sq", path), mn, mx)
-    if (sq8BuildMemo.size < 32) sq8BuildMemo.put(key, (plan, result))
-    result
-  }
-
-  /** [[buildSq8]] under CALLER-SUPPLIED frozen coarse centroids — no
-    * k-means. The scalar (min, max) model still fits on the given
-    * corpus (it is data-derived, not a tuning choice). Completes the
-    * fixed-quantizer build set across all stored kinds
-    * (buildWithCentroids / buildF16WithCentroids / buildBqWithCentroids
-    * / this), which is what lets the q_quant_kinds face hash-check a
-    * recall comparison of every kind under one deterministic quantizer
-    * — and is the production rebuild path of [[appendSq8]].
-    */
-  def buildSq8WithCentroids(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Float]],
-      indexDir: Option[String] = None)
-      : (Model, Array[Double], Array[Double]) = graft.util.BuildTimer.timed {
-    requireIntegralId(df, idCol)
-    requireNoReservedCols(df)
-    val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, vecCol,
-      centroidsHash(centroids), -1, 0L, indexDir)
-    val hit = sq8BuildMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2._1.assigned.sparkSession eq spark))
-      return hit._2
-    val sqModel = ScalarQuantizer.fit(df, vecCol)
-    val rows = sqModel.collect().sortBy(_.getInt(0))
-    val mn = rows.map(_.getDouble(1)); val mx = rows.map(_.getDouble(2))
-    // codegen argmin assignment (NearestCentroid): no boxed-Seq UDF in
-    // the corpus-sized write stage, centroid table rides as a constant
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, centroids)
-    val path = indexDir.getOrElse(
-      s"$tmpBase/ivfsqf_${buildCounter.getAndIncrement()}" +
-        s"_c${centroids.length}")
-    import spark.implicits._
-    ScalarQuantizer.quantize(df, vecCol, "sq",
-        spark.createDataset(rows.toSeq.map(r =>
-          (r.getInt(0), r.getDouble(1), r.getDouble(2))))
-          .toDF("pos", "mn", "mx"))
-      .withColumn("cell_id", cellU(col(vecCol)))
-      .select(col(idCol), col("sq"), col("cell_id"))
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite").parquet(path)
-    val assigned = spark.read.parquet(path)
-    locally {
-      val conf = spark.sessionState.newHadoopConf()
-      graft.util.SidecarIO.writeCentroids(conf, s"$path/_centroids",
-        centroids)
-      graft.util.SidecarIO.writeSqModel(conf, s"$path/_sqmodel", mn, mx)
-    }
-    writeMeta(spark, path, idCol, "sq")
-    val result = (Model(centroids, assigned, idCol, "sq", path), mn, mx)
-    if (sq8BuildMemo.size < 32) sq8BuildMemo.put(key, (plan, result))
-    result
-  }
-
-  /** [[append]] for the SQ8 index: arriving vectors are quantized with
-    * the index's FROZEN per-dimension scalar model (out-of-range
-    * values saturate — the Sq8Encode clamp) and routed into cells by
-    * the frozen coarse centroids, then appended as new files inside
-    * the existing `cell_id=` dirs. Neither quantizer retrains; like
-    * the float twin, periodic re-fit/rebuild answers real drift.
-    */
-  def appendSq8(model: Model, mins: Array[Double], maxs: Array[Double],
-      df: DataFrame, idCol: String, vecCol: String): Model = graft.util.BuildTimer.timed {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cellU = (c: org.apache.spark.sql.Column) =>
-      VectorFunctions.nearest_centroid(c, model.centroids)
-    val sqModel = mins.indices.map(i => (i, mins(i), maxs(i)))
-      .toDF("pos", "mn", "mx")
-    ScalarQuantizer.quantize(df, vecCol, "sq", sqModel)
-      .withColumn("cell_id", cellU(col(vecCol)))
-      .select(col(idCol), col("sq"), col("cell_id"))
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("append")
-      .parquet(model.indexPath)
-    val assigned = minusDeleted(spark, model.indexPath, spark.read
-      .option("basePath", model.indexPath)
-      .parquet(s"${model.indexPath}/cell_id=*"))
-    Model(model.centroids, assigned, model.idCol, "sq", model.indexPath)
-  }
-
-  /** Reopen a durable SQ8 index written by [[buildSq8]]: centroids and
-    * the scalar model from their sidecars, codes straight off the
-    * cell-partitioned parquet — no k-means, no quantization pass, no
-    * source corpus. Symmetric with [[load]].
-    */
-  def loadSq8(spark: SparkSession, path: String, idCol: String)
-      : (Model, Array[Double], Array[Double]) = graft.util.BuildTimer.timed {
-    locally {
-      val p = new org.apache.hadoop.fs.Path(path)
-      graft.util.DirSwap.recover(
-        p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    val cents = graft.util.SidecarIO.readCentroids(
-      conf, s"$path/_centroids")
-    require(cents.nonEmpty, s"no centroid sidecar under $path")
-    val (mn, mx) = graft.util.SidecarIO.readSqModel(
-      conf, s"$path/_sqmodel")
-    require(mn.nonEmpty, s"no scalar-model sidecar under $path")
-    val assigned = minusDeleted(spark, path, spark.read
-      .option("basePath", path)
-      .parquet(s"$path/cell_id=*"))
-    (Model(cents, assigned, idCol, "sq", path), mn, mx)
-  }
-
-  /** ANN top-k over an SQ8 index: probe cells as in [[search]], decode
-    * candidates' codes with the codegen'd Sq8Decode, exact distances
-    * against the full-precision query. Unprobed cells stay unread AND
-    * probed cells move int8 codes, not floats.
-    */
-  def searchSq8(model: Model, mins: Array[Double], maxs: Array[Double],
-      queries: DataFrame, queryVecCol: String, k: Int, nprobe: Int,
-      metric: String = "l2sq",
-      filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val qm = Model(model.centroids, model.assigned, model.idCol,
-      queryVecCol, model.indexPath)
-    val plan = probeCells(qm, queries, nprobe)
-    val probes = broadcast(plan.rows)
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
-      .select(col("cell_id"),
-        col(model.idCol).cast("long").as("nid"),
-        VectorFunctions.col(graft.functions.Sq8Decode(
-          VectorFunctions.expr(col("sq")),
-          new graft.functions.DoubleVecParam(mins),
-          new graft.functions.DoubleVecParam(maxs))).as("cvec"))
-    val scored = corpus.join(probes, "cell_id")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+    rescore(model, queries, plan, pool, k, metric)
   }
 }

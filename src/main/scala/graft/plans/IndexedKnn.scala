@@ -2,7 +2,7 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, AttributeReference, Cast, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{
@@ -56,9 +56,9 @@ object IndexedKnn {
 
   /** A registered index: where it lives and how to search it.
     * nprobe <= 0 means probe all cells (exact). shortlist > 0 opts a
-    * bits-bearing artifact (IvfIndex.buildBq*) into the two-stage
-    * hamming-shortlist + exact-rescore path at that depth; it is
-    * ignored for plain float indexes.
+    * BQ artifact (built with `kind = Bq`) into the two-stage
+    * hamming-shortlist + exact-rescore path at that depth; other
+    * kinds ignore it.
     */
   case class Entry(indexDir: String, idCol: String, vecCol: String,
       nprobe: Int, shortlist: Int = 0)
@@ -139,24 +139,16 @@ object IndexedKnn {
     val corpus = spark.read.parquet(path)
     val old = model(spark, e)
     val nCells = old.centroids.length
-    // a quantized artifact must rebuild AS its kind (bits -> bq,
-    // half -> f16), or every search after the reindex silently loses
-    // the quantized path
-    val wasBq = old.assigned.columns.contains("bits")
-    val wasF16 = old.assigned.columns.contains("half")
     val live = new org.apache.hadoop.fs.Path(e.indexDir)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     graft.util.DirSwap.clearSiblings(fs, live)
     val rebuildDir = graft.util.DirSwap.rebuildPath(e.indexDir)
-    if (wasBq)
-      IvfIndex.buildBq(corpus, e.idCol, e.vecCol, nCells,
-        maxIter = maxIter, indexDir = Some(rebuildDir), force = true)
-    else if (wasF16)
-      IvfIndex.buildF16(corpus, e.idCol, e.vecCol, nCells,
-        maxIter = maxIter, indexDir = Some(rebuildDir), force = true)
-    else
-      IvfIndex.build(corpus, e.idCol, e.vecCol, nCells,
-        maxIter = maxIter, indexDir = Some(rebuildDir), force = true)
+    // a quantized artifact must rebuild AS its kind, or every search
+    // after the reindex silently loses the quantized path; an SQ8
+    // scalar model refits on the current corpus like the centroids
+    IvfIndex.build(corpus, e.idCol, e.vecCol, nCells,
+      maxIter = maxIter, indexDir = Some(rebuildDir), force = true,
+      kind = IvfIndex.StorageKind.byName(old.kind.name))
     graft.util.DirSwap.publish(fs, live)
     register(spark, path, e.indexDir, e.idCol, e.vecCol, e.nprobe, name,
       e.shortlist)
@@ -458,17 +450,8 @@ object IndexedKnnRule extends Rule[LogicalPlan] {
       projList: Seq[NamedExpression]): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.{
       LessThan, LessThanOrEqual}
-    val spark = SparkSession.active
-    val m = model(spark, e)
-    val nprobe = if (e.nprobe <= 0) m.centroids.length else e.nprobe
-    import spark.implicits._
-    val queries = Seq((0L, qvec.toSeq)).toDF(e.idCol, e.vecCol)
-    rewriting.set(true)
-    val newPlan = try {
-      val searched = IvfIndex.rangeCandidates(m, queries, radius,
-        nprobe, metric)
-      searched.queryExecution.optimizedPlan
-    } finally rewriting.set(false)
+    val newPlan = probePlan(e, qvec)((m, queries, nprobe) =>
+      IvfIndex.rangeCandidates(m, queries, radius, nprobe, metric))
     val nid = newPlan.output.find(_.name == "nid").get
     val dist = newPlan.output.find(_.name == "dist").get
     // re-apply the ORIGINAL comparison (< vs <=) on the computed dist
@@ -483,6 +466,32 @@ object IndexedKnnRule extends Rule[LogicalPlan] {
         Alias(Cast(nid, ar.dataType), ar.name)(exprId = ar.exprId)
     }, filtered)
   }
+
+  /** The optimized plan of `probe(model, queries, nprobe)` over the
+    * registered index, `queries` holding the one vector `qvec`; the
+    * re-entrancy latch is held while it optimizes.
+    */
+  private def probePlan(e: Entry, qvec: Array[Float])(
+      probe: (IvfIndex.Model, DataFrame, Int) => DataFrame): LogicalPlan = {
+    val spark = SparkSession.active
+    val m = model(spark, e)
+    val nprobe = if (e.nprobe <= 0) m.centroids.length else e.nprobe
+    import spark.implicits._
+    val queries = Seq((0L, qvec.toSeq)).toDF(e.idCol, e.vecCol)
+    rewriting.set(true)
+    try probe(m, queries, nprobe).queryExecution.optimizedPlan
+    finally rewriting.set(false)
+  }
+
+  /** The registered index's top-k: scored by the artifact's kind (an
+    * F16 or SQ8 index is approximate by registration, like a BQ
+    * shortlist); a BQ index registered with a shortlist depth takes the
+    * two-stage path at that depth, never below k.
+    */
+  private def searchIndex(e: Entry, k: Int, metric: String)(
+      m: IvfIndex.Model, queries: DataFrame, nprobe: Int): DataFrame =
+    IvfIndex.search(m, queries, k, nprobe, metric,
+      shortlist = if (e.shortlist > 0) math.max(e.shortlist, k) else 0)
 
   /** The payload variant of [[searchPlan]]: probe as usual, then
     * fetch the requested non-vector columns back from the MATCHED
@@ -499,35 +508,19 @@ object IndexedKnnRule extends Rule[LogicalPlan] {
       distAlias: Alias, rel: LogicalRelation,
       payload: Seq[AttributeReference]): LogicalPlan = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val spark = SparkSession.active
-    val m = model(spark, e)
-    val nprobe = if (e.nprobe <= 0) m.centroids.length else e.nprobe
-    import spark.implicits._
-    val queries = Seq((0L, qvec.toSeq)).toDF(e.idCol, e.vecCol)
-    rewriting.set(true)
-    val newPlan = try {
-      val searched =
-        (if (e.shortlist > 0 && m.assigned.columns.contains("bits"))
-          IvfIndex.searchBqRefine(m, queries, k, nprobe,
-            math.max(e.shortlist, k), metric)
-        else if (m.assigned.columns.contains("half"))
-          // f16 artifact: symmetric half-precision scoring —
-          // approximate by registration, like a BQ shortlist; the
-          // float path below would find no float column to scan
-          IvfIndex.searchF16(m, queries, k, nprobe, metric)
-        else IvfIndex.search(m, queries, k, nprobe, metric))
-          .select(col("nid").as("__graft_nid"),
-            col("dist").as("__graft_dist"))
+    val newPlan = probePlan(e, qvec) { (m, queries, nprobe) =>
+      val searched = searchIndex(e, k, metric)(m, queries, nprobe)
+        .select(col("nid").as("__graft_nid"),
+          col("dist").as("__graft_dist"))
       // fetch from the ORIGINAL matched relation (same exprIds play no
       // role here — a fresh wrap is a fresh scan of the same files),
       // reading only id + payload: the vector column stays unread
       val base = org.apache.spark.sql.graftshim.GraftShims
-        .dataFrame(spark, rel)
+        .dataFrame(queries.sparkSession, rel)
         .select((e.idCol +: payload.map(_.name)).distinct.map(col): _*)
-      val joined = base.join(broadcast(searched),
+      base.join(broadcast(searched),
         col(e.idCol).cast("long") === col("__graft_nid"))
-      joined.queryExecution.optimizedPlan
-    } finally rewriting.set(false)
+    }
     def out(name: String) = newPlan.output.find(_.name == name).get
     Project(projList.map {
       case al: Alias if al.exprId == distAlias.exprId =>
@@ -546,26 +539,7 @@ object IndexedKnnRule extends Rule[LogicalPlan] {
   private def searchPlan(e: Entry, metric: String, qvec: Array[Float],
       k: Int, projList: Seq[NamedExpression], distAlias: Alias)
       : LogicalPlan = {
-    val spark = SparkSession.active
-    val m = model(spark, e)
-    val nprobe = if (e.nprobe <= 0) m.centroids.length else e.nprobe
-    import spark.implicits._
-    val queries = Seq((0L, qvec.toSeq)).toDF(e.idCol, e.vecCol)
-    rewriting.set(true)
-    val newPlan = try {
-      // a bits-bearing artifact registered with a shortlist depth takes
-      // the two-stage BQ path; a half-bearing one the f16 path (the
-      // float path would find no float column); the depth never drops
-      // below k
-      val searched =
-        if (e.shortlist > 0 && m.assigned.columns.contains("bits"))
-          IvfIndex.searchBqRefine(m, queries, k, nprobe,
-            math.max(e.shortlist, k), metric)
-        else if (m.assigned.columns.contains("half"))
-          IvfIndex.searchF16(m, queries, k, nprobe, metric)
-        else IvfIndex.search(m, queries, k, nprobe, metric)
-      searched.queryExecution.optimizedPlan
-    } finally rewriting.set(false)
+    val newPlan = probePlan(e, qvec)(searchIndex(e, k, metric))
     val nid = newPlan.output.find(_.name == "nid").get
     val dist = newPlan.output.find(_.name == "dist").get
     Project(projList.map {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => V}
 import graft.operators.Knn
+import graft.operators.IvfIndex.StorageKind
 
 /** Vector operator coverage (SURVEY §2.8 F15, §2.3 J3/J4, §2.2 P6,
   * §2.11 X5-X7): distances, norms, subvector slices, brute-force kNN,
@@ -29,19 +30,28 @@ object VectorQueries {
     * through the buildWithCentroids memo. Mutating faces (merge,
     * compact) deliberately do NOT share it.
     */
-  private def fixed16Dir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_fixed16_" +
+  private def fixed16Dir(dir: String): String = jvmDir("fixed16", dir)
+
+  /** A per-JVM temp dir for the artifact `tag` over the tables at `dir`:
+    * stable across a JVM's reps, distinct across JVMs and datasets.
+    */
+  private def jvmDir(tag: String, dir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
       s"${java.lang.ProcessHandle.current().pid()}_" +
       Integer.toHexString(dir.hashCode)
+
+  /** The first 16 embeddings by id: the frozen coarse quantizer of the
+    * fixed-anchor IVF faces, which the oracles restate.
+    */
+  private def anchors16(emb: DataFrame): Array[Array[Float]] =
+    emb.where($"vec_id" < 16).orderBy($"vec_id")
+      .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
 
   /** Shared per-JVM rollup dir for the embeddings-table MV faces: one
     * build (label-grain, carrying the vector-sum measure) serves every
     * rep — register is idempotent once the _SUCCESS marker exists.
     */
-  private[graft] def embMvDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_embmv_" +
-      s"${java.lang.ProcessHandle.current().pid()}_" +
-      Integer.toHexString(dir.hashCode)
+  private[graft] def embMvDir(dir: String): String = jvmDir("embmv", dir)
 
   private def registerEmbMv(s: SparkSession, dir: String): Unit =
     graft.plans.SummaryRewrite.register(s, s"$dir/embeddings.parquet",
@@ -107,13 +117,12 @@ object VectorQueries {
     // q_sq_knn; IvfSpec guards the pruned partial-probe plan.
     "q_ivf_sq_knn" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val (model, mn, mx) = graft.operators.IvfIndex.buildSq8(
+      val model = graft.operators.IvfIndex.build(
         emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
-        nCells = 8)
+        nCells = 8, kind = StorageKind.Sq8())
       val queries = emb.where($"vec_id" < 10)
         .select($"vec_id", $"embedding")
-      graft.operators.IvfIndex.searchSq8(model, mn, mx, queries,
-        "embedding", k = 10, nprobe = 8)
+      graft.operators.IvfIndex.search(model, queries, k = 10, nprobe = 8)
         .select($"qid", $"nid", $"rank", round($"dist", 4).as("dist"))
         .orderBy($"qid", $"rank")
     }),
@@ -459,9 +468,7 @@ object VectorQueries {
     "q_indexed_knn" -> ((s, dir) => {
       val path = s"$dir/embeddings.parquet"
       val emb = Tables(s, dir, "embeddings")
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_idxknn_${java.lang.ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode)
+      val idxDir = jvmDir("idxknn", dir)
       graft.operators.IvfIndex.build(emb, "vec_id", "embedding",
         nCells = 16, maxIter = 5, indexDir = Some(idxDir))
       graft.plans.IndexedKnn.register(s, path, idxDir, "vec_id",
@@ -484,12 +491,8 @@ object VectorQueries {
     "q_indexed_knn_probe" -> ((s, dir) => {
       val path = s"$dir/embeddings.parquet"
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_idxprobe_${java.lang.ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode)
+      val cents = anchors16(emb)
+      val idxDir = jvmDir("idxprobe", dir)
       graft.operators.IvfIndex.buildWithCentroids(emb, "vec_id",
         "embedding", cents, Some(idxDir))
       graft.plans.IndexedKnn.register(s, path, idxDir, "vec_id",
@@ -510,9 +513,7 @@ object VectorQueries {
     "q_indexed_payload" -> ((s, dir) => {
       val path = s"$dir/embeddings.parquet"
       val emb = Tables(s, dir, "embeddings")
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_idxpay_${java.lang.ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode)
+      val idxDir = jvmDir("idxpay", dir)
       graft.operators.IvfIndex.build(emb, "vec_id", "embedding",
         nCells = 8, maxIter = 5, indexDir = Some(idxDir))
       graft.plans.IndexedKnn.register(s, path, idxDir, "vec_id",
@@ -533,14 +534,10 @@ object VectorQueries {
     "q_indexed_bq" -> ((s, dir) => {
       val path = s"$dir/embeddings.parquet"
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_idxbq_${java.lang.ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode)
-      graft.operators.IvfIndex.buildBqWithCentroids(emb, "vec_id",
-        "embedding", cents, Some(idxDir))
+      val cents = anchors16(emb)
+      val idxDir = jvmDir("idxbq", dir)
+      graft.operators.IvfIndex.buildWithCentroids(emb, "vec_id",
+        "embedding", cents, Some(idxDir), kind = StorageKind.Bq)
       graft.plans.IndexedKnn.register(s, path, idxDir, "vec_id",
         "embedding", nprobe = 4, shortlist = 40)
       val q = emb.where($"vec_id" === 0).select($"embedding")
@@ -560,14 +557,10 @@ object VectorQueries {
     "q_indexed_f16" -> ((s, dir) => {
       val path = s"$dir/embeddings.parquet"
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_idxf16_${java.lang.ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode)
-      graft.operators.IvfIndex.buildF16WithCentroids(emb, "vec_id",
-        "embedding", cents, Some(idxDir))
+      val cents = anchors16(emb)
+      val idxDir = jvmDir("idxf16", dir)
+      graft.operators.IvfIndex.buildWithCentroids(emb, "vec_id",
+        "embedding", cents, Some(idxDir), kind = StorageKind.F16)
       graft.plans.IndexedKnn.register(s, path, idxDir, "vec_id",
         "embedding", nprobe = 4)
       val q = emb.where($"vec_id" === 0).select($"embedding")
@@ -587,9 +580,7 @@ object VectorQueries {
     "q_indexed_range" -> ((s, dir) => {
       val path = s"$dir/embeddings.parquet"
       val emb = Tables(s, dir, "embeddings")
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_idxknn_${java.lang.ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode)
+      val idxDir = jvmDir("idxknn", dir)
       graft.operators.IvfIndex.build(emb, "vec_id", "embedding",
         nCells = 16, maxIter = 5, indexDir = Some(idxDir))
       graft.plans.IndexedKnn.register(s, path, idxDir, "vec_id",
@@ -656,18 +647,16 @@ object VectorQueries {
     // force over the whole corpus (shares q_f16_knn's oracle).
     "q_ivf_f16_append" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       val resident = emb.where($"vec_id" % 2 === 0)
       val arriving = emb.where($"vec_id" % 2 =!= 0)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_ivf_f16_append").toString
-      val base = graft.operators.IvfIndex.buildF16WithCentroids(
+      val base = graft.operators.IvfIndex.buildWithCentroids(
         resident, "vec_id", "embedding", cents,
-        indexDir = Some(s"$tmp/idx"))
+        indexDir = Some(s"$tmp/idx"), kind = StorageKind.F16)
       val model = graft.operators.IvfIndex.append(base, arriving)
-      graft.operators.IvfIndex.searchF16(model,
+      graft.operators.IvfIndex.search(model,
           emb.where($"vec_id" < 10), k = 10, nprobe = 16)
         .select($"qid", $"nid", $"rank", round($"dist", 4).as("dist"))
         .orderBy($"qid", $"rank")
@@ -696,9 +685,7 @@ object VectorQueries {
     // over the union, so the brute-force oracle restates it.
     "q_ivf_merge_knn" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_ivf_merge").toString
       graft.operators.IvfIndex.buildWithCentroids(
@@ -751,12 +738,10 @@ object VectorQueries {
     // hash-checked.
     "q_ivf_bq_fixed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      val model = graft.operators.IvfIndex.buildBqWithCentroids(
-        emb, "vec_id", "embedding", cents)
-      graft.operators.IvfIndex.searchBqRefine(model,
+      val cents = anchors16(emb)
+      val model = graft.operators.IvfIndex.buildWithCentroids(
+        emb, "vec_id", "embedding", cents, kind = StorageKind.Bq)
+      graft.operators.IvfIndex.search(model,
           emb.where($"vec_id" < 10), k = 10, nprobe = 4, shortlist = 40)
         .select($"qid", $"nid", $"rank", round($"dist", 4).as("dist"))
         .orderBy($"qid", $"rank")
@@ -815,12 +800,10 @@ object VectorQueries {
     // Assignment, probing, rounding grid, and ranking all restated.
     "q_ivf_f16_fixed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      val model = graft.operators.IvfIndex.buildF16WithCentroids(
-        emb, "vec_id", "embedding", cents)
-      graft.operators.IvfIndex.searchF16(model,
+      val cents = anchors16(emb)
+      val model = graft.operators.IvfIndex.buildWithCentroids(
+        emb, "vec_id", "embedding", cents, kind = StorageKind.F16)
+      graft.operators.IvfIndex.search(model,
           emb.where($"vec_id" < 10), k = 10, nprobe = 4)
         .select($"qid", $"nid", $"rank", round($"dist", 4).as("dist"))
         .orderBy($"qid", $"rank")
@@ -837,9 +820,7 @@ object VectorQueries {
     // oracle, so the comparison itself is hash-verified.
     "q_quant_kinds" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       val queries = emb.where($"vec_id" < 10)
       val truth = Knn.topK(emb, queries, "vec_id", "embedding", 10)
         .select($"qid", $"nid")
@@ -847,18 +828,12 @@ object VectorQueries {
         res.select($"qid", $"nid").join(truth, Seq("qid", "nid"))
           .agg(count(lit(1)).cast("int").as("matches"))
           .select(lit(kind).as("kind"), $"matches")
-      val I = graft.operators.IvfIndex
-      val f32 = I.buildWithCentroids(emb, "vec_id", "embedding", cents)
-      val f16 = I.buildF16WithCentroids(emb, "vec_id", "embedding", cents)
-      val (sq8, mn, mx) = I.buildSq8WithCentroids(
-        emb, "vec_id", "embedding", cents)
-      val bq = I.buildBqWithCentroids(emb, "vec_id", "embedding", cents)
-      hits(I.search(f32, queries, 10, 4), "ivf_f32")
-        .unionAll(hits(I.searchF16(f16, queries, 10, 4), "ivf_f16"))
-        .unionAll(hits(I.searchSq8(sq8, mn, mx, queries, "embedding",
-          10, 4), "ivf_sq8"))
-        .unionAll(hits(I.searchBqRefine(bq, queries, 10, 4, 40),
-          "ivf_bq"))
+      Seq("f32", "f16", "sq8", "bq").map { kind =>
+        val m = graft.operators.IvfIndex.buildWithCentroids(emb, "vec_id",
+          "embedding", cents, kind = StorageKind.byName(kind))
+        hits(graft.operators.IvfIndex.search(m, queries, 10, 4,
+          shortlist = 40), s"ivf_$kind")
+      }.reduce(_ unionAll _)
         .orderBy($"kind")
     }),
 
@@ -870,9 +845,7 @@ object VectorQueries {
     // hash-checked, not rows-only. nprobe 4/16 keeps genuine misses.
     "q_ivf_recall_fixed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       val tmp = fixed16Dir(dir)
       val model = graft.operators.IvfIndex.buildWithCentroids(
         emb, "vec_id", "embedding", cents, Some(s"$tmp/idx"))
@@ -892,9 +865,7 @@ object VectorQueries {
     // the whole computation including the metrics.
     "q_ann_quality" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       val tmp = fixed16Dir(dir)
       val model = graft.operators.IvfIndex.buildWithCentroids(
         emb, "vec_id", "embedding", cents, Some(s"$tmp/idx"))
@@ -911,9 +882,7 @@ object VectorQueries {
     // restatable; the file half is asserted in IvfCompactSpec.
     "q_ivf_cell_stats" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       val tmp = fixed16Dir(dir)
       val model = graft.operators.IvfIndex.buildWithCentroids(
         emb, "vec_id", "embedding", cents, Some(s"$tmp/idx"))
@@ -935,9 +904,7 @@ object VectorQueries {
     // partial sums; anchors broadcast.
     "q_embedding_drift" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       val assigned = emb.select(
         graft.functions.VectorFunctions
           .nearest_centroid($"embedding", cents)
@@ -975,14 +942,14 @@ object VectorQueries {
       val emb = Tables(s, dir, "embeddings")
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_ivfsq_append").toString
-      val (model, mn, mx) = graft.operators.IvfIndex.buildSq8(
+      val model = graft.operators.IvfIndex.build(
         emb.where($"vec_id" % 2 === 0), "vec_id", "embedding",
-        nCells = 16, maxIter = 5, indexDir = Some(s"$tmp/idx"))
-      val appended = graft.operators.IvfIndex.appendSq8(
-        model, mn, mx, emb.where($"vec_id" % 2 =!= 0),
-        "vec_id", "embedding")
-      graft.operators.IvfIndex.searchSq8(appended, mn, mx,
-          emb.where($"vec_id" < 10), "embedding", k = 10, nprobe = 16)
+        nCells = 16, maxIter = 5, indexDir = Some(s"$tmp/idx"),
+        kind = StorageKind.Sq8())
+      val appended = graft.operators.IvfIndex.append(
+        model, emb.where($"vec_id" % 2 =!= 0))
+      graft.operators.IvfIndex.search(appended,
+          emb.where($"vec_id" < 10), k = 10, nprobe = 16)
         .select($"qid", $"nid", $"rank", round($"dist", 4).as("dist"))
         .orderBy($"qid", $"rank")
     }),
@@ -1147,9 +1114,7 @@ object VectorQueries {
     // stays spec-graded (AutotuneSpec).
     "q_autotune_ivf" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       graft.operators.Autotune.ivfRecallGrid(emb,
           emb.where($"vec_id" < 10), "vec_id", "embedding", cents)
         .orderBy($"experiment_id")
@@ -1162,9 +1127,7 @@ object VectorQueries {
     // grid. Wall-clock sweep (Autotune.runBq) stays spec-graded.
     "q_autotune_bq" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       graft.operators.Autotune.bqRecallGrid(emb,
           emb.where($"vec_id" < 10), "vec_id", "embedding", cents)
         .orderBy($"experiment_id")
@@ -1177,9 +1140,7 @@ object VectorQueries {
     // spec-graded.
     "q_autotune_kinds" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
+      val cents = anchors16(emb)
       graft.operators.Autotune.kindsRecallGrid(emb,
           emb.where($"vec_id" < 10), "vec_id", "embedding", cents)
         .orderBy($"experiment_id")
@@ -1245,14 +1206,12 @@ object VectorQueries {
     // the recall numbers themselves are hash-checked, not rows-only.
     "q_bq_recall_fixed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
-        .select($"embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      val model = graft.operators.IvfIndex.buildBqWithCentroids(
-        emb, "vec_id", "embedding", cents)
+      val cents = anchors16(emb)
+      val model = graft.operators.IvfIndex.buildWithCentroids(
+        emb, "vec_id", "embedding", cents, kind = StorageKind.Bq)
       val queries = emb.where($"vec_id" < 10)
       val truth = Knn.topK(emb, queries, "vec_id", "embedding", 10)
-      val approx = graft.operators.IvfIndex.searchBqRefine(model,
+      val approx = graft.operators.IvfIndex.search(model,
         queries, k = 10, nprobe = 4, shortlist = 40)
       Knn.recall(truth, approx, 10).orderBy($"qid")
     }),

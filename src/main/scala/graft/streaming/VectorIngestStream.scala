@@ -122,8 +122,8 @@ object VectorIngestStream {
 
   /** Fold streamed arrivals into a NEW self-contained index at
     * `targetDir`: resident + arrival rows rewritten as one
-    * cell-partitioned layout (rows already carry their cell — no
-    * re-assignment, no k-means), centroid sidecar rewritten. The
+    * cell-partitioned layout of the index's kind (rows already carry
+    * their cell — no re-assignment, no k-means), sidecars copied. The
     * SOURCE index is never touched, so unlike an in-place merge a
     * crash mid-compaction cannot corrupt or duplicate the live index
     * — the target only becomes live when the caller repoints at it
@@ -135,30 +135,28 @@ object VectorIngestStream {
   def compact(spark: SparkSession, indexPath: String, idCol: String,
       vecCol: String, targetDir: String): IvfIndex.Model = {
     val model = openModel(spark, indexPath, idCol, vecCol)
-    // a quantized source compacts to the SAME kind: openModel already
-    // carries bits (BQ) or half (F16, floats never materialize), so
-    // the payload columns just travel
-    val keep: Seq[org.apache.spark.sql.Column] =
-      if (model.assigned.columns.contains("half"))
-        Seq(col(idCol), col("half"), col("cell_id"))
-      else
-        Seq(col(idCol), col(vecCol), col("cell_id")) ++
-          (if (model.assigned.columns.contains("bits")) Seq(col("bits"))
-           else Nil)
     model.assigned
-      .select(keep: _*)
+      .select(stored(model).map(col): _*)
       .repartition(col("cell_id"))
       .write.partitionBy("cell_id").mode("errorifexists")
       .parquet(targetDir)
-    graft.util.SidecarIO.writeCentroids(
-      spark.sessionState.newHadoopConf(), s"$targetDir/_centroids",
-      model.centroids)
+    IvfIndex.copySidecars(spark, indexPath, targetDir)
     IvfIndex.load(spark, targetDir, idCol, vecCol)
   }
+
+  /** The columns an index row keeps through ingest: id, the kind's
+    * payload, cell.
+    */
+  private def stored(m: IvfIndex.Model): Seq[String] =
+    m.idCol +: m.kind.payloadCols(m.vecCol) :+ "cell_id"
 
   /** Open a search model over resident + streamed rows. The union's
     * two scans both carry `cell_id` as a partition column, so
     * `IvfIndex.search`'s probe IN filter prunes files on BOTH sides.
+    * Both sides hold the index kind's payload columns: resident rows
+    * serve their STORED payload, the streamed tail (small, recent)
+    * encodes its floats on the fly under the frozen kind — every
+    * encode is deterministic, so the values equal encode-at-write.
     */
   def openModel(spark: SparkSession, indexPath: String, idCol: String,
       vecCol: String): IvfIndex.Model = {
@@ -172,34 +170,12 @@ object VectorIngestStream {
       .exists(sdPath)
     if (!hasStream) base
     else {
-      val raw = spark.read
-        .option("basePath", sd)
-        .parquet(s"$sd/batch_id=*")
-      // a quantized base keeps its kind through ingest: resident rows
-      // serve their STORED payload (bits / half), the streamed tail
-      // (small, recent) computes the same encoding on the fly from its
-      // floats — both encodes are deterministic, so the values are
-      // identical to encode-at-write. An F16 base has NO float column,
-      // so the union is (id, half, cell_id) on both sides.
-      val bq = base.assigned.columns.contains("bits")
-      val f16 = base.assigned.columns.contains("half")
-      val cols: Seq[org.apache.spark.sql.Column] =
-        if (f16)
-          Seq(col(idCol), graft.functions.VectorFunctions
-            .fp16_encode(col(vecCol)).as("half"), col("cell_id"))
-        else
-          Seq(col(idCol), col(vecCol), col("cell_id")) ++
-            (if (bq) Seq(graft.functions.VectorFunctions
-              .bq_encode(col(vecCol)).as("bits")) else Nil)
-      val arrivals = raw.select(cols: _*)
-      val baseCols: Seq[org.apache.spark.sql.Column] =
-        if (f16) Seq(col(idCol), col("half"), col("cell_id"))
-        else Seq(col(idCol), col(vecCol), col("cell_id")) ++
-          (if (bq) Seq(col("bits")) else Nil)
-      val assigned = base.assigned
-        .select(baseCols: _*)
-        .unionByName(arrivals)
-      IvfIndex.Model(base.centroids, assigned, idCol, vecCol, indexPath)
+      val arrivals = base.kind.encode(spark.read
+          .option("basePath", sd)
+          .parquet(s"$sd/batch_id=*")
+          .select(col(idCol), col(vecCol), col("cell_id")), idCol, vecCol)
+      base.copy(assigned = base.assigned.select(stored(base).map(col): _*)
+        .unionByName(arrivals))
     }
   }
 }

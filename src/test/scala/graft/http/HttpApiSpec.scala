@@ -567,6 +567,35 @@ class HttpApiSpec extends SparkSuite {
       .map(_.group(1).toLong).toSeq === expect)
   }
 
+  test("an f16-indexed collection answers radius and mmr_lambda " +
+      "searches; full-probe radius equals the decoded-grid brute force") {
+    import org.apache.spark.sql.functions.{col => c, typedlit}
+    import graft.functions.{VectorFunctions => V}
+    spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .createOrReplaceTempView("f16_range")
+    val q = Array.fill(64)(0.1f)
+    val vec = q.mkString(",")
+    assert(post("/collections/f16_range/index",
+      """{"n_cells":8,"quantization":"f16"}""").statusCode() === 201)
+    // brute force over the f16 grid: corpus and query both decoded
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val q16 = V.fp16_decode(V.fp16_encode(typedlit(q.toSeq)))
+    val expect = emb
+      .where(V.l2sq_dist(V.fp16_decode(V.fp16_encode(c("embedding"))),
+        q16) <= 1.5)
+      .select(c("vec_id")).collect().map(_.getLong(0)).toSet
+    assert(expect.nonEmpty)
+    val ranged = post("/collections/f16_range/search",
+      s"""{"vector":[$vec],"radius":1.5}""")
+    assert(ranged.statusCode() === 200, ranged.body())
+    assert("\"id\":(\\d+)".r.findAllMatchIn(ranged.body())
+      .map(_.group(1).toLong).toSet === expect)
+    val mmr = post("/collections/f16_range/search",
+      s"""{"vector":[$vec],"k":5,"mmr_lambda":0.5}""")
+    assert(mmr.statusCode() === 200, mmr.body())
+    assert("\"rank\":5".r.findFirstIn(mmr.body()).isDefined, mmr.body())
+  }
+
   test("POST /index 400s when the collection carries a reserved " +
       "artifact column — a 'bits' source column would make a plain " +
       "index be served as bq and then 500 on search") {

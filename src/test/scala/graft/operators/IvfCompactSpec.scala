@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.operators.IvfIndex.StorageKind
 import org.apache.spark.sql.functions._
 
 /** IvfIndex.compact: the maintenance op that pays down append debt.
@@ -91,18 +92,17 @@ class IvfCompactSpec extends SparkSuite {
       "preserves coded search results") {
     val tmp = java.nio.file.Files
       .createTempDirectory("ivf_compact_sq").toString
-    val (base, mn, mx) = IvfIndex.buildSq8(emb.where($"vec_id" % 2 === 0),
+    val base = IvfIndex.build(emb.where($"vec_id" % 2 === 0),
       "vec_id", "embedding", nCells = 8, maxIter = 5,
-      indexDir = Some(s"$tmp/idx"))
-    val m = IvfIndex.appendSq8(base, mn, mx,
-      emb.where($"vec_id" % 2 =!= 0), "vec_id", "embedding")
-    val before = rows(IvfIndex.searchSq8(m, mn, mx, queries, "embedding",
-      k = 10, nprobe = 8))
+      indexDir = Some(s"$tmp/idx"), kind = StorageKind.Sq8())
+    val m = IvfIndex.append(base, emb.where($"vec_id" % 2 =!= 0))
+    val before = rows(IvfIndex.search(m, queries, k = 10, nprobe = 8))
     IvfIndex.compact(spark, s"$tmp/idx")
-    val (re, mn2, mx2) = IvfIndex.loadSq8(spark, s"$tmp/idx", "vec_id")
+    val re = IvfIndex.load(spark, s"$tmp/idx", "vec_id", "embedding")
+    val (StorageKind.Sq8(mn, mx), StorageKind.Sq8(mn2, mx2)) =
+      (base.kind, re.kind): @unchecked
     assert(mn2.toSeq === mn.toSeq && mx2.toSeq === mx.toSeq)
-    val after = rows(IvfIndex.searchSq8(re, mn2, mx2, queries, "embedding",
-      k = 10, nprobe = 8))
+    val after = rows(IvfIndex.search(re, queries, k = 10, nprobe = 8))
     assert(after === before)
   }
 
@@ -255,6 +255,66 @@ class IvfCompactSpec extends SparkSuite {
       "vec_id", "embedding")
     assert(m3.assigned.count() ===
       emb.count() + emb.where($"vec_id" % 2 =!= 0).count())
+  }
+
+  test("re-merging a src path that now holds new content in fewer " +
+      "files keeps both merges' rows exactly once") {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("ivf_merge_new_content").toString
+    val cents = emb.where($"vec_id" < 8).orderBy($"vec_id")
+      .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
+    IvfIndex.buildWithCentroids(emb.where($"vec_id" % 2 === 0),
+      "vec_id", "embedding", cents, Some(s"$tmp/dest"))
+    val first = IvfIndex.buildWithCentroids(emb.where($"vec_id" % 2 =!= 0),
+      "vec_id", "embedding", cents, Some(s"$tmp/src"))
+    IvfIndex.merge(spark, s"$tmp/dest", s"$tmp/src", "vec_id", "embedding")
+    // new content at the SAME path: fresh ids in only two of the cells,
+    // so the src now has fewer part files than the first merge staged
+    val fresh = first.assigned.where($"cell_id" < 2)
+      .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
+    val freshRows = spark.createDataFrame(
+      java.util.Arrays.asList(fresh.collect(): _*), fresh.schema)
+    val filesBefore = partFiles(s"$tmp/src").size
+    IvfIndex.buildWithCentroids(freshRows, "vec_id", "embedding", cents,
+      Some(s"$tmp/src"), force = true)
+    assert(partFiles(s"$tmp/src").size < filesBefore,
+      "fixture: the new src content must span fewer files")
+    val merged = IvfIndex.merge(spark, s"$tmp/dest", s"$tmp/src",
+      "vec_id", "embedding")
+    val ids = merged.assigned.select($"vec_id").as[Long].collect().toSeq
+    val expected = emb.select($"vec_id").as[Long].collect().toSeq ++
+      freshRows.select($"vec_id").as[Long].collect().toSeq
+    assert(ids.sorted === expected.sorted,
+      "every row of both merges must be in dest exactly once")
+  }
+
+  test("merge refuses SQ8 shards fitted to different scalar models and " +
+      "folds shards that share one") {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("ivf_merge_sq8").toString
+    val cents = emb.where($"vec_id" < 8).orderBy($"vec_id")
+      .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
+    val dest = IvfIndex.buildWithCentroids(emb.where($"vec_id" % 2 === 0),
+      "vec_id", "embedding", cents, Some(s"$tmp/dest"),
+      kind = StorageKind.Sq8())
+    val own = IvfIndex.buildWithCentroids(emb.where($"vec_id" % 2 =!= 0),
+      "vec_id", "embedding", cents, Some(s"$tmp/own"),
+      kind = StorageKind.Sq8())
+    assert(own.kind != dest.kind, "fixture: the halves fit different ranges")
+    intercept[IllegalArgumentException] {
+      IvfIndex.merge(spark, s"$tmp/dest", s"$tmp/own", "vec_id", "embedding")
+    }
+    // a shard encoded under dest's scalar model merges, and searches as
+    // one index built over the whole corpus under that model
+    IvfIndex.buildWithCentroids(emb.where($"vec_id" % 2 =!= 0),
+      "vec_id", "embedding", cents, Some(s"$tmp/shared"), kind = dest.kind)
+    val merged = IvfIndex.merge(spark, s"$tmp/dest", s"$tmp/shared",
+      "vec_id", "embedding")
+    assert(merged.assigned.count() === emb.count())
+    val whole = IvfIndex.buildWithCentroids(emb, "vec_id", "embedding",
+      cents, Some(s"$tmp/whole"), kind = dest.kind)
+    assert(rows(IvfIndex.search(merged, queries, k = 10, nprobe = 8)) ===
+      rows(IvfIndex.search(whole, queries, k = 10, nprobe = 8)))
   }
 
   test("IndexedKnn.compactIndex compacts the registered artifact and " +

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.operators.IvfIndex.StorageKind
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class IvfSpec extends SparkSuite {
@@ -115,18 +117,17 @@ class IvfSpec extends SparkSuite {
     assert(full === exact)
   }
 
-  test("appendSq8 keeps the compressed read path: int8 ReadSchema and " +
-      "partition pruning survive absorption") {
+  test("append into an sq8 index keeps the compressed read path: int8 " +
+      "ReadSchema and partition pruning survive absorption") {
     val tmp = java.nio.file.Files
       .createTempDirectory("ivfsq_append_spec").toString
-    val (m0, mn, mx) = IvfIndex.buildSq8(emb.where($"vec_id" % 2 === 0),
+    val m0 = IvfIndex.build(emb.where($"vec_id" % 2 === 0),
       "vec_id", "embedding", nCells = 8, maxIter = 5,
-      indexDir = Some(s"$tmp/idx"))
-    val m1 = IvfIndex.appendSq8(m0, mn, mx,
-      emb.where($"vec_id" % 2 =!= 0), "vec_id", "embedding")
+      indexDir = Some(s"$tmp/idx"), kind = StorageKind.Sq8())
+    val m1 = IvfIndex.append(m0, emb.where($"vec_id" % 2 =!= 0))
     assert(m1.assigned.count() === emb.count())
-    val p = IvfIndex.searchSq8(m1, mn, mx, queries, "embedding",
-      k = 5, nprobe = 2).queryExecution.executedPlan.toString
+    val p = IvfIndex.search(m1, queries, k = 5, nprobe = 2)
+      .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[cell_id#\\d+ (IN|INSET)".r
       .findFirstIn(p).isDefined, s"pruning lost after append:\n$p")
     assert(p.contains("smallint"), s"append broke the int8 read:\n$p")
@@ -159,12 +160,12 @@ class IvfSpec extends SparkSuite {
       "not float vectors; full probe equals brute force over the " +
       "dequantized corpus") {
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
-    val (sqModel, mn, mx) = IvfIndex.buildSq8(
+    val sqModel = IvfIndex.build(
       emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
-      nCells = 8, maxIter = 5)
+      nCells = 8, maxIter = 5, kind = StorageKind.Sq8())
     val q = emb.where($"vec_id" < 10).select($"vec_id", $"embedding")
-    val p = IvfIndex.searchSq8(sqModel, mn, mx, q, "embedding",
-      k = 10, nprobe = 2).queryExecution.executedPlan.toString
+    val p = IvfIndex.search(sqModel, q, k = 10, nprobe = 2)
+      .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[cell_id#\\d+ (IN|INSET)".r
       .findFirstIn(p).isDefined,
       s"probe IN filter not pushed to partitions:\n$p")
@@ -188,8 +189,7 @@ class IvfSpec extends SparkSuite {
     val exact = pairs(Knn.topK(rec,
       emb.where($"vec_id" < 10).select($"vec_id", $"embedding".as("vhat")),
       "vec_id", "vhat", 10))
-    val full = pairs(IvfIndex.searchSq8(sqModel, mn, mx, q, "embedding",
-      k = 10, nprobe = 8))
+    val full = pairs(IvfIndex.search(sqModel, q, k = 10, nprobe = 8))
     assert(full === exact)
   }
 
@@ -197,19 +197,22 @@ class IvfSpec extends SparkSuite {
       "sidecars) and searches identically") {
     val dir = java.nio.file.Files.createTempDirectory("ivfsq").toString +
       "/index"
-    val (built, mn, mx) = IvfIndex.buildSq8(
+    val built = IvfIndex.build(
       emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
-      nCells = 8, maxIter = 5, indexDir = Some(dir))
-    val (loaded, lmn, lmx) = IvfIndex.loadSq8(spark, dir, "vec_id")
+      nCells = 8, maxIter = 5, indexDir = Some(dir),
+      kind = StorageKind.Sq8())
+    val loaded = IvfIndex.load(spark, dir, "vec_id", "embedding")
+    val (StorageKind.Sq8(mn, mx), StorageKind.Sq8(lmn, lmx)) =
+      (built.kind, loaded.kind): @unchecked
     assert(lmn.toSeq === mn.toSeq && lmx.toSeq === mx.toSeq)
     assert(loaded.centroids.zip(built.centroids)
       .forall { case (a, b) => a.sameElements(b) })
     val q = emb.where($"vec_id" < 5).select($"vec_id", $"embedding")
-    def res(m: IvfIndex.Model, a: Array[Double], b: Array[Double]) =
-      IvfIndex.searchSq8(m, a, b, q, "embedding", k = 5, nprobe = 8)
+    def res(m: IvfIndex.Model) =
+      IvfIndex.search(m, q, k = 5, nprobe = 8)
         .select($"qid", $"nid", $"rank").as[(Long, Long, Int)]
         .collect().toSet
-    assert(res(loaded, lmn, lmx) === res(built, mn, mx))
+    assert(res(loaded) === res(built))
   }
 
   test("append into a bits-bearing index packs bits for the arrivals " +
@@ -219,15 +222,15 @@ class IvfSpec extends SparkSuite {
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
     val tmp = java.nio.file.Files
       .createTempDirectory("ivf_bq_append").toString
-    val half = IvfIndex.buildBqWithCentroids(
+    val half = IvfIndex.buildWithCentroids(
       emb.where($"vec_id" % 2 === 0), "vec_id", "embedding", cents,
-      Some(s"$tmp/bq"))
+      Some(s"$tmp/bq"), kind = StorageKind.Bq)
     val full = IvfIndex.append(half, emb.where($"vec_id" % 2 =!= 0))
     // appended rows carry non-null bits
     assert(full.assigned.where($"bits".isNull).count() === 0)
     // full probe + corpus-wide shortlist == exact kNN incl. arrivals
     val exact = pairs(Knn.topK(emb, queries, "vec_id", "embedding", 10))
-    val got = pairs(IvfIndex.searchBqRefine(full, queries, k = 10,
+    val got = pairs(IvfIndex.search(full, queries, k = 10,
       nprobe = 16, shortlist = emb.count().toInt))
     assert(got === exact)
     // a plain shard cannot merge into a bq index (or vice versa)
@@ -260,8 +263,8 @@ class IvfSpec extends SparkSuite {
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
     val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
-    val f16 = IvfIndex.buildF16WithCentroids(emb, "vec_id", "embedding",
-      cents)
+    val f16 = IvfIndex.buildWithCentroids(emb, "vec_id", "embedding",
+      cents, kind = StorageKind.F16)
     assert(f16.assigned.columns.contains("half") &&
       !f16.assigned.columns.contains("embedding"),
       s"artifact columns: ${f16.assigned.columns.mkString(",")}")
@@ -271,12 +274,12 @@ class IvfSpec extends SparkSuite {
       V.fp16_decode(V.fp16_encode($"embedding")).as("embedding"))
     val exact = pairs(Knn.topK(dec, dec.where($"vec_id" < 10),
       "vec_id", "embedding", 10))
-    val full = pairs(IvfIndex.searchF16(f16, emb.where($"vec_id" < 10),
+    val full = pairs(IvfIndex.search(f16, emb.where($"vec_id" < 10),
       k = 10, nprobe = 16))
     assert(full === exact)
     // partial probe: cell pruning reaches the storage layer and the
     // payload scan reads smallints, not floats
-    val plan = IvfIndex.searchF16(f16, queries, k = 10, nprobe = 4)
+    val plan = IvfIndex.search(f16, queries, k = 10, nprobe = 4)
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[cell_id#\\d+ (IN|INSET)".r
       .findFirstIn(plan).isDefined, s"probe pruning lost:\n$plan")
@@ -287,7 +290,7 @@ class IvfSpec extends SparkSuite {
       emb.where($"label" === 3).select($"vec_id",
         V.fp16_decode(V.fp16_encode($"embedding")).as("embedding")),
       dec.where($"vec_id" < 10), "vec_id", "embedding", 5))
-    val fullF = pairs(IvfIndex.searchF16(f16, emb.where($"vec_id" < 10),
+    val fullF = pairs(IvfIndex.search(f16, emb.where($"vec_id" < 10),
       k = 5, nprobe = 16, filter = Some($"label" === 3)))
     assert(fullF === exactF)
   }
@@ -299,9 +302,9 @@ class IvfSpec extends SparkSuite {
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
     val tmp = java.nio.file.Files
       .createTempDirectory("ivf_f16_append_spec").toString
-    val base = IvfIndex.buildF16WithCentroids(
+    val base = IvfIndex.buildWithCentroids(
       emb.where($"vec_id" % 2 === 0), "vec_id", "embedding", cents,
-      Some(s"$tmp/idx"))
+      Some(s"$tmp/idx"), kind = StorageKind.F16)
     val appended = IvfIndex.append(base, emb.where($"vec_id" % 2 =!= 0))
     assert(!appended.assigned.columns.contains("embedding"),
       appended.assigned.columns.mkString(","))
@@ -312,24 +315,25 @@ class IvfSpec extends SparkSuite {
       V.fp16_decode(V.fp16_encode($"embedding")).as("embedding"))
     val exact = pairs(Knn.topK(dec, dec.where($"vec_id" < 10),
       "vec_id", "embedding", 10))
-    val got = pairs(IvfIndex.searchF16(appended,
+    val got = pairs(IvfIndex.search(appended,
       emb.where($"vec_id" < 10), k = 10, nprobe = 16))
     assert(got === exact)
   }
 
-  test("buildSq8WithCentroids freezes the coarse quantizer; full probe " +
+  test("an sq8 buildWithCentroids freezes the coarse quantizer; full probe " +
       "equals brute force over the dequantized corpus") {
     import graft.functions.{VectorFunctions => V}
     val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
-    val (m, mn, mx) = IvfIndex.buildSq8WithCentroids(
-      emb, "vec_id", "embedding", cents)
+    val m = IvfIndex.buildWithCentroids(
+      emb, "vec_id", "embedding", cents, kind = StorageKind.Sq8())
+    val StorageKind.Sq8(mn, mx) = m.kind: @unchecked
     assert(m.centroids eq cents) // frozen, no retrain
     assert(m.assigned.columns.contains("sq") &&
       !m.assigned.columns.contains("embedding"))
     // full probe == brute force of (dequantized corpus) vs raw queries
-    val got = pairs(IvfIndex.searchSq8(m, mn, mx,
-      emb.where($"vec_id" < 10), "embedding", 10, nprobe = 16))
+    val got = pairs(IvfIndex.search(m,
+      emb.where($"vec_id" < 10), 10, nprobe = 16))
     val sqDf = m.assigned.select($"vec_id",
       V.col(graft.functions.Sq8Decode(V.expr($"sq"), new graft.functions.DoubleVecParam(mn), new graft.functions.DoubleVecParam(mx)))
         .as("embedding"))
@@ -357,30 +361,32 @@ class IvfSpec extends SparkSuite {
       }
       assert(e2.getMessage.contains("reserved"))
       val e3 = intercept[IllegalArgumentException] {
-        IvfIndex.buildBqWithCentroids(bad, "vec_id", "embedding", cents)
+        IvfIndex.buildWithCentroids(bad, "vec_id", "embedding", cents,
+          kind = StorageKind.Bq)
       }
       assert(e3.getMessage.contains("reserved"))
       val e4 = intercept[IllegalArgumentException] {
-        IvfIndex.buildSq8(bad, "vec_id", "embedding", nCells = 4,
-          maxIter = 2)
+        IvfIndex.build(bad, "vec_id", "embedding", nCells = 4,
+          maxIter = 2, kind = StorageKind.Sq8())
       }
       assert(e4.getMessage.contains("reserved"))
       val e5 = intercept[IllegalArgumentException] {
-        IvfIndex.buildF16WithCentroids(bad, "vec_id", "embedding", cents)
+        IvfIndex.buildWithCentroids(bad, "vec_id", "embedding", cents,
+          kind = StorageKind.F16)
       }
       assert(e5.getMessage.contains("reserved"))
     }
   }
 
-  test("searchBqRefine at full probe with a corpus-wide shortlist " +
+  test("a bq search at full probe with a corpus-wide shortlist " +
       "reproduces exact kNN; a metadata filter applies inside the " +
       "shortlist scan") {
     val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
-    val bq = IvfIndex.buildBqWithCentroids(emb, "vec_id", "embedding",
-      cents)
+    val bq = IvfIndex.buildWithCentroids(emb, "vec_id", "embedding",
+      cents, kind = StorageKind.Bq)
     val exact = pairs(Knn.topK(emb, queries, "vec_id", "embedding", 10))
-    val full = pairs(IvfIndex.searchBqRefine(bq, queries, k = 10,
+    val full = pairs(IvfIndex.search(bq, queries, k = 10,
       nprobe = 16, shortlist = emb.count().toInt))
     assert(full === exact)
     // filtered: equals brute force over the filtered corpus — the
@@ -388,7 +394,7 @@ class IvfSpec extends SparkSuite {
     // candidates the predicate would drop
     val exactF = pairs(Knn.topK(emb.where($"label" === 3), queries,
       "vec_id", "embedding", 5))
-    val fullF = pairs(IvfIndex.searchBqRefine(bq, queries, k = 5,
+    val fullF = pairs(IvfIndex.search(bq, queries, k = 5,
       nprobe = 16, shortlist = emb.count().toInt,
       filter = Some($"label" === 3)))
     assert(fullF === exactF)
@@ -399,9 +405,9 @@ class IvfSpec extends SparkSuite {
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
     val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
-    val bq = IvfIndex.buildBqWithCentroids(emb, "vec_id", "embedding",
-      cents)
-    val plan = IvfIndex.searchBqRefine(bq, queries, k = 10, nprobe = 4,
+    val bq = IvfIndex.buildWithCentroids(emb, "vec_id", "embedding",
+      cents, kind = StorageKind.Bq)
+    val plan = IvfIndex.search(bq, queries, k = 10, nprobe = 4,
       shortlist = 40).queryExecution.executedPlan.toString
     // BOTH artifact scans carry the probe-set PartitionFilter: the
     // bits shortlist pass AND the float rescore pass — shortlisted ids
@@ -419,7 +425,7 @@ class IvfSpec extends SparkSuite {
       s"no bits-only scan found:\n$plan")
     // rescore order is exact within the shortlist: every returned rank
     // matches the true distance order over the returned set
-    val out = IvfIndex.searchBqRefine(bq, queries, k = 10, nprobe = 4,
+    val out = IvfIndex.search(bq, queries, k = 10, nprobe = 4,
         shortlist = 40)
       .select($"qid", $"rank", $"dist").as[(Long, Int, Double)]
       .collect().groupBy(_._1)
@@ -649,4 +655,58 @@ class IvfSpec extends SparkSuite {
       IvfIndex.search(model, bad, k = 3, nprobe = 2))
     assert(e.getMessage.contains("qid=7"), e.getMessage)
   }
+
+  // One lifecycle over every storage kind: build under frozen centroids,
+  // append, delete, compact, merge a shard encoded as the index stores
+  // it, reload, then search at full probe. The answer must equal brute
+  // force over the vectors as the kind scores them: f16 rounds corpus
+  // and query through binary16, sq8 decodes the corpus through its
+  // scalar model (the query stays full precision), and bq with a
+  // corpus-wide shortlist rescores exactly like f32.
+  for (name <- Seq("f32", "f16", "sq8", "bq"))
+    test(s"the $name lifecycle (build, append, delete, compact, merge, " +
+        "load) keeps full-probe search equal to brute force over the " +
+        "kind's decoded vectors") {
+      import graft.functions.{VectorFunctions => V}
+      val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
+        .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
+      val tmp = java.nio.file.Files
+        .createTempDirectory(s"ivf_lifecycle_$name").toString
+      val built = IvfIndex.buildWithCentroids(emb.where($"vec_id" % 3 === 0),
+        "vec_id", "embedding", cents, Some(s"$tmp/dest"),
+        kind = StorageKind.byName(name))
+      assert(built.kind.name === name)
+      IvfIndex.append(built, emb.where($"vec_id" % 3 === 1))
+      val doomed = $"vec_id" < 5 && $"vec_id" % 3 =!= 2
+      assert(IvfIndex.delete(spark, s"$tmp/dest",
+        emb.where(doomed).select($"vec_id")) === 4L)
+      IvfIndex.compact(spark, s"$tmp/dest")
+      IvfIndex.buildWithCentroids(emb.where($"vec_id" % 3 === 2),
+        "vec_id", "embedding", cents, Some(s"$tmp/src"), kind = built.kind)
+      IvfIndex.merge(spark, s"$tmp/dest", s"$tmp/src", "vec_id",
+        "embedding")
+      val m = IvfIndex.load(spark, s"$tmp/dest", "vec_id", "embedding")
+      assert(m.kind === built.kind)
+      val live = emb.where(!doomed)
+      val n = live.count()
+      assert(m.assigned.count() === n)
+      val asIs = (c: Column) => c
+      val f16 = (c: Column) => V.fp16_decode(V.fp16_encode(c))
+      val (corpusVec, queryVec) = m.kind match {
+        case StorageKind.F16 => (f16, f16)
+        case StorageKind.Sq8(mn, mx) =>
+          val (a, b) = (new graft.functions.DoubleVecParam(mn),
+            new graft.functions.DoubleVecParam(mx))
+          ((c: Column) => V.col(graft.functions.Sq8Decode(
+            graft.functions.Sq8Encode(V.expr(c), a, b), a, b)), asIs)
+        case _ => (asIs, asIs)
+      }
+      val exact = pairs(Knn.topK(
+        live.select($"vec_id", corpusVec($"embedding").as("embedding")),
+        queries.select($"vec_id", queryVec($"embedding").as("embedding")),
+        "vec_id", "embedding", 10))
+      val got = pairs(IvfIndex.search(m, queries, k = 10, nprobe = 16,
+        shortlist = n.toInt))
+      assert(got === exact)
+    }
 }

@@ -380,16 +380,16 @@ class ScaleGrowthSpec extends SparkSuite {
     try {
       // builds are the corpus-scan part — outside the search timer,
       // as in production (the index is a durable artifact)
-      val (mS, mnS, mxS) = IvfIndex.buildSq8(vS, "vec_id", "embedding",
-        nCells = 16, maxIter = 3)
-      val (mB, mnB, mxB) = IvfIndex.buildSq8(vB, "vec_id", "embedding",
-        nCells = 16, maxIter = 3)
+      val mS = IvfIndex.build(vS, "vec_id", "embedding",
+        nCells = 16, maxIter = 3, kind = IvfIndex.StorageKind.Sq8())
+      val mB = IvfIndex.build(vB, "vec_id", "embedding",
+        nCells = 16, maxIter = 3, kind = IvfIndex.StorageKind.Sq8())
       val qS = vS.where($"vec_id" < 10)
       val qB = vB.where($"vec_id" < 10)
       val tS = timedSecs {
-        IvfIndex.searchSq8(mS, mnS, mxS, qS, "embedding", 10, 4).count()
+        IvfIndex.search(mS, qS, 10, 4).count()
       }
-      val search = IvfIndex.searchSq8(mB, mnB, mxB, qB, "embedding", 10, 4)
+      val search = IvfIndex.search(mB, qB, 10, 4)
       val tB = timedSecs { search.count() }
       val r = ratio(tB, tS)
       info(f"ivf-sq8 search 2k: $tS%.1f s, 20k: $tB%.1f s, growth $r%.1fx")
@@ -416,15 +416,15 @@ class ScaleGrowthSpec extends SparkSuite {
       def cents(df: DataFrame) = df.where($"vec_id" < 16)
         .orderBy($"vec_id").select($"embedding").collect()
         .map(_.getSeq[Float](0).toArray)
-      val mS = IvfIndex.buildBqWithCentroids(vS, "vec_id", "embedding",
-        cents(vS))
-      val mB = IvfIndex.buildBqWithCentroids(vB, "vec_id", "embedding",
-        cents(vB))
+      val mS = IvfIndex.buildWithCentroids(vS, "vec_id", "embedding",
+        cents(vS), kind = IvfIndex.StorageKind.Bq)
+      val mB = IvfIndex.buildWithCentroids(vB, "vec_id", "embedding",
+        cents(vB), kind = IvfIndex.StorageKind.Bq)
       val tS = timedSecs {
-        IvfIndex.searchBqRefine(mS, vS.where($"vec_id" < 10), k = 10,
+        IvfIndex.search(mS, vS.where($"vec_id" < 10), k = 10,
           nprobe = 4, shortlist = 40).count()
       }
-      val search = IvfIndex.searchBqRefine(mB, vB.where($"vec_id" < 10),
+      val search = IvfIndex.search(mB, vB.where($"vec_id" < 10),
         k = 10, nprobe = 4, shortlist = 40)
       val tB = timedSecs { search.count() }
       val r = ratio(tB, tS)
@@ -456,15 +456,15 @@ class ScaleGrowthSpec extends SparkSuite {
       def cents(df: DataFrame) = df.where($"vec_id" < 16)
         .orderBy($"vec_id").select($"embedding").collect()
         .map(_.getSeq[Float](0).toArray)
-      val mS = IvfIndex.buildF16WithCentroids(vS, "vec_id", "embedding",
-        cents(vS))
-      val mB = IvfIndex.buildF16WithCentroids(vB, "vec_id", "embedding",
-        cents(vB))
+      val mS = IvfIndex.buildWithCentroids(vS, "vec_id", "embedding",
+        cents(vS), kind = IvfIndex.StorageKind.F16)
+      val mB = IvfIndex.buildWithCentroids(vB, "vec_id", "embedding",
+        cents(vB), kind = IvfIndex.StorageKind.F16)
       val tS = timedSecs {
-        IvfIndex.searchF16(mS, vS.where($"vec_id" < 10), k = 10,
+        IvfIndex.search(mS, vS.where($"vec_id" < 10), k = 10,
           nprobe = 4).count()
       }
-      val search = IvfIndex.searchF16(mB, vB.where($"vec_id" < 10),
+      val search = IvfIndex.search(mB, vB.where($"vec_id" < 10),
         k = 10, nprobe = 4)
       val tB = timedSecs { search.count() }
       val r = ratio(tB, tS)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.functions.{VectorFunctions => V}
 import graft.operators.IvfIndex
+import graft.operators.IvfIndex.StorageKind
 
 /** The planner-transparent ANN rewrite: `ORDER BY dist LIMIT k` over a
   * registered table must become an IVF probe (no corpus scan, cell
@@ -364,8 +365,8 @@ class IndexedKnnSpec extends SparkSuite {
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
     val bqDir = java.nio.file.Files
       .createTempDirectory("graft_idxknn_bq").toString + "/idx"
-    IvfIndex.buildBqWithCentroids(emb, "vec_id", "embedding", cents,
-      Some(bqDir))
+    IvfIndex.buildWithCentroids(emb, "vec_id", "embedding", cents,
+      Some(bqDir), kind = StorageKind.Bq)
     IndexedKnn.register(spark, dataPath, bqDir, "vec_id", "embedding",
       nprobe = 0, shortlist = emb.count().toInt)
     try {
@@ -391,8 +392,8 @@ class IndexedKnnSpec extends SparkSuite {
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
     val f16Dir = java.nio.file.Files
       .createTempDirectory("graft_idxknn_f16").toString + "/idx"
-    IvfIndex.buildF16WithCentroids(emb, "vec_id", "embedding", cents,
-      Some(f16Dir))
+    IvfIndex.buildWithCentroids(emb, "vec_id", "embedding", cents,
+      Some(f16Dir), kind = StorageKind.F16)
     IndexedKnn.register(spark, dataPath, f16Dir, "vec_id", "embedding",
       nprobe = 0)
     try {
@@ -416,6 +417,39 @@ class IndexedKnnSpec extends SparkSuite {
       // optimization pass and a second legitimate rule fire
       val got = df.collect().map(_.getLong(0)).toSeq
       assert(got === expect)
+      assert(IndexedKnnRule.fireCount.get() === before + 1)
+    } finally IndexedKnn.unregister(spark, dataPath)
+  }
+
+  test("the range rewrite over an F16 registration scores the halved " +
+      "artifact: no corpus scan, and full probe equals the f16-grid " +
+      "brute force") {
+    val cents = emb.where($"vec_id" < 8).orderBy($"vec_id")
+      .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
+    val f16Dir = java.nio.file.Files
+      .createTempDirectory("graft_idxknn_f16_range").toString + "/idx"
+    IvfIndex.buildWithCentroids(emb, "vec_id", "embedding", cents,
+      Some(f16Dir), kind = StorageKind.F16)
+    // brute force over the f16 grid: corpus and query both decoded
+    val dec = emb.select($"vec_id",
+      V.fp16_decode(V.fp16_encode($"embedding")).as("embedding"))
+    val q16 = dec.where($"vec_id" === 0).select($"embedding")
+      .head.getSeq[Float](0)
+    val expect = dec
+      .where(V.l2sq_dist($"embedding", typedlit(q16)) <= 1.5)
+      .select($"vec_id").as[Long].collect().toSet
+    assert(expect.size > 1 && expect.size < emb.count())
+    IndexedKnn.register(spark, dataPath, f16Dir, "vec_id", "embedding",
+      nprobe = 0)
+    try {
+      val before = IndexedKnnRule.fireCount.get()
+      val df = emb.select($"vec_id",
+          V.l2sq_dist($"embedding", typedlit(qvec)).as("dist"))
+        .where($"dist" <= 1.5)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("embeddings.parquet"),
+        s"corpus still scanned:\n$plan")
+      assert(df.collect().map(_.getLong(0)).toSet === expect)
       assert(IndexedKnnRule.fireCount.get() === before + 1)
     } finally IndexedKnn.unregister(spark, dataPath)
   }

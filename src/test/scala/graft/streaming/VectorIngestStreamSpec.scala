@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSuite
 import graft.operators.{IvfIndex, Knn}
+import graft.operators.IvfIndex.StorageKind
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -73,6 +74,8 @@ class VectorIngestStreamSpec extends SparkSuite {
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
     assert(after === before)
     assert(after === exactPairs(emb)) // full probe stays exact
+    // the build-time id record travels with the other sidecars
+    assert(IvfIndex.metaIdCol(spark, s"$root/idx2") === Some("vec_id"))
     // the SOURCE index is untouched (swap-then-delete is the caller's)
     assert(new java.io.File(s"$idx/_stream").exists())
   }
@@ -83,16 +86,16 @@ class VectorIngestStreamSpec extends SparkSuite {
     val root = tmp(); val idx = s"$root/idx"
     val cents = emb.where($"vec_id" < 8).orderBy($"vec_id")
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
-    val base = IvfIndex.buildBqWithCentroids(
+    val base = IvfIndex.buildWithCentroids(
       emb.where($"vec_id" % 2 === 0), "vec_id", "embedding", cents,
-      Some(idx))
+      Some(idx), kind = StorageKind.Bq)
     VectorIngestStream.processBatch(emb.where($"vec_id" % 2 =!= 0),
       0L, base.centroids, "vec_id", "embedding", idx)
     val model = VectorIngestStream.openModel(spark, idx, "vec_id",
       "embedding")
     // full probe + corpus-wide shortlist through the BQ path == exact
     // kNN over resident + streamed rows
-    val got = IvfIndex.searchBqRefine(model, emb.where($"vec_id" < 10),
+    val got = IvfIndex.search(model, emb.where($"vec_id" < 10),
         k = 10, nprobe = 8, shortlist = emb.count().toInt)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
     assert(got === exactPairs(emb))
@@ -101,7 +104,7 @@ class VectorIngestStreamSpec extends SparkSuite {
     val compacted = VectorIngestStream.compact(spark, idx, "vec_id",
       "embedding", s"$root/idx2")
     assert(compacted.assigned.columns.contains("bits"))
-    val after = IvfIndex.searchBqRefine(compacted,
+    val after = IvfIndex.search(compacted,
         emb.where($"vec_id" < 10), k = 10, nprobe = 8,
         shortlist = emb.count().toInt)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
@@ -115,9 +118,9 @@ class VectorIngestStreamSpec extends SparkSuite {
     val root = tmp(); val idx = s"$root/idx"
     val cents = emb.where($"vec_id" < 8).orderBy($"vec_id")
       .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
-    val base = IvfIndex.buildF16WithCentroids(
+    val base = IvfIndex.buildWithCentroids(
       emb.where($"vec_id" % 2 === 0), "vec_id", "embedding", cents,
-      Some(idx))
+      Some(idx), kind = StorageKind.F16)
     VectorIngestStream.processBatch(emb.where($"vec_id" % 2 =!= 0),
       0L, base.centroids, "vec_id", "embedding", idx)
     val model = VectorIngestStream.openModel(spark, idx, "vec_id",
@@ -131,7 +134,7 @@ class VectorIngestStreamSpec extends SparkSuite {
     val expect = Knn.topK(dec, dec.where($"vec_id" < 10), "vec_id",
         "embedding", 10)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
-    val got = IvfIndex.searchF16(model, emb.where($"vec_id" < 10),
+    val got = IvfIndex.search(model, emb.where($"vec_id" < 10),
         k = 10, nprobe = 8)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
     assert(got === expect)
@@ -141,7 +144,7 @@ class VectorIngestStreamSpec extends SparkSuite {
       "embedding", s"$root/idx2")
     assert(compacted.assigned.columns.contains("half") &&
       !compacted.assigned.columns.contains("embedding"))
-    val after = IvfIndex.searchF16(compacted,
+    val after = IvfIndex.search(compacted,
         emb.where($"vec_id" < 10), k = 10, nprobe = 8)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
     assert(after === got)
