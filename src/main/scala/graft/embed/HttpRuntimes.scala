@@ -1,5 +1,7 @@
 package graft.embed
 
+import graft.util.Json
+
 /** Pluggable HTTP transport so the API runtimes are testable without
   * egress (this container has none) and swappable for a real client in
   * production. `post` returns the response body or throws.
@@ -40,65 +42,27 @@ object HttpTransport {
     }
 }
 
-/** Minimal JSON helpers for the API payloads (no external deps). */
-private[embed] object MiniJson {
-  def escape(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
+/** Reads the embedding API responses through [[graft.util.MiniJson]]. */
+private[embed] object ApiResponse {
+  import graft.util.MiniJson
 
-  def strArray(xs: Seq[String]): String =
-    xs.map(x => "\"" + escape(x) + "\"").mkString("[", ",", "]")
+  private def vector(v: Any): Array[Float] =
+    MiniJson.arr(v).map(x => java.lang.Float.parseFloat(
+      x.asInstanceOf[MiniJson.Num].text)).toArray
 
-  /** Extract all float arrays appearing under "embedding"-style keys:
-    * parses `[[...],[...]]` blocks after the given key. Tolerant,
-    * sufficient for the two API response shapes.
+  /** OpenAI: `data[*].embedding`, in `index` order (position when an
+    * item carries no index).
     */
-  def floatArraysAfterKey(body: String, key: String): Seq[Array[Float]] = {
-    val out = Seq.newBuilder[Array[Float]]
-    var idx = body.indexOf("\"" + key + "\"")
-    while (idx >= 0) {
-      val open = body.indexOf('[', idx)
-      if (open >= 0) {
-        // find matching close bracket for possibly nested arrays
-        var depth = 0
-        var i = open
-        var end = -1
-        while (end < 0 && i < body.length) {
-          body.charAt(i) match {
-            case '[' => depth += 1
-            case ']' => depth -= 1; if (depth == 0) end = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (end > open) {
-          val block = body.substring(open, end + 1)
-          if (block.startsWith("[[")) {
-            block.drop(1).dropRight(1).split("(?<=\\])\\s*,\\s*(?=\\[)")
-              .foreach { arr =>
-                out += arr.stripPrefix("[").stripSuffix("]").split(",")
-                  .filter(_.trim.nonEmpty).map(_.trim.toFloat)
-              }
-          } else {
-            out += block.stripPrefix("[").stripSuffix("]").split(",")
-              .filter(_.trim.nonEmpty).map(_.trim.toFloat)
-          }
-        }
-      }
-      idx = body.indexOf("\"" + key + "\"", idx + 1)
-    }
-    out.result()
-  }
+  def openAi(body: String): Seq[Array[Float]] =
+    MiniJson.arr(MiniJson.obj(MiniJson.parse(body))("data"))
+      .map(MiniJson.obj).zipWithIndex
+      .sortBy { case (item, i) =>
+        item.get("index").fold(i.toLong)(MiniJson.long) }
+      .map { case (item, _) => vector(item("embedding")) }
+
+  /** Cohere: `embeddings`, one vector per input. */
+  def cohere(body: String): Seq[Array[Float]] =
+    MiniJson.arr(MiniJson.obj(MiniJson.parse(body))("embeddings")).map(vector)
 }
 
 /** OpenAI embeddings API runtime (F2, `lantern_extras/src/embeddings.rs:
@@ -151,11 +115,11 @@ class OpenAiEmbeddingRuntime(transport: HttpTransport,
     groups.result().foreach { groupWithCounts =>
       val group = groupWithCounts.map(_._1)
       tokens += groupWithCounts.map(_._2.toLong).sum
-      val body = s"""{"model":"${MiniJson.escape(apiModel)}","input":${MiniJson.strArray(group)}}"""
+      val body = s"""{"model":${Json.quote(apiModel)},"input":${Json.strArray(group)}}"""
       val resp = http.post(s"$baseUrl/v1/embeddings",
         Map("Authorization" -> s"Bearer $apiKey",
           "Content-Type" -> "application/json"), body)
-      embs ++= MiniJson.floatArraysAfterKey(resp, "embedding")
+      embs ++= ApiResponse.openAi(resp)
     }
     val result = embs.result()
     require(result.size == inputs.size,
@@ -184,11 +148,11 @@ class CohereEmbeddingRuntime(transport: HttpTransport,
     val embs = Seq.newBuilder[Array[Float]]
     inputs.grouped(chunkSize).foreach { group =>
       tokens += group.map(Tokenizer.countTokens(_).toLong).sum
-      val body = s"""{"model":"${MiniJson.escape(apiModel)}","input_type":"$inputType","texts":${MiniJson.strArray(group)}}"""
+      val body = s"""{"model":${Json.quote(apiModel)},"input_type":${Json.quote(inputType)},"texts":${Json.strArray(group)}}"""
       val resp = http.post(s"$baseUrl/v1/embed",
         Map("Authorization" -> s"Bearer $apiKey",
           "Content-Type" -> "application/json"), body)
-      embs ++= MiniJson.floatArraysAfterKey(resp, "embeddings")
+      embs ++= ApiResponse.cohere(resp)
     }
     val result = embs.result()
     require(result.size == inputs.size,

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 
 import graft.embed.HashEmbeddingRuntime
 import graft.operators.Knn
+import graft.util.{Json, MiniJson}
 
 /** Minimal REST facade over the engine (SURVEY §2.12), built on the
   * JDK's HttpServer — no extra dependencies. Endpoints mirror the
@@ -79,6 +80,14 @@ import graft.operators.Knn
   *                                       (register the SummaryRewrite
   *                                       MV, watch chunk debt, fold
   *                                       it, uninstall)
+  *
+  * Request bodies are strict JSON objects, read and parsed once per
+  * request by [[graft.util.MiniJson]]; an empty body reads as `{}`.
+  * Malformed JSON, a duplicate key, nesting deeper than
+  * `MiniJson.MaxDepth` or a known key of the wrong type gets a 400 that
+  * names the problem. A number may also be sent as a numeric string
+  * (`"k":"5"`), a boolean as `"true"`/`"false"`. Bulk insert (`PUT`)
+  * alone takes JSON lines.
   *
   * `auth`, when set, enables HTTP Basic authentication on every route
   * (the reference's optional user/pass gate, `http_server/mod.rs:
@@ -324,90 +333,13 @@ class HttpApi(spark: SparkSession, port: Int = 0,
     os.write(bytes); os.close()
   }
 
-  private def jsonField(body: String, key: String): Option[String] = {
-    val str = ("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    val num = ("\"" + key + "\"\\s*:\\s*([0-9.eE+-]+)").r
-    str.findFirstMatchIn(body).map(_.group(1))
-      .orElse(num.findFirstMatchIn(body).map(_.group(1)))
-  }
-
-  private def jsonFloatArray(body: String, key: String)
-      : Option[Array[Float]] = {
-    val arr = ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r
-    arr.findFirstMatchIn(body).map(_.group(1).split(",")
-      .filter(_.trim.nonEmpty).map(_.trim.toFloat))
-  }
-
-  private def jsonStringArray(body: String, key: String)
-      : Option[Seq[String]] = {
-    val arr = ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r
-    arr.findFirstMatchIn(body).map(_.group(1).split(",")
-      .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq)
-  }
-
-  /** Quote-aware array parser for elements that may CONTAIN commas or
-    * brackets (SQL strings, /summary/advise): each element is a JSON
-    * string literal with escapes honored — unlike [[jsonStringArray]],
-    * which splits the raw span on commas (fine for identifiers).
-    */
-  private def jsonQuotedArray(body: String, key: String)
-      : Option[Seq[String]] = {
-    val arr = ("\"" + key +
-      "\"\\s*:\\s*\\[((?:[^\\]\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\]").r
-    arr.findFirstMatchIn(body).map { m =>
-      val elem = "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      elem.findAllMatchIn(m.group(1))
-        .map(x => unescapeJson(x.group(1))).toSeq
-    }
-  }
-
-  /** Decode the FULL JSON string escape set — clients that JSON-encode
-    * a multiline SQL query send \n / \t / \uXXXX, which must arrive as
-    * the characters, not literal backslash sequences.
-    */
-  private def unescapeJson(s: String): String = {
-    val out = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => out.append('"');  i += 2
-          case '\\' => out.append('\\'); i += 2
-          case '/'  => out.append('/');  i += 2
-          case 'n'  => out.append('\n'); i += 2
-          case 't'  => out.append('\t'); i += 2
-          case 'r'  => out.append('\r'); i += 2
-          case 'b'  => out.append('\b'); i += 2
-          case 'f'  => out.append('\f'); i += 2
-          case 'u' if i + 6 <= s.length =>
-            try {
-              out.append(Integer.parseInt(
-                s.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            } catch { case _: NumberFormatException =>
-              out.append(c); i += 1 }
-          case other => out.append(c).append(other); i += 2
-        }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
-
-  // the "k" of the four search routes: 10 when absent, -1 (a 400 at the
-  // route) when malformed, so callers only check k >= 1
-  private def parseK(body: String): Int =
-    jsonField(body, "k")
-      .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
-      .getOrElse(10)
-
   // shared by /search and /search_hybrid: explicit "vector" wins,
   // else "text" embedded with the (default hash/bow-64) model
-  private def resolveQueryVector(body: String): Option[Array[Float]] =
-    jsonFloatArray(body, "vector")
-      .orElse(jsonField(body, "text").map { t =>
-        val model = jsonField(body, "model").getOrElse("hash/bow-64")
+  private def resolveQueryVector(body: MiniJson.Fields)
+      : Option[Array[Float]] =
+    body.floats("vector")
+      .orElse(body.str("text").map { t =>
+        val model = body.str("model").getOrElse("hash/bow-64")
         HashEmbeddingRuntime.embedOne(t,
           graft.embed.ModelRegistry(model).dim)
       })
@@ -423,7 +355,9 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       : Option[DataFrame] =
     if (validIdent(name) && spark.catalog.tableExists(name))
       Some(spark.table(name))
-    else { respond(ex, 404, s"""{"error":"no collection $name"}"""); None }
+    else { respond(ex, 404, error(s"no collection $name")); None }
+
+  private def error(msg: String): String = s"""{"error":${Json.quote(msg)}}"""
 
   // names and column types reach SQL text — admit identifiers and a
   // type whitelist only (the reference quotes table names instead;
@@ -470,6 +404,13 @@ class HttpApi(spark: SparkSession, port: Int = 0,
     val method = ex.getRequestMethod
     val parts = ex.getRequestURI.getPath.stripSuffix("/").split("/")
       .filter(_.nonEmpty).toList
+    // the body contract of the class doc, read and parsed once before
+    // the route lock; bulk insert alone keeps its raw JSON lines
+    val raw = new String(ex.getRequestBody.readAllBytes(),
+      StandardCharsets.UTF_8)
+    val body =
+      if (method == "PUT" || raw.isBlank) new MiniJson.Fields(Map.empty)
+      else MiniJson.fields(raw)
     val lock = parts match {
       case _ if method == "GET" => routeLock.readLock()
       case List("collections", _, r) if method == "POST" &&
@@ -477,19 +418,19 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case _ => routeLock.writeLock()
     }
     lock.lock()
-    try route(ex, method, parts) finally lock.unlock()
+    try route(ex, method, parts, body, raw) finally lock.unlock()
   } catch {
+    case e: MiniJson.BadJson => respond(ex, 400, error(e.getMessage))
     case e: Throwable =>
-      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
       respond(ex, 500,
-        s"""{"error":"${graft.util.Json.escape(msg)}"}""")
+        error(Option(e.getMessage).getOrElse(e.getClass.getName)))
   }
 
   private val searchRoutes =
     Set("search", "search_text", "search_sparse", "search_hybrid")
 
   private def route(ex: HttpExchange, method: String,
-      parts: List[String]): Unit =
+      parts: List[String], body: MiniJson.Fields, raw: String): Unit =
     (method, parts) match {
       // machine-readable API doc (the reference serves Swagger at its
       // root, http_server/mod.rs:77-106): a minimal OpenAPI 3 skeleton
@@ -500,27 +441,21 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("GET", List("collections")) =>
         val names = spark.catalog.listTables().collect().map(_.name)
         respond(ex, 200,
-          names.map(n => "\"" + n + "\"").mkString("[", ",", "]"))
+          Json.strArray(names.toSeq))
 
       case ("POST", List("collections")) =>
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
-        jsonField(body, "name") match {
+        body.str("name") match {
           case Some(name) if validIdent(name) =>
             if (spark.catalog.tableExists(name))
               respond(ex, 409, s"""{"error":"collection $name exists"}""")
             else {
-              val colsObj = ("\"columns\"\\s*:\\s*\\{([^}]*)\\}").r
-                .findFirstMatchIn(body).map(_.group(1))
-              val pairs = colsObj match {
+              val pairs = body.obj("columns") match {
                 case None =>
                   // reference default schema, collection.rs:190-198
                   Seq("id" -> "bigint", "vector" -> "array<float>",
                     "data" -> "string", "metadata" -> "string")
-                case Some(obj) =>
-                  "\"([A-Za-z_][A-Za-z0-9_]*)\"\\s*:\\s*\"([^\"]+)\"".r
-                    .findAllMatchIn(obj)
-                    .map(m => m.group(1) -> m.group(2).toLowerCase).toSeq
+                case Some(cols) => cols.map.keys.toSeq.map(c =>
+                  c -> cols.str(c).getOrElse("").toLowerCase)
               }
               if (pairs.isEmpty ||
                   !pairs.forall { case (c, t) =>
@@ -550,19 +485,14 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // build time — rebuild after bulk inserts.
       case ("POST", List("collections", name, "index")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val nCells = jsonField(body, "n_cells")
-            .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
-            .getOrElse(16)
-          val vecCol = jsonField(body, "vector_column")
-            .getOrElse("embedding")
-          val idCol = jsonField(body, "id_column").getOrElse("vec_id")
+          val nCells = body.int("n_cells").getOrElse(16)
+          val vecCol = body.str("vector_column").getOrElse("embedding")
+          val idCol = body.str("id_column").getOrElse("vec_id")
           // the reference's index server takes the scalar-quantization
           // kind as a build parameter (external_index/server.rs:93-99);
           // "bq" stores packed sign bits next to the floats and routes
           // searches through the hamming-shortlist + exact-rescore path
-          val quant = jsonField(body, "quantization").getOrElse("f32")
+          val quant = body.str("quantization").getOrElse("f32")
           if (nCells < 1 || nCells > 65536)
             respond(ex, 400,
               """{"error":"n_cells must be in [1, 65536]"}""")
@@ -598,7 +528,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           Option(ivfModels.get(name)) match {
             case None =>
               respond(ex, 404,
-                s"""{"error":"no index on $name — POST /collections/$name/index first"}""")
+                error(s"no index on $name — POST /collections/$name/index first"))
             case Some(m) =>
               // a quantized index must rebuild AS its kind, or the
               // declared quantization silently degrades to floats
@@ -616,7 +546,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(ivfModels.remove(name)) match {
           case Some(_) => respond(ex, 200, s"""{"dropped_index":"$name"}""")
           case None =>
-            respond(ex, 404, s"""{"error":"no index on $name"}""")
+            respond(ex, 404, error(s"no index on $name"))
         }
 
       // Index observability: per-cell rows / corpus share / file
@@ -625,7 +555,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("GET", List("collections", name, "index", "stats")) =>
         Option(ivfModels.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no index on $name"}""")
+            respond(ex, 404, error(s"no index on $name"))
           case Some(m) =>
             val rows = graft.operators.IvfIndex.cellStats(spark, m)
               .collect()
@@ -645,11 +575,9 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "index", "delete")) =>
         Option(ivfModels.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no index on $name"}""")
+            respond(ex, 404, error(s"no index on $name"))
           case Some(m) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val ids = jsonStringArray(body, "ids").getOrElse(Nil)
+            val ids = body.strings("ids").getOrElse(Nil)
               .flatMap(s => scala.util.Try(s.toLong).toOption)
             if (ids.isEmpty)
               respond(ex, 400,
@@ -682,14 +610,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // Body: {"vector_column":"embedding","id_column":"vec_id"}.
       case ("POST", List("collections", name, "sq8")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val vecCol = jsonField(body, "vector_column")
-            .getOrElse("embedding")
-          val idCol = jsonField(body, "id_column").getOrElse("vec_id")
+          val vecCol = body.str("vector_column").getOrElse("embedding")
+          val idCol = body.str("id_column").getOrElse("vec_id")
           if (!df.columns.contains(vecCol) || !df.columns.contains(idCol))
             respond(ex, 400,
-              s"""{"error":"need columns $idCol and $vecCol"}""")
+              error(s"need columns $idCol and $vecCol"))
           else {
             val SQ = graft.operators.ScalarQuantizer
             val model = SQ.fit(df, vecCol)
@@ -706,20 +631,13 @@ class HttpApi(spark: SparkSession, port: Int = 0,
 
       case ("POST", List("collections", name, "pq")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val vecCol = jsonField(body, "vector_column")
-            .getOrElse("embedding")
-          val idCol = jsonField(body, "id_column").getOrElse("vec_id")
-          val clusters = jsonField(body, "clusters")
-            .map(c => scala.util.Try(c.toDouble.toInt).getOrElse(-1))
-            .getOrElse(16)
-          val splits = jsonField(body, "splits")
-            .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
-            .getOrElse(8)
+          val vecCol = body.str("vector_column").getOrElse("embedding")
+          val idCol = body.str("id_column").getOrElse("vec_id")
+          val clusters = body.int("clusters").getOrElse(16)
+          val splits = body.int("splits").getOrElse(8)
           if (!df.columns.contains(vecCol) || !df.columns.contains(idCol))
             respond(ex, 400,
-              s"""{"error":"need columns $idCol and $vecCol"}""")
+              error(s"need columns $idCol and $vecCol"))
           else if (clusters < 1 || clusters > 256 || splits < 1)
             respond(ex, 400, """{"error":"clusters must be a number in """ +
               """[1, 256], splits >= 1"}""")
@@ -743,18 +661,12 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // "id_column":"doc_id","tau":0.5}.
       case ("POST", List("collections", name, "dedup")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val textCol = jsonField(body, "text_column").getOrElse("text")
-          val idCol = jsonField(body, "id_column").getOrElse("doc_id")
-          // malformed numerics parse to NaN, which fails the range
-          // check below → 400, not a NumberFormatException-turned-500
-          val tau = jsonField(body, "tau")
-            .map(t => scala.util.Try(t.toDouble).getOrElse(Double.NaN))
-            .getOrElse(0.5)
+          val textCol = body.str("text_column").getOrElse("text")
+          val idCol = body.str("id_column").getOrElse("doc_id")
+          val tau = body.double("tau").getOrElse(0.5)
           if (!df.columns.contains(textCol) || !df.columns.contains(idCol))
             respond(ex, 400,
-              s"""{"error":"need columns $idCol and $textCol"}""")
+              error(s"need columns $idCol and $textCol"))
           else if (!(tau > 0 && tau <= 1))
             respond(ex, 400,
               """{"error":"tau must be a number in (0, 1]"}""")
@@ -797,19 +709,14 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // request is mid-flight).
       case ("POST", List("collections", name, "overlap")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val textCol = jsonField(body, "text_column").getOrElse("text")
-          val idCol = jsonField(body, "id_column").getOrElse("doc_id")
-          val minShared = jsonField(body, "min_shared")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(5)
-          val maxDf = jsonField(body, "max_doc_freq")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(50)
-          val limit = jsonField(body, "limit")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(20)
+          val textCol = body.str("text_column").getOrElse("text")
+          val idCol = body.str("id_column").getOrElse("doc_id")
+          val minShared = body.int("min_shared").getOrElse(5)
+          val maxDf = body.int("max_doc_freq").getOrElse(50)
+          val limit = body.int("limit").getOrElse(20)
           if (!df.columns.contains(textCol) || !df.columns.contains(idCol))
             respond(ex, 400,
-              s"""{"error":"need columns $idCol and $textCol"}""")
+              error(s"need columns $idCol and $textCol"))
           else if (minShared < 1 || maxDf < 1 || limit < 1)
             respond(ex, 400,
               """{"error":"min_shared, max_doc_freq and limit must be positive integers"}""")
@@ -832,18 +739,13 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // "text","id_column":"doc_id","tau":0.8,"limit":100}. Read-only.
       case ("POST", List("collections", name, "containment")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val textCol = jsonField(body, "text_column").getOrElse("text")
-          val idCol = jsonField(body, "id_column").getOrElse("doc_id")
-          val tau = jsonField(body, "tau")
-            .map(t => scala.util.Try(t.toDouble).getOrElse(Double.NaN))
-            .getOrElse(0.8)
-          val limit = jsonField(body, "limit")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(100)
+          val textCol = body.str("text_column").getOrElse("text")
+          val idCol = body.str("id_column").getOrElse("doc_id")
+          val tau = body.double("tau").getOrElse(0.8)
+          val limit = body.int("limit").getOrElse(100)
           if (!df.columns.contains(textCol) || !df.columns.contains(idCol))
             respond(ex, 400,
-              s"""{"error":"need columns $idCol and $textCol"}""")
+              error(s"need columns $idCol and $textCol"))
           else if (!(tau > 0 && tau <= 1))
             respond(ex, 400,
               """{"error":"tau must be a number in (0, 1]"}""")
@@ -872,9 +774,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // row-local checks share one scan; nothing is registered.
       case ("POST", List("collections", name, "checks")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val specs = jsonQuotedArray(body, "checks").getOrElse(Nil)
+          val specs = body.strings("checks").getOrElse(Nil)
           if (specs.isEmpty)
             respond(ex, 400,
               """{"error":"need a non-empty checks array"}""")
@@ -912,14 +812,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // (the 100 TB stance). Read-only.
       case ("POST", List("collections", name, "profile")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
           // duplicates would make profile's internal _nn_/_nd_ aliases
           // ambiguous (AnalysisException → 500); dedupe, order kept
-          val cols = jsonStringArray(body, "columns")
+          val cols = body.strings("columns")
             .getOrElse(df.columns.toSeq).distinct
-          val approx = jsonField(body, "approx_distinct")
-            .contains("true")
+          val approx = body.bool("approx_distinct").contains(true)
           val missing = cols.filterNot(df.columns.contains)
           if (cols.isEmpty || cols.size > 64)
             respond(ex, 400,
@@ -952,18 +849,12 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // integer units upstream or accept truncation). Read-only.
       case ("POST", List("collections", name, "resample")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val keyCol = jsonField(body, "key_column").getOrElse("")
-          val tsCol = jsonField(body, "ts_column").getOrElse("ts")
-          val valCol = jsonField(body, "value_column").getOrElse("value")
-          val step = jsonField(body, "step_sec")
-            .map(v => scala.util.Try(v.toLong).getOrElse(-1L))
-            .getOrElse(3600L)
-          val interp = jsonField(body, "interpolate").contains("true")
-          val limit = jsonField(body, "limit")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1))
-            .getOrElse(1000)
+          val keyCol = body.str("key_column").getOrElse("")
+          val tsCol = body.str("ts_column").getOrElse("ts")
+          val valCol = body.str("value_column").getOrElse("value")
+          val step = body.long("step_sec").getOrElse(3600L)
+          val interp = body.bool("interpolate").contains(true)
+          val limit = body.int("limit").getOrElse(1000)
           val need = Seq(keyCol, tsCol, valCol)
           if (need.exists(c => c.isEmpty || !df.columns.contains(c)))
             respond(ex, 400, """{"error":"key_column, ts_column and """ +
@@ -1002,21 +893,17 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // natural ordering.
       case ("POST", List("collections", name, "graph")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val op = jsonField(body, "op").getOrElse("")
-          val srcCol = jsonField(body, "src_column").getOrElse("src")
-          val dstCol = jsonField(body, "dst_column").getOrElse("dst")
-          val iters = jsonField(body, "iters")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(3)
-          val top = jsonField(body, "top")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(20)
-          val seeds = jsonStringArray(body, "seeds").getOrElse(Nil)
+          val op = body.str("op").getOrElse("")
+          val srcCol = body.str("src_column").getOrElse("src")
+          val dstCol = body.str("dst_column").getOrElse("dst")
+          val iters = body.int("iters").getOrElse(3)
+          val top = body.int("top").getOrElse(20)
+          val seeds = body.strings("seeds").getOrElse(Nil)
             .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
           val G = graft.operators.GraphOps
           if (!df.columns.contains(srcCol) || !df.columns.contains(dstCol))
             respond(ex, 400,
-              s"""{"error":"need columns $srcCol and $dstCol"}""")
+              error(s"need columns $srcCol and $dstCol"))
           else if (iters < 1 || iters > 50)
             respond(ex, 400, """{"error":"iters must be in [1, 50]"}""")
           else if (top < 1 || top > 10000)
@@ -1066,7 +953,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                 s"""{"node":${r.getLong(0)},"outdeg":${r.getLong(1)},""" +
                   s""""indeg":${r.getLong(2)}}""").mkString(",")}]}""")
             case "pagerank_weighted" =>
-              val wCol = jsonField(body, "weight_column").getOrElse("")
+              val wCol = body.str("weight_column").getOrElse("")
               if (wCol.isEmpty || !df.columns.contains(wCol))
                 respond(ex, 400, """{"error":"pagerank_weighted needs """ +
                   """an existing weight_column"}""")
@@ -1080,9 +967,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                   .mkString(",")}]}""")
               }
             case "kcore" =>
-              val k = jsonField(body, "k")
-                .map(v => scala.util.Try(v.toInt).getOrElse(-1))
-                .getOrElse(2)
+              val k = body.int("k").getOrElse(2)
               if (k < 1)
                 respond(ex, 400,
                   """{"error":"k must be a positive integer"}""")
@@ -1139,13 +1024,8 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // 0.5,"num_hashes":128}.
       case ("POST", List("lsh_tune")) =>
         locally {
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val threshold = jsonField(body, "threshold")
-            .map(t => scala.util.Try(t.toDouble).getOrElse(Double.NaN))
-            .getOrElse(0.5)
-          val numHashes = jsonField(body, "num_hashes")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(128)
+          val threshold = body.double("threshold").getOrElse(0.5)
+          val numHashes = body.int("num_hashes").getOrElse(128)
           if (!(threshold > 0 && threshold < 1))
             respond(ex, 400,
               """{"error":"threshold must be a number in (0, 1)"}""")
@@ -1171,7 +1051,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           Option(ivfModels.get(name)) match {
             case None =>
               respond(ex, 404,
-                s"""{"error":"no index on $name — POST /collections/$name/index first"}""")
+                error(s"no index on $name — POST /collections/$name/index first"))
             case Some(m) =>
               val stats = graft.operators.IvfIndex.compact(spark,
                 m.indexPath)
@@ -1194,17 +1074,12 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // column's values are the items. Read-only.
       case ("POST", List("collections", name, "topk")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val column = jsonField(body, "column").getOrElse("text")
-          val k = jsonField(body, "k")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(10)
-          val capacity = jsonField(body, "capacity")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(4096)
-          val ngram = jsonField(body, "ngram")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1))
+          val column = body.str("column").getOrElse("text")
+          val k = body.int("k").getOrElse(10)
+          val capacity = body.int("capacity").getOrElse(4096)
+          val ngram = body.int("ngram")
           if (!df.columns.contains(column))
-            respond(ex, 400, s"""{"error":"no column $column"}""")
+            respond(ex, 400, error(s"no column $column"))
           else if (k < 1 || k > 10000)
             respond(ex, 400,
               """{"error":"k must be an integer in [1, 10000]"}""")
@@ -1247,15 +1122,10 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // keywordsSql template, integer-quantized idf.
       case ("POST", List("collections", name, "keywords")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val column = jsonField(body, "column").getOrElse("text")
-          val idCol = jsonField(body, "id_column").getOrElse("doc_id")
-          val k = jsonField(body, "k")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1)).getOrElse(3)
-          val limit = jsonField(body, "limit")
-            .map(v => scala.util.Try(v.toInt).getOrElse(-1))
-            .getOrElse(1000)
+          val column = body.str("column").getOrElse("text")
+          val idCol = body.str("id_column").getOrElse("doc_id")
+          val k = body.int("k").getOrElse(3)
+          val limit = body.int("limit").getOrElse(1000)
           // validIdent matches the sibling SQL-interpolating endpoints
           // (search_text / search_hybrid): column names ride into a SQL
           // template, so schema membership alone is not a strong enough
@@ -1293,11 +1163,9 @@ class HttpApi(spark: SparkSession, port: Int = 0,
 
       case ("PUT", List("collections", name)) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
           import spark.implicits._
           val ds = spark.createDataset(
-            body.linesIterator.filter(_.trim.nonEmpty).toSeq)
+            raw.linesIterator.filter(_.trim.nonEmpty).toSeq)
           val rows = spark.read.schema(df.schema).json(ds)
           rows.write.insertInto(name)
           respond(ex, 200, s"""{"inserted":${rows.count()}}""")
@@ -1307,12 +1175,10 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // hybrid retrieval (TextSearch.bm25TopK).
       case ("POST", List("collections", name, "search_text")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val k = parseK(body)
-          val textCol = jsonField(body, "text_column").getOrElse("text")
-          val idCol = jsonField(body, "id_column").getOrElse("doc_id")
-          val q = jsonField(body, "query").getOrElse("")
+          val k = body.int("k").getOrElse(10)
+          val textCol = body.str("text_column").getOrElse("text")
+          val idCol = body.str("id_column").getOrElse("doc_id")
+          val q = body.str("query").getOrElse("")
           val words = q.split("\\s+").filter(_.nonEmpty).distinct.toSeq
           if (words.isEmpty || k < 1 ||
               !validIdent(textCol) || !validIdent(idCol) ||
@@ -1336,12 +1202,10 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // exact integers.
       case ("POST", List("collections", name, "search_sparse")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val k = parseK(body)
-          val textCol = jsonField(body, "text_column").getOrElse("text")
-          val idCol = jsonField(body, "id_column").getOrElse("doc_id")
-          val q = jsonField(body, "query").getOrElse("")
+          val k = body.int("k").getOrElse(10)
+          val textCol = body.str("text_column").getOrElse("text")
+          val idCol = body.str("id_column").getOrElse("doc_id")
+          val q = body.str("query").getOrElse("")
           val words = q.split("\\s+").filter(_.nonEmpty).distinct.toSeq
           if (words.isEmpty || k < 1 ||
               !validIdent(textCol) || !validIdent(idCol) ||
@@ -1364,21 +1228,17 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // collection via {"vector_collection":"t2"} or uses this one.
       case ("POST", List("collections", name, "search_hybrid")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val k = parseK(body)
-          val textCol = jsonField(body, "text_column").getOrElse("text")
-          val idCol = jsonField(body, "id_column").getOrElse("doc_id")
-          val vecCol = jsonField(body, "vector_column")
-            .getOrElse("embedding")
-          val vecIdCol = jsonField(body, "vector_id_column")
-            .getOrElse(idCol)
-          val vecDfOpt = jsonField(body, "vector_collection") match {
+          val k = body.int("k").getOrElse(10)
+          val textCol = body.str("text_column").getOrElse("text")
+          val idCol = body.str("id_column").getOrElse("doc_id")
+          val vecCol = body.str("vector_column").getOrElse("embedding")
+          val vecIdCol = body.str("vector_id_column").getOrElse(idCol)
+          val vecDfOpt = body.str("vector_collection") match {
             case Some(vn) => tableOr404(ex, vn)
             case None => Some(df)
           }
           vecDfOpt.foreach { vdf =>
-            val q = jsonField(body, "query").getOrElse("")
+            val q = body.str("query").getOrElse("")
             val words = q.split("\\s+").filter(_.nonEmpty).distinct.toSeq
             val colsOk = validIdent(textCol) && validIdent(idCol) &&
               validIdent(vecCol) && validIdent(vecIdCol) &&
@@ -1408,36 +1268,27 @@ class HttpApi(spark: SparkSession, port: Int = 0,
 
       case ("POST", List("collections", name, "search")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val k = parseK(body)
-          val vecCol = jsonField(body, "vector_column")
-            .getOrElse("embedding")
-          val idCol = jsonField(body, "id_column").getOrElse("vec_id")
-          val metric = jsonField(body, "metric").getOrElse("l2sq")
+          val k = body.int("k").getOrElse(10)
+          val vecCol = body.str("vector_column").getOrElse("embedding")
+          val idCol = body.str("id_column").getOrElse("vec_id")
+          val metric = body.str("metric").getOrElse("l2sq")
           // a requested filter that names a bad/unknown column must 400,
           // not silently return unfiltered rows (mirrors /index's guard)
-          val fcolRaw = jsonField(body, "filter_column")
+          val fcolRaw = body.str("filter_column")
           val fcolOk = fcolRaw
             .filter(c => validIdent(c) && df.columns.contains(c))
-          val nprobeOpt = jsonField(body, "nprobe")
-            .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
+          val nprobeOpt = body.int("nprobe")
           // BQ-indexed collections rescore a hamming shortlist of this
           // depth (default max(4k, 40)); meaningless without a bits-
           // bearing index, so it 400s against a plain one
-          val shortlistOpt = jsonField(body, "shortlist")
-            .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
-          val mmrLambdaOpt = jsonField(body, "mmr_lambda")
-            .map(s => scala.util.Try(s.toDouble).getOrElse(Double.NaN))
+          val shortlistOpt = body.int("shortlist")
+          val mmrLambdaOpt = body.double("mmr_lambda")
           // distance-threshold mode (the reference's `<-> q < r` scan):
           // "radius" replaces top-k with all-within-radius, capped by
           // "limit" so an over-wide radius can't stream the corpus
           // through one HTTP response
-          val radiusOpt = jsonField(body, "radius")
-            .map(s => scala.util.Try(s.toDouble).getOrElse(Double.NaN))
-          val rlimit = jsonField(body, "limit")
-            .map(s => scala.util.Try(s.toDouble.toInt).getOrElse(-1))
-            .getOrElse(1000)
+          val radiusOpt = body.double("radius")
+          val rlimit = body.int("limit").getOrElse(1000)
           val vec: Option[Array[Float]] = resolveQueryVector(body)
           (vec match {
             case None =>
@@ -1458,9 +1309,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               // brute force while discarding the parameter would hide
               // that the two-stage path never ran
               Some("""{"error":"shortlist requires a bq-quantized index over the requested id/vector columns (POST /index with \"quantization\":\"bq\")"}""")
-            case _ if mmrLambdaOpt.exists(_.isNaN) =>
-              Some("""{"error":"mmr_lambda must be a number"}""")
-            case _ if radiusOpt.exists(r => r.isNaN || r <= 0) =>
+            case _ if radiusOpt.exists(_ <= 0) =>
               Some("""{"error":"radius must be a positive number"}""")
             case _ if radiusOpt.isDefined && mmrLambdaOpt.isDefined =>
               Some("""{"error":"radius and mmr_lambda are exclusive"}""")
@@ -1483,7 +1332,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               // column name must be a valid identifier ON the
               // collection — never interpolated as SQL — and the value
               // rides as a typed literal Column
-              val fval = jsonField(body, "filter_value")
+              val fval = body.str("filter_value")
               val pred = (fcolOk, fval) match {
                 case (Some(c), Some(v)) => Some(col(c) === lit(v))
                 case _ => None
@@ -1601,18 +1450,15 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       //   DELETE .../summary          → uninstall the rewrite
       case ("POST", List("collections", name, "summary")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val dims = jsonStringArray(body, "dims").getOrElse(Nil)
-          val measures = jsonStringArray(body, "measures").getOrElse(Nil)
-          val refresh = jsonField(body, "refresh").contains("true")
+          val dims = body.strings("dims").getOrElse(Nil)
+          val measures = body.strings("measures").getOrElse(Nil)
+          val refresh = body.bool("refresh").contains(true)
           // optional EXPRESSION measures ("expr_measures":
           // ["revenue:l_extendedprice * (1 - l_discount)"] — name:sql
           // split on the first ':', the format /summary/advise emits),
           // so the advise → register loop closes for derived-aggregate
           // workloads like the TPC-H Q1 shape
-          val exprRaw = jsonStringArray(body, "expr_measures")
-            .getOrElse(Nil)
+          val exprRaw = body.strings("expr_measures").getOrElse(Nil)
           val exprs = exprRaw.flatMap { s =>
             val i = s.indexOf(':')
             if (i <= 0 || i == s.length - 1) None
@@ -1646,30 +1492,28 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           // optional sketch measures: HLL keys ("hll_keys":["user_id"],
           // precision via "hll_p") and histogram descriptors
           // ("histograms":["latency:0:60000:600"])
-          val hllP = jsonField(body, "hll_p").map(_.toInt).getOrElse(8)
-          val hllKeys = jsonStringArray(body, "hll_keys").getOrElse(Nil)
+          val hllP = body.int("hll_p").getOrElse(8)
+          val hllKeys = body.strings("hll_keys").getOrElse(Nil)
           val sketches = hllKeys.map(k =>
             graft.plans.SummaryRewrite.SketchSpec(k, hllP))
-          val histRaw = jsonStringArray(body, "histograms").getOrElse(Nil)
-          val itemsRaw = jsonStringArray(body, "items").getOrElse(Nil)
+          val histRaw = body.strings("histograms").getOrElse(Nil)
+          val itemsRaw = body.strings("items").getOrElse(Nil)
           // optional KMV overlap sketches ("kmv_keys":["o_custkey"],
           // k via "kmv_k", default 2048)
-          val kmvK = jsonField(body, "kmv_k").flatMap(s =>
-            scala.util.Try(s.toInt).toOption).getOrElse(2048)
-          val kmvKeys = jsonStringArray(body, "kmv_keys").getOrElse(Nil)
+          val kmvK = body.int("kmv_k").getOrElse(2048)
+          val kmvKeys = body.strings("kmv_keys").getOrElse(Nil)
           val kmvs = kmvKeys.map(k =>
             graft.plans.SummaryRewrite.KmvSpec(k, kmvK))
           // optional vector-sum (centroid) measures over ARRAY<FLOAT>
           // embedding columns ("vec_cols":["embedding"])
-          val vecCols = jsonStringArray(body, "vec_cols").getOrElse(Nil)
+          val vecCols = body.strings("vec_cols").getOrElse(Nil)
           val vecs = vecCols.map(c =>
             graft.plans.SummaryRewrite.VecSpec(c))
           // optional bottom-k sample-quantile sketches
           // ("sample_cols":["latency:request_id"] — value:unique-id
           // pairs; k via "sample_k", default 1024)
-          val smpK = jsonField(body, "sample_k").flatMap(s =>
-            scala.util.Try(s.toInt).toOption).getOrElse(1024)
-          val smpRaw = jsonStringArray(body, "sample_cols").getOrElse(Nil)
+          val smpK = body.int("sample_k").getOrElse(1024)
+          val smpRaw = body.strings("sample_cols").getOrElse(Nil)
           val samples = smpRaw.flatMap { s =>
             s.split(':') match {
               case Array(v, id) => Some(
@@ -1681,19 +1525,16 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           // columns ("hdr_cols":["latency_us"], sub-bucket bits via
           // "hdr_p", default 5 — relative error <= 2^-p, no range
           // declaration needed; the expression form stays Scala-only)
-          val hdrP = jsonField(body, "hdr_p").flatMap(s =>
-            scala.util.Try(s.toInt).toOption).getOrElse(5)
-          val hdrCols = jsonStringArray(body, "hdr_cols").getOrElse(Nil)
+          val hdrP = body.int("hdr_p").getOrElse(5)
+          val hdrCols = body.strings("hdr_cols").getOrElse(Nil)
           val hdrs = hdrCols.map(c =>
             graft.plans.SummaryRewrite.HdrSpec(c, c, hdrP))
           // optional count-min point-frequency sketches over integral
           // key columns ("cms_keys":["user_id"], depth/width via
           // "cms_d"/"cms_w", defaults 4x512)
-          val cmsD = jsonField(body, "cms_d").flatMap(s =>
-            scala.util.Try(s.toInt).toOption).getOrElse(4)
-          val cmsW = jsonField(body, "cms_w").flatMap(s =>
-            scala.util.Try(s.toInt).toOption).getOrElse(512)
-          val cmsKeys = jsonStringArray(body, "cms_keys").getOrElse(Nil)
+          val cmsD = body.int("cms_d").getOrElse(4)
+          val cmsW = body.int("cms_w").getOrElse(512)
+          val cmsKeys = body.strings("cms_keys").getOrElse(Nil)
           val cmss = cmsKeys.map(k =>
             graft.plans.SummaryRewrite.CmsSpec(k, cmsD, cmsW))
           val cols = df.columns.toSet
@@ -1794,12 +1635,10 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "distinct")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val key = jsonField(body, "key")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
+            val key = body.str("key")
+            val gdims = body.strings("dims").getOrElse(Nil)
             if (!key.exists(k => reg.sketches.exists(_.key == k)))
               respond(ex, 400,
                 s"""{"error":"key must be one of the registered """ +
@@ -1825,13 +1664,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "quantile")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val colName = jsonField(body, "col")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
-            val qs = jsonFloatArray(body, "qs")
+            val colName = body.str("col")
+            val gdims = body.strings("dims").getOrElse(Nil)
+            val qs = body.floats("qs")
               .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
             val spec = colName.flatMap(c =>
               reg.histograms.find(_.col == c))
@@ -1874,13 +1711,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           List("collections", name, "summary", "samplequantile")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val colName = jsonField(body, "col")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
-            val qs = jsonFloatArray(body, "qs")
+            val colName = body.str("col")
+            val gdims = body.strings("dims").getOrElse(Nil)
+            val qs = body.floats("qs")
               .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
             if (!colName.exists(c => reg.samples.exists(_.value == c)))
               respond(ex, 400,
@@ -1920,13 +1755,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           List("collections", name, "summary", "hdrquantile")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val colName = jsonField(body, "col")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
-            val qs = jsonFloatArray(body, "qs")
+            val colName = body.str("col")
+            val gdims = body.strings("dims").getOrElse(Nil)
+            val qs = body.floats("qs")
               .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
             if (!colName.exists(c => reg.hdrs.exists(_.name == c)))
               respond(ex, 400,
@@ -1963,13 +1796,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "freq")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val key = jsonField(body, "key")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
-            val values = jsonFloatArray(body, "values")
+            val key = body.str("key")
+            val gdims = body.strings("dims").getOrElse(Nil)
+            val values = body.floats("values")
               .map(_.toSeq.map(_.toLong)).getOrElse(Nil)
             if (!key.exists(k => reg.cmss.exists(_.key == k)))
               respond(ex, 400,
@@ -2005,13 +1836,10 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "retract")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val pred = jsonField(body, "where")
-            val chunk = jsonField(body, "chunk").flatMap(s =>
-              scala.util.Try(s.toLong).toOption).getOrElse(-2L)
+            val pred = body.str("where")
+            val chunk = body.long("chunk").getOrElse(-2L)
             tableOr404(ex, name).foreach { df =>
               if (pred.isEmpty)
                 respond(ex, 400,
@@ -2046,7 +1874,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           List("collections", name, "summary", "chunk", chunkId)) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
             scala.util.Try(chunkId.toLong).toOption match {
               case None =>
@@ -2072,14 +1900,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "topitems")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val colName = jsonField(body, "col")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
-            val k = jsonField(body, "k").flatMap(s =>
-              scala.util.Try(s.toInt).toOption).getOrElse(10)
+            val colName = body.str("col")
+            val gdims = body.strings("dims").getOrElse(Nil)
+            val k = body.int("k").getOrElse(10)
             if (!colName.exists(c => reg.items.exists(_.col == c)))
               respond(ex, 400,
                 s"""{"error":"col must be one of the registered """ +
@@ -2111,12 +1936,10 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "overlap")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val key = jsonField(body, "key")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
+            val key = body.str("key")
+            val gdims = body.strings("dims").getOrElse(Nil)
             if (!key.exists(k => reg.kmvs.exists(_.key == k)))
               respond(ex, 400,
                 s"""{"error":"key must be one of the registered """ +
@@ -2152,12 +1975,10 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "centroid")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            val colName = jsonField(body, "col")
-            val gdims = jsonStringArray(body, "dims").getOrElse(Nil)
+            val colName = body.str("col")
+            val gdims = body.strings("dims").getOrElse(Nil)
             if (!colName.exists(c => reg.vecs.exists(_.col == c)))
               respond(ex, 400,
                 s"""{"error":"col must be one of the registered """ +
@@ -2216,13 +2037,11 @@ class HttpApi(spark: SparkSession, port: Int = 0,
 
       case ("POST", List("collections", name, "summary", "advise")) =>
         tableOr404(ex, name).foreach { df =>
-          val body = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val qs = jsonQuotedArray(body, "queries").getOrElse(Nil)
+          val qs = body.strings("queries").getOrElse(Nil)
           // {"captured": true} (or ?captured=true) advises from the
           // session's CAPTURED workload instead of an explicit list
           val captured =
-            ("\"captured\"\\s*:\\s*true").r.findFirstIn(body).isDefined ||
+            body.bool("captured").contains(true) ||
               Option(ex.getRequestURI.getQuery)
                 .exists(_.contains("captured=true"))
           val paths = df.queryExecution.optimizedPlan.collect {
@@ -2286,9 +2105,8 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               // "sample_id", the unique row id the sample sketch
               // hashes). The advisory-only default stays side-effect
               // free.
-              val applyNow =
-                ("\"apply\"\\s*:\\s*true").r.findFirstIn(body).isDefined
-              val sampleId = jsonField(body, "sample_id").getOrElse("")
+              val applyNow = body.bool("apply").contains(true)
+              val sampleId = body.str("sample_id").getOrElse("")
               val applied =
                 if (!applyNow) ""
                 else if (rec.dims.isEmpty ||
@@ -2346,7 +2164,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("GET", List("collections", name, "summary", "stats")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
             val byChunk = spark.read.parquet(reg.summaryDir)
               .groupBy(col("chunk")).agg(count(lit(1)).as("rows"))
@@ -2370,7 +2188,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("POST", List("collections", name, "summary", "compact")) =>
         Option(summaries.get(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
             val before = spark.read.parquet(reg.summaryDir)
               .select(col("chunk")).distinct().count()
@@ -2384,7 +2202,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       case ("DELETE", List("collections", name, "summary")) =>
         Option(summaries.remove(name)) match {
           case None =>
-            respond(ex, 404, s"""{"error":"no summary on $name"}""")
+            respond(ex, 404, error(s"no summary on $name"))
           case Some(reg) =>
             graft.plans.SummaryRewrite.unregister(spark, reg.dataPath)
             respond(ex, 200, s"""{"dropped_summary":"$name"}""")

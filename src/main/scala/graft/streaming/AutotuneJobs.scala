@@ -1,12 +1,9 @@
 package graft.streaming
 
-import java.time.Instant
-
-
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.operators.Autotune
+import graft.util.MiniJson
 
 /** Daemon autotune jobs — the reference daemon's second job kind
   * (`lantern_cli/src/daemon/autotune_jobs.rs`), alongside embedding
@@ -15,9 +12,8 @@ import graft.operators.Autotune
   * autotune grid with per-variant progress reporting and cooperative
   * cancellation, writes the results to the job's `autotune_results`
   * parquet (RESULT_TABLE_DEFINITION analog, autotune_jobs.rs:48-57),
-  * and records the selected best variant. Status is the same
-  * timestamp CASE as embedding jobs (F12):
-  * failed > canceled > enabled > in_progress > queued.
+  * and records the selected best variant. Status, cancel/resume and
+  * the daemon loop are the shared [[JsonJobStore]] lifecycle.
   */
 object AutotuneJobs {
 
@@ -26,25 +22,12 @@ object AutotuneJobs {
     */
   case class AutotuneSpec(id: Long, sourceDir: String, idCol: String,
       vecCol: String, metric: String, targetRecall: Double, k: Int,
-      sampleN: Int, workDir: String) {
+      sampleN: Int, workDir: String) extends JsonJobStore.Spec {
     def resultsDir: String = s"$workDir/autotune_results"
   }
 
-  case class AutotuneState(spec: AutotuneSpec, createdAt: String,
-      startedAt: Option[String] = None,
-      finishedAt: Option[String] = None,
-      canceledAt: Option[String] = None,
-      failedAt: Option[String] = None,
-      error: Option[String] = None,
-      progress: Int = 0,
-      best: Option[String] = None)
-
-  def status(st: AutotuneState): String =
-    if (st.failedAt.isDefined) "failed"
-    else if (st.canceledAt.isDefined) "canceled"
-    else if (st.finishedAt.isDefined) "enabled"
-    else if (st.startedAt.isDefined) "in_progress"
-    else "queued"
+  /** Result field "best": the selected variant. */
+  type AutotuneState = JsonJobStore.Job[AutotuneSpec]
 
   /** The reference's operator names (external_index/cli.rs UMetricKind)
     * mapped onto the engine's distance-function keys.
@@ -56,45 +39,20 @@ object AutotuneJobs {
     case other => other // already an engine metric name
   }
 
-  /** One JSON file per job, atomically replaced (control-plane state,
-    * shared plumbing with EmbeddingJobs.JobStore via JsonJobStore).
-    */
   final class AutotuneStore(dir: String)
-      extends JsonJobStore[AutotuneState](dir, "autotune_") {
+      extends JsonJobStore[AutotuneSpec](dir, "autotune_") {
 
-    override protected def idOf(st: AutotuneState): Long = st.spec.id
+    override protected def specFields(s: AutotuneSpec): Seq[(String, Any)] =
+      Seq("sourceDir" -> s.sourceDir, "idCol" -> s.idCol,
+        "vecCol" -> s.vecCol, "metric" -> s.metric,
+        "targetRecall" -> s.targetRecall, "k" -> s.k,
+        "sampleN" -> s.sampleN, "workDir" -> s.workDir)
 
-    override protected def ser(st: AutotuneState): String = {
-      def esc(v: String) = graft.util.Json.escape(v)
-      def opt(o: Option[String]) =
-        o.map(v => "\"" + esc(v) + "\"").getOrElse("null")
-      val s = st.spec
-      s"""{"id":${s.id},"sourceDir":"${esc(s.sourceDir)}","idCol":"${esc(s.idCol)}",
-         |"vecCol":"${esc(s.vecCol)}","metric":"${esc(s.metric)}",
-         |"targetRecall":${s.targetRecall},"k":${s.k},"sampleN":${s.sampleN},
-         |"workDir":"${esc(s.workDir)}",
-         |"createdAt":"${esc(st.createdAt)}",
-         |"startedAt":${opt(st.startedAt)},
-         |"finishedAt":${opt(st.finishedAt)},
-         |"canceledAt":${opt(st.canceledAt)},
-         |"failedAt":${opt(st.failedAt)},
-         |"error":${opt(st.error)},
-         |"progress":${st.progress},
-         |"best":${opt(st.best)}}""".stripMargin.replace("\n", "")
-    }
-
-    override protected def deser(json: String): AutotuneState = {
-      def field(k: String) = JsonJobStore.field(json, k)
-      def req(k: String) = field(k).get
-      AutotuneState(
-        AutotuneSpec(req("id").toLong, req("sourceDir"), req("idCol"),
-          req("vecCol"), req("metric"), req("targetRecall").toDouble,
-          req("k").toInt, req("sampleN").toInt, req("workDir")),
-        req("createdAt"), field("startedAt"),
-        field("finishedAt"), field("canceledAt"),
-        field("failedAt"), field("error"),
-        req("progress").toInt, field("best"))
-    }
+    override protected def readSpec(f: MiniJson.Fields): AutotuneSpec =
+      AutotuneSpec(f.long("id").get, f.str("sourceDir").get,
+        f.str("idCol").get, f.str("vecCol").get, f.str("metric").get,
+        f.double("targetRecall").get, f.int("k").get, f.int("sampleN").get,
+        f.str("workDir").get)
 
     /** The INSERT INTO autotune_jobs analog. `operator` accepts the
       * reference's *_ops names or engine metric names.
@@ -102,93 +60,27 @@ object AutotuneJobs {
     def add(sourceDir: String, idCol: String, vecCol: String,
         operator: String = "dist_l2sq_ops", targetRecall: Double = 99.9,
         k: Int = 10, sampleN: Int = 10000,
-        workBase: String = null): AutotuneState = synchronized {
-      val id = nextId()
-      val work = Option(workBase).getOrElse(s"$dir/work_$id")
-      val st = AutotuneState(
-        AutotuneSpec(id, sourceDir, idCol, vecCol,
-          metricForOperator(operator), targetRecall, k, sampleN, work),
-        Instant.now().toString)
-      write(st); st
-    }
+        workBase: String = null): AutotuneState = create(id =>
+      AutotuneSpec(id, sourceDir, idCol, vecCol, metricForOperator(operator),
+        targetRecall, k, sampleN,
+        Option(workBase).getOrElse(s"$dir/work_$id")))
 
-    def cancel(id: Long): AutotuneState =
-      update(id)(_.copy(canceledAt = Some(Instant.now().toString)))
-    // startedAt/progress must reset too: a job failed or canceled
-    // MID-RUN still carries startedAt, and leaving it would park the
-    // resumed job in "in_progress" — which drain() never picks up
-    def resume(id: Long): AutotuneState =
-      update(id)(_.copy(canceledAt = None, failedAt = None, error = None,
-        startedAt = None, progress = 0))
-  }
-
-  /** Execute one autotune job to completion (the worker body,
-    * autotune_jobs.rs:86-200): run the grid with progress updates and
-    * cancellation checks, write results parquet, record best variant.
-    * Returns the terminal status.
-    */
-  def run(spark: SparkSession, store: AutotuneStore, id: Long): String = {
-    val st0 = store.get(id)
-    if (st0.canceledAt.isDefined) {
-      // canceledAt stays the terminal marker: the status CASE ranks
-      // failed above canceled, so recording failedAt here would
-      // misreport a user cancel as a failure
-      store.update(id)(_.copy(error = Some("Job cancelled")))
-      return "canceled"
-    }
-    val spec = st0.spec
-    store.update(id)(_.copy(startedAt = Some(Instant.now().toString)))
-    try {
+    /** The worker body (autotune_jobs.rs:86-200): run the grid with
+      * progress updates and cancellation checks, write the results
+      * parquet, record the best variant.
+      */
+    override protected def work(spark: SparkSession, job: AutotuneState,
+        progress: Progress): Seq[(String, String)] = {
+      val spec = job.spec
       val df = spark.read.option("recursiveFileLookup", "true")
         .parquet(spec.sourceDir)
       val results = Autotune.run(df, spec.idCol, spec.vecCol,
         k = spec.k, sampleN = spec.sampleN, metric = spec.metric,
-        targetRecall = spec.targetRecall,
-        onProgress = p => { store.update(id)(_.copy(progress = p)); () },
-        isCanceled = () => store.get(id).canceledAt.isDefined)
+        targetRecall = spec.targetRecall, onProgress = progress.report)
       Autotune.toDF(spark, results)
         .write.mode("overwrite").parquet(spec.resultsDir)
       val best = Autotune.bestVariant(results, spec.targetRecall)
-      store.update(id)(_.copy(
-        finishedAt = Some(Instant.now().toString),
-        progress = 100,
-        best = Some(s"m=${best.m},efc=${best.efConstruction},ef=${best.ef}")))
-      "enabled"
-    } catch {
-      case e: Throwable =>
-        val canceled = e.getMessage != null &&
-          e.getMessage.contains("Job cancelled")
-        store.update(id)(s => s.copy(
-          failedAt =
-            if (canceled) s.failedAt
-            else Some(Instant.now().toString),
-          error = Some(Option(e.getMessage).getOrElse(e.toString)
-            .linesIterator.nextOption().getOrElse(e.getClass.getName))))
-        if (canceled) "canceled" else "failed"
+      Seq("best" -> s"m=${best.m},efc=${best.efConstruction},ef=${best.ef}")
     }
-  }
-
-  /** Drain every queued job once (the daemon loop body under
-    * AvailableNow semantics — collect_pending_index_jobs analog).
-    */
-  def drain(spark: SparkSession, store: AutotuneStore): Seq[(Long, String)] =
-    store.list().filter(st => status(st) == "queued")
-      .map(st => st.spec.id -> run(spark, store, st.spec.id))
-
-  /** Continuous daemon: poll the store for queued jobs until `stop`
-    * (the notification listener + worker loop of autotune_jobs.rs —
-    * new job files are the notifications, as with embedding jobs'
-    * file-source CDC). Returns the total number of jobs executed.
-    */
-  def runDaemon(spark: SparkSession, store: AutotuneStore,
-      pollMs: Long = 1000, stop: () => Boolean): Long = {
-    var executed = 0L
-    while (!stop()) {
-      executed += drain(spark, store).size
-      val deadline = System.nanoTime() + pollMs * 1000000L
-      while (!stop() && System.nanoTime() < deadline)
-        Thread.sleep(math.min(pollMs, 25L))
-    }
-    executed
   }
 }

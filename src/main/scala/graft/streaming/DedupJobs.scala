@@ -1,124 +1,62 @@
 package graft.streaming
 
-import java.time.Instant
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.util.MiniJson
 
 /** Daemon dedup jobs — a third job kind next to embedding and autotune
   * jobs, for the engine's training-data side: a job names a parquet
   * corpus and a near-dup threshold; the worker finds MinHash near-dup
   * pairs, writes the pair set and the surviving (deduplicated) corpus,
-  * and records the dup count. Same control plane as the other kinds
-  * (JsonJobStore file state, timestamp-CASE status, cooperative
-  * cancellation between phases) — the reference daemon's job-kind
+  * and records the dup count. Same lifecycle as the other kinds
+  * ([[JsonJobStore]]), with cooperative cancellation between
+  * phases — the reference daemon's job-kind
   * plumbing (`lantern_cli/src/daemon/mod.rs:388-405`) generalized to
   * the operator the 100 TB pipeline actually runs nightly.
   */
 object DedupJobs {
 
   case class DedupSpec(id: Long, sourceDir: String, idCol: String,
-      textCol: String, tau: Double, workDir: String) {
+      textCol: String, tau: Double, workDir: String)
+      extends JsonJobStore.Spec {
     def pairsDir: String = s"$workDir/dup_pairs"
     def survivorsDir: String = s"$workDir/survivors"
   }
 
-  case class DedupState(spec: DedupSpec, createdAt: String,
-      startedAt: Option[String] = None,
-      finishedAt: Option[String] = None,
-      canceledAt: Option[String] = None,
-      failedAt: Option[String] = None,
-      error: Option[String] = None,
-      progress: Int = 0,
-      dupCount: Option[String] = None)
-
-  def status(st: DedupState): String =
-    if (st.failedAt.isDefined) "failed"
-    else if (st.canceledAt.isDefined) "canceled"
-    else if (st.finishedAt.isDefined) "enabled"
-    else if (st.startedAt.isDefined) "in_progress"
-    else "queued"
+  /** Result field "dupCount": the number of dropped near-dups. */
+  type DedupState = JsonJobStore.Job[DedupSpec]
 
   final class DedupStore(dir: String)
-      extends JsonJobStore[DedupState](dir, "dedup_") {
+      extends JsonJobStore[DedupSpec](dir, "dedup_") {
 
-    override protected def idOf(st: DedupState): Long = st.spec.id
+    override protected def specFields(s: DedupSpec): Seq[(String, Any)] =
+      Seq("sourceDir" -> s.sourceDir, "idCol" -> s.idCol,
+        "textCol" -> s.textCol, "tau" -> s.tau, "workDir" -> s.workDir)
 
-    override protected def ser(st: DedupState): String = {
-      def esc(v: String) = graft.util.Json.escape(v)
-      def opt(o: Option[String]) =
-        o.map(v => "\"" + esc(v) + "\"").getOrElse("null")
-      val s = st.spec
-      s"""{"id":${s.id},"sourceDir":"${esc(s.sourceDir)}","idCol":"${esc(s.idCol)}",
-         |"textCol":"${esc(s.textCol)}","tau":${s.tau},
-         |"workDir":"${esc(s.workDir)}",
-         |"createdAt":"${esc(st.createdAt)}",
-         |"startedAt":${opt(st.startedAt)},
-         |"finishedAt":${opt(st.finishedAt)},
-         |"canceledAt":${opt(st.canceledAt)},
-         |"failedAt":${opt(st.failedAt)},
-         |"error":${opt(st.error)},
-         |"progress":${st.progress},
-         |"dupCount":${opt(st.dupCount)}}""".stripMargin.replace("\n", "")
-    }
-
-    override protected def deser(json: String): DedupState = {
-      def field(k: String) = JsonJobStore.field(json, k)
-      def req(k: String) = field(k).get
-      DedupState(
-        DedupSpec(req("id").toLong, req("sourceDir"), req("idCol"),
-          req("textCol"), req("tau").toDouble, req("workDir")),
-        req("createdAt"), field("startedAt"),
-        field("finishedAt"), field("canceledAt"),
-        field("failedAt"), field("error"),
-        req("progress").toInt, field("dupCount"))
-    }
+    override protected def readSpec(f: MiniJson.Fields): DedupSpec =
+      DedupSpec(f.long("id").get, f.str("sourceDir").get, f.str("idCol").get,
+        f.str("textCol").get, f.double("tau").get, f.str("workDir").get)
 
     def add(sourceDir: String, idCol: String, textCol: String,
         tau: Double = 0.5, workBase: String = null): DedupState =
-      synchronized {
-        val id = nextId()
-        val work = Option(workBase).getOrElse(s"$dir/work_$id")
-        val st = DedupState(
-          DedupSpec(id, sourceDir, idCol, textCol, tau, work),
-          Instant.now().toString)
-        write(st); st
-      }
+      create(id => DedupSpec(id, sourceDir, idCol, textCol, tau,
+        Option(workBase).getOrElse(s"$dir/work_$id")))
 
-    def cancel(id: Long): DedupState =
-      update(id)(_.copy(canceledAt = Some(Instant.now().toString)))
-    // startedAt/progress must reset too: a job failed or canceled
-    // MID-RUN still carries startedAt, and leaving it would park the
-    // resumed job in "in_progress" — which drain() never picks up
-    def resume(id: Long): DedupState =
-      update(id)(_.copy(canceledAt = None, failedAt = None, error = None,
-        startedAt = None, progress = 0))
-  }
-
-  /** Execute one dedup job: pair discovery → pair write → survivor
-    * anti-join → survivor write, with progress after each phase and a
-    * cancellation check between the two writes. Returns terminal
-    * status.
-    */
-  def run(spark: SparkSession, store: DedupStore, id: Long): String = {
-    val st0 = store.get(id)
-    if (st0.canceledAt.isDefined) {
-      store.update(id)(_.copy(error = Some("Job cancelled")))
-      return "canceled"
-    }
-    val spec = st0.spec
-    store.update(id)(_.copy(startedAt = Some(Instant.now().toString)))
-    try {
+    /** Pair discovery → pair write → survivor anti-join → survivor
+      * write, with progress after each phase and a cancellation check
+      * between the two writes.
+      */
+    override protected def work(spark: SparkSession, job: DedupState,
+        progress: Progress): Seq[(String, String)] = {
+      val spec = job.spec
       val corpus = spark.read.option("recursiveFileLookup", "true")
         .parquet(spec.sourceDir)
       val pairs = Dedup.minhashDupPairs(corpus, spec.idCol, spec.textCol,
         tau = spec.tau)
       pairs.write.mode("overwrite").parquet(spec.pairsDir)
-      store.update(id)(_.copy(progress = 50))
-      if (store.get(id).canceledAt.isDefined)
-        throw new RuntimeException("Job cancelled")
+      progress.report(50)
       val dupIds = spark.read.parquet(spec.pairsDir)
         .select(col("j").as(spec.idCol)).distinct()
       val nDups = dupIds.count()
@@ -130,27 +68,8 @@ object DedupJobs {
       // materialized state (HttpApi survivor views, concurrent jobs'
       // memos) in a shared long-lived session.
       Dedup.releaseCaches()
-      store.update(id)(_.copy(
-        finishedAt = Some(Instant.now().toString),
-        progress = 100,
-        dupCount = Some(nDups.toString)))
-      "enabled"
-    } catch {
-      case e: Throwable =>
-        val canceled = e.getMessage != null &&
-          e.getMessage.contains("Job cancelled")
-        store.update(id)(s => s.copy(
-          failedAt =
-            if (canceled) s.failedAt
-            else Some(Instant.now().toString),
-          error = Some(Option(e.getMessage).getOrElse(e.toString)
-            .linesIterator.nextOption().getOrElse(e.getClass.getName))))
-        if (canceled) "canceled" else "failed"
+      progress.report(100)
+      Seq("dupCount" -> nDups.toString)
     }
   }
-
-  /** Drain every queued job once (daemon loop body). */
-  def drain(spark: SparkSession, store: DedupStore): Seq[(Long, String)] =
-    store.list().filter(st => status(st) == "queued")
-      .map(st => st.spec.id -> run(spark, store, st.spec.id))
 }

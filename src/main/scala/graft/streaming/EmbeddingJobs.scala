@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.time.Instant
-
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.embed.{EmbeddingPipeline, EmbeddingRuntime}
+import graft.util.MiniJson
 
 /** Continuous embedding jobs — the reference daemon re-expressed in
   * Structured Streaming (SURVEY §2.9 D1-D10, §2.8 F11-F14, §3.3).
@@ -32,112 +30,59 @@ import graft.embed.{EmbeddingPipeline, EmbeddingRuntime}
   *    the same layout holds for the embedding output. Batch-scoped
   *    overwrite makes checkpoint replays idempotent.
   *
-  * Status state machine is the reference's CASE over init timestamps
-  * (`lantern_extras/src/daemon.rs:197-234`):
-  * failed > canceled > enabled > in_progress > queued.
+  * Status, cancel/resume, drain and the daemon loop are the lifecycle
+  * shared by every job kind ([[JsonJobStore]]); a run on an enabled job
+  * is the catch-up drain.
   */
 object EmbeddingJobs {
 
   case class JobSpec(id: Long, sourceDir: String, pkCol: String,
       srcCol: String, outCol: String, model: String, runtime: String,
-      workDir: String) {
+      workDir: String) extends JsonJobStore.Spec {
     def outputDir: String = s"$workDir/out"
     def usageDir: String = s"$workDir/usage"
     def checkpointDir: String = s"$workDir/checkpoint"
   }
 
-  case class JobState(spec: JobSpec, createdAt: String,
-      initStartedAt: Option[String] = None,
-      initFinishedAt: Option[String] = None,
-      canceledAt: Option[String] = None,
-      failedAt: Option[String] = None,
-      error: Option[String] = None,
-      progress: Int = 0)
+  type JobState = JsonJobStore.Job[JobSpec]
 
-  /** F12's CASE over timestamps. */
-  def status(st: JobState): String =
-    if (st.failedAt.isDefined) "failed"
-    else if (st.canceledAt.isDefined) "canceled"
-    else if (st.initFinishedAt.isDefined) "enabled"
-    else if (st.initStartedAt.isDefined) "in_progress"
-    else "queued"
-
-  /** Driver-side job metadata store: one JSON file per job, atomically
-    * replaced (D1's jobs table; content is tiny control-plane state).
+  /** Driver-side job metadata store: one JSON file per job (D1's jobs
+    * table; content is tiny control-plane state).
     */
   final class JobStore(dir: String)
-      extends JsonJobStore[JobState](dir, "job_") {
+      extends JsonJobStore[JobSpec](dir, "job_") {
 
-    override protected def idOf(st: JobState): Long = st.spec.id
+    override protected def specFields(s: JobSpec): Seq[(String, Any)] =
+      Seq("sourceDir" -> s.sourceDir, "pkCol" -> s.pkCol,
+        "srcCol" -> s.srcCol, "outCol" -> s.outCol, "model" -> s.model,
+        "runtime" -> s.runtime, "workDir" -> s.workDir)
 
-    override protected def ser(st: JobState): String = {
-      def esc(v: String) = graft.util.Json.escape(v)
-      def opt(o: Option[String]) =
-        o.map(v => "\"" + esc(v) + "\"").getOrElse("null")
-      val s = st.spec
-      s"""{"id":${s.id},"sourceDir":"${esc(s.sourceDir)}","pkCol":"${esc(s.pkCol)}",
-         |"srcCol":"${esc(s.srcCol)}","outCol":"${esc(s.outCol)}","model":"${esc(s.model)}",
-         |"runtime":"${esc(s.runtime)}","workDir":"${esc(s.workDir)}",
-         |"createdAt":"${esc(st.createdAt)}",
-         |"initStartedAt":${opt(st.initStartedAt)},
-         |"initFinishedAt":${opt(st.initFinishedAt)},
-         |"canceledAt":${opt(st.canceledAt)},
-         |"failedAt":${opt(st.failedAt)},
-         |"error":${opt(st.error)},
-         |"progress":${st.progress}}""".stripMargin.replace("\n", "")
-    }
-
-    override protected def deser(json: String): JobState = {
-      def field(k: String) = JsonJobStore.field(json, k)
-      def req(k: String) = field(k).get
-      JobState(
-        JobSpec(req("id").toLong, req("sourceDir"), req("pkCol"),
-          req("srcCol"), req("outCol"), req("model"), req("runtime"),
-          req("workDir")),
-        req("createdAt"), field("initStartedAt"),
-        field("initFinishedAt"), field("canceledAt"),
-        field("failedAt"), field("error"),
-        req("progress").toInt)
-    }
+    override protected def readSpec(f: MiniJson.Fields): JobSpec =
+      JobSpec(f.long("id").get, f.str("sourceDir").get, f.str("pkCol").get,
+        f.str("srcCol").get, f.str("outCol").get, f.str("model").get,
+        f.str("runtime").get, f.str("workDir").get)
 
     /** F11: add_embedding_job. */
     def add(sourceDir: String, pkCol: String, srcCol: String,
         outCol: String, model: String, runtime: String = "hash",
-        workBase: String = null): JobState = synchronized {
-      val id = nextId()
-      val work = Option(workBase).getOrElse(s"$dir/work_$id")
-      val st = JobState(
-        JobSpec(id, sourceDir, pkCol, srcCol, outCol, model, runtime, work),
-        Instant.now().toString)
-      write(st); st
-    }
+        workBase: String = null): JobState = create(id =>
+      JobSpec(id, sourceDir, pkCol, srcCol, outCol, model, runtime,
+        Option(workBase).getOrElse(s"$dir/work_$id")))
 
-    /** F14: cancel / resume. */
-    def cancel(id: Long): JobState =
-      update(id)(_.copy(canceledAt = Some(Instant.now().toString)))
-    def resume(id: Long): JobState =
-      update(id)(_.copy(canceledAt = None, failedAt = None, error = None))
-  }
+    def run(spark: SparkSession, id: Long, maxFilesPerTrigger: Int)
+        : String = runWith(id)(embed(spark, maxFilesPerTrigger))
 
-  /** Run one drain of the job's stream (AvailableNow = D5 init backfill
-    * AND steady-state catch-up: the checkpoint decides what is new).
-    * Returns the terminal status.
-    */
-  def run(spark: SparkSession, store: JobStore, id: Long,
-      maxFilesPerTrigger: Int = 8): String = {
-    val st0 = store.get(id)
-    if (st0.canceledAt.isDefined) {
-      // keep canceledAt the terminal marker (failed outranks canceled
-      // in the status CASE, so writing failedAt would misreport a
-      // user cancel as a failure)
-      store.update(id)(_.copy(error = Some("Job cancelled")))
-      return "canceled"
-    }
-    val spec = st0.spec
-    store.update(id)(_.copy(
-      initStartedAt = Some(Instant.now().toString)))
-    val runtime = EmbeddingRuntime.forName(spec.runtime)
-    try {
+    override protected def work(spark: SparkSession, job: JobState,
+        progress: Progress): Seq[(String, String)] =
+      embed(spark, 8)(job, progress)
+
+    /** One drain of the job's stream (AvailableNow = D5 init backfill
+      * AND steady-state catch-up: the checkpoint decides what is new).
+      */
+    private def embed(spark: SparkSession, maxFilesPerTrigger: Int)(
+        job: JobState, progress: Progress): Seq[(String, String)] = {
+      val spec = job.spec
+      val runtime = EmbeddingRuntime.forName(spec.runtime)
       val schema = spark.read
         .option("recursiveFileLookup", "true")
         .parquet(spec.sourceDir).schema
@@ -148,8 +93,7 @@ object EmbeddingJobs {
         .parquet(spec.sourceDir)
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (store.get(id).canceledAt.isDefined)
-            throw new RuntimeException("Job cancelled") // D8
+          progress.checkCancel() // D8
           val embedded = EmbeddingPipeline.embedColumn(batch,
             spec.srcCol, spec.outCol, spec.model, runtime)
             .where(col(spec.outCol).isNotNull)
@@ -191,21 +135,8 @@ object EmbeddingJobs {
           .select(col(spec.pkCol)).distinct().count()
         catch { case _: org.apache.spark.sql.AnalysisException => 0L }
       val pct = if (total == 0) 100 else ((done * 100) / total).toInt
-      store.update(id)(_.copy(
-        initFinishedAt = Some(Instant.now().toString),
-        progress = math.min(pct, 100)))
-      "enabled"
-    } catch {
-      case e: Throwable =>
-        val canceled = e.getMessage != null &&
-          e.getMessage.contains("Job cancelled")
-        store.update(id)(s => s.copy(
-          failedAt =
-            if (canceled) s.failedAt
-            else Some(Instant.now().toString),
-          error = Some(Option(e.getMessage).getOrElse(e.toString)
-            .linesIterator.nextOption().getOrElse(e.getClass.getName))))
-        if (canceled) "canceled" else "failed"
+      progress.report(math.min(pct, 100))
+      Nil
     }
   }
 
@@ -234,11 +165,5 @@ object EmbeddingJobs {
       .where(col("rn") === 1)
       .select(col(spec.pkCol), col(spec.outCol))
     source.join(latest, Seq(spec.pkCol), "left")
-  }
-
-  /** F12: get_embedding_job_status. */
-  def jobStatus(store: JobStore, id: Long): (String, Int, Option[String]) = {
-    val st = store.get(id)
-    (status(st), st.progress, st.error)
   }
 }

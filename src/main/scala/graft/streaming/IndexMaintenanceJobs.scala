@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.time.Instant
-
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.IvfIndex
+import graft.util.MiniJson
 
 /** Daemon index-maintenance jobs — the fourth job kind next to
   * embedding, autotune, and dedup jobs: a job names a durable IVF
@@ -14,9 +13,8 @@ import graft.operators.IvfIndex
   * file totals either way. This closes the loop on append-based
   * maintenance: appends are cheap precisely because they defer the
   * rewrite, and this job is where the deferred work gets done on a
-  * schedule instead of inside a query's latency budget. Same control
-  * plane as the other kinds (JsonJobStore file state, timestamp-CASE
-  * status, cooperative cancellation); reference analog: the daemon's
+  * schedule instead of inside a query's latency budget. Same lifecycle
+  * as the other kinds ([[JsonJobStore]]); reference analog: the daemon's
   * job-kind plumbing (`lantern_cli/src/daemon/mod.rs:388-405`) applied
   * to index upkeep.
   */
@@ -24,97 +22,42 @@ object IndexMaintenanceJobs {
 
   case class MaintSpec(id: Long, indexPath: String, idCol: String,
       vecCol: String, maxFilesPerCell: Int, targetFilesPerCell: Int)
+      extends JsonJobStore.Spec
 
-  case class MaintState(spec: MaintSpec, createdAt: String,
-      startedAt: Option[String] = None,
-      finishedAt: Option[String] = None,
-      canceledAt: Option[String] = None,
-      failedAt: Option[String] = None,
-      error: Option[String] = None,
-      progress: Int = 0,
-      filesBefore: Option[String] = None,
-      filesAfter: Option[String] = None,
-      compacted: Option[String] = None)
-
-  def status(st: MaintState): String =
-    if (st.failedAt.isDefined) "failed"
-    else if (st.canceledAt.isDefined) "canceled"
-    else if (st.finishedAt.isDefined) "enabled"
-    else if (st.startedAt.isDefined) "in_progress"
-    else "queued"
+  /** Result fields "filesBefore", "filesAfter" (total cell files) and
+    * "compacted" ("true" or "false").
+    */
+  type MaintState = JsonJobStore.Job[MaintSpec]
 
   final class MaintStore(dir: String)
-      extends JsonJobStore[MaintState](dir, "maint_") {
+      extends JsonJobStore[MaintSpec](dir, "maint_") {
 
-    override protected def idOf(st: MaintState): Long = st.spec.id
+    override protected def specFields(s: MaintSpec): Seq[(String, Any)] =
+      Seq("indexPath" -> s.indexPath, "idCol" -> s.idCol,
+        "vecCol" -> s.vecCol, "maxFilesPerCell" -> s.maxFilesPerCell,
+        "targetFilesPerCell" -> s.targetFilesPerCell)
 
-    override protected def ser(st: MaintState): String = {
-      def esc(v: String) = graft.util.Json.escape(v)
-      def opt(o: Option[String]) =
-        o.map(v => "\"" + esc(v) + "\"").getOrElse("null")
-      val s = st.spec
-      s"""{"id":${s.id},"indexPath":"${esc(s.indexPath)}",
-         |"idCol":"${esc(s.idCol)}","vecCol":"${esc(s.vecCol)}",
-         |"maxFilesPerCell":${s.maxFilesPerCell},
-         |"targetFilesPerCell":${s.targetFilesPerCell},
-         |"createdAt":"${esc(st.createdAt)}",
-         |"startedAt":${opt(st.startedAt)},
-         |"finishedAt":${opt(st.finishedAt)},
-         |"canceledAt":${opt(st.canceledAt)},
-         |"failedAt":${opt(st.failedAt)},
-         |"error":${opt(st.error)},
-         |"progress":${st.progress},
-         |"filesBefore":${opt(st.filesBefore)},
-         |"filesAfter":${opt(st.filesAfter)},
-         |"compacted":${opt(st.compacted)}}""".stripMargin.replace("\n", "")
-    }
-
-    override protected def deser(json: String): MaintState = {
-      def field(k: String) = JsonJobStore.field(json, k)
-      def req(k: String) = field(k).get
-      MaintState(
-        MaintSpec(req("id").toLong, req("indexPath"), req("idCol"),
-          req("vecCol"), req("maxFilesPerCell").toInt,
-          req("targetFilesPerCell").toInt),
-        req("createdAt"), field("startedAt"),
-        field("finishedAt"), field("canceledAt"),
-        field("failedAt"), field("error"),
-        req("progress").toInt, field("filesBefore"),
-        field("filesAfter"), field("compacted"))
-    }
+    override protected def readSpec(f: MiniJson.Fields): MaintSpec =
+      MaintSpec(f.long("id").get, f.str("indexPath").get,
+        f.str("idCol").get, f.str("vecCol").get,
+        f.int("maxFilesPerCell").get, f.int("targetFilesPerCell").get)
 
     def add(indexPath: String, idCol: String, vecCol: String,
         maxFilesPerCell: Int = 8,
-        targetFilesPerCell: Int = 1): MaintState = synchronized {
+        targetFilesPerCell: Int = 1): MaintState = {
       require(maxFilesPerCell >= 1 && targetFilesPerCell >= 1)
-      val st = MaintState(
-        MaintSpec(nextId(), indexPath, idCol, vecCol, maxFilesPerCell,
-          targetFilesPerCell),
-        Instant.now().toString)
-      write(st); st
+      create(id => MaintSpec(id, indexPath, idCol, vecCol,
+        maxFilesPerCell, targetFilesPerCell))
     }
 
-    def cancel(id: Long): MaintState =
-      update(id)(_.copy(canceledAt = Some(Instant.now().toString)))
-    def resume(id: Long): MaintState =
-      update(id)(_.copy(canceledAt = None, failedAt = None, error = None,
-        startedAt = None, progress = 0))
-  }
-
-  /** Execute one maintenance job: stats read → compact iff some cell
-    * exceeds the file threshold → stats re-read. A below-threshold
-    * index finishes successfully with compacted=false and untouched
-    * files — running the job on a healthy index must be free.
-    */
-  def run(spark: SparkSession, store: MaintStore, id: Long): String = {
-    val st0 = store.get(id)
-    if (st0.canceledAt.isDefined) {
-      store.update(id)(_.copy(error = Some("Job cancelled")))
-      return "canceled"
-    }
-    val spec = st0.spec
-    store.update(id)(_.copy(startedAt = Some(Instant.now().toString)))
-    try {
+    /** Stats read → compact iff some cell exceeds the file threshold →
+      * stats re-read. A below-threshold index finishes successfully
+      * with compacted=false and untouched files — running the job on a
+      * healthy index must be free.
+      */
+    override protected def work(spark: SparkSession, job: MaintState,
+        progress: Progress): Seq[(String, String)] = {
+      val spec = job.spec
       def fileStats(): (Int, Int) = {
         val model = IvfIndex.load(spark, spec.indexPath, spec.idCol,
           spec.vecCol)
@@ -123,36 +66,14 @@ object IndexMaintenanceJobs {
         (rows.sum, if (rows.isEmpty) 0 else rows.max)
       }
       val (totalBefore, worst) = fileStats()
-      store.update(id)(_.copy(progress = 50,
-        filesBefore = Some(totalBefore.toString)))
-      if (store.get(id).canceledAt.isDefined)
-        throw new RuntimeException("Job cancelled")
+      progress.report(50)
       val needs = worst > spec.maxFilesPerCell
       if (needs)
         IvfIndex.compact(spark, spec.indexPath, spec.targetFilesPerCell)
       val totalAfter = if (needs) fileStats()._1 else totalBefore
-      store.update(id)(_.copy(
-        finishedAt = Some(Instant.now().toString),
-        progress = 100,
-        filesAfter = Some(totalAfter.toString),
-        compacted = Some(needs.toString)))
-      "enabled"
-    } catch {
-      case e: Throwable =>
-        val canceled = e.getMessage != null &&
-          e.getMessage.contains("Job cancelled")
-        store.update(id)(s => s.copy(
-          failedAt =
-            if (canceled) s.failedAt
-            else Some(Instant.now().toString),
-          error = Some(Option(e.getMessage).getOrElse(e.toString)
-            .linesIterator.nextOption().getOrElse(e.getClass.getName))))
-        if (canceled) "canceled" else "failed"
+      progress.report(100)
+      Seq("filesBefore" -> totalBefore.toString,
+        "filesAfter" -> totalAfter.toString, "compacted" -> needs.toString)
     }
   }
-
-  /** Drain every queued job once (daemon loop body). */
-  def drain(spark: SparkSession, store: MaintStore): Seq[(Long, String)] =
-    store.list().filter(st => status(st) == "queued")
-      .map(st => st.spec.id -> run(spark, store, st.spec.id))
 }

@@ -1,8 +1,8 @@
 package graft.util
 
-/** Correct, lossless JSON string escaping shared by the control-plane
-  * serializers (JobStore, HttpApi). Escapes backslash, quote, and all
-  * control characters; `unescape` inverts it.
+/** Correct, lossless JSON string escaping shared by the JSON writers
+  * (job store, HttpApi, embedding API requests). Escapes backslash,
+  * quote, and all control characters; [[MiniJson]] reads it back.
   */
 object Json {
   def escape(s: String): String = {
@@ -19,25 +19,9 @@ object Json {
     sb.toString
   }
 
-  def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  /** A JSON string literal. */
+  def quote(s: String): String = "\"" + escape(s) + "\""
+
+  /** A JSON array of string literals. */
+  def strArray(xs: Seq[String]): String = xs.map(quote).mkString("[", ",", "]")
 }

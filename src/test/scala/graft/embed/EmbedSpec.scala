@@ -167,6 +167,32 @@ class EmbedSpec extends SparkSuite {
     assert(calls.size === 2) // budget 4 → groups of 2 + 1
   }
 
+  test("openai runtime reads the documented response shape in index order") {
+    // the shape the API documents: each item carries "object":"embedding"
+    // beside its vector, items may come back in any order, plus "usage"
+    var requests = Seq.empty[String]
+    val fake = new HttpTransport {
+      override def post(url: String, headers: Map[String, String],
+          body: String): String = {
+        requests :+= body
+        val n = graft.util.MiniJson.fields(body).strings("input").get.size
+        (0 until n).reverse.map(i =>
+          s"""{"object":"embedding","index":$i,"embedding":[0.$i,1e-3]}""")
+          .mkString("""{"object":"list","data":[""", ",",
+            """],"model":"text-embedding-3-small",""" +
+              """"usage":{"prompt_tokens":8,"total_tokens":8}}""")
+      }
+    }
+    val rt = new OpenAiEmbeddingRuntime(fake)
+    val inputs = Seq("a \"quoted\" b", "c\nd", "e")
+    val r = rt.process("openai/text-embedding-3-small", inputs)
+    assert(r.embeddings.map(_.toSeq) ===
+      Seq(Seq(0.0f, 0.001f), Seq(0.1f, 0.001f), Seq(0.2f, 0.001f)))
+    // request bodies are valid JSON carrying the inputs verbatim
+    assert(graft.util.MiniJson.fields(requests.head).strings("input") ===
+      Some(inputs))
+  }
+
   test("cohere runtime: fixed 96-input chunks") {
     var calls = 0
     val fake = new HttpTransport {

@@ -4,6 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.SparkSuite
+import graft.util.MiniJson
 
 class HttpApiSpec extends SparkSuite {
 
@@ -1604,5 +1605,111 @@ class HttpApiSpec extends SparkSuite {
     }
     assert(post("/collections/docs_k_api/search_text",
       """{"query":"table scan","k":2}""").statusCode() === 200)
+  }
+
+  test("POST /resample honors a bare JSON boolean interpolate flag") {
+    spark.sql("""SELECT * FROM VALUES
+      |(1L, TIMESTAMP'2024-01-01 00:00:00', 100L),
+      |(1L, TIMESTAMP'2024-01-01 02:00:00', 300L)
+      |AS t(user_id, ts, cents)""".stripMargin)
+      .createOrReplaceTempView("ev_gap_api")
+    def gap(interpolate: Boolean): Any = {
+      val r = post("/collections/ev_gap_api/resample",
+        """{"key_column":"user_id","ts_column":"ts",""" +
+          """"value_column":"cents","step_sec":3600,""" +
+          s""""interpolate":$interpolate}""")
+      assert(r.statusCode() === 200, r.body())
+      val rows = MiniJson.arr(MiniJson.obj(MiniJson.parse(r.body()))("rows"))
+        .map(MiniJson.obj)
+      assert(rows.size === 3, r.body())
+      val filled = rows.filter(_("observed") == false)
+      assert(filled.size === 1, r.body())
+      filled.head("value")
+    }
+    // linear interpolation fills the middle hour; LOCF carries 100
+    assert(gap(interpolate = true) === MiniJson.Num("200"))
+    assert(gap(interpolate = false) === MiniJson.Num("100"))
+  }
+
+  test("summary expr_measures entries may contain commas and brackets") {
+    import org.apache.spark.sql.functions.{col, expr, sum}
+    spark.read.parquet(s"$sf0001/lineitem.parquet")
+      .createOrReplaceTempView("li_mv_comma")
+    val reg = post("/collections/li_mv_comma/summary",
+      """{"dims":["l_returnflag"],"expr_measures":""" +
+        """["rev:coalesce(l_extendedprice, 0) * (1 - l_discount)"]}""")
+    assert(reg.statusCode() === 200, reg.body())
+    assert(reg.body().contains("\"exprs\":1"), reg.body())
+    def q = spark.read.parquet(s"$sf0001/lineitem.parquet")
+      .groupBy(col("l_returnflag"))
+      .agg(sum(expr("coalesce(l_extendedprice, 0) * (1 - l_discount)"))
+        .as("rev"))
+      .orderBy(col("l_returnflag"))
+    val scans = q.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.rootPaths.map(_.toString)
+    }.flatten
+    assert(scans.exists(_.contains("graft_http_summary")),
+      s"expr-measure rewrite not installed, scanned $scans")
+    val served = q.collect().map(_.toSeq).toSeq
+    assert(delete("/collections/li_mv_comma/summary").statusCode() === 200)
+    assert(served === q.collect().map(_.toSeq).toSeq)
+    // an entry with a bracket arrives whole: the parser rejects it as
+    // one expression, not as a fragment cut at the first ']'
+    val cut = post("/collections/li_mv_comma/summary",
+      """{"dims":["l_returnflag"],"expr_measures":["f:element_at(arr[1])"]}""")
+    assert(cut.statusCode() === 400)
+    assert(cut.body().contains("references 'arr'"), cut.body())
+  }
+
+  test("error bodies stay valid JSON for any path segment or name") {
+    for (path <- Seq("/collections/a%22b", "/collections/a%5Cb",
+        "/collections/a%22b/index/stats", "/collections/a%22b/summary/stats")) {
+      val r = get(path)
+      assert(r.statusCode() === 404, path)
+      val err = MiniJson.fields(r.body()).str("error")
+      assert(err.exists(e => e.contains("a\"b") || e.contains("a\\b")),
+        r.body())
+    }
+    assert(MiniJson.parse(get("/collections").body())
+      .isInstanceOf[Vector[_]])
+  }
+
+  test("request bodies are parsed as JSON: nesting, escapes, malformed " +
+      "input, duplicate keys, wrong types and deep nesting") {
+    val vec = (1 to 64).map(_ => "0.1").mkString(",")
+    // a nested "k" does not shadow the top-level one
+    val nested = post("/collections/embeddings/search",
+      s"""{"vector":[$vec],"filter":{"k":50},"k":5}""")
+    assert(nested.statusCode() === 200, nested.body())
+    assert("\"rank\":".r.findAllIn(nested.body()).size === 5, nested.body())
+    // escapes decode before the identifier check: a\"b is refused as a
+    // name, and an escaped underscore is an ordinary identifier
+    val quoted = post("/collections", """{"name":"a\"b"}""")
+    assert(quoted.statusCode() === 400)
+    assert(quoted.body() === """{"error":"need a valid \"name\""}""")
+    assert(post("/collections", "{\"name\":\"api_esc\\u005fname\"}")
+      .statusCode() === 201)
+    assert(get("/collections/api_esc_name").statusCode() === 200)
+    assert(delete("/collections/api_esc_name").statusCode() === 200)
+    def error(body: String): String = {
+      val r = post("/collections/embeddings/search", body)
+      assert(r.statusCode() === 400, s"$body -> ${r.body()}")
+      MiniJson.fields(r.body()).str("error").get
+    }
+    assert(error(s"""{"vector":[$vec],"k":5""").contains("expected"))
+    assert(error(s"""{"vector":[$vec],"k":5,"k":6}""")
+      .contains("duplicate key \"k\""))
+    assert(error(s"""{"vector":[$vec],"k":[5]}""") ===
+      "k must be an integer")
+    assert(error(s"""{"vector":"$vec"}""") ===
+      "vector must be an array of numbers")
+    val deep = "[" * 100 + "]" * 100
+    assert(error(s"""{"vector":[$vec],"x":$deep}""").contains("nested"))
+    assert(error("[1]") === "expected a JSON object")
+    // an empty body reads as {} (search then needs a vector)
+    assert(error("") === "need \"vector\" or \"text\"")
   }
 }

@@ -25,17 +25,17 @@ class AutotuneJobsSpec extends SparkSuite {
     val job = store.add(s"$sf0001/embeddings.parquet", "vec_id",
       "embedding", operator = "dist_cos_ops", targetRecall = 95.0,
       k = 10, sampleN = 1000)
-    assert(status(store.get(job.spec.id)) === "queued")
+    assert(store.get(job.spec.id).status === "queued")
     assert(job.spec.metric === "cos")
 
-    val drained = AutotuneJobs.drain(spark, store)
+    val drained = store.drain(spark)
     assert(drained === Seq(job.spec.id -> "enabled"))
 
     val st = store.get(job.spec.id)
-    assert(status(st) === "enabled" && st.progress === 100)
+    assert(st.status === "enabled" && st.progress === 100)
     // the exact path hits 100% recall, so the target-recall early stop
     // fires on the first variant (mod.rs:476-478)
-    assert(st.best === Some("m=6,efc=32,ef=64"))
+    assert(st.results.get("best") === Some("m=6,efc=32,ef=64"))
     val results = spark.read.parquet(job.spec.resultsDir)
     assert(results.columns.toSeq === Seq("experiment_id", "m", "efc",
       "ef", "recall", "latency", "build_time"))
@@ -48,27 +48,27 @@ class AutotuneJobsSpec extends SparkSuite {
     val job = store.add(s"$sf0001/embeddings.parquet", "vec_id",
       "embedding")
     store.cancel(job.spec.id)
-    assert(AutotuneJobs.run(spark, store, job.spec.id) === "canceled")
+    assert(store.run(spark, job.spec.id) === "canceled")
     val st = store.get(job.spec.id)
     assert(st.error === Some("Job cancelled"))
     // resume clears the cancel/fail state back to queued (F14)
     store.resume(job.spec.id)
-    assert(status(store.get(job.spec.id)) === "queued")
+    assert(store.get(job.spec.id).status === "queued")
   }
 
   test("failure path: bad source dir lands in failed with a reason") {
     val (base, store) = freshStore()
     val job = store.add(s"$base/does-not-exist", "vec_id", "embedding")
-    assert(AutotuneJobs.run(spark, store, job.spec.id) === "failed")
+    assert(store.run(spark, job.spec.id) === "failed")
     val st = store.get(job.spec.id)
-    assert(status(st) === "failed" && st.error.nonEmpty)
+    assert(st.status === "failed" && st.error.nonEmpty)
   }
 
   test("daemon loop picks up jobs added while it runs") {
     val (_, store) = freshStore()
     @volatile var stopFlag = false
     val daemon = new Thread(() => {
-      AutotuneJobs.runDaemon(spark, store, pollMs = 50,
+      store.runDaemon(spark, pollMs = 50,
         stop = () => stopFlag)
       ()
     })
@@ -79,9 +79,9 @@ class AutotuneJobsSpec extends SparkSuite {
         "embedding", operator = "dist_l2sq_ops", targetRecall = 95.0,
         k = 5, sampleN = 500)
       val deadline = System.currentTimeMillis() + 120000
-      while (status(store.get(job.spec.id)) != "enabled" &&
+      while (store.get(job.spec.id).status != "enabled" &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(status(store.get(job.spec.id)) === "enabled")
+      assert(store.get(job.spec.id).status === "enabled")
     } finally {
       stopFlag = true
       daemon.join(10000)

@@ -132,19 +132,19 @@ class EmbedToIndexSpec extends SparkSuite {
 
     // wave 1 flows through cleanly
     writeSrc(1000 until 1020, "p0")
-    assert(EmbeddingJobs.run(spark, store, job.spec.id,
+    assert(store.run(spark, job.spec.id,
       maxFilesPerTrigger = 1) === "enabled")
     drainIngest()
     assert(streamedIds().sorted === (1000L until 1020L))
 
     // wave 2: EMBED stage crashes after its write, before its commit
     writeSrc(2000 until 2015, "p1")
-    assert(EmbeddingJobs.run(spark, store, job.spec.id,
+    assert(store.run(spark, job.spec.id,
       maxFilesPerTrigger = 1) === "enabled")
     dropLatestCommit(spec.checkpointDir)
     // restart: the job replays the uncommitted batch (same batch_id,
     // same rows, FRESH part-file names in outputDir)
-    val replayTerm = EmbeddingJobs.run(spark, store, job.spec.id,
+    val replayTerm = store.run(spark, job.spec.id,
       maxFilesPerTrigger = 1)
     assert(replayTerm === "enabled",
       s"embed replay: $replayTerm, ${store.get(job.spec.id).error}")
@@ -157,7 +157,7 @@ class EmbedToIndexSpec extends SparkSuite {
 
     // wave 3: INGEST stage crashes after its write, before its commit
     writeSrc(3000 until 3010, "p2")
-    assert(EmbeddingJobs.run(spark, store, job.spec.id,
+    assert(store.run(spark, job.spec.id,
       maxFilesPerTrigger = 1) === "enabled")
     drainIngest()
     dropLatestCommit(ingestCkpt)

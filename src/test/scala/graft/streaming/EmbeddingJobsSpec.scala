@@ -29,11 +29,11 @@ class EmbeddingJobsSpec extends SparkSuite {
     val (base, store) = freshDirs()
     writeSource(base, 0 until 40, "p0")
     val job = store.add(s"$base/src", "id", "text", "emb", "hash/bow-64")
-    assert(status(store.get(job.spec.id)) === "queued")
-    val term = EmbeddingJobs.run(spark, store, job.spec.id)
+    assert(store.get(job.spec.id).status === "queued")
+    val term = store.run(spark, job.spec.id)
     assert(term === "enabled")
-    val (st, progress, err) = jobStatus(store, job.spec.id)
-    assert(st === "enabled" && progress === 100 && err.isEmpty)
+    val st = store.get(job.spec.id)
+    assert(st.status === "enabled" && st.progress === 100 && st.error.isEmpty)
     val cur = currentTable(spark, store.get(job.spec.id).spec)
     assert(cur.count() === 40)
     assert(cur.where($"emb".isNull).count() === 0)
@@ -43,13 +43,13 @@ class EmbeddingJobsSpec extends SparkSuite {
     val (base, store) = freshDirs()
     writeSource(base, 0 until 20, "p0")
     val job = store.add(s"$base/src", "id", "text", "emb", "hash/bow-64")
-    EmbeddingJobs.run(spark, store, job.spec.id)
+    store.run(spark, job.spec.id)
     val usage1 = spark.read.parquet(job.spec.usageDir)
       .agg(sum($"rows")).as[Long].head()
     assert(usage1 === 20L)
     // downtime… then 10 new rows arrive
     writeSource(base, 100 until 110, "p1")
-    EmbeddingJobs.run(spark, store, job.spec.id)
+    store.run(spark, job.spec.id)
     val usage2 = spark.read.parquet(job.spec.usageDir)
       .agg(sum($"rows")).as[Long].head()
     assert(usage2 === 30L) // 10 incremental, not 30 reprocessed
@@ -57,7 +57,7 @@ class EmbeddingJobsSpec extends SparkSuite {
     assert(cur.count() === 30 && cur.where($"emb".isNull).count() === 0)
     // exactly-once restart semantics (test_daemon_embedding_job_resume
     // analog): a third drain with NO new data must process nothing
-    EmbeddingJobs.run(spark, store, job.spec.id)
+    store.run(spark, job.spec.id)
     val usage3 = spark.read.parquet(job.spec.usageDir)
       .agg(sum($"rows")).as[Long].head()
     assert(usage3 === 30L)
@@ -68,23 +68,23 @@ class EmbeddingJobsSpec extends SparkSuite {
     writeSource(base, 0 until 5, "p0")
     val job = store.add(s"$base/src", "id", "text", "emb", "hash/bow-64")
     store.cancel(job.spec.id)
-    assert(status(store.get(job.spec.id)) === "canceled")
-    val term = EmbeddingJobs.run(spark, store, job.spec.id)
+    assert(store.get(job.spec.id).status === "canceled")
+    val term = store.run(spark, job.spec.id)
     assert(term === "canceled")
-    assert(jobStatus(store, job.spec.id)._3 === Some("Job cancelled"))
+    assert(store.get(job.spec.id).error === Some("Job cancelled"))
     store.resume(job.spec.id)
-    assert(EmbeddingJobs.run(spark, store, job.spec.id) === "enabled")
-    assert(jobStatus(store, job.spec.id)._1 === "enabled")
+    assert(store.run(spark, job.spec.id) === "enabled")
+    assert(store.get(job.spec.id).status === "enabled")
   }
 
   test("failure path: bad model → failed status with error") {
     val (base, store) = freshDirs()
     writeSource(base, 0 until 5, "p0")
     val job = store.add(s"$base/src", "id", "text", "emb", "no/such-model")
-    val term = EmbeddingJobs.run(spark, store, job.spec.id)
+    val term = store.run(spark, job.spec.id)
     assert(term === "failed")
-    val (st, _, err) = jobStatus(store, job.spec.id)
-    assert(st === "failed" && err.nonEmpty)
+    val st = store.get(job.spec.id)
+    assert(st.status === "failed" && st.error.nonEmpty)
   }
 
   test("jobs run end to end on the ort runtime with a local model file") {
@@ -101,7 +101,7 @@ class EmbeddingJobsSpec extends SparkSuite {
     try {
       val job = store.add(s"$base/src", "id", "text", "emb",
         "jobtest/m8", runtime = "ort")
-      assert(EmbeddingJobs.run(spark, store, job.spec.id) === "enabled")
+      assert(store.run(spark, job.spec.id) === "enabled")
       val cur = currentTable(spark, store.get(job.spec.id).spec)
       assert(cur.count() === 12)
       assert(cur.where($"emb".isNull).count() === 0)
@@ -116,7 +116,7 @@ class EmbeddingJobsSpec extends SparkSuite {
     val (base, store) = freshDirs()
     writeSource(base, 0 until 8, "p0")
     val job = store.add(s"$base/src", "id", "text", "emb", "hash/bow-64")
-    EmbeddingJobs.run(spark, store, job.spec.id)
+    store.run(spark, job.spec.id)
     val u = spark.read.parquet(job.spec.usageDir)
     assert(u.agg(sum($"rows")).as[Long].head() === 8L)
     // "Document number <i> content" = 4 tokens each
@@ -140,10 +140,10 @@ class EmbeddingJobsSpec extends SparkSuite {
     assert(store.list().map(_.spec.id) === Seq(j1.spec.id, j2.spec.id))
     // failed beats canceled beats enabled
     val st = store.get(j2.spec.id).copy(
-      initFinishedAt = Some("t"), canceledAt = Some("t"),
+      finishedAt = Some("t"), canceledAt = Some("t"),
       failedAt = Some("t"))
-    assert(status(st) === "failed")
-    assert(status(st.copy(failedAt = None)) === "canceled")
-    assert(status(st.copy(failedAt = None, canceledAt = None)) === "enabled")
+    assert(st.status === "failed")
+    assert(st.copy(failedAt = None).status === "canceled")
+    assert(st.copy(failedAt = None, canceledAt = None).status === "enabled")
   }
 }

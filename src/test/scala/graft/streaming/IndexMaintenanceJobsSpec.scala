@@ -34,21 +34,22 @@ class IndexMaintenanceJobsSpec extends SparkSuite {
     val rowsBefore = IvfIndex.load(spark, path, "vec_id", "embedding")
       .assigned.count()
     val job = store.add(path, "vec_id", "embedding", maxFilesPerCell = 2)
-    assert(status(store.get(job.spec.id)) === "queued")
-    assert(IndexMaintenanceJobs.drain(spark, store) ===
+    assert(store.get(job.spec.id).status === "queued")
+    assert(store.drain(spark) ===
       Seq(job.spec.id -> "enabled"))
     val st = store.get(job.spec.id)
-    assert(st.compacted === Some("true"))
-    assert(st.filesBefore.get.toInt > st.filesAfter.get.toInt)
+    assert(st.results.get("compacted") === Some("true"))
+    assert(st.results("filesBefore").toInt > st.results("filesAfter").toInt)
     // content untouched
     val m = IvfIndex.load(spark, path, "vec_id", "embedding")
     assert(m.assigned.count() === rowsBefore)
     // healthy now: a second job finishes without compacting
     val job2 = store.add(path, "vec_id", "embedding", maxFilesPerCell = 2)
-    IndexMaintenanceJobs.drain(spark, store)
+    store.drain(spark)
     val st2 = store.get(job2.spec.id)
-    assert(status(st2) === "enabled" && st2.compacted === Some("false"))
-    assert(st2.filesBefore === st2.filesAfter)
+    assert(st2.status === "enabled" &&
+      st2.results.get("compacted") === Some("false"))
+    assert(st2.results.get("filesBefore") === st2.results.get("filesAfter"))
   }
 
   test("cancel before start; resume back to queued; missing index " +
@@ -56,15 +57,15 @@ class IndexMaintenanceJobsSpec extends SparkSuite {
     val store = freshStore()
     val job = store.add("/tmp/does_not_exist_idx", "vec_id", "embedding")
     store.cancel(job.spec.id)
-    assert(IndexMaintenanceJobs.run(spark, store, job.spec.id) ===
+    assert(store.run(spark, job.spec.id) ===
       "canceled")
     store.resume(job.spec.id)
-    assert(status(store.get(job.spec.id)) === "queued")
+    assert(store.get(job.spec.id).status === "queued")
     // resumed run now actually executes — and fails on the bad path
-    assert(IndexMaintenanceJobs.run(spark, store, job.spec.id) ===
+    assert(store.run(spark, job.spec.id) ===
       "failed")
     val st = store.get(job.spec.id)
-    assert(status(st) === "failed" && st.error.isDefined)
+    assert(st.status === "failed" && st.error.isDefined)
   }
 
   test("state round-trips through the JSON store") {
