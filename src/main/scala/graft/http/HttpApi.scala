@@ -1800,8 +1800,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           case Some(reg) =>
             val key = body.str("key")
             val gdims = body.strings("dims").getOrElse(Nil)
-            val values = body.floats("values")
-              .map(_.toSeq.map(_.toLong)).getOrElse(Nil)
+            val values = body.longs("values").map(_.toSeq).getOrElse(Nil)
             if (!key.exists(k => reg.cmss.exists(_.key == k)))
               respond(ex, 400,
                 s"""{"error":"key must be one of the registered """ +

@@ -1,17 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType,
+  StructField, StructType}
 
 /** Index-autotune analog (SURVEY §2.11 X4-X9,
-  * `lantern_cli/src/index_autotune/`). Two sweeps:
+  * `lantern_cli/src/index_autotune/`). The sweeps:
   *
   *   - [[run]] keeps the reference's published HNSW grid API-compatible
   *     (Spark has no online HNSW — north star — so each variant
   *     measures the EXACT top-k path; recall is always 100).
   *   - [[runIvf]] targets the index family that actually exists here:
   *     (nCells, nprobe) over IVF, the axes governing its
-  *     recall/latency/build trade.
+  *     recall/latency/build trade; [[runBq]] and [[runKinds]] sweep
+  *     the BQ shortlist and the storage kinds.
+  *
+  * The timed sweeps run one search per variant, because per-variant
+  * latency is their output. Their recall axes ([[ivfRecallGrid]],
+  * [[bqRecallGrid]], [[kindsRecallGrid]]) have no latency column, so
+  * each scores its whole grid from one probe-ranked scan of an
+  * in-memory assignment and writes no index.
   *
   * Grid iteration, early-stop, best-variant selection, and the
   * results schema mirror the reference throughout.
@@ -101,17 +110,15 @@ object Autotune {
 
   /** X4-X7: sample corpus, 10 query points, k-NN recall/latency per
     * variant; early stop at recall >= 99.9 (`mod.rs:476-478`).
-    * `onProgress` / `isCanceled` mirror the daemon's progress_callback
-    * and is_canceled hooks (`daemon/autotune_jobs.rs:70-76`): progress
-    * is reported per finished variant, and cancellation is checked
-    * between variants (raising the reference's "Job cancelled").
+    * `onProgress` mirrors the daemon's progress_callback
+    * (`daemon/autotune_jobs.rs:70-76`): progress is reported per
+    * finished variant, and a job that cancels does so by throwing from
+    * it (`AutotuneJobs`).
     */
   def run(df: DataFrame, idCol: String, vecCol: String, k: Int = 10,
       sampleN: Int = 10000, nQueries: Int = 10,
       metric: String = "l2sq", targetRecall: Double = 99.9,
-      onProgress: Int => Unit = _ => (),
-      isCanceled: () => Boolean = () => false)
-      : Seq[Result] = {
+      onProgress: Int => Unit = _ => ()): Seq[Result] = {
     val corpus = df.select(col(idCol), col(vecCol)).limit(sampleN).cache()
     // deterministic "random" query points: hash-ranked sample (X5)
     val queries = corpus
@@ -127,7 +134,6 @@ object Autotune {
       var stopped = false
       grid.zipWithIndex.foreach { case (v, i) =>
         if (!stopped) {
-          if (isCanceled()) throw new RuntimeException("Job cancelled")
           val (res, searchMs) = timedSearch(
             Knn.topK(corpus, queries, idCol, vecCol, k, metric))
           val recall = try recallPct(truth, res, k)
@@ -175,15 +181,14 @@ object Autotune {
 
   /** Sweep (nCells, nprobe): per variant, recall of IVF search vs the
     * brute-force ground truth, query latency, and the (memo-amortized)
-    * index build time for its cell count. Early stop and cancellation
+    * index build time for its cell count. Early stop and progress
     * mirror [[run]].
     */
   def runIvf(df: DataFrame, idCol: String, vecCol: String, k: Int = 10,
       sampleN: Int = 10000, nQueries: Int = 10,
       metric: String = "l2sq", targetRecall: Double = 99.9,
       maxIter: Int = 5, seed: Long = 42L,
-      onProgress: Int => Unit = _ => (),
-      isCanceled: () => Boolean = () => false): Seq[IvfResult] = {
+      onProgress: Int => Unit = _ => ()): Seq[IvfResult] = {
     // memo-owned frames: NOT unpersisted here — releaseSamples() is
     // the targeted drop for long-lived sessions
     val (corpus, queries, truth) =
@@ -201,7 +206,6 @@ object Autotune {
       var stopped = false
       ivfGrid.zipWithIndex.foreach { case (v, i) =>
         if (!stopped) {
-          if (isCanceled()) throw new RuntimeException("Job cancelled")
           val model = modelFor(v.nCells)
           val (res, searchMs) = timedSearch(
             IvfIndex.search(model, queries, k, v.nprobe, metric))
@@ -245,13 +249,13 @@ object Autotune {
     * built once — unlike the IVF sweep, both axes here are pure query
     * parameters, so the build amortizes across the whole grid).
     * Recall is against the brute-force ground truth on the same
-    * sample; early stop and cancellation mirror [[run]]/[[runIvf]].
+    * sample; early stop mirrors [[run]]/[[runIvf]].
     */
   def runBq(df: DataFrame, idCol: String, vecCol: String, k: Int = 10,
       sampleN: Int = 10000, nQueries: Int = 10,
       metric: String = "l2sq", targetRecall: Double = 99.9,
-      nCells: Int = 16, maxIter: Int = 5, seed: Long = 42L,
-      isCanceled: () => Boolean = () => false): Seq[BqResult] = {
+      nCells: Int = 16, maxIter: Int = 5, seed: Long = 42L)
+      : Seq[BqResult] = {
     val (corpus, queries, truth) =
       ivfSample(df, idCol, vecCol, sampleN, nQueries, k, metric)
     val t0 = System.nanoTime()
@@ -262,7 +266,6 @@ object Autotune {
     var stopped = false
     bqGrid.zipWithIndex.foreach { case (v, i) =>
       if (!stopped) {
-        if (isCanceled()) throw new RuntimeException("Job cancelled")
         // record the EFFECTIVE depth: a grid shortlist below k is
         // clamped for the search, and the result row must describe
         // the configuration that was actually measured (replaying the
@@ -338,8 +341,7 @@ object Autotune {
       sampleN: Int = 10000, nQueries: Int = 10,
       metric: String = "l2sq", targetRecall: Double = 99.9,
       nCells: Int = 16, maxIter: Int = 5, seed: Long = 42L,
-      shortlist: Int = 50,
-      isCanceled: () => Boolean = () => false): Seq[KindResult] = {
+      shortlist: Int = 50): Seq[KindResult] = {
     val (corpus, queries, truth) =
       ivfSample(df, idCol, vecCol, sampleN, nQueries, k, metric)
     val cb = ProductQuantizer.fitCodebook(corpus, idCol, vecCol,
@@ -356,7 +358,6 @@ object Autotune {
     })
     val results = Seq.newBuilder[KindResult]
     kindGrid.zipWithIndex.foreach { case (v, i) =>
-      if (isCanceled()) throw new RuntimeException("Job cancelled")
       val b = built(v.kind)
       val (res, searchMs) = timedSearch(IvfIndex.search(b.model, queries,
         k, v.nprobe, metric, shortlist = math.max(shortlist, k)))
@@ -414,30 +415,45 @@ object Autotune {
   // an argmin/count over deterministic inputs, so a DuckDB
   // restatement matches bit for bit; the wall-clock axes stay graded
   // by AutotuneSpec's bounds.
+  //
+  // A grid writes no index. The corpus is cell-assigned once into a
+  // cached frame, every kind encodes on top of it, the queries and the
+  // exact truth are collected once, and IvfIndex.searchGrid answers
+  // every point from one probe-ranked scan. Each point's rows equal
+  // those of buildWithCentroids + IvfIndex.search at that point
+  // (AutotuneSpec). The result is a local relation; the cache is
+  // dropped before return.
 
-  private def matchCount(res: DataFrame, truth: DataFrame): DataFrame =
-    res.select(col("qid"), col("nid")).join(truth, Seq("qid", "nid"))
-      .agg(count(lit(1)).cast("int").as("matches"))
-
-  /** The exact-truth pair set, materialized ONCE per grid call: the
-    * truth DataFrame is referenced by EVERY union branch below, and
-    * left lazy the brute-force kNN subtree re-executes once per
-    * variant (5x for the probe grid, 8x for the kind grid — measured
-    * as the dominant cost of the q_autotune_{ivf,bq,kinds} faces).
-    * nQueries x k is at most a few hundred (qid, nid) pairs, the same
-    * bounded-control-state size as the codebook collects, so it comes
-    * to the driver and goes back out as a broadcast local relation —
-    * the rows (and hence every `matches` count) are identical.
+  /** Per grid point, in order: how many of the exact top-k (qid, nid)
+    * pairs that point's search returns, summed over all queries (the
+    * pairs' join count).
     */
-  private def materializedTruth(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val t = Knn.topK(corpus, queries, idCol, vecCol, k)
-      .select(col("qid"), col("nid"))
-    val spark = corpus.sparkSession
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(t.collect(): _*), t.schema)
-    broadcast(local)
+  private def gridMatches(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, centroids: Array[Array[Float]],
+      k: Int, kinds: Seq[IvfIndex.StorageKind],
+      points: Seq[IvfIndex.GridPoint]): Seq[Int] = {
+    val (cells, models) = IvfIndex.assignCached(corpus, idCol, vecCol,
+      centroids, kinds)
+    try {
+      val q = queries.select(col(idCol), col(vecCol))
+      val local = corpus.sparkSession.createDataFrame(
+        java.util.Arrays.asList(q.collect(): _*), q.schema)
+      // nQueries x k pairs: bounded control state, like the codebook
+      val truth = Knn.topK(cells, local, idCol, vecCol, k)
+        .select(col("qid"), col("nid")).collect()
+        .groupMapReduce(r => (r.getLong(0), r.getLong(1)))(_ => 1)(_ + _)
+      IvfIndex.searchGrid(models.toIndexedSeq, local, k, points)
+        .map(_.map(truth.getOrElse(_, 0)).sum)
+    } finally cells.unpersist()
   }
+
+  /** A grid's rows as a local relation; every column is non-null. */
+  private def gridDF(spark: SparkSession, cols: Seq[(String, DataType)],
+      rows: Seq[Seq[Any]]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*),
+      StructType(cols.map { case (n, t) =>
+        StructField(n, t, nullable = false)
+      }))
 
   /** Recall axis of [[runIvf]] under a frozen quantizer: the cell
     * count is fixed by `centroids`, so the swept axis is `probes`
@@ -447,15 +463,15 @@ object Autotune {
   def ivfRecallGrid(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, centroids: Array[Array[Float]],
       k: Int = 10, probes: Seq[Int] = Seq(1, 2, 4, 8, 16)): DataFrame = {
-    val model = IvfIndex.buildWithCentroids(corpus, idCol, vecCol,
-      centroids)
-    val truth = materializedTruth(corpus, queries, idCol, vecCol, k)
-    probes.zipWithIndex.map { case (np, i) =>
-      matchCount(IvfIndex.search(model, queries, k, np), truth)
-        .select(lit(i).as("experiment_id"),
-          lit(centroids.length).as("n_cells"), lit(np).as("nprobe"),
-          col("matches"))
-    }.reduce(_ unionAll _)
+    val matches = gridMatches(corpus, queries, idCol, vecCol, centroids,
+      k, Seq(IvfIndex.StorageKind.F32),
+      probes.map(IvfIndex.GridPoint(0, _)))
+    gridDF(corpus.sparkSession, Seq("experiment_id" -> IntegerType,
+        "n_cells" -> IntegerType, "nprobe" -> IntegerType,
+        "matches" -> IntegerType),
+      probes.zip(matches).zipWithIndex.map { case ((np, m), i) =>
+        Seq(i, centroids.length, np, m)
+      })
   }
 
   /** Recall axis of [[runBq]] under a frozen quantizer: the published
@@ -468,16 +484,17 @@ object Autotune {
       k: Int = 10,
       grid: Seq[(Int, Int)] = bqGrid.map(v => (v.nprobe, v.shortlist)))
       : DataFrame = {
-    val model = IvfIndex.buildWithCentroids(corpus, idCol, vecCol,
-      centroids, kind = IvfIndex.StorageKind.Bq)
-    val truth = materializedTruth(corpus, queries, idCol, vecCol, k)
-    grid.zipWithIndex.map { case ((np, sl0), i) =>
-      val sl = math.max(sl0, k)
-      matchCount(
-        IvfIndex.search(model, queries, k, np, shortlist = sl), truth)
-        .select(lit(i).as("experiment_id"), lit(np).as("nprobe"),
-          lit(sl).as("shortlist"), col("matches"))
-    }.reduce(_ unionAll _)
+    val points = grid.map { case (np, sl) =>
+      IvfIndex.GridPoint(0, np, math.max(sl, k))
+    }
+    val matches = gridMatches(corpus, queries, idCol, vecCol, centroids,
+      k, Seq(IvfIndex.StorageKind.Bq), points)
+    gridDF(corpus.sparkSession, Seq("experiment_id" -> IntegerType,
+        "nprobe" -> IntegerType, "shortlist" -> IntegerType,
+        "matches" -> IntegerType),
+      points.zip(matches).zipWithIndex.map { case ((p, m), i) =>
+        Seq(i, p.nprobe, p.shortlist, m)
+      })
   }
 
   /** Recall axis of [[runKinds]] under a frozen SHARED quantizer: the
@@ -487,16 +504,17 @@ object Autotune {
   def kindsRecallGrid(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, centroids: Array[Array[Float]],
       k: Int = 10, shortlist: Int = 40): DataFrame = {
-    val truth = materializedTruth(corpus, queries, idCol, vecCol, k)
-    val models = kindGrid.map(_.kind).distinct.map(kind =>
-      kind -> IvfIndex.buildWithCentroids(corpus, idCol, vecCol, centroids,
-        kind = IvfIndex.StorageKind.byName(kind))).toMap
-    kindGrid.zipWithIndex.map { case (v, i) =>
-      matchCount(IvfIndex.search(models(v.kind), queries, k, v.nprobe,
-          shortlist = math.max(shortlist, k)), truth)
-        .select(lit(i).as("experiment_id"), lit(v.kind).as("kind"),
-          lit(v.nprobe).as("nprobe"), col("matches"))
-    }.reduce(_ unionAll _)
+    val kinds = kindGrid.map(_.kind).distinct
+    val matches = gridMatches(corpus, queries, idCol, vecCol, centroids,
+      k, kinds.map(IvfIndex.StorageKind.byName),
+      kindGrid.map(v => IvfIndex.GridPoint(kinds.indexOf(v.kind),
+        v.nprobe, math.max(shortlist, k))))
+    gridDF(corpus.sparkSession, Seq("experiment_id" -> IntegerType,
+        "kind" -> StringType,
+        "nprobe" -> IntegerType, "matches" -> IntegerType),
+      kindGrid.zip(matches).zipWithIndex.map { case ((v, m), i) =>
+        Seq(i, v.kind, v.nprobe, m)
+      })
   }
 
   /** X9: persist results in the reference's autotune_results schema

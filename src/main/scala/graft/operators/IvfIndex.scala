@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
 
 import graft.functions.VectorFunctions
 
@@ -209,6 +211,8 @@ object IvfIndex {
     *
     * @param vecCol the float vector column of the source and of every
     *   query batch; F16 and SQ8 artifacts do not store it
+    * @param indexPath the artifact's directory; empty for an in-memory
+    *   index ([[assignCached]]), which is only ever searched
     * @param kind how the cells store their vectors
     */
   case class Model(centroids: Array[Array[Float]], assigned: DataFrame,
@@ -228,7 +232,7 @@ object IvfIndex {
   // live index directory; reuse across builds comes from the memo, not
   // from path determinism
   private val buildCounter = new java.util.concurrent.atomic.AtomicLong()
-  private lazy val tmpBase =
+  private[operators] lazy val tmpBase =
     s"${System.getProperty("java.io.tmpdir")}/graft-ivf-" +
       java.lang.ProcessHandle.current().pid()
 
@@ -344,11 +348,7 @@ object IvfIndex {
     val path = indexDir.getOrElse(
       s"$tmpBase/ivf_${buildCounter.getAndIncrement()}" +
         s"_c${centroids.length}")
-    // codegen argmin assignment (NearestCentroid): no boxed-Seq UDF in
-    // the corpus-sized write stage, centroid table rides as a constant
-    stored.encode(df.withColumn("cell_id",
-        VectorFunctions.nearest_centroid(col(vecCol), centroids)),
-        idCol, vecCol)
+    assign(df, idCol, vecCol, centroids, stored)
       .repartition(col("cell_id"))
       .write.partitionBy("cell_id").mode("overwrite").parquet(path)
     // the centroid table (and any fitted model) persists next to the
@@ -365,6 +365,40 @@ object IvfIndex {
       path, stored)
     if (!force && buildMemo.size < 96) buildMemo.put(key, (plan, model))
     model
+  }
+
+  /** The rows of `df` as an index under `centroids` stores them: each
+    * row's nearest cell as `cell_id`, then the vector encoded as `kind`
+    * stores it. [[buildWithCentroids]] writes this frame and [[append]]
+    * appends it under the index's frozen kind. The assignment is the
+    * codegen argmin (NearestCentroid): no boxed-Seq UDF in the
+    * corpus-sized stage, and the centroid table rides as a constant.
+    */
+  def assign(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Float]],
+      kind: StorageKind = StorageKind.F32): DataFrame =
+    kind.encode(df.withColumn("cell_id",
+        VectorFunctions.nearest_centroid(col(vecCol), centroids)),
+      idCol, vecCol)
+
+  /** In-memory twins of [[buildWithCentroids]], one per kind, for
+    * scoring a grid without writing an index: the (id, vector) columns
+    * of `corpus` are cell-assigned once into a cached frame, and every
+    * kind encodes on top of that frame (SQ8 fits its scalar model on
+    * it), so the corpus is read once however many kinds score it. The
+    * caller unpersists the returned frame when done with the models.
+    */
+  private[operators] def assignCached(corpus: DataFrame, idCol: String,
+      vecCol: String, centroids: Array[Array[Float]],
+      kinds: Seq[StorageKind]): (DataFrame, Seq[Model]) = {
+    requireBuildable(corpus, idCol)
+    val cells = assign(corpus.select(col(idCol), col(vecCol)), idCol,
+      vecCol, centroids).cache()
+    (cells, kinds.map { kind =>
+      val stored = kind.fitted(cells, vecCol)
+      Model(centroids, stored.encode(cells, idCol, vecCol), idCol, vecCol,
+        indexPath = "", stored)
+    })
   }
 
   /** The index's live rows: every cell directory, tombstones applied. */
@@ -386,9 +420,7 @@ object IvfIndex {
     * [[build]]) remains the answer to real distribution drift.
     */
   def append(model: Model, df: DataFrame): Model = graft.util.BuildTimer.timed {
-    model.kind.encode(df.withColumn("cell_id",
-        VectorFunctions.nearest_centroid(col(model.vecCol), model.centroids)),
-        model.idCol, model.vecCol)
+    assign(df, model.idCol, model.vecCol, model.centroids, model.kind)
       .repartition(col("cell_id"))
       .write.partitionBy("cell_id").mode("append")
       .parquet(model.indexPath)
@@ -792,10 +824,20 @@ object IvfIndex {
     corpus.where(col("cell_id").isin(cells.map(Int.box): _*))
 
   /** One query batch's probe plan: the probe rows (qid, qvec, cell_id)
-    * as a driver-local relation, qvec as the model's kind scores it,
-    * and the sorted distinct cells they touch.
+    * as a driver-local relation, qvec as the model's kind scores it, and
+    * the sorted distinct cells they touch. A plan made for a grid also
+    * carries each probe's rank `prank` (0 = the query's nearest cell);
+    * `keys` are the columns a per-query top-k over it groups by.
     */
-  private case class ProbePlan(rows: DataFrame, cells: Seq[Int])
+  private case class ProbePlan(rows: DataFrame, cells: Seq[Int],
+      keys: Seq[String]) {
+
+    /** This plan with each query vector as `kind` scores it, for a plan
+      * made under F32 (query vectors as given).
+      */
+    def forKind(kind: StorageKind): ProbePlan =
+      copy(rows = rows.withColumn("qvec", kind.query(col("qvec"))))
+  }
 
   /** Plan the probes on the driver: each query's nprobe nearest
     * centroids, ranked by the double sum of squared differences of the
@@ -811,14 +853,17 @@ object IvfIndex {
     * carrying its query vector — the same table the candidate join's
     * broadcast already materializes on the driver, so planning here
     * adds no new bound.
+    *
+    * @param ranked add each probe's rank, so one scan at this nprobe can
+    *   answer every narrower one ([[searchGrid]])
     */
   private def probeCells(model: Model, queries: DataFrame,
-      nprobe: Int): ProbePlan = {
+      nprobe: Int, ranked: Boolean = false): ProbePlan = {
     val q = queries.select(col(model.idCol).cast("long").as("qid"),
       model.kind.query(col(model.vecCol)).as("qvec"),
       col(model.vecCol).cast("array<float>").as("qf"))
     val dim = model.centroids.head.length
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    val rows = new java.util.ArrayList[Row]()
     val cells = scala.collection.mutable.SortedSet[Int]()
     q.collect().foreach { r =>
       val qid = r.get(0)
@@ -831,16 +876,20 @@ object IvfIndex {
         throw new IllegalArgumentException(
           s"query qid=$qid has dimension ${qf.length}, the index " +
             s"centroids have $dim")
-      nearestCells(model.centroids, qf, nprobe).foreach { c =>
-        rows.add(org.apache.spark.sql.Row(qid, r.get(1), c))
-        cells += c
+      nearestCells(model.centroids, qf, nprobe).zipWithIndex.foreach {
+        case (c, rank) =>
+          rows.add(
+            if (ranked) Row(qid, r.get(1), c, rank)
+            else Row(qid, r.get(1), c))
+          cells += c
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      q.schema.fields.take(2) :+ org.apache.spark.sql.types.StructField(
-        "cell_id", org.apache.spark.sql.types.IntegerType, nullable = false))
+    val rankCol = if (ranked) Seq("prank") else Nil
+    val schema = StructType(q.schema.fields.take(2) ++
+      ("cell_id" +: rankCol).map(StructField(_, IntegerType,
+        nullable = false)))
     ProbePlan(queries.sparkSession.createDataFrame(rows, schema),
-      cells.toSeq)
+      cells.toSeq, "qid" +: rankCol)
   }
 
   /** The nprobe nearest cells of one query vector, nearest first; ties
@@ -858,17 +907,21 @@ object IvfIndex {
       }
       .sortBy(identity).take(nprobe).map(_._2)
 
-  /** Per-query bounded top-k over scored (qid, nid, dist) rows, in the
-    * `Knn.topK` output shape (qid, nid, rank, dist).
+  /** Bounded top-k per group of `keys` over scored (keys, nid, dist)
+    * rows, in the `Knn.topK` output shape (keys, nid, rank, dist).
     */
-  private def topK(scored: DataFrame, k: Int): DataFrame =
-    scored.groupBy(col("qid"))
+  private def topK(scored: DataFrame, k: Int,
+      keys: Seq[String] = Seq("qid")): DataFrame = {
+    val ks = keys.map(col)
+    scored.groupBy(ks: _*)
       .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+      .select(ks :+ posexplode(col("nn")).as(Seq("pos", "nn")): _*)
+      .select(ks ++ Seq(col("nn.id").as("nid"),
+        (col("pos") + 1).cast("int").as("rank"),
+        col("nn.score").as("dist")): _*)
+  }
 
-  /** Every probed candidate scored by the model kind's distance: (qid,
+  /** Every probed candidate scored by the model kind's distance: (keys,
     * nid, dist) over the probed cells of `scan`.
     */
   private def scoreProbed(model: Model, plan: ProbePlan, scan: DataFrame,
@@ -877,13 +930,32 @@ object IvfIndex {
         col(model.idCol).cast("long").as("nid"),
         model.kind.candidate(model.vecCol).as("cvec"))
       .join(broadcast(plan.rows), "cell_id")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
+      .select(plan.keys.map(col) ++ Seq(col("nid"),
+        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist")): _*)
+
+  /** Every probed candidate of a BQ index scored by the hamming distance
+    * (XOR+POPCNT) between its STORED sign bits and the query's: (keys,
+    * nid, dist) over the probed cells of `scan`. Bits-only projection:
+    * the float vector column must NOT appear in this scan's ReadSchema
+    * (asserted in IvfSpec); a metadata filter adds its own column to the
+    * scan but never the floats.
+    */
+  private def hammingProbed(model: Model, plan: ProbePlan,
+      scan: DataFrame): DataFrame =
+    scan.select(col("cell_id"),
+        col(model.idCol).cast("long").as("nid"), col("bits"))
+      .join(broadcast(plan.rows
+        .withColumn("qbits", VectorFunctions.bq_encode(col("qvec")))
+        .drop("qvec")), "cell_id")
+      .select(plan.keys.map(col) ++ Seq(col("nid"),
+        VectorFunctions.bq_hamming(col("bits"), col("qbits"))
+          .cast("double").as("dist")): _*)
 
   /** ANN top-k: probe nprobe cells, score candidates by the model
     * kind's distance, bounded top-k aggregation. Same output shape as
     * `Knn.topK`; at nprobe = nCells the result is exact over the kind's
-    * decoded vectors.
+    * decoded vectors. This is the one-point case of [[searchGrid]]: one
+    * grouping key (qid), no probe ranks.
     *
     * @param filter optional metadata predicate over the index's
     *   columns (the vector-db staple "WHERE label = 3 ORDER BY
@@ -895,10 +967,10 @@ object IvfIndex {
     *   rescore pool).
     * @param shortlist for a BQ index, > 0 selects the two-stage search:
     *   per query, the `shortlist` nearest candidates by hamming
-    *   distance over the STORED sign bits (XOR+POPCNT, map-side
-    *   bounded; the shortlist scan reads the bits column only), then
-    *   an exact re-rank of that pool over the floats — the BQ sibling
-    *   of [[searchAdcRefine]], whose compressed metric any SQL engine
+    *   distance over the STORED sign bits (map-side bounded; the
+    *   shortlist scan reads the bits column only), then an exact
+    *   re-rank of that pool over the floats — the BQ sibling of
+    *   [[searchAdcRefine]], whose compressed metric any SQL engine
     *   restates as a sign-disagreement count (how the q_ivf_bq_fixed
     *   oracle checks it hash-exactly). Must be >= k. 0 scores the
     *   floats directly; other kinds ignore it.
@@ -917,25 +989,116 @@ object IvfIndex {
     val scan = filter.foldLeft(
       pruneToProbedCells(model.assigned, plan.cells))(_.where(_))
     if (twoStage) {
-      val probes = broadcast(plan.rows
-        .withColumn("qbits", VectorFunctions.bq_encode(col("qvec")))
-        .drop("qvec"))
-      // bits-only projection: the float vector column must NOT appear
-      // in this scan's ReadSchema (asserted in IvfSpec); a metadata
-      // filter adds its own column to the scan but never the floats
-      val pool = scan
-        .select(col("cell_id"),
-          col(model.idCol).cast("long").as("nid"), col("bits"))
-        .join(probes, "cell_id")
-        .select(col("qid"), col("nid"),
-          VectorFunctions.bq_hamming(col("bits"), col("qbits"))
-            .cast("double").as("hd"))
-        .groupBy(col("qid"))
-        .agg(Knn.topk_by_score(col("hd"), col("nid"), shortlist).as("sl"))
-        .select(col("qid"), explode(col("sl")).as("e"))
-        .select(col("qid"), col("e.id").as("nid"))
-      rescore(model, queries, plan, pool, k, metric)
+      val pool = topK(hammingProbed(model, plan, scan), shortlist)
+        .select(col("qid"), col("nid"))
+      rescore(model, queryVectors(model, queries), plan.cells, pool, k,
+        metric)
     } else topK(scoreProbed(model, plan, scan, metric), k)
+  }
+
+  /** One point of a [[searchGrid]]: which of the grid's models, how many
+    * cells to probe and, for a BQ model, the shortlist depth (0 scores
+    * the floats directly, as in [[search]]).
+    */
+  private[operators] case class GridPoint(model: Int, nprobe: Int,
+      shortlist: Int = 0)
+
+  /** [[search]] at every point of a grid over models that share one
+    * coarse quantizer: per point, in order, the (qid, nid) rows that
+    * point's search returns.
+    *
+    * A query's probe order depends only on its centroid distances, so
+    * the probes are planned once, at the widest nprobe, with each
+    * probe's rank. Every candidate of that probe set is scored once per
+    * model (by hamming distance for BQ shortlist points) and joins each
+    * point of that model whose nprobe exceeds the candidate's rank; one
+    * aggregate keeps every point's best per query, as deep as the
+    * deepest point needs, and the driver cuts each point to its own
+    * depth through the aggregate's [[TopKBuffer]]. So each point ranks
+    * exactly the candidates its own search scores, in the same strict
+    * (score, id) order. A BQ point's list is
+    * its shortlist pool, and one more job scores every pool exactly, as
+    * [[rescore]] does.
+    *
+    * Jobs: the query collect (none for a local batch), the stage-one
+    * aggregate over every model, and the rescore if a point needs it.
+    * Driver memory: |points| x |queries| x depth rows.
+    */
+  private[operators] def searchGrid(models: IndexedSeq[Model],
+      queries: DataFrame, k: Int, points: Seq[GridPoint],
+      metric: String = "l2sq"): Seq[Seq[(Long, Long)]] = {
+    val head = models.head
+    require(models.forall(_.centroids eq head.centroids),
+      "the models of a search grid must share one coarse quantizer")
+    def twoStage(p: GridPoint) =
+      models(p.model).kind == StorageKind.Bq && p.shortlist > 0
+    def depth(p: GridPoint) = if (twoStage(p)) p.shortlist else k
+    points.foreach(p => require(!twoStage(p) || p.shortlist >= k,
+      s"shortlist (${p.shortlist}) must be >= k ($k)"))
+    val plan = probeCells(head.copy(kind = StorageKind.F32), queries,
+      points.map(_.nprobe).max, ranked = true)
+    val scored = points.zipWithIndex
+      .groupBy { case (p, _) => (p.model, twoStage(p)) }.toSeq
+      .map { case ((m, hamming), ps) =>
+        val model = models(m)
+        val mp = plan.forKind(model.kind)
+        val scan = pruneToProbedCells(model.assigned, plan.cells)
+        (if (hamming) hammingProbed(model, mp, scan)
+          else scoreProbed(model, mp, scan, metric))
+          .select(explode(array(ps.map { case (p, i) =>
+              when(col("prank") < p.nprobe, i)
+            }: _*)).as("point"), col("qid"), col("nid"), col("dist"))
+          .where(col("point").isNotNull)
+      }.reduce(_ unionAll _)
+    // point -> qid -> that query's (dist, nid) candidates at the point
+    type Lists = Map[Int, Map[Long, Array[(Double, Long)]]]
+    def byPoint(df: DataFrame): Lists =
+      df.select(col("point"), col("qid"), col("dist"), col("nid")).collect()
+        .filter(!_.isNullAt(2)).groupBy(_.getInt(0)).map { case (i, rs) =>
+          i -> rs.groupBy(_.getLong(1)).map { case (qid, qs) =>
+            qid -> qs.map(r => (r.getDouble(2), r.getLong(3)))
+          }
+        }
+    def cut(lists: Lists, i: Int, depth: Int): Seq[(Long, Long)] =
+      lists.getOrElse(i, Map.empty).toSeq.flatMap { case (qid, cands) =>
+        best(depth, cands).map(qid -> _)
+      }
+    val lists = byPoint(topK(scored, points.map(depth).max,
+      Seq("point", "qid")))
+    val pooled = points.zipWithIndex.filter(pi => twoStage(pi._1))
+    // the exact distances of every shortlist pool
+    val exact: Lists = if (pooled.isEmpty) Map.empty else {
+      val poolSchema = StructType(Seq("point" -> IntegerType,
+          "qid" -> LongType, "nid" -> LongType).map { case (n, t) =>
+        StructField(n, t, nullable = false)
+      })
+      byPoint(pooled.groupBy(_._1.model).toSeq.map {
+        case (m, ps) =>
+          val pool = queries.sparkSession.createDataFrame(
+            java.util.Arrays.asList(ps.flatMap { case (p, i) =>
+              cut(lists, i, p.shortlist).map { case (q, n) =>
+                Row(i, q, n)
+              }
+            }: _*), poolSchema)
+          // each query's vector once: its rank-0 probe
+          val qv = plan.forKind(models(m).kind).rows
+            .where(col("prank") === 0).select(col("qid"), col("qvec"))
+          rescored(models(m), qv, plan.cells, pool, metric,
+            Seq("point", "qid"))
+      }.reduce(_ unionAll _))
+    }
+    points.zipWithIndex.map { case (p, i) =>
+      cut(if (twoStage(p)) exact else lists, i, k)
+    }
+  }
+
+  /** The ids of the `k` best (score, id) pairs, as the top-k aggregate
+    * keeps them.
+    */
+  private def best(k: Int, scored: Iterable[(Double, Long)]): Seq[Long] = {
+    val buf = new TopKBuffer(k)
+    scored.foreach { case (s, id) => buf.insert(s, id) }
+    buf.sorted.toSeq.map(_._2)
   }
 
   /** Vector RANGE query: every neighbor within `radius`, not a fixed
@@ -972,27 +1135,37 @@ object IvfIndex {
     scoreProbed(model, plan, scan, metric).where(col("dist") <= radius)
   }
 
-  /** The exact stage of a two-stage search: re-rank each query's
-    * candidate `pool` (qid, nid) by the model kind's distance and keep
-    * the top `k`. Every pooled id lives in a probed cell, so the
-    * vector fetch-back carries the same cell PartitionFilter as the
-    * first stage — unprobed cells contribute no vector pages, which is
-    * what keeps the nprobe/nCells read reduction the shortlist earns.
-    * The pool and the query vectors broadcast into the corpus scan, so
-    * the big side never shuffles.
-    */
-  private def rescore(model: Model, queries: DataFrame, plan: ProbePlan,
-      pool: DataFrame, k: Int, metric: String): DataFrame = {
-    val qv = queries.select(col(model.idCol).cast("long").as("qid"),
+  /** Each query's (qid, qvec), qvec as the model's kind scores it. */
+  private def queryVectors(model: Model, queries: DataFrame): DataFrame =
+    queries.select(col(model.idCol).cast("long").as("qid"),
       model.kind.query(col(model.vecCol)).as("qvec"))
-    val cv = pruneToProbedCells(model.assigned, plan.cells).select(
-      col(model.idCol).cast("long").as("nid"),
-      model.kind.candidate(model.vecCol).as("cvec"))
-    topK(cv.join(broadcast(pool), "nid")
+
+  /** The exact stage of a two-stage search: re-rank each query's
+    * candidate `pool` (qid, nid) by the model kind's distance to its
+    * query vector in `qv` (qid, qvec) and keep the top `k`.
+    */
+  private def rescore(model: Model, qv: DataFrame, cells: Seq[Int],
+      pool: DataFrame, k: Int, metric: String): DataFrame =
+    topK(rescored(model, qv, cells, pool, metric, Seq("qid")), k)
+
+  /** Every (keys, nid) of a candidate `pool` scored by the model kind's
+    * distance to its query vector in `qv` (qid, qvec): (keys, nid,
+    * dist). Every pooled id lives in a probed cell, so the vector
+    * fetch-back carries the same cell PartitionFilter as the first
+    * stage — unprobed cells contribute no vector pages, which is what
+    * keeps the nprobe/nCells read reduction the shortlist earns. The
+    * pool and the query vectors broadcast into the corpus scan, so the
+    * big side never shuffles.
+    */
+  private def rescored(model: Model, qv: DataFrame, cells: Seq[Int],
+      pool: DataFrame, metric: String, keys: Seq[String]): DataFrame =
+    pruneToProbedCells(model.assigned, cells)
+      .select(col(model.idCol).cast("long").as("nid"),
+        model.kind.candidate(model.vecCol).as("cvec"))
+      .join(broadcast(pool), "nid")
       .join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist")), k)
-  }
+      .select(keys.map(col) ++ Seq(col("nid"),
+        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist")): _*)
 
   /** IVF-PQ: score candidates by asymmetric distance (ADC) over PQ
     * codes. Per query, a lookup table LUT[split][code] =
@@ -1098,6 +1271,7 @@ object IvfIndex {
     val pool = adcTopK(model, quantized, pqCol, codebook, plan,
         shortlist, lutScale)
       .select(col("qid"), col("nid"))
-    rescore(model, queries, plan, pool, k, metric)
+    rescore(model, queryVectors(model, queries), plan.cells, pool, k,
+      metric)
   }
 }

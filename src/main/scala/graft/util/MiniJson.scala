@@ -49,6 +49,11 @@ object MiniJson {
   }
   private val NumberRe = "-?(0|[1-9][0-9]*)(\\.[0-9]+)?([eE][+-]?[0-9]+)?".r
 
+  // an integer's token text, in the Long range
+  private def integral(v: Any): Option[Long] =
+    numText(v).filter(IntegerRe.matches).flatMap(_.toLongOption)
+  private val IntegerRe = "-?(0|[1-9][0-9]*)".r
+
   /** Typed reads of one JSON object's fields. An absent or null key
     * reads as None; a present key of the wrong type throws [[BadJson]]
     * naming the key. Numbers and numeric strings are interchangeable.
@@ -86,6 +91,14 @@ object MiniJson {
       read(key, "an array of numbers") {
         case xs: Vector[_] if xs.forall(numText(_).isDefined) =>
           xs.map(x => java.lang.Float.parseFloat(numText(x).get)).toArray
+      }
+    /** Integers read from their token text, never through a float: a
+      * fractional number or one outside the Long range is a [[BadJson]].
+      */
+    def longs(key: String): Option[Array[Long]] =
+      read(key, "an array of integers") {
+        case xs: Vector[_] if xs.forall(integral(_).isDefined) =>
+          xs.map(integral(_).get).toArray
       }
     def strings(key: String): Option[Seq[String]] =
       read(key, "an array of strings") {

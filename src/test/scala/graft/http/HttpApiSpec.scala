@@ -941,6 +941,31 @@ class HttpApiSpec extends SparkSuite {
     assert(delete("/collections/ev_mv_hc/summary").statusCode() === 200)
   }
 
+  test("summary freq reads its keys as integers: 16777217 is answered " +
+      "as itself, a fraction or an out-of-range number is a 400 naming " +
+      "values") {
+    spark.read.parquet(s"$sf0001/events.parquet")
+      .createOrReplaceTempView("ev_mv_keys")
+    assert(post("/collections/ev_mv_keys/summary",
+      """{"dims":["event_type"],"measures":["value"],
+        |"cms_keys":["user_id"]}""".stripMargin.replace("\n", ""))
+      .statusCode() === 200)
+    try {
+      // 2^24 + 1 has no float: read through one it became 2^24
+      val fr = post("/collections/ev_mv_keys/summary/freq",
+        """{"key":"user_id","values":[16777217]}""")
+      assert(fr.statusCode() === 200, fr.body())
+      assert(fr.body().contains("\"user_id\":16777217"), fr.body())
+      assert(!fr.body().contains("16777216"), fr.body())
+      for (bad <- Seq("1.5", "9223372036854775808", "1e3")) {
+        val r = post("/collections/ev_mv_keys/summary/freq",
+          s"""{"key":"user_id","values":[7,$bad]}""")
+        assert(r.statusCode() === 400, s"$bad: ${r.body()}")
+        assert(r.body().contains("values"), r.body())
+      }
+    } finally delete("/collections/ev_mv_keys/summary")
+  }
+
   test("summary delete lifecycles over REST: sample quantiles serve " +
       "deterministically, retract nets sums and flips stats, chunk " +
       "delete drops a batch") {

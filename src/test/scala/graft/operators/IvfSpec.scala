@@ -646,6 +646,46 @@ class IvfSpec extends SparkSuite {
       pairs(IvfIndex.search(model, queries, k = 10, nprobe = 4)))
   }
 
+  test("a one-point search keeps its plan: every top-k aggregate groups " +
+      "by qid alone, no Expand or Generate feeds the candidate top-k, " +
+      "and a local batch plans its probes without a Spark job") {
+    import org.apache.spark.sql.execution.{ExpandExec, GenerateExec,
+      SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(queries.collect(): _*), queries.schema)
+    val cents = emb.where($"vec_id" < 16).orderBy($"vec_id")
+      .select($"embedding").collect().map(_.getSeq[Float](0).toArray)
+    val bq = IvfIndex.buildWithCentroids(emb, "vec_id", "embedding", cents,
+      kind = StorageKind.Bq)
+    def topKAggs(p: SparkPlan): Seq[BaseAggregateExec] = p.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(
+          _.aggregateFunction.isInstanceOf[TopKByScore]) => a
+    }
+    model.assigned.schema // the lazy build runs before counting
+    for ((m, sl) <- Seq((model, 0), (bq, 20))) {
+      val (res, planned) = jobsDuring(
+        IvfIndex.search(m, local, k = 10, nprobe = 4, shortlist = sl))
+      assert(planned === 0, s"${m.kind}: planning launched Spark jobs")
+      val plan = res.queryExecution.sparkPlan
+      val aggs = topKAggs(plan)
+      assert(aggs.nonEmpty, s"${m.kind}: no top-k aggregate in\n$plan")
+      for (a <- aggs)
+        assert(a.groupingExpressions.map(_.references.map(_.name).toSeq) ===
+          Seq(Seq("qid")), s"${m.kind}: top-k grouped by " +
+          s"${a.groupingExpressions}")
+      // the candidate top-k: the aggregates with no top-k below them
+      val first = aggs.filter(a => a.child.collect {
+        case b: BaseAggregateExec if topKAggs(b).nonEmpty => b
+      }.isEmpty)
+      for (a <- first)
+        assert(a.child.collect {
+          case e: ExpandExec => e: SparkPlan
+          case g: GenerateExec => g
+        }.isEmpty, s"${m.kind}: rows expanded under the top-k:\n$plan")
+    }
+  }
+
   test("a null query vector fails with an IllegalArgumentException " +
       "naming the qid") {
     val bad = spark.createDataFrame(

@@ -84,4 +84,18 @@ class MiniJsonSpec extends AnyFunSuite {
     intercept[MiniJson.BadJson](f.floats("xs"))
     intercept[MiniJson.BadJson](MiniJson.fields("[1]"))
   }
+
+  test("longs reads integers from their token text only") {
+    val f = MiniJson.fields(
+      """{"ok":[16777217,-9223372036854775808,"7",0],"frac":[1,1.5],
+        |"big":[9223372036854775808],"exp":[1e3],"neg0":[-0]}""".stripMargin)
+    assert(f.longs("ok").map(_.toSeq) ===
+      Some(Seq(16777217L, Long.MinValue, 7L, 0L)))
+    assert(f.longs("neg0").map(_.toSeq) === Some(Seq(0L)))
+    assert(f.longs("absent") === None)
+    for (key <- Seq("frac", "big", "exp")) {
+      val e = intercept[MiniJson.BadJson](f.longs(key))
+      assert(e.getMessage === s"$key must be an array of integers")
+    }
+  }
 }
