@@ -39,6 +39,47 @@ object Dedup {
     trackedCaches.add(df); df
   }
 
+  // Memo of relations keyed on the OPTIMIZED input plan plus the
+  // operator's parameters: callers that differ only in carried-along
+  // columns (raw table vs select) collapse to one plan and share one
+  // entry. A hit needs the same plan and the same session. The memo
+  // holds DataFrames — distributed relations, never collected rows.
+  private final class PlanMemo[K](cap: Int) {
+    private val entries = new java.util.concurrent.ConcurrentHashMap[
+      (Int, K),
+      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+
+    def apply(input: DataFrame, params: K)(build: => DataFrame)
+        : DataFrame = {
+      val plan = input.queryExecution.optimizedPlan
+      val key = (plan.semanticHash(), params)
+      val hit = entries.get(key)
+      if (hit != null && hit._1.sameResult(plan) &&
+          (hit._2.sparkSession eq input.sparkSession)) hit._2
+      else {
+        val built = build
+        if (entries.size < cap) entries.put(key, (plan, built))
+        built
+      }
+    }
+
+    def clear(): Unit = entries.clear()
+  }
+
+  // Persist (and track) a memoized relation unless its block is
+  // already cached; `eager` materializes it now so an expensive join
+  // runs once, not per downstream branch. A memo hit whose block was
+  // dropped (a caller's clearCache, or releaseCaches) re-persists here
+  // and recomputes from lineage — correctness never depends on the cache.
+  private def persisted(df: DataFrame, eager: Boolean): DataFrame = {
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+      trackCache(
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      if (eager) df.count()
+    }
+    df
+  }
+
   /** Unpersist every relation the dedup operators cached in this JVM
     * and reset the plan memos. Targeted alternative to
     * `spark.catalog.clearCache()` for long-lived shared sessions
@@ -51,8 +92,9 @@ object Dedup {
     while (it.hasNext) { it.next().unpersist(); it.remove() }
     pairMemo.clear()
     shingleMemo.clear()
-    ccMemo.clear()
     orderedMemo.clear()
+    minhashMemo.clear()
+    ccAltMemo.clear()
   }
 
   /** Exact duplicate grouping by md5 of a text column.
@@ -91,75 +133,34 @@ object Dedup {
     * corpora; None = exact).
     */
   // jaccardPairs is deterministic in (input plan, params); memoize the
-  // PERSISTED result DataFrame (never driver-collected rows — the pair
-  // set of a web-scale corpus is billions of ids and must stay
-  // distributed) so the registry queries sharing the documents corpus
-  // run the similarity join once per JVM. A memo hit whose cache block
-  // was dropped (caller clearCache) is re-persisted and re-materialized
-  // from lineage — correctness never depends on the cache.
-  private val pairMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Double, Option[Int]),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+  // PERSISTED result (never driver-collected rows — the pair set of a
+  // web-scale corpus is billions of ids and must stay distributed) so
+  // the registry queries sharing the documents corpus run the
+  // similarity join once per JVM.
+  private val pairMemo =
+    new PlanMemo[(String, String, Int, Double, Option[Int])](16)
 
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, tau: Double = 0.5,
       maxShingleFreq: Option[Int] = None): DataFrame = {
-    // Normalize to the two columns actually read and key the memo on
-    // the OPTIMIZED plan: projection collapsing makes callers that
-    // differ only in carried-along columns (raw table vs select)
-    // share one memo entry — one similarity join per corpus per JVM.
+    // only the two columns actually read key the memo
     val dfn = df.select(col(idCol), col(textCol))
-    val plan = dfn.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, textCol, n, tau, maxShingleFreq)
-    val hit = pairMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq df.sparkSession)) {
-      val memoized = hit._2
-      if (memoized.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE) {
-        memoized.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        memoized.count()
-      }
-      return memoized
-    }
-    val result = jaccardPairsUncached(dfn, idCol, textCol, n, tau,
-      maxShingleFreq)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
-    // materialize eagerly so the expensive similarity join runs once,
-    // not per downstream branch
-    result.count()
-    if (pairMemo.size < 16) pairMemo.put(key, (plan, result))
-    result
+    persisted(pairMemo(dfn, (idCol, textCol, n, tau, maxShingleFreq))(
+      jaccardPairsUncached(dfn, idCol, textCol, n, tau, maxShingleFreq)),
+      eager = true)
   }
 
   // One shingle scan per (corpus, n) per JVM: the exact-Jaccard and
   // MinHash paths (and cleanCorpus through them) all start from the
   // same hashed shingle sets, so the UDF scan is memoized as a
-  // persisted DataFrame keyed on the optimized input plan. A hit whose
-  // cache block was dropped is re-persisted; correctness never depends
-  // on the cache.
-  private val shingleMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+  // persisted DataFrame.
+  private val shingleMemo = new PlanMemo[(String, String, Int)](32)
 
   private[operators] def hashedShingleSetsShared(df: DataFrame,
       idCol: String, textCol: String, n: Int): DataFrame = {
     val dfn = df.select(col(idCol), col(textCol))
-    val plan = dfn.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, textCol, n)
-    val hit = shingleMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq df.sparkSession)) {
-      val m = hit._2
-      if (m.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
-      return m
-    }
-    val built = hashedShingleSets(dfn, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
-    if (shingleMemo.size < 32) shingleMemo.put(key, (plan, built))
-    built
+    persisted(shingleMemo(dfn, (idCol, textCol, n))(
+      hashedShingleSets(dfn, idCol, textCol, n)), eager = false)
   }
 
   /** Distinct word-n-gram shingles per id, as 64-bit FNV-1a hashes:
@@ -215,31 +216,17 @@ object Dedup {
   // containment family calls this for both sides of every pass (and
   // the bench re-invokes faces), while the pipeline underneath —
   // docFreq aggregation, a count() to pick dictionary vs join
-  // ordering, the ordering itself — is deterministic in the input
-  // plan. Same contract as shingleMemo: a hit whose cache block was
-  // dropped re-persists and recomputes from lineage.
-  private val orderedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Option[Int]),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+  // ordering, the ordering itself — is deterministic in the input plan.
+  private val orderedMemo =
+    new PlanMemo[(String, String, Int, Option[Int])](32)
 
   private def rareFirstOrderedSets(df: DataFrame, idCol: String,
       textCol: String, n: Int,
       maxShingleFreq: Option[Int]): DataFrame = {
     val dfn = df.select(col(idCol), col(textCol))
-    val plan = dfn.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, textCol, n, maxShingleFreq)
-    val hit = orderedMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq df.sparkSession)) {
-      val m = hit._2
-      if (m.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
-      return m
-    }
-    val built = rareFirstOrderedSetsUncached(dfn, idCol, textCol, n,
-      maxShingleFreq)
-    if (orderedMemo.size < 32) orderedMemo.put(key, (plan, built))
-    built
+    persisted(orderedMemo(dfn, (idCol, textCol, n, maxShingleFreq))(
+      rareFirstOrderedSetsUncached(dfn, idCol, textCol, n,
+        maxShingleFreq)), eager = false)
   }
 
   private def rareFirstOrderedSetsUncached(df: DataFrame, idCol: String,
@@ -254,7 +241,7 @@ object Dedup {
     val distinctShingles = docFreq.count()
     val cap = maxShingleFreq.map(_.toLong).getOrElse(Long.MaxValue)
     val dictCap = dictCapOverride.getOrElse(DictCapDefault)
-    // persisted: referenced by the prefix self-join AND verification,
+    // persisted by the caller: the prefix self-join AND verification,
     // which would otherwise recompute the shingle pipeline 4x
     (if (distinctShingles <= dictCap) {
       val dfMap: Map[Long, Long] = docFreq
@@ -283,7 +270,6 @@ object Dedup {
     })
       .select(col("id"), col("hs"), size(col("hs")).as("n_sh"))
       .where(col("n_sh") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
   }
 
   private def jaccardPairsUncached(df: DataFrame, idCol: String,
@@ -520,11 +506,9 @@ object Dedup {
     */
   // Memoized like jaccardPairs: the registry runs the LSH self-join
   // once per (corpus, params) per JVM even when several faces compose
-  // it (pair listing, leakage split, components). The memo holds the
-  // persisted DISTRIBUTED pair relation, never collected rows.
-  private val minhashMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Int, Int, Double, Long, Option[Int]),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+  // it (pair listing, leakage split, components).
+  private val minhashMemo = new PlanMemo[
+    (String, String, Int, Int, Int, Double, Long, Option[Int])](16)
 
   def minhashDupPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 128, bands: Int = 64,
@@ -532,27 +516,10 @@ object Dedup {
       maxBandDocFreq: Option[Int] = Some(DefaultMaxBandDocFreq))
       : DataFrame = {
     val dfn = df.select(col(idCol), col(textCol))
-    val plan = dfn.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, textCol, n, numHashes, bands,
-      tau, seed, maxBandDocFreq)
-    val hit = minhashMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq df.sparkSession)) {
-      val memoized = hit._2
-      if (memoized.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE) {
-        memoized.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        memoized.count()
-      }
-      return memoized
-    }
-    val result = minhashDupPairsUncached(dfn, idCol, textCol, n,
-      numHashes, bands, tau, seed, maxBandDocFreq)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
-    result.count()
-    if (minhashMemo.size < 16) minhashMemo.put(key, (plan, result))
-    result
+    persisted(minhashMemo(dfn,
+        (idCol, textCol, n, numHashes, bands, tau, seed, maxBandDocFreq))(
+      minhashDupPairsUncached(dfn, idCol, textCol, n, numHashes, bands,
+        tau, seed, maxBandDocFreq)), eager = true)
   }
 
   /** The raw (un-memoized, un-cached) LSH pair plan — plan-shape tests
@@ -1214,76 +1181,101 @@ object Dedup {
     * every vertex maps to its component's minimum id, the canonical
     * representative a pipeline keeps ("keep one per duplicate cluster",
     * which pair-level removal only approximates on transitive chains).
+    * Output: (id, component), typed like i and j. A vertex seen only in
+    * a self-pair labels to itself; a null endpoint fails with an
+    * IllegalArgumentException naming the pair.
     *
-    * Iterative min-label propagation: each round every vertex takes the
-    * min of its own and its neighbors' labels — one edges ⋈ labels
-    * shuffle plus a groupBy per round, converging in O(component
-    * diameter) rounds. Near-dup clusters are near-cliques (diameter
-    * 1-2), so 2-3 rounds in practice; `maxRounds` bounds pathological
-    * chains, and the only driver-side value per round is the
-    * changed-label count scalar. Output: (id, component).
+    * Up to [[LocalEdgeBound]] pairs with integral ids, the pairs are
+    * collected once and clustered on the driver by union-find: every
+    * union makes the smaller root the parent, so each root is its
+    * component's minimum, and path halving keeps `find` short. The
+    * result is a local relation, so reading it launches no Spark job.
+    * Jobs: the collect, plus a count unless `pairs` is a materialized
+    * cache (as the memoized [[jaccardPairs]] and [[minhashDupPairs]]
+    * outputs are), whose row count the cache already holds. Past the
+    * bound, [[connectedComponentsAlternating]] runs distributed with
+    * `maxRounds` as its round limit.
+    *
+    * Memory bound of the local path: a graph at the bound has at most
+    * 2^21 vertices, and its output relation retains about 85 B per
+    * vertex (175 MB measured for 2^20 disjoint pairs). Before that,
+    * the collected rows take about 160 B per pair, and the union-find
+    * 32 B per pair plus 12 B per vertex, so the driver needs about
+    * 250 MB of heap at the bound.
     */
-  private val ccMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
-
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 20)
-      : DataFrame = {
-    // Memoized per (pair-graph plan): the label-propagation rounds are
-    // driver-coordinated jobs, so repeated calls over the same pair set
-    // (e.g. cluster view + downstream consumers) must not re-iterate.
-    val plan = pairs.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), maxRounds)
-    val hit = ccMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq pairs.sparkSession)) return hit._2
-    val result = connectedComponentsUncached(pairs, maxRounds)
-    if (ccMemo.size < 16) ccMemo.put(key, (plan, result))
-    result
+      : DataFrame = componentsWithin(pairs, maxRounds, LocalEdgeBound)
+
+  /** Pair count up to which [[connectedComponents]] clusters on the
+    * driver. */
+  val LocalEdgeBound: Long = 1L << 20
+
+  private[operators] def componentsWithin(pairs: DataFrame, maxRounds: Int,
+      edgeBound: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types._
+    require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
+    // the type a union of the two endpoint columns widens to
+    val idType = pairs.select(col("i").as("v"))
+      .unionAll(pairs.select(col("j").as("v"))).schema.head.dataType
+    if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(idType) ||
+        cachedRowCount(pairs).getOrElse(pairs.count()) > edgeBound)
+      return connectedComponentsAlternating(pairs, maxRounds)
+
+    // endpoints of pair k at 2k and 2k + 1
+    val ends = pairs.select(col("i").cast(LongType), col("j").cast(LongType))
+      .collect().flatMap { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1),
+          s"connectedComponents: pair (${r.get(0)}, ${r.get(1)}) has a " +
+            "null endpoint")
+        Array(r.getLong(0), r.getLong(1))
+      }
+    // vertex index order is id order, so the smaller root is the
+    // smaller id
+    val ids = java.util.Arrays.stream(ends).sorted().distinct().toArray
+    val parent = Array.range(0, ids.length)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    (ends.indices by 2).foreach { k =>
+      val ra = find(java.util.Arrays.binarySearch(ids, ends(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ends(k + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // parent(v) <= v holds throughout, so one ascending pass sets every
+    // vertex to its root
+    parent.indices.foreach(v => parent(v) = parent(parent(v)))
+    val local = org.apache.spark.sql.graftshim.GraftShims.dataFrame(
+      pairs.sparkSession, LocalRelation(
+        Seq(AttributeReference("id", LongType, nullable = false)(),
+          AttributeReference("component", LongType, nullable = false)()),
+        ids.indices.map(v => InternalRow(ids(v), ids(parent(v))))))
+    if (idType == LongType) local
+    else local.select(col("id").cast(idType).as("id"),
+      col("component").cast(idType).as("component"))
   }
 
-  private def connectedComponentsUncached(pairs: DataFrame, maxRounds: Int)
-      : DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs.select(col("i").as("a"), col("j").as("b"))
-      .unionAll(pairs.select(col("j").as("a"), col("i").as("b")))
-      .persist(lvl).transform(trackCache)
-    // localCheckpoint (not persist): each round's plan references the
-    // previous labels twice (union + join), so without lineage
-    // truncation the logical plan grows ~3^rounds and the driver dies
-    // on plan handling long before data does. On a cluster with
-    // executor-loss concerns, set a checkpoint dir and swap for
-    // checkpoint() — same shape.
-    var labels = edges.select(col("a").as("v")).distinct()
-      .select(col("v"), col("v").as("l"))
-      .localCheckpoint(true)
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
-      val nbr = edges
-        .join(labels.select(col("v").as("b"), col("l").as("nl")), "b")
-        .select(col("a").as("v"), col("nl").as("l"))
-      val next = labels.unionAll(nbr)
-        .groupBy(col("v")).agg(min(col("l")).as("l"))
-        .localCheckpoint(true)
-      changed = next
-        .join(labels.select(col("v"), col("l").as("lp")), "v")
-        .where(col("l") =!= col("lp")).count()
-      labels = next
-      round += 1
-    }
-    edges.unpersist()
-    labels.select(col("v").as("id"), col("l").as("component"))
-  }
+  // Exact row count of a fully materialized cached relation, read from
+  // the cache's own counter without a job; None for anything else.
+  private def cachedRowCount(df: DataFrame): Option[Long] =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+      .collect { case c if c.isCachedColumnBuffersLoaded =>
+        c.rowCountStats.value.longValue }
 
   /** Connected components by alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014). Same output contract as [[connectedComponents]] —
-    * (id, component-min) — but converges in O(log² n) rounds regardless
-    * of component DIAMETER, where min-label propagation needs
-    * O(diameter) rounds. This is the scale path for chain-shaped dup
-    * graphs (template drift d1~d2~…~dk stretches near-dup components
-    * into long paths that defeat per-round propagation).
+    * SoCC 2014) — the distributed path of [[connectedComponents]], with
+    * the same output contract, (id, component-min). It converges in
+    * O(log² n) rounds regardless of component DIAMETER, so chain-shaped
+    * dup graphs (template drift d1~d2~…~dk stretches near-dup
+    * components into long paths) cost no more rounds than cliques.
     *
     * Each phase is a partial-aggregated `groupBy` (per-node min
     * neighbor: a power-law hub's edges collapse map-side to one row per
@@ -1291,32 +1283,31 @@ object Dedup {
     * broadcast — the per-node min table is |V|, tiny next to |E| — or
     * skew-split. Edges stay canonically ordered (hi, lo), so the state
     * per round is ≤ the input edge count; `localCheckpoint` truncates
-    * lineage exactly like the propagation variant. Convergence is
-    * detected by an (edge-count, xor-of-edge-hashes) signature — two
-    * driver scalars per round, never edge data.
+    * lineage each round. Convergence is detected by an (edge-count,
+    * xor-of-edge-hashes) signature — two driver scalars per round,
+    * never edge data. A graph that has not converged after `maxRounds`
+    * rounds throws an IllegalStateException naming `maxRounds`; a null
+    * endpoint fails the first round with an error naming the pair.
     */
   def connectedComponentsAlternating(pairs: DataFrame, maxRounds: Int = 50)
       : DataFrame = {
-    val plan = pairs.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), maxRounds)
-    val hit = ccAltMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq pairs.sparkSession)) return hit._2
-    val result = ccAlternatingUncached(pairs, maxRounds)
-    if (ccAltMemo.size < 16) ccAltMemo.put(key, (plan, result))
-    result
+    require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
+    ccAltMemo(pairs, maxRounds)(ccAlternatingUncached(pairs, maxRounds))
   }
 
-  private val ccAltMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+  private val ccAltMemo = new PlanMemo[Int](16)
 
   private def ccAlternatingUncached(pairs: DataFrame, maxRounds: Int)
       : DataFrame = {
     // Canonical (hi, lo) edge set, self-loops dropped (a vertex seen
     // only in a self-pair labels to itself via the final left join).
+    val nullPair = raise_error(format_string(
+      "connectedComponents: pair (%s, %s) has a null endpoint",
+      col("i"), col("j")))
     var e = pairs
-      .select(greatest(col("i"), col("j")).as("x"),
+      .select(
+        when(col("i").isNull || col("j").isNull, nullPair)
+          .otherwise(greatest(col("i"), col("j"))).as("x"),
         least(col("i"), col("j")).as("y"))
       .where(col("x") =!= col("y")).distinct()
       .localCheckpoint(true)
@@ -1362,6 +1353,9 @@ object Dedup {
       last = s
       round += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge within maxRounds=$maxRounds " +
+        "large-/small-star rounds; raise maxRounds")
 
     // Converged edge set is a union of stars (v, root); roots and
     // self-pair-only vertices label to themselves.

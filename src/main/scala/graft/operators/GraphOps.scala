@@ -194,6 +194,18 @@ object GraphOps {
     * parts-per-million as floor(2·tri·10^6 / (deg·(deg−1)))
     * (0 when deg < 2) — the curation-facing signal (link-farm pages
     * show implausibly high LCC at high degree).
+    *
+    * Memory bound past the broadcast gate: both joins are shuffled
+    * hash joins built on the oriented edge set, and a shuffled-hash
+    * build side cannot spill. Each task holds its partition of the m
+    * oriented edges as a hash relation of about 64 B × m / P, where P
+    * is the shuffle partition count left after AQE coalescing (which
+    * packs partitions up to `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * of shuffled edges). The bound assumes the join keys spread evenly
+    * over those partitions: the wedge join's key u carries at most its
+    * oriented out-degree, √(2m) edges, and the closing join's key
+    * (v, w) is unique per edge, so no single key breaks it; only a
+    * partitioner that lands many heavy keys on one task does.
     */
   def triangles(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {

@@ -434,7 +434,8 @@ object PipelineOps {
     * group draws the same `u`, so the group moves as one. Same LCG
     * draw as [[datasetSplitSql]]. Near-dup-safe variants compose the
     * MinHash pair graph's connected components as the key instead
-    * (not SQL-restatable — use `Dedup.connectedComponents`).
+    * (`Dedup.connectedComponents`, whose unbounded-diameter closure
+    * a fixed SQL template cannot restate).
     */
   def leakageSplitSql(d: Dialect, table: String = "documents"): String =
     s"""SELECT doc_id, kept_id, u,

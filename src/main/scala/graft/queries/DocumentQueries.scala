@@ -232,8 +232,9 @@ object DocumentQueries {
     // Duplicate clusters: connected components over the exact-Jaccard
     // pair graph — each doc labeled with its cluster's minimum id (the
     // canonical representative). Oracle: the pair SQL + unrolled
-    // min-label propagation (cluster diameter here ≪ the 6 unrolled
-    // steps; the Spark side iterates to the true fixpoint).
+    // min-label propagation (cluster diameter here ≪ the 12 unrolled
+    // steps); the Spark side clusters exactly, by a driver union-find
+    // at this pair count (distributed star rounds past its bound).
     "q_dedup_components" -> ((s, dir) =>
       Dedup.connectedComponents(
         Dedup.jaccardPairs(docs(s, dir), "doc_id", "text", n = 3, tau = 0.5))
@@ -824,8 +825,8 @@ object DocumentQueries {
   // its own and its neighbors' labels). K=12 covers any component of
   // diameter <= 12 — near-dup clusters are near-cliques (diameter 1-2
   // observed), but template-drift chains d1~d2~...~dk can stretch the
-  // diameter, so the margin is deliberately wide; the Spark side
-  // iterates to the true fixpoint regardless.
+  // diameter, so the margin is deliberately wide; the Spark side is
+  // exact at any diameter (union-find, or star rounds to convergence).
   // MATERIALIZED is load-bearing: each step references the previous
   // one twice (union + join), so DuckDB's default CTE inlining would
   // expand 2^K copies of the whole pair pipeline — thousands of

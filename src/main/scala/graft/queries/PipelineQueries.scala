@@ -357,9 +357,11 @@ object PipelineQueries {
     }),
 
     // Duplicate clusters via alternating large-star/small-star — the
-    // O(log² n)-round path for high-diameter dup graphs. Same pair
-    // graph and same oracle as q_dedup_components (both converge to
-    // component-min labels; only the round structure differs).
+    // distributed path q_dedup_components takes past its driver bound,
+    // forced here: O(log² n) rounds at any component diameter. Same
+    // pair graph and same oracle as q_dedup_components (both give
+    // component-min labels; this one by distributed rounds instead of
+    // a driver union-find).
     "q_dedup_components_lss" -> ((s, dir) => {
       import s.implicits._
       Dedup.connectedComponentsAlternating(

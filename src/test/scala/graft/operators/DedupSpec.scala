@@ -337,10 +337,13 @@ class DedupSpec extends SparkSuite {
   test("releaseCaches unpersists only the dedup-created relations — " +
       "a foreign component's cache survives") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    Dedup.releaseCaches()
     // a foreign cache, standing in for e.g. an HttpApi survivor view
     val foreign = docs.where($"doc_id" < 50)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     foreign.count()
+    // caches other suites left behind, plus the foreign one
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     try {
       Dedup.minhashDupPairs(docs, "doc_id", "text", tau = 0.5).count()
       val cachedDuring = spark.sparkContext.getPersistentRDDs.size
@@ -354,6 +357,12 @@ class DedupSpec extends SparkSuite {
       assert(Dedup.minhashDupPairs(docs, "doc_id", "text", tau = 0.5)
         .count() > 0)
       Dedup.releaseCaches()
+      // the memo hit after the first release re-persisted its relation;
+      // the second release must free it too
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"dedup caches survived a release: $leaked")
+      assert(foreign.storageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE)
     } finally foreign.unpersist()
   }
 

@@ -269,7 +269,8 @@ class GraphOpsSpec extends SparkSuite {
       AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{
-      ShuffledHashJoinExec, SortMergeJoinExec}
+      BaseJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     def allNodes(p: SparkPlan): Seq[SparkPlan] = {
       val expanded = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -320,6 +321,29 @@ class GraphOpsSpec extends SparkSuite {
       assert(smj.isEmpty,
         s"wedge pipeline sort-merged past the broadcast gate:\n" +
           smj.map(_.toString).mkString("\n").take(4000))
+      // the stated build-side bound holds only if every shuffled hash
+      // join builds on the oriented edge set: its build side reads the
+      // oriented cache (a leaf here) and joins nothing itself
+      def toCache(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => toCache(a.executedPlan)
+        case q: QueryStageExec => toCache(q.plan)
+        case _: InMemoryTableScanExec => Nil
+        case other => other.children.flatMap(toCache)
+      })
+      def orientedScan(n: SparkPlan): Boolean = n match {
+        case s: InMemoryTableScanExec =>
+          s.relation.output.exists(_.name == "dv")
+        case _ => false
+      }
+      val shj = triNodes.collect { case j: ShuffledHashJoinExec => j }
+        .filter(j => toCache(j).exists(orientedScan))
+      assert(shj.size >= 2, "expected the wedge and closing joins")
+      shj.foreach { j =>
+        val build = toCache(if (j.buildSide == BuildLeft) j.left else j.right)
+        assert(build.exists(orientedScan) &&
+          !build.exists(_.isInstanceOf[BaseJoinExec]),
+          s"build side is not the oriented edge set:\n$j")
+      }
     } finally {
       spark.conf.unset("spark.graft.triangles.broadcastMaxBytes")
       spark.listenerManager.unregister(listener)

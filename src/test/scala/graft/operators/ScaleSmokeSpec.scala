@@ -58,8 +58,8 @@ class ScaleSmokeSpec extends SparkSuite {
 
   test("connected components scale: 60k-edge graph resolves in few rounds") {
     // 10k chains of length 3 + one 1k-member clique + 50k random edges
-    // over 40k vertices — components must resolve without the logical
-    // plan or round count exploding (localCheckpoint truncation).
+    // over 40k vertices — components must resolve well inside the
+    // time bound (a driver union-find at this edge count).
     val rnd = new scala.util.Random(11)
     val chains = (0 until 10000).flatMap { c =>
       val b = 200000L + c * 3
