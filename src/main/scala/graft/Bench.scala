@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
-  * local[32] to mirror a 32-core executor; shuffle partitions match
-  * cores (AQE coalesces further).
+  * The session is `GraftSession.fromEnv()`: local[SPARK_GRAFT_CPUS],
+  * shuffle partitions matching cores (AQE coalesces further).
   *
   * Methodology: each query runs SPARK_GRAFT_REPS times (default 3) and
   * reports the per-query MIN — single runs on a noisy box showed 6x
@@ -36,20 +34,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory",
-        sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.TextFunctions.register(spark)
+    val spark = GraftSession.fromEnv()
 
     // JVM/codegen warm-up on the smallest SF so per-query numbers
     // measure the plan, not first-use compilation: one relational
@@ -62,13 +47,8 @@ object Bench {
     spark.catalog.clearCache()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // Optional comma-separated query filter for focused profiling runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
+    // SPARK_GRAFT_ONLY narrows the suite for focused profiling runs.
+    val selected = SparkEntry.selectedQueries
     val loadStart = loadavg()
     // Per rep: wall seconds, index-build seconds within it (drained
     // from BuildTimer — real instrumented time in IvfIndex

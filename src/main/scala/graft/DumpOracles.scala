@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /** Writes SparkEntry.oracleSql as JSON without running any query — lets
   * local iteration check DuckDB-side syntax of new oracles in seconds
   * instead of a full Verify pass.
@@ -9,18 +7,7 @@ import java.nio.file.{Files, Paths}
 object DumpOracles {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/oracle_sql.json"
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    SparkEntry.writeOracleJson(out)
     println(s"wrote ${SparkEntry.oracleSql.size} oracles to $out")
   }
 }

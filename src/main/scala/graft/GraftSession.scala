@@ -27,6 +27,22 @@ object GraftSession {
   def getOrCreate(master: String = "local[32]"): SparkSession =
     register(builder(master).getOrCreate())
 
+  /** The session every graft main runs on: `local[n]` with n from
+    * SPARK_GRAFT_CPUS (default: the available processors), one shuffle
+    * partition per core, every graft SQL surface registered, Spark
+    * logging at WARN. Driver heap is fixed at JVM launch (`-Xmx`), not
+    * here.
+    */
+  def fromEnv(): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = register(builder(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .getOrCreate())
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Register every graft SQL surface on an EXISTING session — the
     * entry point for a stock spark-shell (`GraftSession.register(spark)`)
     * or any externally-built session.

@@ -1,30 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for registry queries — the plan
   * evidence the optimization rounds commit under `plans/r{N}/`.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> q1,q2,...
-  * Writes <outDir>/<query>_<suffix>.txt per query. Same session shape
-  * as Bench (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus, AQE
-  * on) so the dumped initial plans match what the bench executes.
+  * Writes <outDir>/<query>_<suffix>.txt per query. Same session as
+  * Bench (`GraftSession.fromEnv()`) so the dumped initial plans match
+  * what the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, qcsv) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.TextFunctions.register(spark)
+    val spark = GraftSession.fromEnv()
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir))
     qcsv.split(',').map(_.trim).filter(_.nonEmpty).foreach { q =>

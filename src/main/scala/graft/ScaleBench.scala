@@ -45,14 +45,7 @@ object ScaleBench {
     val only: Option[Set[String]] =
       if (args.length >= 4) Some(args(3).split(",").toSet) else None
     def wanted(n: String) = only.forall(_.contains(n))
-    val spark = SparkSession.builder()
-      .appName("graft-scale-bench").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .config("spark.driver.memory", "48g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     // report the triangles broadcast-guard decision per dir: the
     // co-purchase edge count against the same bytes gate the operator
@@ -78,11 +71,10 @@ object ScaleBench {
 
     val results = for ((name, fn) <- all; dir <- Seq(dirA, dirB)) yield {
       val times = (1 to reps).map { _ =>
-        // drop cross-call memos (shared shingle cache, autotune
-        // samples) so every rep measures the full cold path — min-of-
+        // drop cross-call memos (shared shingle cache, IVF build
+        // handles) so every rep measures the full cold path — min-of-
         // reps otherwise reports the cache-hit time for dedup faces
         graft.operators.Dedup.releaseCaches()
-        graft.operators.Autotune.releaseSamples()
         graft.operators.IvfIndex.releaseModels()
         val t0 = System.nanoTime()
         val n = fn(dir).count()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Structure-preserving volume amplifier for the driver's parquet
@@ -138,12 +138,7 @@ object ScaleFixture {
     val (srcDir, outDir, factor) = (args(0), args(1), args(2).toInt)
     val embFactor =
       if (args.length >= 4) args(3).toInt else factor * 10
-    val spark = SparkSession.builder()
-      .appName("graft-scale-fixture").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = GraftSession.fromEnv()
     def read(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")

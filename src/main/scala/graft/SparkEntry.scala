@@ -58,4 +58,23 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
+
+  /** [[queries]] narrowed to the comma-separated names in
+    * SPARK_GRAFT_ONLY when it is set (focused iteration), else all.
+    */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY") match {
+      case Some(csv) =>
+        val names = csv.split(',').map(_.trim).filter(_.nonEmpty).toSet
+        queries.filter(kv => names(kv._1))
+      case None => queries
+    }
+
+  /** Write [[oracleSql]] to `path` as one JSON object (name → SQL). */
+  def writeOracleJson(path: String): Unit = {
+    import graft.util.Json.quote
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      oracleSql.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
+        .mkString("{", ",", "}"))
+  }
 }

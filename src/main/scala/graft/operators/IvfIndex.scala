@@ -298,9 +298,9 @@ object IvfIndex {
   }
 
   /** Release every memoized build handle — the long-lived-session
-    * hygiene hook, mirroring `Dedup.releaseCaches` and
-    * `Autotune.releaseSamples`. Correctness never depends on the
-    * memo (a fresh call rebuilds from lineage), and index DIRECTORIES
+    * hygiene hook, mirroring `Dedup.releaseCaches`. Correctness
+    * never depends on the memo (a fresh call rebuilds from lineage),
+    * and index DIRECTORIES
     * on disk are untouched: only the in-JVM model handles are dropped,
     * so `load(path)` keeps working.
     */

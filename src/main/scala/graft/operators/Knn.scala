@@ -16,14 +16,20 @@ import graft.functions.VectorFunctions
   * corpus scale this is embarrassingly parallel with no corpus shuffle.
   */
 object Knn {
-  def distance(metric: String)(a: Column, b: Column): Column = metric match {
-    case "l2sq" => VectorFunctions.l2sq_dist(a, b)
-    case "cos" => VectorFunctions.cos_dist(a, b)
-    case "l1" => VectorFunctions.l1_dist(a, b)
-    // smaller = better everywhere, so negate the inner product
-    case "dot" => -VectorFunctions.inner_product(a, b)
-    case m => throw new IllegalArgumentException(s"unknown metric: $m")
-  }
+  // smaller = better everywhere, so the inner product is negated
+  private val distances =
+    scala.collection.immutable.ListMap[String, (Column, Column) => Column](
+      "l2sq" -> VectorFunctions.l2sq_dist,
+      "cos" -> VectorFunctions.cos_dist,
+      "l1" -> VectorFunctions.l1_dist,
+      "dot" -> ((a, b) => -VectorFunctions.inner_product(a, b)))
+
+  /** Every metric name [[distance]] accepts. */
+  val metrics: Seq[String] = distances.keys.toSeq
+
+  def distance(metric: String)(a: Column, b: Column): Column =
+    distances.getOrElse(metric, throw new IllegalArgumentException(
+      s"unknown metric: $metric"))(a, b)
 
   /** Aggregate column: top-k smallest (score, id) pairs. */
   def topk_by_score(score: Column, id: Column, k: Int): Column =

@@ -1110,8 +1110,7 @@ object VectorQueries {
     // grid): per nprobe, the integer count of exact-top-10 hits the
     // partial probe recovers across the 10 query points — assignment,
     // probing, ranking and the count all restate as argmins in
-    // DuckDB. The learned-k-means + wall-clock sweep (Autotune.runIvf)
-    // stays spec-graded (AutotuneSpec).
+    // DuckDB.
     "q_autotune_ivf" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val cents = anchors16(emb)
@@ -1124,7 +1123,7 @@ object VectorQueries {
     // (nprobe, shortlist) grid, each variant's two-stage search
     // (hamming shortlist → exact rescore) intersected with exact
     // truth — the q_bq_recall_fixed restatement generalized over the
-    // grid. Wall-clock sweep (Autotune.runBq) stays spec-graded.
+    // grid.
     "q_autotune_bq" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val cents = anchors16(emb)
@@ -1136,8 +1135,6 @@ object VectorQueries {
     // The storage-kind sweep's recall axis under ONE frozen shared
     // quantizer: the full kind × nprobe grid (q_quant_kinds
     // generalized to both probe depths, keyed by experiment id).
-    // Wall-clock + bytes/dim sweep (Autotune.runKinds) stays
-    // spec-graded.
     "q_autotune_kinds" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val cents = anchors16(emb)

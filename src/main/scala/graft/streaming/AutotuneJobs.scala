@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.Autotune
+import graft.operators.{Autotune, Knn}
 import graft.util.MiniJson
 
 /** Daemon autotune jobs — the reference daemon's second job kind
@@ -30,14 +30,14 @@ object AutotuneJobs {
   type AutotuneState = JsonJobStore.Job[AutotuneSpec]
 
   /** The reference's operator names (external_index/cli.rs UMetricKind)
-    * mapped onto the engine's distance-function keys.
+    * that the engine computes, mapped onto its distance-function keys
+    * (`dist_hamming_ops` has no distance over float vectors here).
     */
-  def metricForOperator(op: String): String = op match {
-    case "dist_l2sq_ops" => "l2sq"
-    case "dist_cos_ops" => "cos"
-    case "dist_hamming_ops" => "hamming"
-    case other => other // already an engine metric name
-  }
+  private val operatorMetrics =
+    Map("dist_l2sq_ops" -> "l2sq", "dist_cos_ops" -> "cos")
+
+  def metricForOperator(op: String): String =
+    operatorMetrics.getOrElse(op, op) // else already an engine metric name
 
   final class AutotuneStore(dir: String)
       extends JsonJobStore[AutotuneSpec](dir, "autotune_") {
@@ -55,15 +55,22 @@ object AutotuneJobs {
         f.str("workDir").get)
 
     /** The INSERT INTO autotune_jobs analog. `operator` accepts the
-      * reference's *_ops names or engine metric names.
+      * reference's *_ops names or engine metric names; one whose metric
+      * [[graft.operators.Knn.distance]] cannot compute is rejected here
+      * with an `IllegalArgumentException`, not queued to fail later.
       */
     def add(sourceDir: String, idCol: String, vecCol: String,
         operator: String = "dist_l2sq_ops", targetRecall: Double = 99.9,
         k: Int = 10, sampleN: Int = 10000,
-        workBase: String = null): AutotuneState = create(id =>
-      AutotuneSpec(id, sourceDir, idCol, vecCol, metricForOperator(operator),
+        workBase: String = null): AutotuneState = {
+      val metric = metricForOperator(operator)
+      require(Knn.metrics.contains(metric), s"autotune operator " +
+        s"'$operator' has no engine distance; accepted: " +
+        (operatorMetrics.keys.toSeq.sorted ++ Knn.metrics).mkString(", "))
+      create(id => AutotuneSpec(id, sourceDir, idCol, vecCol, metric,
         targetRecall, k, sampleN,
         Option(workBase).getOrElse(s"$dir/work_$id")))
+    }
 
     /** The worker body (autotune_jobs.rs:86-200): run the grid with
       * progress updates and cancellation checks, write the results

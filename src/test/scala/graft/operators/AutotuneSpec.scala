@@ -40,83 +40,6 @@ class AutotuneSpec extends SparkSuite {
     }
   }
 
-  test("IVF sweep: full grid reports, recall rises with nprobe, " +
-      "full probe recalls 100, builds amortize per cell count") {
-    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val rs = Autotune.runIvf(emb, "vec_id", "embedding", k = 5,
-      sampleN = 500, nQueries = 5, targetRecall = 101.0)
-    assert(rs.size === Autotune.ivfGrid.size) // 101 disables early stop
-    // (16,16) is a full probe == exact search
-    val full = rs.find(r => r.nCells === 16 && r.nprobe === 16).get
-    assert(full.recall === 100.0)
-    // within nCells=16, wider probes can only help
-    val n16 = rs.filter(_.nCells === 16).sortBy(_.nprobe).map(_.recall)
-    assert(n16 === n16.sorted, s"recall not monotone in nprobe: $n16")
-    // the two nCells=16 variants share one build (the IvfIndex memo)
-    assert(rs.filter(_.nCells === 16).map(_.buildTimeMs).distinct.size === 1)
-    val best = Autotune.bestIvfVariant(rs, targetRecall = 99.9)
-    assert(best.recall >= 99.9 || best.recall === rs.map(_.recall).max)
-  }
-
-  test("BQ sweep: one build for the whole grid, full-probe wide " +
-      "shortlist recalls 100, selection policy holds") {
-    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    // 50-row sample so the widest variant is provably exhaustive
-    val rs = Autotune.runBq(emb, "vec_id", "embedding", k = 5,
-      sampleN = 50, nQueries = 5, targetRecall = 101.0)
-    assert(rs.size === Autotune.bqGrid.size) // 101 disables early stop
-    // both axes are query params: every variant shares ONE build
-    assert(rs.map(_.buildTimeMs).distinct.size === 1)
-    // (16, 100): full probe + shortlist >= the 50-row sample == exact
-    val full = rs.find(r => r.nprobe === 16 && r.shortlist === 100).get
-    assert(full.recall === 100.0)
-    // at fixed nprobe, a deeper rescore pool can only help
-    val n4 = rs.filter(_.nprobe === 4).sortBy(_.shortlist).map(_.recall)
-    assert(n4 === n4.sorted, s"recall not monotone in shortlist: $n4")
-    val best = Autotune.bestBqVariant(rs, targetRecall = 99.9)
-    assert(best.recall >= 99.9 || best.recall === rs.map(_.recall).max)
-  }
-
-  test("kind sweep: every kind shares one quantizer, f32/f16/sq8 at " +
-      "full probe are exact on a small sample, bytes ordering holds, " +
-      "bestKind minimizes storage among passing kinds") {
-    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val rs = Autotune.runKinds(emb, "vec_id", "embedding", k = 5,
-      sampleN = 50, nQueries = 5, targetRecall = 101.0, nCells = 4,
-      shortlist = 100)
-    assert(rs.size === Autotune.kindGrid.size)
-    // full probe, lossless-or-near kinds on 50 rows: exact recall
-    // (f16/sq8 grids cannot flip top-5 on a 50-row sample in practice
-    // — and if they ever did, this assertion is the alarm we want)
-    for (kind <- Seq("f32", "f16", "sq8")) {
-      val full = rs.find(r => r.kind === kind && r.nprobe === 16).get
-      assert(full.recall === 100.0, s"$kind full-probe recall")
-    }
-    // bq at full probe + shortlist >= sample is exact too (rescore)
-    assert(rs.find(r => r.kind === "bq" && r.nprobe === 16)
-      .get.recall === 100.0)
-    // the storage axis the sweep trades against
-    val bytes = rs.groupBy(_.kind).view.mapValues(_.head.bytesPerDim)
-    assert(bytes("f32") > bytes("f16") && bytes("f16") > bytes("sq8") &&
-      bytes("sq8") > bytes("bq"))
-    // bestKind: cheapest bytes among kinds meeting the target
-    val best = Autotune.bestKind(rs, targetRecall = 99.9)
-    assert(best.kind === "bq" && best.recall >= 99.9)
-    val df = Autotune.kindsToDF(spark, rs)
-    assert(df.columns.toSeq === Seq("experiment_id", "kind", "nprobe",
-      "recall", "latency", "build_time", "bytes_per_dim"))
-  }
-
-  test("IVF sweep results DF carries the family's axes in the " +
-      "autotune_results shape") {
-    val df = Autotune.ivfToDF(spark,
-      Seq(Autotune.IvfResult(0, 16, 4, 97.5, 1.0, 2.0)))
-    assert(df.columns.toSeq ===
-      Seq("experiment_id", "n_cells", "nprobe", "recall", "latency",
-        "build_time"))
-    assert(df.head().getDouble(3) === 97.5)
-  }
-
   test("results DF matches the reference autotune_results schema") {
     val df = Autotune.toDF(spark,
       Seq(Autotune.Result(0, 6, 32, 64, 100.0, 1.0, 2.0)))

@@ -92,10 +92,25 @@ class AutotuneJobsSpec extends SparkSuite {
   test("store round-trips state through JSON and lists by id") {
     val (_, store) = freshStore()
     store.add("/a", "id", "v", "dist_l2sq_ops", 98.5, 5, 100)
-    store.add("/b", "id", "v", "hamming", 99.9, 10, 1000)
+    store.add("/b", "id", "v", "l1", 99.9, 10, 1000)
     val all = store.list()
     assert(all.map(_.spec.id) === Seq(1L, 2L))
     assert(all.head.spec.targetRecall === 98.5 && all.head.spec.k === 5)
-    assert(all(1).spec.metric === "hamming")
+    assert(all(1).spec.metric === "l1")
+  }
+
+  test("add rejects an operator whose metric the engine cannot compute, " +
+      "naming it and the accepted names, and queues nothing") {
+    val (_, store) = freshStore()
+    for (op <- Seq("dist_hamming_ops", "foo")) {
+      val e = intercept[IllegalArgumentException] {
+        store.add("/a", "id", "v", operator = op)
+      }
+      assert(e.getMessage.contains(s"'$op'"), e.getMessage)
+      for (name <- Seq("dist_l2sq_ops", "dist_cos_ops") ++
+          graft.operators.Knn.metrics)
+        assert(e.getMessage.contains(name), e.getMessage)
+    }
+    assert(store.list().isEmpty)
   }
 }
