@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.util.{CachedRelations, PlanMemo}
 
 /** Deduplication operators for training-data pipelines: exact,
   * n-gram-Jaccard (exact), MinHash-LSH (approximate, scale path),
@@ -25,60 +26,9 @@ import graft.functions.{TextFunctions => T, VectorFunctions => V}
   */
 object Dedup {
 
-  // Registry of every relation the dedup operators persist (memoized
-  // or per-call), so a long-lived shared session can release exactly
-  // these caches and nothing else — a session-wide clearCache() would
-  // also evict other components' materialized state (e.g. HttpApi's
-  // survivor views, whose contract is that later SELECTs read cache).
-  private val trackedCaches =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[DataFrame,
-        java.lang.Boolean]())
-
-  private[operators] def trackCache(df: DataFrame): DataFrame = {
-    trackedCaches.add(df); df
-  }
-
-  // Memo of relations keyed on the OPTIMIZED input plan plus the
-  // operator's parameters: callers that differ only in carried-along
-  // columns (raw table vs select) collapse to one plan and share one
-  // entry. A hit needs the same plan and the same session. The memo
-  // holds DataFrames — distributed relations, never collected rows.
-  private final class PlanMemo[K](cap: Int) {
-    private val entries = new java.util.concurrent.ConcurrentHashMap[
-      (Int, K),
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
-
-    def apply(input: DataFrame, params: K)(build: => DataFrame)
-        : DataFrame = {
-      val plan = input.queryExecution.optimizedPlan
-      val key = (plan.semanticHash(), params)
-      val hit = entries.get(key)
-      if (hit != null && hit._1.sameResult(plan) &&
-          (hit._2.sparkSession eq input.sparkSession)) hit._2
-      else {
-        val built = build
-        if (entries.size < cap) entries.put(key, (plan, built))
-        built
-      }
-    }
-
-    def clear(): Unit = entries.clear()
-  }
-
-  // Persist (and track) a memoized relation unless its block is
-  // already cached; `eager` materializes it now so an expensive join
-  // runs once, not per downstream branch. A memo hit whose block was
-  // dropped (a caller's clearCache, or releaseCaches) re-persists here
-  // and recomputes from lineage — correctness never depends on the cache.
-  private def persisted(df: DataFrame, eager: Boolean): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      trackCache(
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      if (eager) df.count()
-    }
-    df
-  }
+  // Every relation the dedup operators persist (memoized or per-call),
+  // so [[releaseCaches]] frees exactly these and nothing else.
+  private[operators] val caches = new CachedRelations
 
   /** Unpersist every relation the dedup operators cached in this JVM
     * and reset the plan memos. Targeted alternative to
@@ -88,8 +38,7 @@ object Dedup {
     * block was dropped re-persists from lineage on next use.
     */
   def releaseCaches(): Unit = {
-    val it = trackedCaches.iterator()
-    while (it.hasNext) { it.next().unpersist(); it.remove() }
+    caches.release()
     pairMemo.clear()
     shingleMemo.clear()
     orderedMemo.clear()
@@ -138,29 +87,30 @@ object Dedup {
   // the registry queries sharing the documents corpus run the
   // similarity join once per JVM.
   private val pairMemo =
-    new PlanMemo[(String, String, Int, Double, Option[Int])](16)
+    new PlanMemo[(String, String, Int, Double, Option[Int]), DataFrame](16,
+      caches.persist(_, eager = true))
 
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, tau: Double = 0.5,
       maxShingleFreq: Option[Int] = None): DataFrame = {
     // only the two columns actually read key the memo
     val dfn = df.select(col(idCol), col(textCol))
-    persisted(pairMemo(dfn, (idCol, textCol, n, tau, maxShingleFreq))(
-      jaccardPairsUncached(dfn, idCol, textCol, n, tau, maxShingleFreq)),
-      eager = true)
+    pairMemo(dfn, (idCol, textCol, n, tau, maxShingleFreq))(
+      jaccardPairsUncached(dfn, idCol, textCol, n, tau, maxShingleFreq))
   }
 
   // One shingle scan per (corpus, n) per JVM: the exact-Jaccard and
   // MinHash paths (and cleanCorpus through them) all start from the
   // same hashed shingle sets, so the UDF scan is memoized as a
   // persisted DataFrame.
-  private val shingleMemo = new PlanMemo[(String, String, Int)](32)
+  private val shingleMemo = new PlanMemo[(String, String, Int), DataFrame](
+    32, caches.persist(_, eager = false))
 
   private[operators] def hashedShingleSetsShared(df: DataFrame,
       idCol: String, textCol: String, n: Int): DataFrame = {
     val dfn = df.select(col(idCol), col(textCol))
-    persisted(shingleMemo(dfn, (idCol, textCol, n))(
-      hashedShingleSets(dfn, idCol, textCol, n)), eager = false)
+    shingleMemo(dfn, (idCol, textCol, n))(
+      hashedShingleSets(dfn, idCol, textCol, n))
   }
 
   /** Distinct word-n-gram shingles per id, as 64-bit FNV-1a hashes:
@@ -218,15 +168,16 @@ object Dedup {
   // docFreq aggregation, a count() to pick dictionary vs join
   // ordering, the ordering itself — is deterministic in the input plan.
   private val orderedMemo =
-    new PlanMemo[(String, String, Int, Option[Int])](32)
+    new PlanMemo[(String, String, Int, Option[Int]), DataFrame](32,
+      caches.persist(_, eager = false))
 
   private def rareFirstOrderedSets(df: DataFrame, idCol: String,
       textCol: String, n: Int,
       maxShingleFreq: Option[Int]): DataFrame = {
     val dfn = df.select(col(idCol), col(textCol))
-    persisted(orderedMemo(dfn, (idCol, textCol, n, maxShingleFreq))(
+    orderedMemo(dfn, (idCol, textCol, n, maxShingleFreq))(
       rareFirstOrderedSetsUncached(dfn, idCol, textCol, n,
-        maxShingleFreq)), eager = false)
+        maxShingleFreq))
   }
 
   private def rareFirstOrderedSetsUncached(df: DataFrame, idCol: String,
@@ -237,7 +188,7 @@ object Dedup {
     val docFreq = sets0
       .select(explode(col("hs")).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("df_g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(caches.track)
     val distinctShingles = docFreq.count()
     val cap = maxShingleFreq.map(_.toLong).getOrElse(Long.MaxValue)
     val dictCap = dictCapOverride.getOrElse(DictCapDefault)
@@ -455,7 +406,7 @@ object Dedup {
     val ranked = keyed.withColumn("rn", row_number().over(w))
       .select(col("id"), col("block"), col("rn"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(trackCache)
+      .transform(caches.track)
     val cands = ranked.as("a").join(ranked.as("b"),
         col("a.block") === col("b.block") &&
           col("b.rn") > col("a.rn") &&
@@ -508,7 +459,8 @@ object Dedup {
   // once per (corpus, params) per JVM even when several faces compose
   // it (pair listing, leakage split, components).
   private val minhashMemo = new PlanMemo[
-    (String, String, Int, Int, Int, Double, Long, Option[Int])](16)
+    (String, String, Int, Int, Int, Double, Long, Option[Int]), DataFrame](
+    16, caches.persist(_, eager = true))
 
   def minhashDupPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 128, bands: Int = 64,
@@ -516,10 +468,10 @@ object Dedup {
       maxBandDocFreq: Option[Int] = Some(DefaultMaxBandDocFreq))
       : DataFrame = {
     val dfn = df.select(col(idCol), col(textCol))
-    persisted(minhashMemo(dfn,
+    minhashMemo(dfn,
         (idCol, textCol, n, numHashes, bands, tau, seed, maxBandDocFreq))(
       minhashDupPairsUncached(dfn, idCol, textCol, n, numHashes, bands,
-        tau, seed, maxBandDocFreq)), eager = true)
+        tau, seed, maxBandDocFreq))
   }
 
   /** The raw (un-memoized, un-cached) LSH pair plan — plan-shape tests
@@ -535,7 +487,7 @@ object Dedup {
     // SAME dupPairsFromSets code path the cross-corpus and streaming
     // operators run — one implementation of the recall-critical logic.
     val sets = signatureSets(df, idCol, textCol, n, numHashes, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(caches.track)
     dupPairsFromSets(sets, sets, "i", "j", numHashes, bands, tau,
       selfJoin = true, maxBandDocFreq = maxBandDocFreq)
   }
@@ -647,7 +599,7 @@ object Dedup {
       s"unknown crossCorpus strategy: $strategy")
     def sigSets(df: DataFrame) =
       signatureSets(df, idCol, textCol, n, numHashes, seed)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(caches.track)
     dupPairsFromSets(sigSets(incoming), sigSets(existing),
       "new_id", "old_id", numHashes, bands, tau, selfJoin = false,
       bloomPruneRight = strategy == "bloom",
@@ -883,7 +835,7 @@ object Dedup {
     // manager, so repeated calls over the same corpus also reuse it.
     val sims = df.select(col(idCol).as("id"),
       T.simhash64(split(col(textCol), " ")).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(caches.track)
     hammingDupPairs(sims, "id", "sim", maxHamming)
   }
 
@@ -943,7 +895,7 @@ object Dedup {
     val fps = winnowFingerprints(df, idCol, textCol, k, window)
       .select(col("id"), col("fp")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(trackCache)
+      .transform(caches.track)
     // document-frequency cap over the persisted set (fps is read
     // twice: once aggregated, once joined — one compute, two reads)
     val kept = fps.join(
@@ -951,7 +903,7 @@ object Dedup {
           .where(col("df_fp") <= maxDocFreq).select(col("fp")),
         Seq("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(trackCache)
+      .transform(caches.track)
     val sizes = kept.groupBy(col("id")).agg(count(lit(1)).as("nf"))
     val pairs = kept.as("a").join(kept.as("b"),
         col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
@@ -996,7 +948,7 @@ object Dedup {
     val base = df
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(caches.track)
     // The guard count materializes the persisted base the join reads
     // anyway (unlike a side-channel sizing pass, nothing is wasted) —
     // and an O(n) count is noise against the O(n²) job it gates.
@@ -1038,7 +990,7 @@ object Dedup {
       tau: Double, numBits: Int = 12, probes: Int = 4,
       seed: Long = 42L): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(caches.track)
     val bucketed = base.select(col("id"), col("v"),
       explode(array((0 until probes).map(p =>
         struct(lit(p).as("probe"),
@@ -1132,7 +1084,7 @@ object Dedup {
     val assigned = df
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("cluster", assignU(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(trackCache)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(caches.track)
     val dropped = assigned.as("a").join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id") &&
           V.cos_dist(col("a.v"), col("b.v")) <= eps)
@@ -1295,7 +1247,7 @@ object Dedup {
     ccAltMemo(pairs, maxRounds)(ccAlternatingUncached(pairs, maxRounds))
   }
 
-  private val ccAltMemo = new PlanMemo[Int](16)
+  private val ccAltMemo = new PlanMemo[Int, DataFrame](16)
 
   private def ccAlternatingUncached(pairs: DataFrame, maxRounds: Int)
       : DataFrame = {

@@ -222,11 +222,11 @@ object IvfIndex {
   // the Model so repeated searches over the same corpus (the registry
   // trio, an autotune sweep) share one partitioned write per JVM.
   // indexDir is part of the key: a caller asking for a durable path
-  // must not be served a memoized tmp-dir index. Maintenance that
-  // rewrites an index's files drops its entries ([[forget]]).
-  private val buildMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, String, String, Option[String], StorageKind),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Model)]()
+  // must not be served a memoized tmp-dir index. A Model caches a file
+  // listing, so every write into an index's directory (append, delete,
+  // compact, merge) drops the entries for that path.
+  private val buildMemo = new graft.util.PlanMemo[
+    (Int, String, String, Option[String], StorageKind), Model](96)
   // default index paths use a per-JVM directory + a build counter, so
   // no two builds (this JVM or another on the same box) can clobber a
   // live index directory; reuse across builds comes from the memo, not
@@ -235,12 +235,6 @@ object IvfIndex {
   private[operators] lazy val tmpBase =
     s"${System.getProperty("java.io.tmpdir")}/graft-ivf-" +
       java.lang.ProcessHandle.current().pid()
-
-  /** Memoized Models for `indexPath` cache a file listing that a
-    * rewrite is about to change; drop them so the next build re-lists.
-    */
-  private def forget(indexPath: String): Unit =
-    buildMemo.entrySet.removeIf(e => e.getValue._2.indexPath == indexPath)
 
   /** The artifact's own columns: `cell_id` is the partition key every
     * build adds, and `bits`/`half` are how [[StorageKind.of]] recognizes
@@ -336,14 +330,16 @@ object IvfIndex {
       force: Boolean = false,
       kind: StorageKind = StorageKind.F32): Model = graft.util.BuildTimer.timed {
     requireBuildable(df, idCol)
+    def write = writeIndex(df, idCol, vecCol, centroids, indexDir, kind)
+    if (force) write
+    else buildMemo(df,
+      (centroidsHash(centroids), idCol, vecCol, indexDir, kind))(write)
+  }
+
+  private def writeIndex(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Float]], indexDir: Option[String],
+      kind: StorageKind): Model = {
     val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), centroidsHash(centroids), idCol,
-      vecCol, indexDir, kind)
-    val hit = if (force) null else buildMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.assigned.sparkSession eq spark))
-      return hit._2
     val stored = kind.fitted(df, vecCol)
     val path = indexDir.getOrElse(
       s"$tmpBase/ivf_${buildCounter.getAndIncrement()}" +
@@ -361,10 +357,7 @@ object IvfIndex {
     stored.writeSidecars(conf, path)
     graft.util.SidecarIO.writeMeta(conf, s"$path/_meta", idCol,
       stored.payloadCols(vecCol).head)
-    val model = Model(centroids, spark.read.parquet(path), idCol, vecCol,
-      path, stored)
-    if (!force && buildMemo.size < 96) buildMemo.put(key, (plan, model))
-    model
+    Model(centroids, spark.read.parquet(path), idCol, vecCol, path, stored)
   }
 
   /** The rows of `df` as an index under `centroids` stores them: each
@@ -420,6 +413,7 @@ object IvfIndex {
     * [[build]]) remains the answer to real distribution drift.
     */
   def append(model: Model, df: DataFrame): Model = graft.util.BuildTimer.timed {
+    buildMemo.invalidate(_.indexPath == model.indexPath)
     assign(df, model.idCol, model.vecCol, model.centroids, model.kind)
       .repartition(col("cell_id"))
       .write.partitionBy("cell_id").mode("append")
@@ -561,7 +555,7 @@ object IvfIndex {
           s"'$existing'; a second delete must use the same id column " +
           s"(got '$idName')")
     }
-    forget(indexPath)
+    buildMemo.invalidate(_.indexPath == indexPath)
     val del = ids.distinct()
     val n = del.count()
     del.coalesce(1).write.mode("append")
@@ -618,7 +612,7 @@ object IvfIndex {
       targetFilesPerCell: Int = 1): CompactionStats = graft.util.BuildTimer.timed {
     require(targetFilesPerCell >= 1,
       s"targetFilesPerCell must be >= 1 (got $targetFilesPerCell)")
-    forget(indexPath)
+    buildMemo.invalidate(_.indexPath == indexPath)
     val live = new org.apache.hadoop.fs.Path(indexPath)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     graft.util.DirSwap.recover(fs, live)
@@ -691,7 +685,7 @@ object IvfIndex {
           if (dest.kind.name == src.kind.name) "a different scalar model"
           else "a different kind"} — rebuild the shards uniformly " +
         "(one kind, and for sq8 one scalar model)")
-    forget(destPath)
+    buildMemo.invalidate(_.indexPath == destPath)
     val conf = spark.sessionState.newHadoopConf()
     val destRoot = new org.apache.hadoop.fs.Path(destPath)
     val fs = destRoot.getFileSystem(conf)

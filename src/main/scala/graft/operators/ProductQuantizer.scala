@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.util.PlanMemo
 
 /** Product Quantization engine (SURVEY §2.10, `lantern_cli/src/pq/`):
   * per-subvector k-means codebook + u8 code compression.
@@ -86,6 +87,10 @@ object ProductQuantizer {
       .select(col("s.split_id"), col("s.subvec"))
   }
 
+  private val fitMemo = new PlanMemo[
+    (String, String, Int, Int, Int, Double, Long, Option[Int]),
+    Seq[(Int, Int, Seq[Float])]](64)
+
   /** Q3-Q5: fit the per-split codebook.
     *
     * Deterministic seeded init: a hash-ranked sample of `clusters` rows
@@ -93,35 +98,28 @@ object ProductQuantizer {
     * (`pq/codebook.rs:42-47` — nondeterministic; SURVEY §7.4 calls for
     * fixed seeds). Returns (subvector_id INT, centroid_id INT,
     * c ARRAY<FLOAT>) — `pq/setup.rs:27`'s schema.
+    *
+    * Memoized: the fit is deterministic in (input plan, idCol, vecCol,
+    * params), so repeated fits over one table (PQ and IVF queries share
+    * corpora) reuse the collected centroid rows — at most 256
+    * centroids × dim floats an entry, 64 entries — rebuilt as a
+    * DataFrame on the caller's session and immune to cache clearing.
+    * Like every [[graft.util.PlanMemo]] the memo keys on the OPTIMIZED
+    * input plan, not the analyzed one (a select that optimizes away
+    * shares the table's entry), and a hit needs the session that
+    * stored the entry: another session refits.
     */
-  // fitCodebook is deterministic in (input plan, idCol, vecCol,
-  // params); repeated fits over the same table (PQ + IVF queries share
-  // corpora) reuse the memoized centroid ROWS — plain driver-local
-  // data, so the returned DataFrame is rebuilt on the CALLER's session
-  // (safe across session restarts) and immune to cache clearing.
-  // Bounded; sameResult guards against semanticHash collisions.
-  private val fitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Int, Int, Double, Long, Option[Int]),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[(Int, Int, Seq[Float])])]()
-
   def fitCodebook(df: DataFrame, idCol: String, vecCol: String,
       clusters: Int, splits: Int, maxIter: Int = 20, tol: Double = 0.1,
       seed: Long = 42L, datasetLimit: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val plan = df.queryExecution.analyzed
-    val key = (plan.semanticHash(), idCol, vecCol, clusters, splits,
-      maxIter, tol, seed, datasetLimit)
-    val hit = fitMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan)) {
-      return hit._2.toDF("subvector_id", "centroid_id", "c")
+    val rows = fitMemo(df, (idCol, vecCol, clusters, splits, maxIter, tol,
+        seed, datasetLimit)) {
+      fitCodebookUncached(df, idCol, vecCol, clusters, splits, maxIter,
+        tol, seed, datasetLimit).collect().map(r =>
+        (r.getInt(0), r.getInt(1), r.getSeq[Float](2))).toSeq
     }
-    val result = fitCodebookUncached(df, idCol, vecCol, clusters, splits,
-      maxIter, tol, seed, datasetLimit)
-    val rows = result.collect().map(r =>
-      (r.getInt(0), r.getInt(1), r.getSeq[Float](2))).toSeq
-    if (fitMemo.size < 64) fitMemo.put(key, (plan, rows))
     rows.toDF("subvector_id", "centroid_id", "c")
   }
 

@@ -96,7 +96,7 @@ object SpanDedup {
       .distinct()
       .select(col("gh"), lit(1L).as("hit"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(Dedup.trackCache)
+      .transform(Dedup.caches.track)
     val trainGrams = tagged.where(!col("_is_eval"))
       .select(col("id"), explode(col("hs")).as("gh"))
     // Broadcast sizing uses a conservative bound computable WITHOUT the

@@ -46,12 +46,12 @@ object SparseIndex {
     graft.util.SidecarIO.writeIdxDf(
       spark.sessionState.newHadoopConf(), path, rows)
 
-  // builds are deterministic in (corpus plan, params, dir) — same memo
-  // contract as IvfIndex's fixedBuildMemo: repeated faces/bench reps
-  // over one corpus share one artifact write per JVM
-  private val buildMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Int, String),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Model)]()
+  // builds are deterministic in (corpus plan, params, dir): repeated
+  // faces/bench reps over one corpus share one artifact write per JVM.
+  // A Model caches a file listing, so every write into an index's
+  // directory (append, delete, compact) drops the entries for that path.
+  private val buildMemo =
+    new graft.util.PlanMemo[(String, String, Int, Int, String), Model](32)
 
   /** Build the artifact from a text corpus: impact-quantized postings
     * ([[SparseSearch.postings]]) bucket-partitioned on disk, plus the
@@ -63,14 +63,13 @@ object SparseIndex {
       nBuckets: Int = 64): Model = graft.util.BuildTimer.timed {
     require(nBuckets >= 1 && nBuckets <= vocab,
       s"nBuckets must be in [1, vocab], got $nBuckets")
+    buildMemo(docs, (idCol, textCol, vocab, nBuckets, indexDir))(
+      write(docs, idCol, textCol, indexDir, vocab, nBuckets))
+  }
+
+  private def write(docs: DataFrame, idCol: String, textCol: String,
+      indexDir: String, vocab: Int, nBuckets: Int): Model = {
     val spark = docs.sparkSession
-    val plan = docs.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, textCol, vocab, nBuckets,
-      indexDir)
-    val hit = buildMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.postings.sparkSession eq spark))
-      return hit._2
     // one postings computation feeds the bucketed write AND both
     // sidecars — no artifact re-read (the r9 build re-scanned what it
     // had just written for df/n_docs)
@@ -92,10 +91,8 @@ object SparseIndex {
     graft.util.SidecarIO.writeSparseMeta(
       spark.sessionState.newHadoopConf(), s"$indexDir/_meta", nDocs,
       vocab, nBuckets)
-    val model = Model(indexDir, written,
-      spark.read.parquet(s"$indexDir/_stats"), nDocs, vocab, nBuckets)
-    if (buildMemo.size < 32) buildMemo.put(key, (plan, model))
-    model
+    Model(indexDir, written, spark.read.parquet(s"$indexDir/_stats"),
+      nDocs, vocab, nBuckets)
   }
 
   /** Append new documents to a built artifact under the FROZEN hash
@@ -162,9 +159,7 @@ object SparseIndex {
       }
       graft.util.DirSwap.publish(fs, metaLive)
     } finally post.unpersist()
-    // the appended artifact invalidates any memoized build of this dir
-    val it = buildMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._6 == model.path) it.remove()
+    buildMemo.invalidate(_.path == model.path)
     spark.catalog.refreshByPath(model.path)
     load(spark, model.path)
   }
@@ -229,7 +224,7 @@ object SparseIndex {
     require(ids.columns.length == 1,
       s"delete expects a single-id-column frame, got " +
         ids.columns.mkString(","))
-    buildMemo.entrySet.removeIf(_.getKey._6 == indexDir)
+    buildMemo.invalidate(_.path == indexDir)
     val del = ids.toDF("id").distinct()
     val n = del.count()
     del.coalesce(1).write.mode("append").parquet(s"$indexDir/_deleted")
@@ -270,8 +265,7 @@ object SparseIndex {
       graft.util.BuildTimer.timed {
     require(targetFilesPerBucket >= 1,
       s"targetFilesPerBucket must be >= 1 (got $targetFilesPerBucket)")
-    // memoized Models cache a file listing the rewrite deletes
-    buildMemo.entrySet.removeIf(_.getKey._6 == indexDir)
+    buildMemo.invalidate(_.path == indexDir)
     val live = new org.apache.hadoop.fs.Path(indexDir)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     graft.util.DirSwap.recover(fs, live)

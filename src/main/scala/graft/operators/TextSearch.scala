@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => V}
+import graft.util.{CachedRelations, PlanMemo}
 
 /** Full-text relevance scoring and hybrid (text + vector) retrieval —
   * the retrieval primitives a training-data pipeline pairs with the
@@ -31,81 +32,37 @@ object TextSearch {
   // One tokenized (id, word) relation per corpus per JVM: BM25 and the
   // hybrid query (and repeated calls) all start from the same exploded
   // word stream, so it is memoized as a persisted DataFrame keyed on
-  // the optimized input plan — same pattern as Dedup's shingle memo.
-  private val wordsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+  // the optimized input plan. Both memos persist a relation only when
+  // they store it: an unbounded caller (e.g. the HTTP API, where every
+  // distinct query string is a new key) must not leak cached relations
+  // once a memo is full.
+  private val cached = new CachedRelations
+  private val wordsMemo = new PlanMemo[(String, String), DataFrame](32,
+    cached.persist(_, eager = false))
 
   private def wordsShared(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val dfn = df.select(col(idCol), col(textCol))
-    val plan = dfn.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, textCol)
-    val hit = wordsMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq df.sparkSession)) {
-      val m = hit._2
-      if (m.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      return m
-    }
-    val built = Repartitioning.spreadSmallScan(dfn)
-      .select(col(idCol).as("id"),
-        explode(split(col(textCol), " ")).as("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (wordsMemo.size < 32) memoize(wordsMemo, key, (plan, built))
-    built
+    wordsMemo(dfn, (idCol, textCol))(
+      Repartitioning.spreadSmallScan(dfn)
+        .select(col(idCol).as("id"),
+          explode(split(col(textCol), " ")).as("word")))
   }
-
-  // Concurrent callers (the HTTP search routes overlap) can build the
-  // same entry twice; the entry this replaces would otherwise stay
-  // cached with nothing left to release it.
-  private def memoize[K](
-      memo: java.util.concurrent.ConcurrentHashMap[K,
-        (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-          DataFrame)],
-      key: K,
-      entry: (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        DataFrame)): Unit =
-    Option(memo.put(key, entry)).filter(_._2 ne entry._2)
-      .foreach(_._2.unpersist())
 
   // The finished per-document score relation is also memoized (small:
   // one row per doc containing a query term): q_bm25-style ranking and
   // hybrid fusion over the same (corpus, query) pay the term-statistics
   // pipeline once per JVM, not once per call.
-  private val scoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Seq[String], Double, Double),
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]()
+  private val scoreMemo = new PlanMemo[
+    (String, String, Seq[String], Double, Double), DataFrame](32,
+    cached.persist(_, eager = true))
 
   def bm25(docs: DataFrame, idCol: String, textCol: String,
       queryWords: Seq[String], k1: Double = 1.2, b: Double = 0.75)
-      : DataFrame = {
-    val dfn = docs.select(col(idCol), col(textCol))
-    val plan = dfn.queryExecution.optimizedPlan
-    val key = (plan.semanticHash(), idCol, textCol, queryWords, k1, b)
-    val hit = scoreMemo.get(key)
-    if (hit != null && hit._1.sameResult(plan) &&
-        (hit._2.sparkSession eq docs.sparkSession)) {
-      val m = hit._2
-      if (m.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        m.count()
-      }
-      return m
-    }
-    // Persist ONLY when the memo has room to own the entry: an
-    // unbounded caller (e.g. the HTTP API, where every distinct query
-    // string is a new key) must not leak orphaned cached relations
-    // once the memo is full.
-    val raw = bm25Uncached(docs, idCol, textCol, queryWords, k1, b)
-    if (scoreMemo.size >= 32) return raw
-    val built = raw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    built.count()
-    memoize(scoreMemo, key, (plan, built))
-    built
-  }
+      : DataFrame =
+    scoreMemo(docs.select(col(idCol), col(textCol)),
+        (idCol, textCol, queryWords, k1, b))(
+      bm25Uncached(docs, idCol, textCol, queryWords, k1, b))
 
   private def bm25Uncached(docs: DataFrame, idCol: String, textCol: String,
       queryWords: Seq[String], k1: Double, b: Double): DataFrame = {

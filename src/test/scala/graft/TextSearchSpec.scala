@@ -46,6 +46,18 @@ class TextSearchSpec extends SparkSuite {
     assert(r(0L) > r(1L))
   }
 
+  test("a corpus scored past the memos' capacity leaves no relation " +
+      "cached") {
+    import spark.implicits._
+    def score(i: Int) = TextSearch.bm25(
+      Seq((i.toLong, s"w$i shared"), (-1L, "shared x")).toDF("doc_id",
+        "text"), "doc_id", "text", Seq("shared")).collect()
+    (0 until 32).foreach(score) // fills both 32-entry memos
+    val before = spark.sparkContext.getPersistentRDDs.size
+    score(32)
+    assert(spark.sparkContext.getPersistentRDDs.size <= before)
+  }
+
   test("hybridRrf fuses lexical and vector ranks") {
     import spark.implicits._
     val emb = Seq(

@@ -69,6 +69,17 @@ class IvfSpec extends SparkSuite {
     assert(reopened.assigned.count() === emb.count())
   }
 
+  test("append drops the memoized build of its path: a rebuild after an " +
+      "append writes a fresh index") {
+    val base = emb.where($"vec_id" % 3 === 0)
+    def build() = IvfIndex.build(base, "vec_id", "embedding", nCells = 5,
+      maxIter = 3)
+    IvfIndex.append(build(), emb.where($"vec_id" % 3 === 1))
+    val b2 = emb.where($"vec_id" % 3 === 2)
+    val grown = IvfIndex.append(build(), b2)
+    assert(grown.assigned.count() === base.count() + b2.count())
+  }
+
   test("partial probing keeps high recall at a fraction of the scan") {
     val exact = pairs(Knn.topK(emb, queries, "vec_id", "embedding", 10))
     val ivf = pairs(IvfIndex.search(model, queries, k = 10, nprobe = 4))
