@@ -43,15 +43,25 @@ object GraftSession {
     spark
   }
 
+  // sessions already registered, by identity (SparkSession keeps
+  // Object equality); weak, so a stopped session is not pinned
+  private val registered = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
   /** Register every graft SQL surface on an EXISTING session — the
     * entry point for a stock spark-shell (`GraftSession.register(spark)`)
-    * or any externally-built session.
+    * or any externally-built session. A session is registered once: a
+    * repeat call on it is a no-op, while `newSession()` is a new session
+    * and gets registered.
     */
-  def register(s: SparkSession): SparkSession = {
-    graft.functions.VectorFunctions.register(s)
-    graft.functions.TextFunctions.register(s)
-    graft.embed.EmbeddingPipeline.register(s)
-    graft.plans.IndexedKnn.ensureRule(s)
+  def register(s: SparkSession): SparkSession = synchronized {
+    if (!registered.contains(s)) {
+      graft.functions.VectorFunctions.register(s)
+      graft.functions.TextFunctions.register(s)
+      graft.embed.EmbeddingPipeline.register(s)
+      graft.plans.IndexedKnn.ensureRule(s)
+      registered.add(s)
+    }
     s
   }
 

@@ -1059,7 +1059,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                 m.indexPath, m.idCol, m.vecCol)
               ivfModels.put(name, reopened)
               respond(ex, 200,
-                s"""{"compacted":"$name","cells":${stats.cells},
+                s"""{"compacted":"$name","cells":${stats.partitions},
                    |"files_before":${stats.filesBefore},
                    |"files_after":${stats.filesAfter}}""".stripMargin
                   .replace("\n", ""))

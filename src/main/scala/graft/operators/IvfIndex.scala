@@ -226,7 +226,7 @@ object IvfIndex {
   // listing, so every write into an index's directory (append, delete,
   // compact, merge) drops the entries for that path.
   private val buildMemo = new graft.util.PlanMemo[
-    (Int, String, String, Option[String], StorageKind), Model](96)
+    (Seq[Seq[Int]], String, String, Option[String], StorageKind), Model](96)
   // default index paths use a per-JVM directory + a build counter, so
   // no two builds (this JVM or another on the same box) can clobber a
   // live index directory; reuse across builds comes from the memo, not
@@ -300,11 +300,6 @@ object IvfIndex {
     */
   def releaseModels(): Unit = buildMemo.clear()
 
-  private def centroidsHash(cs: Array[Array[Float]]): Int =
-    java.util.Arrays.deepHashCode(
-      cs.map(_.map(java.lang.Float.floatToIntBits)
-        .asInstanceOf[AnyRef]).asInstanceOf[Array[AnyRef]])
-
   /** Build the inverted file under CALLER-SUPPLIED frozen centroids —
     * no k-means anywhere: assign every row to its nearest cell, encode
     * it as `kind` stores it, and write the rows as parquet partitioned
@@ -332,8 +327,10 @@ object IvfIndex {
     requireBuildable(df, idCol)
     def write = writeIndex(df, idCol, vecCol, centroids, indexDir, kind)
     if (force) write
-    else buildMemo(df,
-      (centroidsHash(centroids), idCol, vecCol, indexDir, kind))(write)
+    // the centroids' bits as value-equal rows: a hit needs equal tables
+    else buildMemo(df, (centroids.toSeq.map(r => scala.collection.immutable
+        .ArraySeq.unsafeWrapArray(r.map(java.lang.Float.floatToIntBits))),
+      idCol, vecCol, indexDir, kind))(write)
   }
 
   private def writeIndex(df: DataFrame, idCol: String, vecCol: String,
@@ -394,12 +391,6 @@ object IvfIndex {
     })
   }
 
-  /** The index's live rows: every cell directory, tombstones applied. */
-  private def scanLive(spark: SparkSession, path: String): DataFrame =
-    minusDeleted(spark, path, spark.read
-      .option("basePath", path)
-      .parquet(s"$path/cell_id=*"))
-
   /** Incrementally add vectors to an EXISTING index: assign each new
     * row to its nearest cell with the frozen centroids, encode it under
     * the index's frozen kind (an SQ8 index quantizes with its stored
@@ -421,11 +412,9 @@ object IvfIndex {
     // fresh scan relation: the old `assigned` caches its file listing;
     // tombstones re-applied (a deleted id stays deleted even if the
     // batch re-appends it — see [[delete]])
-    model.copy(assigned = scanLive(df.sparkSession, model.indexPath))
+    model.copy(assigned =
+      graft.util.IndexDir.live(df.sparkSession, model.indexPath, "cell_id"))
   }
-
-  case class CompactionStats(cells: Int, filesBefore: Int,
-      filesAfter: Int)
 
   /** The id column recorded at build time in the `_meta` sidecar (the
     * durable record every build writes), if this artifact carries one
@@ -445,55 +434,20 @@ object IvfIndex {
 
   /** Copy the sidecars of the index at `from` that exist (`_centroids`,
     * the SQ8 `_sqmodel`, the `_meta` id record) into `to`. Tombstones
-    * (`_deleted`) never travel: a rewrite purges the rows they name.
+    * never travel: a rewrite purges the rows they name.
     */
   private[graft] def copySidecars(spark: SparkSession, from: String,
-      to: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    for (side <- Seq("_centroids", "_sqmodel", "_meta")) {
-      val src = new org.apache.hadoop.fs.Path(s"$from/$side")
-      val fs = src.getFileSystem(conf)
-      if (fs.exists(src))
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-          new org.apache.hadoop.fs.Path(s"$to/$side"), false, conf)
-    }
-  }
-
-  /** Tombstone-filtered assignment scan: `_deleted` (written by
-    * [[delete]]) holds doomed ids; every artifact read path anti-joins
-    * them out until [[compact]] purges the rows physically. The
-    * tombstone side is broadcast — deletes between compactions are an
-    * operational trickle (account deletions, takedowns), never a
-    * data-scale set; the filter sits ABOVE the scan and references
-    * only the left side, so cell PartitionFilters still push down and
-    * unprobed cells stay unread.
-    */
-  private def minusDeleted(spark: SparkSession, path: String,
-      assigned: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_deleted")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) assigned
-    else {
-      // the sidecar's own column name IS the index id column
-      // (validated at [[delete]] time) — the join is self-describing,
-      // no registry or parameter needed. Tombstones are bounded, so
-      // they come up as a driver-local relation: the anti-join was
-      // already broadcast (driver-resident at execution), and the
-      // local read removes a per-query sidecar listing + scan.
-      val (name, del) = graft.util.SidecarIO.readSingleColLocal(
-        spark, s"$path/_deleted", "__deleted_id")
-      assigned.join(broadcast(del),
-        assigned(name) === col("__deleted_id"), "left_anti")
-    }
-  }
+      to: String): Unit =
+    graft.util.IndexDir.copySidecars(spark, from, to,
+      Seq("_centroids", "_sqmodel", "_meta"))
 
   /** Delete vectors by id from the durable inverted file — the
     * right-to-be-forgotten maintenance pass the build/append/compact/
-    * merge lifecycle otherwise lacks. The ids land in a `_deleted`
-    * tombstone sidecar (O(|ids|) write, no cell rewrite); every
-    * subsequent [[load]]/[[append]]/[[merge]] read anti-joins them out,
-    * and the next [[compact]] purges the rows physically and clears the
-    * sidecar. Contract: a tombstoned id stays invisible even if
+    * merge lifecycle otherwise lacks. The ids land in a tombstone
+    * sidecar ([[graft.util.IndexDir.tombstone]]: O(|ids|) write, no
+    * cell rewrite); every subsequent [[load]]/[[append]]/[[merge]] read
+    * anti-joins them out, and the next [[compact]] purges the rows
+    * physically and clears the sidecar. Contract: a tombstoned id stays invisible even if
     * RE-APPENDED until a compact runs — run compact before re-ingesting
     * a previously-deleted id. The id column's TYPE must match the
     * index's; external PQ-code tables fed to [[searchAdc]] are the
@@ -507,12 +461,9 @@ object IvfIndex {
     */
   def delete(spark: SparkSession, indexPath: String,
       ids: DataFrame): Long = {
-    require(ids.columns.length == 1,
-      s"delete expects a single-id-column frame, got " +
-        ids.columns.mkString(","))
-    val idName = ids.columns.head
-    val artifactSchema = spark.read.option("basePath", indexPath)
-      .parquet(s"$indexPath/cell_id=*").schema
+    val idName = graft.util.IndexDir.tombstoneId(ids)
+    val artifactSchema =
+      graft.util.IndexDir.scan(spark, indexPath, "cell_id").schema
     require(artifactSchema.fieldNames.contains(idName),
       s"id column '$idName' is not a column of the index at " +
         s"$indexPath (has ${artifactSchema.fieldNames.mkString(",")})" +
@@ -537,50 +488,8 @@ object IvfIndex {
     require(integral(idType), s"'$idName' has type ${idType.simpleString}" +
       " — the index id column is integral; a non-id column cannot drive " +
       "a delete")
-    // The sidecar is self-describing via its single column name; two
-    // appends with DIFFERENT names would produce mixed-schema parquet
-    // whose merged read nulls out the older files and silently
-    // RESURFACES previously tombstoned ids. Reject the second name.
-    val sidecarPath = new org.apache.hadoop.fs.Path(
-      s"$indexPath/_deleted")
-    val sidecarFs = sidecarPath.getFileSystem(
-      spark.sessionState.newHadoopConf())
-    if (sidecarFs.exists(sidecarPath)) {
-      val existing = graft.util.SidecarIO.schemaOf(
-        spark.sessionState.newHadoopConf(), s"$indexPath/_deleted")
-        .map(_.getFields.get(0).getName)
-        .getOrElse(idName)
-      require(existing == idName,
-        s"the _deleted sidecar at $indexPath already tombstones by " +
-          s"'$existing'; a second delete must use the same id column " +
-          s"(got '$idName')")
-    }
     buildMemo.invalidate(_.indexPath == indexPath)
-    val del = ids.distinct()
-    val n = del.count()
-    del.coalesce(1).write.mode("append")
-      .parquet(s"$indexPath/_deleted")
-    spark.catalog.refreshByPath(indexPath)
-    n
-  }
-
-  /** The index's data files, sorted by path: listing order is up to the
-    * filesystem, and [[merge]] numbers its staged files by position, so
-    * a retried merge must see the same order to overwrite its own files.
-    */
-  private def listPartFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-    val out = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]()
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      // data files only: skip _centroids/_sqmodel sidecars and _SUCCESS
-      if (f.getPath.toString.contains("cell_id=") &&
-          !name.startsWith("_") && !name.startsWith("."))
-        out += f.getPath
-    }
-    out.toSeq.sortBy(_.toString)
+    graft.util.IndexDir.tombstone(spark, indexPath, ids)
   }
 
   /** Rewrite an index whose cells have accumulated many small files —
@@ -609,36 +518,20 @@ object IvfIndex {
     *   a small constant per cell instead.
     */
   def compact(spark: SparkSession, indexPath: String,
-      targetFilesPerCell: Int = 1): CompactionStats = graft.util.BuildTimer.timed {
+      targetFilesPerCell: Int = 1): graft.util.CompactionStats =
+      graft.util.BuildTimer.timed {
     require(targetFilesPerCell >= 1,
       s"targetFilesPerCell must be >= 1 (got $targetFilesPerCell)")
     buildMemo.invalidate(_.indexPath == indexPath)
-    val live = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.util.DirSwap.recover(fs, live)
-    graft.util.DirSwap.clearSiblings(fs, live)
-    val before = listPartFiles(fs, live)
-    // tombstoned rows ([[delete]]) are purged physically here: the
-    // rewrite drops them and the _deleted sidecar is NOT copied into
-    // the fresh artifact
-    val assigned = scanLive(spark, indexPath)
-    val fresh = graft.util.DirSwap.rebuildPath(indexPath)
-    val keys: Seq[org.apache.spark.sql.Column] =
-      if (targetFilesPerCell == 1) Seq(col("cell_id"))
-      else {
-        // salt splits a huge cell across tasks; each task writes one
-        // file per cell dir it holds, so files/cell <= target
-        val idCol = assigned.columns.find(_ != "cell_id").get
-        Seq(col("cell_id"),
-          pmod(hash(col(idCol)), lit(targetFilesPerCell)))
-      }
-    assigned.repartition(keys: _*)
-      .write.partitionBy("cell_id").mode("overwrite").parquet(fresh)
-    copySidecars(spark, indexPath, fresh)
-    graft.util.DirSwap.publish(fs, live)
-    val after = listPartFiles(fs, live)
-    val cells = after.map(_.getParent.getName).distinct.size
-    CompactionStats(cells, before.size, after.size)
+    graft.util.IndexDir.open(spark, indexPath)
+    // salt by the build-time id record; an index older than that record
+    // salts by its first column
+    val idCol = metaIdCol(spark, indexPath).getOrElse(graft.util.IndexDir
+      .scan(spark, indexPath, "cell_id").columns.head)
+    graft.util.IndexDir.compact(spark, indexPath, "cell_id", idCol,
+        targetFilesPerCell) { (fresh, _) =>
+      copySidecars(spark, indexPath, fresh)
+    }
   }
 
   /** Merge the inverted file at `srcPath` into the one at `destPath`.
@@ -689,7 +582,7 @@ object IvfIndex {
     val conf = spark.sessionState.newHadoopConf()
     val destRoot = new org.apache.hadoop.fs.Path(destPath)
     val fs = destRoot.getFileSystem(conf)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$srcPath/_deleted"))) {
+    if (!graft.util.IndexDir.hasTombstones(spark, srcPath)) {
       // Pure data move, literally: both artifacts share the quantizer,
       // so every src part file already sits in its correct cell dir and
       // (no src tombstones) every row in it is live. Copy the files
@@ -714,7 +607,7 @@ object IvfIndex {
       // .merge-*.tmp silently absent from every scan.
       val srcRoot = new org.apache.hadoop.fs.Path(srcPath)
       val fsrc = srcRoot.getFileSystem(conf)
-      val parts = listPartFiles(fsrc, srcRoot)
+      val parts = graft.util.IndexDir.dataFiles(fsrc, srcRoot, "cell_id")
       val rootPrefix = fsrc.makeQualified(srcRoot).toUri.getPath + "/"
       val fingerprint = (srcPath +: parts.map(f =>
         f.toUri.getPath.stripPrefix(rootPrefix) + ":" +
@@ -749,7 +642,7 @@ object IvfIndex {
     }
     // src rows arrive already tombstone-filtered (src was load()ed);
     // dest's own tombstones re-apply on the fresh scan
-    dest.copy(assigned = scanLive(spark, destPath))
+    dest.copy(assigned = graft.util.IndexDir.live(spark, destPath, "cell_id"))
   }
 
   /** Operational stats of an inverted file: per-cell row count, share
@@ -765,7 +658,7 @@ object IvfIndex {
     import spark.implicits._
     val live = new org.apache.hadoop.fs.Path(model.indexPath)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = listPartFiles(fs, live)
+    val files = graft.util.IndexDir.dataFiles(fs, live, "cell_id")
       .groupBy(f => f.getParent.getName.stripPrefix("cell_id=").toInt)
       .view.mapValues(_.size).toSeq
       .toDF("cell_id", "n_files")
@@ -793,17 +686,14 @@ object IvfIndex {
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String): Model = graft.util.BuildTimer.timed {
+    graft.util.IndexDir.open(spark, path)
     val conf = spark.sessionState.newHadoopConf()
-    locally {
-      val p = new org.apache.hadoop.fs.Path(path)
-      graft.util.DirSwap.recover(p.getFileSystem(conf), p)
-    }
     val cents = graft.util.SidecarIO.readCentroids(conf,
       s"$path/_centroids")
     require(cents.nonEmpty, s"no centroid sidecar under $path")
     // _centroids sits inside the index dir; the assignment read lists
     // only cell_id partition dirs
-    val assigned = scanLive(spark, path)
+    val assigned = graft.util.IndexDir.live(spark, path, "cell_id")
     Model(cents, assigned, idCol, vecCol, path,
       StorageKind.of(conf, path, assigned.columns.toSeq))
   }

@@ -164,50 +164,6 @@ object SparseIndex {
     load(spark, model.path)
   }
 
-  case class CompactionStats(buckets: Int, filesBefore: Int,
-      filesAfter: Int)
-
-  /** Tombstone-filtered posting scan: `_deleted` (written by
-    * [[delete]]) holds doomed document ids; [[load]] and [[compact]]
-    * anti-join them out until the compact purges the rows physically.
-    * Broadcast tombstone side (takedowns between compactions are an
-    * operational trickle); the filter references only the posting
-    * side, so `bucket IN` PartitionFilters still push to the scan.
-    */
-  /** Posting scan that tolerates an index whose every document was
-    * purged: a full-purge [[compact]] publishes no `bucket=*` dirs
-    * (parquet writes nothing for zero rows) plus a 0-row `_schema`
-    * sidecar carrying the posting schema — read that instead of the
-    * glob, so load/search/compact keep working on a validly-empty
-    * index instead of throwing "Path does not exist".
-    */
-  private def bucketScan(spark: SparkSession,
-      indexDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasBuckets = fs.exists(root) && fs.listStatus(root)
-      .exists(_.getPath.getName.startsWith("bucket="))
-    if (hasBuckets)
-      spark.read.option("basePath", indexDir)
-        .parquet(s"$indexDir/bucket=*")
-    else spark.read.parquet(s"$indexDir/_schema")
-  }
-
-  private def minusDeleted(spark: SparkSession, indexDir: String,
-      postings: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/_deleted")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) postings
-    else {
-      // bounded tombstones, driver-local read — same shape as
-      // IvfIndex.minusDeleted (the join was broadcast already)
-      val (_, del) = graft.util.SidecarIO.readSingleColLocal(
-        spark, s"$indexDir/_deleted", "__deleted_id")
-      postings.join(broadcast(del),
-        postings("id") === col("__deleted_id"), "left_anti")
-    }
-  }
-
   /** Tombstone-delete documents from the posting file — the takedown /
     * right-to-be-forgotten pass (a DMCA'd or opted-out document must
     * stop surfacing in retrieval NOW). O(|ids|) sidecar write, no
@@ -221,31 +177,10 @@ object SparseIndex {
     */
   def delete(spark: SparkSession, indexDir: String,
       ids: DataFrame): Long = {
-    require(ids.columns.length == 1,
-      s"delete expects a single-id-column frame, got " +
-        ids.columns.mkString(","))
+    // one id column, whatever its name, tombstoned as the postings' "id"
+    graft.util.IndexDir.tombstoneId(ids)
     buildMemo.invalidate(_.path == indexDir)
-    val del = ids.toDF("id").distinct()
-    val n = del.count()
-    del.coalesce(1).write.mode("append").parquet(s"$indexDir/_deleted")
-    spark.catalog.refreshByPath(indexDir)
-    n
-  }
-
-  private def listPostingFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-    val out = scala.collection.mutable.ArrayBuffer[
-      org.apache.hadoop.fs.Path]()
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      // data files only: skip _stats/_meta sidecars and _SUCCESS
-      if (f.getPath.toString.contains("bucket=") &&
-          !name.startsWith("_") && !name.startsWith("."))
-        out += f.getPath
-    }
-    out.toSeq
+    graft.util.IndexDir.tombstone(spark, indexDir, ids.toDF("id"))
   }
 
   /** Fold the file debt [[append]] accumulates — each batch adds one
@@ -261,85 +196,43 @@ object SparseIndex {
     * contract as [[IvfIndex.compact]].
     */
   def compact(spark: SparkSession, indexDir: String,
-      targetFilesPerBucket: Int = 1): CompactionStats =
+      targetFilesPerBucket: Int = 1): graft.util.CompactionStats =
       graft.util.BuildTimer.timed {
     require(targetFilesPerBucket >= 1,
       s"targetFilesPerBucket must be >= 1 (got $targetFilesPerBucket)")
     buildMemo.invalidate(_.path == indexDir)
-    val live = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.util.DirSwap.recover(fs, live)
-    graft.util.DirSwap.clearSiblings(fs, live)
-    spark.catalog.refreshByPath(indexDir)
-    val before = listPostingFiles(fs, live)
-    // tombstoned documents ([[delete]]) are purged here
-    val hadTombstones = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexDir/_deleted"))
-    val postings = minusDeleted(spark, indexDir,
-      bucketScan(spark, indexDir))
-    val fresh = graft.util.DirSwap.rebuildPath(indexDir)
-    val keys: Seq[org.apache.spark.sql.Column] =
-      if (targetFilesPerBucket == 1) Seq(col("bucket"))
-      else Seq(col("bucket"),
-        pmod(hash(col("id")), lit(targetFilesPerBucket)))
-    postings.repartition(keys: _*)
-      .write.partitionBy("bucket").mode("overwrite").parquet(fresh)
-    if (!hadTombstones) {
-      // pure data move: df and n_docs are properties of the posting
-      // set — sidecars travel unchanged
-      for (side <- Seq("_stats", "_meta")) {
-        val src = new org.apache.hadoop.fs.Path(s"$indexDir/$side")
-        if (fs.exists(src))
-          org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-            new org.apache.hadoop.fs.Path(s"$fresh/$side"),
-            false, spark.sessionState.newHadoopConf())
+    graft.util.IndexDir.compact(spark, indexDir, "bucket", "id",
+        targetFilesPerBucket) { (fresh, purged) =>
+      if (!purged)
+        // pure data move: df and n_docs are properties of the posting
+        // set — sidecars travel unchanged
+        graft.util.IndexDir.copySidecars(spark, indexDir, fresh,
+          Seq("_stats", "_meta"))
+      else {
+        // the purge changed the posting set: RECOMPUTE df and n_docs
+        // from the surviving postings (idf heals here — the Lucene
+        // merge step of the delete contract)
+        val conf = spark.sessionState.newHadoopConf()
+        val (_, vocab0, nBuckets0) = graft.util.SidecarIO.readSparseMeta(
+          conf, s"$indexDir/_meta")
+        val (survDf, nDocs) = dfAndDocCount(
+          graft.util.IndexDir.scan(spark, fresh, "bucket"))
+        writeStats(spark, survDf, s"$fresh/_stats")
+        graft.util.SidecarIO.writeSparseMeta(conf, s"$fresh/_meta", nDocs,
+          vocab0, nBuckets0)
       }
-    } else {
-      // the purge changed the posting set: RECOMPUTE df and n_docs
-      // from the surviving postings (idf heals here — the Lucene
-      // merge step of the delete contract); _deleted is NOT copied,
-      // so the tombstones clear with the publish
-      val (_, vocab0, nBuckets0) = graft.util.SidecarIO.readSparseMeta(
-        spark.sessionState.newHadoopConf(), s"$indexDir/_meta")
-      // if EVERY document was tombstoned the overwrite above wrote no
-      // bucket=* partition dirs and a globbed read would throw "Path
-      // does not exist" — read the fresh dir non-globbed with the
-      // surviving postings' schema instead (0 rows, correct columns),
-      // so a full purge compacts to a valid empty index
-      val freshBuckets = fs.listStatus(
-          new org.apache.hadoop.fs.Path(fresh))
-        .exists(_.getPath.getName.startsWith("bucket="))
-      if (!freshBuckets)
-        // persist the posting schema so later load/search/compact
-        // calls can open the validly-empty index (see [[bucketScan]])
-        postings.limit(0).coalesce(1).write.mode("overwrite")
-          .parquet(s"$fresh/_schema")
-      val purged =
-        if (freshBuckets)
-          spark.read.option("basePath", fresh)
-            .parquet(s"$fresh/bucket=*")
-        else postings.limit(0)
-      val (survDf, nDocs) = dfAndDocCount(purged)
-      writeStats(spark, survDf, s"$fresh/_stats")
-      graft.util.SidecarIO.writeSparseMeta(
-        spark.sessionState.newHadoopConf(), s"$fresh/_meta", nDocs,
-        vocab0, nBuckets0)
     }
-    graft.util.DirSwap.publish(fs, live)
-    spark.catalog.refreshByPath(indexDir)
-    val after = listPostingFiles(fs, live)
-    val buckets = after.map(_.getParent.getName).distinct.size
-    CompactionStats(buckets, before.size, after.size)
   }
 
   /** Reopen a built artifact: postings off the bucket-partitioned
-    * parquet, df sidecar, meta. No corpus, no recount.
+    * parquet, df sidecar, meta. No corpus, no recount. Heals an
+    * interrupted compaction swap first.
     */
   def load(spark: SparkSession, indexDir: String): Model = {
+    graft.util.IndexDir.open(spark, indexDir)
     val (nDocs, vocab, nBuckets) = graft.util.SidecarIO.readSparseMeta(
       spark.sessionState.newHadoopConf(), s"$indexDir/_meta")
-    Model(indexDir,
-      minusDeleted(spark, indexDir, bucketScan(spark, indexDir)),
+    Model(indexDir, graft.util.IndexDir.live(spark, indexDir, "bucket"),
       spark.read.parquet(s"$indexDir/_stats"),
       nDocs, vocab, nBuckets)
   }

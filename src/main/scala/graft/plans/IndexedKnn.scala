@@ -83,7 +83,7 @@ object IndexedKnn {
     // follows a rebuild that rewrote the part files, and a cached file
     // listing would point at deleted paths.
     modelMemo.remove(indexDir)
-    recoverSwap(spark, indexDir)
+    graft.util.IndexDir.open(spark, indexDir)
     val q = qualify(spark, dataPath)
     registry.put(q, Entry(indexDir, idCol, vecCol, nprobe, shortlist))
     names.put(if (name.nonEmpty) name else q, q)
@@ -135,7 +135,7 @@ object IndexedKnn {
   def reindex(spark: SparkSession, name: String,
       maxIter: Int = 5): IndexInfo = {
     val (path, e) = entryFor(name)
-    recoverSwap(spark, e.indexDir) // heal a previously interrupted swap
+    graft.util.IndexDir.open(spark, e.indexDir) // heal an interrupted swap
     val corpus = spark.read.parquet(path)
     val old = model(spark, e)
     val nCells = old.centroids.length
@@ -163,7 +163,7 @@ object IndexedKnn {
     * file count, not just bytes.
     */
   def compactIndex(spark: SparkSession, name: String,
-      targetFilesPerCell: Int = 1): IvfIndex.CompactionStats = {
+      targetFilesPerCell: Int = 1): graft.util.CompactionStats = {
     val (path, e) = entryFor(name)
     val stats = IvfIndex.compact(spark, e.indexDir, targetFilesPerCell)
     register(spark, path, e.indexDir, e.idCol, e.vecCol, e.nprobe, name,
@@ -205,21 +205,9 @@ object IndexedKnn {
   private[plans] def lookup(rootPaths: Seq[String]): Option[Entry] =
     rootPaths.flatMap(registry.get).headOption
 
-  /** Heal a reindex/compaction swap interrupted between its two
-    * renames — see [[graft.util.DirSwap.recover]].
-    */
-  private[plans] def recoverSwap(spark: SparkSession,
-      indexDir: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(indexDir)
-    graft.util.DirSwap.recover(
-      live.getFileSystem(spark.sessionState.newHadoopConf()), live)
-  }
-
   private[plans] def model(spark: SparkSession, e: Entry): IvfIndex.Model =
-    modelMemo.getOrElseUpdate(e.indexDir, {
-      recoverSwap(spark, e.indexDir)
-      IvfIndex.load(spark, e.indexDir, e.idCol, e.vecCol)
-    })
+    modelMemo.getOrElseUpdate(e.indexDir,
+      IvfIndex.load(spark, e.indexDir, e.idCol, e.vecCol))
 
   /** Install [[IndexedKnnRule]] on the session's user-provided
     * optimizer batch (idempotent). Called by [[register]] and by

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -135,11 +135,9 @@ object VectorIngestStream {
   def compact(spark: SparkSession, indexPath: String, idCol: String,
       vecCol: String, targetDir: String): IvfIndex.Model = {
     val model = openModel(spark, indexPath, idCol, vecCol)
-    model.assigned
-      .select(stored(model).map(col): _*)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("errorifexists")
-      .parquet(targetDir)
+    graft.util.IndexDir.rewrite(
+      model.assigned.select(stored(model).map(col): _*), "cell_id", idCol,
+      1, targetDir, SaveMode.ErrorIfExists)
     IvfIndex.copySidecars(spark, indexPath, targetDir)
     IvfIndex.load(spark, targetDir, idCol, vecCol)
   }

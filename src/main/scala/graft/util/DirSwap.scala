@@ -4,9 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Crash-safe publication of a rebuilt directory artifact over a live
   * one via two renames, plus the recovery that heals an interrupted
-  * swap. Shared by index reindex (IndexedKnn.reindex) and cell
-  * compaction (IvfIndex.compact): both rebuild a durable directory in
-  * a `.rebuild` sibling and then publish it.
+  * swap. Its users are index compaction ([[IndexDir.compact]], for the
+  * IVF and sparse indexes) and index reindex
+  * (`graft.plans.IndexedKnn.reindex`): both rebuild a durable directory
+  * in a `.rebuild` sibling and then publish it. The summary rebuild and
+  * the sparse index's sidecar refresh swap the same way.
   *
   * Protocol: `live` -> `live.old` (rename #1), `live.rebuild` -> `live`
   * (rename #2), delete `live.old`. A crash before rename #1 leaves the

@@ -20,7 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * it a lookup still builds and returns its value but stores nothing.
   * An entry retains the input plan, its session and the value: a
   * `DataFrame` handle or an index `Model` (plan handles and the
-  * centroid table), never collected relation rows — except
+  * centroid table, plus a copy of the centroid bits in the IVF build
+  * memo's key), never collected relation rows — except
   * `ProductQuantizer.fitCodebook`'s, at most 256 centroids × dim
   * floats per entry at 64 entries. A build whose key slot holds a
   * stale entry (another session, or a hash collision) replaces it; a

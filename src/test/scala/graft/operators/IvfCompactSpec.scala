@@ -64,7 +64,7 @@ class IvfCompactSpec extends SparkSuite {
     val stats = IvfIndex.compact(spark, m.indexPath, targetFilesPerCell = 2)
     val perCell = partFiles(m.indexPath).groupBy(_.getParentFile.getName)
     assert(perCell.values.forall(_.size <= 2))
-    assert(stats.cells === perCell.size)
+    assert(stats.partitions === perCell.size)
     val reopened = IvfIndex.load(spark, m.indexPath, "vec_id", "embedding")
     assert(reopened.assigned.count() === total)
   }
@@ -86,6 +86,36 @@ class IvfCompactSpec extends SparkSuite {
     assert(live.exists() && !old.exists() && !fresh.exists())
     val after = rows(IvfIndex.search(healed, queries, k = 10, nprobe = 8))
     assert(after === before)
+  }
+
+  test("an index purged of every row compacts to a valid empty index " +
+      "that loads, searches empty, re-appends, and re-registers") {
+    val m = buildAppended("ivf_compact_purge")
+    val all = m.assigned.select($"vec_id")
+    val n = all.count()
+    assert(IvfIndex.delete(spark, m.indexPath, all) === n)
+    val stats = IvfIndex.compact(spark, m.indexPath)
+    assert(stats.partitions === 0 && stats.filesAfter === 0, s"$stats")
+    val empty = IvfIndex.load(spark, m.indexPath, "vec_id", "embedding")
+    assert(IvfIndex.search(empty, queries, k = 10, nprobe = 8).count() === 0)
+    // still a live artifact: appended rows are searchable again
+    val back = IvfIndex.append(empty, emb.where($"vec_id" < 100))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select($"qid", $"nid").as[(Long, Long)].collect().toSet
+    assert(pairs(IvfIndex.search(back, queries, k = 10, nprobe = 8)) ===
+      pairs(Knn.topK(emb.where($"vec_id" < 100), queries, "vec_id",
+        "embedding", 10)))
+    // and a fully purged registration compacts and re-registers
+    val path = s"$sf0001/embeddings.parquet"
+    try {
+      graft.plans.IndexedKnn.register(spark, path, m.indexPath, "vec_id",
+        "embedding", name = "purged_reg")
+      IvfIndex.delete(spark, m.indexPath, emb.select($"vec_id"))
+      val regStats = graft.plans.IndexedKnn.compactIndex(spark, "purged_reg")
+      assert(regStats.partitions === 0, s"$regStats")
+      assert(IvfIndex.load(spark, m.indexPath, "vec_id", "embedding")
+        .assigned.count() === 0)
+    } finally graft.plans.IndexedKnn.unregister(spark, path)
   }
 
   test("compacting an SQ8 index carries the _sqmodel sidecar and " +

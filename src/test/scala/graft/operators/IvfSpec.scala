@@ -80,6 +80,28 @@ class IvfSpec extends SparkSuite {
     assert(grown.assigned.count() === base.count() + b2.count())
   }
 
+  test("the build memo keys on the centroid bits: two tables whose " +
+      "deepHashCodes collide over one corpus give two indexes") {
+    val corpus = Seq((1L, Seq(0.5f, 0.25f)), (2L, Seq(2.0f, 1.5f)))
+      .toDF("id", "vec")
+    val one = java.lang.Float.floatToIntBits(1.0f)
+    val a = Array(Array(1.0f, 1.0f))
+    // +1 in the first bit pattern, -31 in the second: the row hash is
+    // 31 * h(first) + h(second), so both tables hash alike
+    val b = Array(Array(java.lang.Float.intBitsToFloat(one + 1),
+      java.lang.Float.intBitsToFloat(one - 31)))
+    def bits(cs: Array[Array[Float]]): Object =
+      cs.map(_.map(java.lang.Float.floatToIntBits))
+    assert(java.util.Arrays.deepHashCode(Array(bits(a))) ===
+      java.util.Arrays.deepHashCode(Array(bits(b))), "fixture must collide")
+    val ma = IvfIndex.buildWithCentroids(corpus, "id", "vec", a)
+    val mb = IvfIndex.buildWithCentroids(corpus, "id", "vec", b)
+    assert(mb ne ma)
+    assert(mb.indexPath !== ma.indexPath)
+    assert(IvfIndex.load(spark, mb.indexPath, "id", "vec").centroids
+      .map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
+  }
+
   test("partial probing keeps high recall at a fraction of the scan") {
     val exact = pairs(Knn.topK(emb, queries, "vec_id", "embedding", 10))
     val ivf = pairs(IvfIndex.search(model, queries, k = 10, nprobe = 4))

@@ -102,7 +102,7 @@ class SparseIndexSpec extends SparkSuite {
     // three writes' worth of files folded to exactly one per bucket
     assert(stats.filesBefore > stats.filesAfter,
       s"$stats should shrink")
-    assert(stats.filesAfter === stats.buckets, s"$stats")
+    assert(stats.filesAfter === stats.partitions, s"$stats")
     val m3 = SparseIndex.load(spark, dir)
     assert(SparseIndex.search(m3, words, 15)
       .as[(Long, Long)].collect().toSeq === before)
@@ -119,6 +119,31 @@ class SparseIndexSpec extends SparkSuite {
     spark.catalog.refreshByPath(dir)
     SparseIndex.compact(spark, dir)
     val healed = SparseIndex.load(spark, dir)
+    assert(SparseIndex.search(healed, words, 15)
+      .as[(Long, Long)].collect().toSeq === before)
+  }
+
+  test("load heals a compaction torn between its two renames: the " +
+      "pre-compaction index survives intact") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_sparse_torn").toString + "/idx"
+    val corpus = docs.where($"doc_id" < 200)
+    val base = SparseIndex.build(corpus.where($"doc_id" % 2 === 0),
+      "doc_id", "text", dir, nBuckets = 8)
+    val m = SparseIndex.append(base, corpus.where($"doc_id" % 2 =!= 0),
+      "doc_id", "text")
+    val words = Seq("table", "scan", "fast")
+    val before = SparseIndex.search(m, words, 15)
+      .as[(Long, Long)].collect().toSeq
+    // the torn state: live renamed away, fresh not yet published
+    val live = new java.io.File(dir)
+    val old = new java.io.File(graft.util.DirSwap.oldPath(dir))
+    val fresh = new java.io.File(graft.util.DirSwap.rebuildPath(dir))
+    assert(live.renameTo(old))
+    assert(fresh.mkdirs()) // half-written rebuild, must be discarded
+    spark.catalog.refreshByPath(dir)
+    val healed = SparseIndex.load(spark, dir)
+    assert(live.exists() && !old.exists() && !fresh.exists())
     assert(SparseIndex.search(healed, words, 15)
       .as[(Long, Long)].collect().toSeq === before)
   }
