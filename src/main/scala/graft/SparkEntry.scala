@@ -40,7 +40,7 @@ object SparkEntry {
     * table with the deterministic local model, then kNN-searched.
     */
   def entry(spark: SparkSession): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     queries("q_embed_docs")(spark, "/root/testdata/sf0.001")
   }
 
@@ -50,7 +50,7 @@ object SparkEntry {
     // Register SQL functions on first use so query bodies may use spark.sql.
     base.map { case (k, fn) =>
       k -> ((s: SparkSession, dir: String) => {
-        graft.functions.VectorFunctions.register(s); fn(s, dir)
+        graft.GraftSession.register(s); fn(s, dir)
       })
     }
   }

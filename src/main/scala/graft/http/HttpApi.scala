@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 
 import graft.embed.HashEmbeddingRuntime
 import graft.operators.Knn
+import graft.plans.SummaryRewrite.{CmsSpec, Entry, HdrSpec, HistSpec,
+  ItemsSpec, KmvSpec, SampleQSpec, SketchSpec, VecSpec}
 import graft.util.{Json, MiniJson}
 
 /** Minimal REST facade over the engine (SURVEY §2.12), built on the
@@ -199,34 +201,24 @@ class HttpApi(spark: SparkSession, port: Int = 0,
   private val ivfModels = new java.util.concurrent.ConcurrentHashMap[
     String, graft.operators.IvfIndex.Model]()
   // materialized rollups registered by /summary: the MV is an index
-  // artifact like any other and gets the same CRUD lifecycle
-  private case class SummaryReg(dataPath: String, summaryDir: String,
-      dims: Seq[String], measures: Seq[String],
-      exprs: Seq[graft.plans.SummaryRewrite.ExprMeasure] = Nil,
-      sketches: Seq[graft.plans.SummaryRewrite.SketchSpec] = Nil,
-      histograms: Seq[graft.plans.SummaryRewrite.HistSpec] = Nil,
-      items: Seq[graft.plans.SummaryRewrite.ItemsSpec] = Nil,
-      kmvs: Seq[graft.plans.SummaryRewrite.KmvSpec] = Nil,
-      vecs: Seq[graft.plans.SummaryRewrite.VecSpec] = Nil,
-      samples: Seq[graft.plans.SummaryRewrite.SampleQSpec] = Nil,
-      hdrs: Seq[graft.plans.SummaryRewrite.HdrSpec] = Nil,
-      cmss: Seq[graft.plans.SummaryRewrite.CmsSpec] = Nil)
+  // artifact like any other and gets the same CRUD lifecycle. Each
+  // collection maps to its base table path and the registry entry
+  // that registration installed.
   private val summaries = new java.util.concurrent.ConcurrentHashMap[
-    String, SummaryReg]()
+    String, (String, Entry)]()
 
   /** Parse `"col:lo:hi[:nbins]"` histogram descriptors (the compact
     * REST encoding of [[graft.plans.SummaryRewrite.HistSpec]]).
     */
   private def parseHistSpecs(items: Seq[String])
-      : Either[String, Seq[graft.plans.SummaryRewrite.HistSpec]] = {
+      : Either[String, Seq[HistSpec]] = {
     val parsed = items.map { s =>
       s.split(":") match {
         case Array(c, lo, hi) =>
-          scala.util.Try(graft.plans.SummaryRewrite.HistSpec(c,
-            lo.toDouble, hi.toDouble)).toOption
+          scala.util.Try(HistSpec(c, lo.toDouble, hi.toDouble)).toOption
         case Array(c, lo, hi, nb) =>
-          scala.util.Try(graft.plans.SummaryRewrite.HistSpec(c,
-            lo.toDouble, hi.toDouble, nb.toInt)).toOption
+          scala.util.Try(HistSpec(c, lo.toDouble, hi.toDouble,
+            nb.toInt)).toOption
         case _ => None
       }
     }
@@ -239,14 +231,13 @@ class HttpApi(spark: SparkSession, port: Int = 0,
     * encoding of [[graft.plans.SummaryRewrite.ItemsSpec]]).
     */
   private def parseItemsSpecs(items: Seq[String])
-      : Either[String, Seq[graft.plans.SummaryRewrite.ItemsSpec]] = {
+      : Either[String, Seq[ItemsSpec]] = {
     val parsed = items.map { s =>
       s.split(":") match {
         case Array(c) =>
-          Some(graft.plans.SummaryRewrite.ItemsSpec(c))
+          Some(ItemsSpec(c))
         case Array(c, cap) =>
-          scala.util.Try(
-            graft.plans.SummaryRewrite.ItemsSpec(c, cap.toInt)).toOption
+          scala.util.Try(ItemsSpec(c, cap.toInt)).toOption
             .filter(_.capacity > 0)
         case _ => None
       }
@@ -1494,21 +1485,18 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           // ("histograms":["latency:0:60000:600"])
           val hllP = body.int("hll_p").getOrElse(8)
           val hllKeys = body.strings("hll_keys").getOrElse(Nil)
-          val sketches = hllKeys.map(k =>
-            graft.plans.SummaryRewrite.SketchSpec(k, hllP))
+          val hlls = hllKeys.map(k => SketchSpec(k, hllP))
           val histRaw = body.strings("histograms").getOrElse(Nil)
           val itemsRaw = body.strings("items").getOrElse(Nil)
           // optional KMV overlap sketches ("kmv_keys":["o_custkey"],
           // k via "kmv_k", default 2048)
           val kmvK = body.int("kmv_k").getOrElse(2048)
           val kmvKeys = body.strings("kmv_keys").getOrElse(Nil)
-          val kmvs = kmvKeys.map(k =>
-            graft.plans.SummaryRewrite.KmvSpec(k, kmvK))
+          val kmvs = kmvKeys.map(k => KmvSpec(k, kmvK))
           // optional vector-sum (centroid) measures over ARRAY<FLOAT>
           // embedding columns ("vec_cols":["embedding"])
           val vecCols = body.strings("vec_cols").getOrElse(Nil)
-          val vecs = vecCols.map(c =>
-            graft.plans.SummaryRewrite.VecSpec(c))
+          val vecs = vecCols.map(c => VecSpec(c))
           // optional bottom-k sample-quantile sketches
           // ("sample_cols":["latency:request_id"] — value:unique-id
           // pairs; k via "sample_k", default 1024)
@@ -1516,8 +1504,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           val smpRaw = body.strings("sample_cols").getOrElse(Nil)
           val samples = smpRaw.flatMap { s =>
             s.split(':') match {
-              case Array(v, id) => Some(
-                graft.plans.SummaryRewrite.SampleQSpec(id, v, smpK))
+              case Array(v, id) => Some(SampleQSpec(id, v, smpK))
               case _ => None
             }
           }
@@ -1527,16 +1514,14 @@ class HttpApi(spark: SparkSession, port: Int = 0,
           // declaration needed; the expression form stays Scala-only)
           val hdrP = body.int("hdr_p").getOrElse(5)
           val hdrCols = body.strings("hdr_cols").getOrElse(Nil)
-          val hdrs = hdrCols.map(c =>
-            graft.plans.SummaryRewrite.HdrSpec(c, c, hdrP))
+          val hdrs = hdrCols.map(c => HdrSpec(c, c, hdrP))
           // optional count-min point-frequency sketches over integral
           // key columns ("cms_keys":["user_id"], depth/width via
           // "cms_d"/"cms_w", defaults 4x512)
           val cmsD = body.int("cms_d").getOrElse(4)
           val cmsW = body.int("cms_w").getOrElse(512)
           val cmsKeys = body.strings("cms_keys").getOrElse(Nil)
-          val cmss = cmsKeys.map(k =>
-            graft.plans.SummaryRewrite.CmsSpec(k, cmsD, cmsW))
+          val cmss = cmsKeys.map(k => CmsSpec(k, cmsD, cmsW))
           val cols = df.columns.toSet
           val paths = df.queryExecution.optimizedPlan.collect {
             case l: org.apache.spark.sql.execution.datasources
@@ -1601,22 +1586,19 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               else {
                 val sumDir = s"${System.getProperty("java.io.tmpdir")}/" +
                   s"graft_http_summary_${java.lang.ProcessHandle.current().pid()}_$name"
-                graft.plans.SummaryRewrite.register(spark, paths.head,
-                  sumDir, dims, measures, refresh = refresh,
-                  sketches = sketches, histograms = histograms,
-                  items = items, kmvs = kmvs, vecs = vecs,
-                  exprs = exprs,
-                  samples = samples, hdrs = hdrs, cmss = cmss)
-                summaries.put(name, SummaryReg(paths.head, sumDir, dims,
-                  measures, exprs, sketches, histograms, items, kmvs,
-                  vecs, samples, hdrs, cmss))
+                summaries.put(name, (paths.head,
+                  graft.plans.SummaryRewrite.register(spark, paths.head,
+                    sumDir, dims, measures, refresh = refresh,
+                    sketches = hlls ++ histograms ++ items ++ kmvs ++ vecs ++
+                      samples ++ hdrs ++ cmss,
+                    exprs = exprs)))
                 val chunks = spark.read.parquet(sumDir)
                   .select(col("chunk")).distinct().count()
                 respond(ex, 200,
                   s"""{"summary":"$name","dims":${dims.size},""" +
                     s""""measures":${measures.size},""" +
                     s""""exprs":${exprs.size},""" +
-                    s""""sketches":${sketches.size},""" +
+                    s""""sketches":${hlls.size},""" +
                     s""""histograms":${histograms.size},""" +
                     s""""items":${items.size},""" +
                     s""""kmvs":${kmvs.size},""" +
@@ -1636,13 +1618,14 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val key = body.str("key")
             val gdims = body.strings("dims").getOrElse(Nil)
-            if (!key.exists(k => reg.sketches.exists(_.key == k)))
+            val hllKeys = reg.sketches.collect { case h: SketchSpec => h.key }
+            if (!key.exists(hllKeys.contains))
               respond(ex, 400,
                 s"""{"error":"key must be one of the registered """ +
-                  s"""hll_keys: ${reg.sketches.map(_.key).mkString(",")}"}""")
+                  s"""hll_keys: ${hllKeys.mkString(",")}"}""")
             else if (!gdims.forall(reg.dims.contains))
               respond(ex, 400,
                 s"""{"error":"dims must be rollup dims"}""")
@@ -1665,17 +1648,17 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val colName = body.str("col")
             val gdims = body.strings("dims").getOrElse(Nil)
             val qs = body.floats("qs")
               .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
-            val spec = colName.flatMap(c =>
-              reg.histograms.find(_.col == c))
+            val histograms = reg.sketches.collect { case h: HistSpec => h }
+            val spec = colName.flatMap(c => histograms.find(_.col == c))
             if (spec.isEmpty)
               respond(ex, 400,
                 s"""{"error":"col must be one of the registered """ +
-                  s"""histograms: ${reg.histograms.map(_.col)
+                  s"""histograms: ${histograms.map(_.col)
                     .mkString(",")}"}""")
             else if (!gdims.forall(reg.dims.contains))
               respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
@@ -1712,16 +1695,17 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val colName = body.str("col")
             val gdims = body.strings("dims").getOrElse(Nil)
             val qs = body.floats("qs")
               .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
-            if (!colName.exists(c => reg.samples.exists(_.value == c)))
+            val sampleCols =
+              reg.sketches.collect { case sp: SampleQSpec => sp.value }
+            if (!colName.exists(sampleCols.contains))
               respond(ex, 400,
                 s"""{"error":"col must be one of the registered """ +
-                  s"""sample_cols: ${reg.samples.map(_.value)
-                    .mkString(",")}"}""")
+                  s"""sample_cols: ${sampleCols.mkString(",")}"}""")
             else if (!gdims.forall(reg.dims.contains))
               respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
             else if (qs.isEmpty || qs.exists(q => q < 0 || q > 1))
@@ -1756,15 +1740,16 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val colName = body.str("col")
             val gdims = body.strings("dims").getOrElse(Nil)
             val qs = body.floats("qs")
               .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
-            if (!colName.exists(c => reg.hdrs.exists(_.name == c)))
+            val hdrCols = reg.sketches.collect { case h: HdrSpec => h.name }
+            if (!colName.exists(hdrCols.contains))
               respond(ex, 400,
                 s"""{"error":"col must be one of the registered """ +
-                  s"""hdr_cols: ${reg.hdrs.map(_.name).mkString(",")}"}""")
+                  s"""hdr_cols: ${hdrCols.mkString(",")}"}""")
             else if (!gdims.forall(reg.dims.contains))
               respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
             else if (qs.isEmpty || qs.exists(q => q <= 0 || q > 1))
@@ -1797,14 +1782,15 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val key = body.str("key")
             val gdims = body.strings("dims").getOrElse(Nil)
             val values = body.longs("values").map(_.toSeq).getOrElse(Nil)
-            if (!key.exists(k => reg.cmss.exists(_.key == k)))
+            val cmsKeys = reg.sketches.collect { case cs: CmsSpec => cs.key }
+            if (!key.exists(cmsKeys.contains))
               respond(ex, 400,
                 s"""{"error":"key must be one of the registered """ +
-                  s"""cms_keys: ${reg.cmss.map(_.key).mkString(",")}"}""")
+                  s"""cms_keys: ${cmsKeys.mkString(",")}"}""")
             else if (!gdims.forall(reg.dims.contains))
               respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
             else if (values.isEmpty)
@@ -1836,7 +1822,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((dataPath, reg)) =>
             val pred = body.str("where")
             val chunk = body.long("chunk").getOrElse(-2L)
             tableOr404(ex, name).foreach { df =>
@@ -1848,7 +1834,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                   val deleted = df.where(expr(pred.get))
                   val n = deleted.count()
                   graft.streaming.SummaryStream.retract(spark,
-                    reg.dataPath, reg.summaryDir, deleted, reg.dims,
+                    dataPath, reg.summaryDir, deleted, reg.dims,
                     reg.measures, chunk)
                   respond(ex, 200,
                     s"""{"retracted":"$name","rows":$n,""" +
@@ -1874,7 +1860,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             scala.util.Try(chunkId.toLong).toOption match {
               case None =>
                 respond(ex, 400, """{"error":"chunk must be a long"}""")
@@ -1900,14 +1886,15 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val colName = body.str("col")
             val gdims = body.strings("dims").getOrElse(Nil)
             val k = body.int("k").getOrElse(10)
-            if (!colName.exists(c => reg.items.exists(_.col == c)))
+            val itemCols = reg.sketches.collect { case it: ItemsSpec => it.col }
+            if (!colName.exists(itemCols.contains))
               respond(ex, 400,
                 s"""{"error":"col must be one of the registered """ +
-                  s"""items: ${reg.items.map(_.col).mkString(",")}"}""")
+                  s"""items: ${itemCols.mkString(",")}"}""")
             else if (!gdims.forall(reg.dims.contains))
               respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
             else if (k <= 0 || k > 1000)
@@ -1936,13 +1923,14 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val key = body.str("key")
             val gdims = body.strings("dims").getOrElse(Nil)
-            if (!key.exists(k => reg.kmvs.exists(_.key == k)))
+            val kmvKeys = reg.sketches.collect { case kv: KmvSpec => kv.key }
+            if (!key.exists(kmvKeys.contains))
               respond(ex, 400,
                 s"""{"error":"key must be one of the registered """ +
-                  s"""kmv_keys: ${reg.kmvs.map(_.key).mkString(",")}"}""")
+                  s"""kmv_keys: ${kmvKeys.mkString(",")}"}""")
             else if (gdims.isEmpty || !gdims.forall(reg.dims.contains))
               respond(ex, 400,
                 s"""{"error":"dims must be a non-empty subset of """ +
@@ -1975,13 +1963,14 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val colName = body.str("col")
             val gdims = body.strings("dims").getOrElse(Nil)
-            if (!colName.exists(c => reg.vecs.exists(_.col == c)))
+            val vecCols = reg.sketches.collect { case v: VecSpec => v.col }
+            if (!colName.exists(vecCols.contains))
               respond(ex, 400,
                 s"""{"error":"col must be one of the registered """ +
-                  s"""vec_cols: ${reg.vecs.map(_.col).mkString(",")}"}""")
+                  s"""vec_cols: ${vecCols.mkString(",")}"}""")
             else if (!gdims.forall(reg.dims.contains))
               respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
             else {
@@ -2118,18 +2107,8 @@ class HttpApi(spark: SparkSession, port: Int = 0,
                     s"${System.getProperty("java.io.tmpdir")}/" +
                       "graft_http_summary_" +
                       s"${java.lang.ProcessHandle.current().pid()}_$name"
-                  rec.register(spark, paths.head, sumDir,
-                    refresh = true, sampleId = sampleId)
-                  summaries.put(name, SummaryReg(paths.head, sumDir,
-                    rec.dims, rec.measures, rec.exprMeasures,
-                    rec.sketchKeys.map(k =>
-                      graft.plans.SummaryRewrite.SketchSpec(k)),
-                    samples =
-                      if (sampleId.isEmpty) Nil
-                      else rec.sampleCols.map(c => graft.plans
-                        .SummaryRewrite.SampleQSpec(sampleId, c)),
-                    hdrs = rec.hdrCols.map(c =>
-                      graft.plans.SummaryRewrite.HdrSpec(c, c))))
+                  summaries.put(name, (paths.head, rec.register(spark,
+                    paths.head, sumDir, refresh = true, sampleId = sampleId)))
                   val chunks = spark.read.parquet(sumDir)
                     .select(col("chunk")).distinct().count()
                   s""","applied":true,"chunks":$chunks"""
@@ -2164,7 +2143,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((dataPath, reg)) =>
             val byChunk = spark.read.parquet(reg.summaryDir)
               .groupBy(col("chunk")).agg(count(lit(1)).as("rows"))
               .orderBy(col("chunk")).collect()
@@ -2173,7 +2152,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
               .mkString("[", ",", "]")
             val (fired, errors) = graft.plans.SummaryRewrite.stats
             val retracted = graft.plans.SummaryRewrite
-              .entryFor(spark, reg.dataPath).exists(_.retracted)
+              .entryFor(spark, dataPath).exists(_.retracted)
             respond(ex, 200,
               s"""{"summary":"$name","n_chunks":${byChunk.length},""" +
                 s""""dims":[${reg.dims.map("\"" + _ + "\"").mkString(",")}],""" +
@@ -2188,7 +2167,7 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.get(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
+          case Some((_, reg)) =>
             val before = spark.read.parquet(reg.summaryDir)
               .select(col("chunk")).distinct().count()
             graft.streaming.SummaryStream.compact(spark, reg.summaryDir,
@@ -2202,8 +2181,8 @@ class HttpApi(spark: SparkSession, port: Int = 0,
         Option(summaries.remove(name)) match {
           case None =>
             respond(ex, 404, error(s"no summary on $name"))
-          case Some(reg) =>
-            graft.plans.SummaryRewrite.unregister(spark, reg.dataPath)
+          case Some((dataPath, _)) =>
+            graft.plans.SummaryRewrite.unregister(spark, dataPath)
             respond(ex, 200, s"""{"dropped_summary":"$name"}""")
         }
 

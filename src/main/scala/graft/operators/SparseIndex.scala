@@ -86,8 +86,7 @@ object SparseIndex {
     val (statsRows, nDocs) = dfAndDocCount(post)
     post.unpersist()
     writeStats(spark, statsRows, s"$indexDir/_stats")
-    val written = spark.read.option("basePath", indexDir)
-      .parquet(s"$indexDir/bucket=*")
+    val written = graft.util.IndexDir.scan(spark, indexDir, "bucket")
     graft.util.SidecarIO.writeSparseMeta(
       spark.sessionState.newHadoopConf(), s"$indexDir/_meta", nDocs,
       vocab, nBuckets)

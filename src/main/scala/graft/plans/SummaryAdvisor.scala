@@ -72,23 +72,21 @@ object SummaryAdvisor {
       * volume. Percentiles over fractional columns recommend bottom-k
       * sample sketches ([[sampleCols]]) — those need a UNIQUE row id
       * to hash, which only the caller knows: pass it as `sampleId`.
+      * Returns the registry entry it installed.
       */
     def register(spark: SparkSession, basePath: String,
         summaryDir: String, refresh: Boolean = false,
-        sampleId: String = ""): Unit = {
+        sampleId: String = ""): SummaryRewrite.Entry = {
       require(sampleCols.isEmpty || sampleId.nonEmpty,
         "the workload reads percentiles of " +
           s"${sampleCols.mkString(", ")}: pass sampleId (a unique " +
           "row id column/expression) to carry the sample sketches")
       SummaryRewrite.register(spark, basePath, summaryDir,
         dims, measures, refresh = refresh,
-        sketches = sketchKeys.map(k => SummaryRewrite.SketchSpec(k)),
-        exprs = exprMeasures,
-        samples =
-          if (sampleId.isEmpty) Nil
-          else sampleCols.map(c =>
-            SummaryRewrite.SampleQSpec(sampleId, c)),
-        hdrs = hdrCols.map(c => SummaryRewrite.HdrSpec(c, c)))
+        sketches = sketchKeys.map(k => SummaryRewrite.SketchSpec(k)) ++
+          sampleCols.map(c => SummaryRewrite.SampleQSpec(sampleId, c)) ++
+          hdrCols.map(c => SummaryRewrite.HdrSpec(c, c)),
+        exprs = exprMeasures)
     }
   }
 

@@ -2,15 +2,15 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, Attribute, AttributeReference, AttributeSet, Cast, Coalesce,
   Divide, EqualTo, ExprId, Expression, GreaterThan, If, IsNotNull,
   LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression, Sqrt,
   Subtract}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
-  AggregateExpression, ApproximatePercentile, Average, Count, Max,
-  Min, StddevPop, StddevSamp, Sum, VariancePop, VarianceSamp}
+  AggregateExpression, AggregateFunction, ApproximatePercentile, Average,
+  Count, Max, Min, StddevPop, StddevSamp, Sum, VariancePop, VarianceSamp}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Expand, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.{
@@ -117,11 +117,66 @@ import org.apache.spark.sql.types._
   */
 object SummaryRewrite {
 
+  /** One sketch measure carried by the rollup. Each kind owns the name
+    * of its stored column, the partial aggregate that sketches one
+    * chunk's base rows, and the merge aggregate that folds stored
+    * partials — so the build, the streaming batches, the compact fold
+    * and the serve functions all go through the same descriptor. The
+    * parameter a merge needs (Misra–Gries capacity, KMV and sample k,
+    * HDR p, count-min d×w) rides in the column NAME, and
+    * [[Sketch.parse]] recovers the kind from the rollup's schema alone,
+    * without the registry (the same self-describing stance as hive
+    * partition dirs).
+    */
+  sealed trait Sketch {
+    def colName: String
+    private[graft] def partial: AggregateFunction
+    private[graft] def merge(c: Expression): AggregateFunction
+  }
+
+  object Sketch {
+    private val Hll = "hll_(.+)".r
+    private val Hist = "hist_(.+)".r
+    private val Mg = "mg(\\d+)_(.+)".r
+    private val Kmv = "kmv(\\d+)_(.+)".r
+    private val Vsum = "vsum_(.+)".r
+    private val Smp = "smp(\\d+)_(.+)".r
+    private val Hdr = "hdr(\\d+)_(.+)".r
+    private val Cms = "cms(\\d+)x(\\d+)_(.+)".r
+
+    /** The sketch a stored rollup column holds, rebuilt from the column
+      * name: the kind plus the parameter the name carries. Fields the
+      * name does not carry — HLL precision, histogram range, sample row
+      * id, HDR expression — come back as placeholders; merging and
+      * serving never read them. None when no kind claims the name.
+      */
+    private[graft] def parse(colName: String): Option[Sketch] =
+      colName match {
+        case Hll(key) => Some(SketchSpec(key))
+        case Hist(c) => Some(HistSpec(c, 0.0, 0.0))
+        case Mg(cap, c) => Some(ItemsSpec(c, cap.toInt))
+        case Kmv(k, key) => Some(KmvSpec(key, k.toInt))
+        case Vsum(c) => Some(VecSpec(c))
+        case Smp(k, v) => Some(SampleQSpec("", v, k.toInt))
+        case Hdr(p, n) => Some(HdrSpec(n, "", p.toInt))
+        case Cms(d, w, key) => Some(CmsSpec(key, d.toInt, w.toInt))
+        case _ => None
+      }
+  }
+
+  private def toExpr(c: Column): Expression =
+    org.apache.spark.sql.graftshim.GraftShims.expression(c)
+
   /** A distinct-count sketch carried by the rollup: HyperLogLog
     * registers of `key` at precision `p`, stored per dim group as
-    * column `hll_<key>`.
+    * column `hll_<key>`. Registers merge by elementwise max.
     */
-  case class SketchSpec(key: String, p: Int = 8)
+  case class SketchSpec(key: String, p: Int = 8) extends Sketch {
+    def colName: String = s"hll_$key"
+    private[graft] def partial =
+      graft.operators.HllSketch(toExpr(col(key)), p)
+    private[graft] def merge(c: Expression) = graft.operators.HllMerge(c)
+  }
 
   /** A quantile sketch carried by the rollup: fixed-bin histogram
     * counts of `col` over the declared [lo, hi) range, stored per dim
@@ -131,27 +186,31 @@ object SummaryRewrite {
     * [[approxQuantile]].
     */
   case class HistSpec(col: String, lo: Double, hi: Double,
-      nbins: Int = 64)
+      nbins: Int = 64) extends Sketch {
+    def colName: String = s"hist_$col"
+    private[graft] def partial = graft.operators.HistSketch(
+      toExpr(functions.col(col)), lo, hi, nbins)
+    private[graft] def merge(c: Expression) = graft.operators.HistMerge(c)
+  }
 
   /** A frequent-items sketch carried by the rollup: Misra–Gries
     * summary of `col` (cast to string) at `capacity` counters, stored
-    * per dim group as column `mg<capacity>_<col>` — the capacity
-    * rides in the NAME so the schema-driven compact fold and
-    * [[approxTopItems]] recover it without the registry (same
-    * self-describing stance as hive partition dirs). Summaries fold
+    * per dim group as column `mg<capacity>_<col>`. Summaries fold
     * with the PODS-2012 mergeable step, keeping the N/(capacity+1)
     * undercount bound; with capacity >= the column's per-group
     * distinct count the summary is EXACT counts.
     */
-  case class ItemsSpec(col: String, capacity: Int = 256) {
+  case class ItemsSpec(col: String, capacity: Int = 256) extends Sketch {
     def colName: String = s"mg${capacity}_$col"
+    private[graft] def partial = graft.operators.MgSketch(
+      toExpr(functions.col(col).cast("string")), capacity)
+    private[graft] def merge(c: Expression) =
+      graft.operators.MgMerge(c, capacity)
   }
 
   /** A set-operation distinct sketch carried by the rollup: KMV
     * (k-minimum-values) hashes of `key`, stored per dim group as
-    * column `kmv<k>_<key>` — k rides in the NAME like the Misra–Gries
-    * capacity, so the compact fold and [[approxOverlap]] recover it
-    * without the registry. Arrays fold by k-smallest-of-union (the
+    * column `kmv<k>_<key>`. Arrays fold by k-smallest-of-union (the
     * associative rollup combiner contract), and unlike HLL registers
     * two groups' sketches INTERSECT: distinct-key overlap between any
     * two dim groups is servable from the rollup alone
@@ -159,8 +218,11 @@ object SummaryRewrite {
     * count the sketch is the exact hash set and every overlap read is
     * integer-exact.
     */
-  case class KmvSpec(key: String, k: Int = 2048) {
+  case class KmvSpec(key: String, k: Int = 2048) extends Sketch {
     def colName: String = s"kmv${k}_$key"
+    private[graft] def partial =
+      graft.operators.KmvSketch(toExpr(col(key)), k)
+    private[graft] def merge(c: Expression) = graft.operators.KmvMerge(c, k)
   }
 
   /** A vector-sum measure carried by the rollup: per-dim-group
@@ -174,16 +236,18 @@ object SummaryRewrite {
     * aggregate a training pipeline needs for per-source drift checks
     * and SemDeDup-style cluster seeding.
     */
-  case class VecSpec(col: String) {
+  case class VecSpec(col: String) extends Sketch {
     def colName: String = s"vsum_$col"
+    private[graft] def partial =
+      graft.operators.VectorSum(toExpr(functions.col(col)))
+    private[graft] def merge(c: Expression) =
+      graft.operators.VectorSumMerge(c)
   }
 
   /** A range-free quantile sketch carried by the rollup: a bottom-k
     * uniform ROW sample of `value` keyed by the unique row id
     * expression `id` ([[graft.operators.Smp]]), stored per dim group
-    * as column `smp<k>_<value>` — k rides in the NAME like the
-    * Misra–Gries capacity, so the compact fold and [[sampleQuantiles]]
-    * recover it without the registry. Sketches fold by
+    * as column `smp<k>_<value>`. Sketches fold by
     * k-hash-smallest-of-union (the associative rollup combiner
     * contract), and the sample membership is a pure function of the
     * id hashes, so ANY partitioning / chunking yields the identical
@@ -193,16 +257,19 @@ object SummaryRewrite {
     * complement of [[HistSpec]]: no declared [lo, hi) range, and the
     * quantile read is an actual data value.
     */
-  case class SampleQSpec(id: String, value: String, k: Int = 1024) {
+  case class SampleQSpec(id: String, value: String, k: Int = 1024)
+      extends Sketch {
     def colName: String = s"smp${k}_$value"
+    private[graft] def partial = graft.operators.SampleSketch(
+      toExpr(functions.expr(id)), toExpr(col(value).cast("double")), k)
+    private[graft] def merge(c: Expression) =
+      graft.operators.SampleMerge(c, k)
   }
 
   /** A relative-error quantile sketch carried by the rollup: dense
     * log2-bucket ("HDR") counts of the integral expression `sql`
     * ([[graft.operators.Hdr]]) at sub-bucket precision `p`, stored
-    * per dim group as column `hdr<p>_<name>` — p rides in the NAME
-    * like the Misra–Gries capacity, so the compact fold and
-    * [[hdrQuantiles]] recover it without the registry. Counts fold by
+    * per dim group as column `hdr<p>_<name>`. Counts fold by
     * elementwise sum (the associative rollup-combiner contract, same
     * fold as [[HistSpec]]), and the bucket map is pure integer bit
     * arithmetic: quantiles served from the rollup are deterministic
@@ -211,24 +278,33 @@ object SummaryRewrite {
     * RELATIVE, <= 2^-p) and of [[SampleQSpec]] (no dependence on a
     * row-id; error does not grow past sketch saturation).
     */
-  case class HdrSpec(name: String, sql: String, p: Int = 5) {
+  case class HdrSpec(name: String, sql: String, p: Int = 5)
+      extends Sketch {
     def colName: String = s"hdr${p}_$name"
+    private[graft] def partial =
+      graft.operators.HdrSketch(toExpr(functions.expr(sql)), p)
+    // HistMerge's equal-length guard doubles as the p compatibility check
+    private[graft] def merge(c: Expression) = graft.operators.HistMerge(c)
   }
 
   /** A point-frequency sketch carried by the rollup: count-min
     * registers of integral key column `key` ([[graft.operators.Cms]])
     * at depth `d` × width `w`, stored per dim group as column
-    * `cms<d>x<w>_<key>` — d and w ride in the NAME so the compact
-    * fold and [[approxFreq]] recover them without the registry.
-    * Registers fold by elementwise sum (the associative
-    * rollup-combiner contract), so ANY key's frequency in any dim
-    * slice is servable from the rollup alone with one-sided error
-    * (estimate >= truth; excess > 2N/w with probability <= 2^-d) —
-    * the per-key read [[ItemsSpec]]'s top-k summary cannot answer for
-    * keys outside its counter set.
+    * `cms<d>x<w>_<key>`. Registers fold by elementwise sum (the
+    * associative rollup-combiner contract), so ANY key's frequency in
+    * any dim slice is servable from the rollup alone with one-sided
+    * error (estimate >= truth; excess > 2N/w with probability <=
+    * 2^-d) — the per-key read [[ItemsSpec]]'s top-k summary cannot
+    * answer for keys outside its counter set.
     */
-  case class CmsSpec(key: String, d: Int = 4, w: Int = 512) {
+  case class CmsSpec(key: String, d: Int = 4, w: Int = 512)
+      extends Sketch {
     def colName: String = s"cms${d}x${w}_$key"
+    private[graft] def partial =
+      graft.operators.CmsSketch(toExpr(col(key)), d, w)
+    // HistMerge's equal-length guard doubles as the d×w compatibility
+    // check
+    private[graft] def merge(c: Expression) = graft.operators.HistMerge(c)
   }
 
   /** A DERIVED (expression) measure carried by the rollup: the named
@@ -250,15 +326,8 @@ object SummaryRewrite {
   case class Entry(summaryDir: String, dims: Seq[String],
       measures: Seq[String],
       declaredScale: Map[String, Int] = Map.empty,
-      sketches: Seq[SketchSpec] = Nil,
-      histograms: Seq[HistSpec] = Nil,
-      items: Seq[ItemsSpec] = Nil,
-      kmvs: Seq[KmvSpec] = Nil,
-      vecs: Seq[VecSpec] = Nil,
+      sketches: Seq[Sketch] = Nil,
       exprs: Seq[ExprMeasure] = Nil,
-      samples: Seq[SampleQSpec] = Nil,
-      hdrs: Seq[HdrSpec] = Nil,
-      cmss: Seq[CmsSpec] = Nil,
       retracted: Boolean = false)
 
   private val registry = TrieMap[String, Entry]()
@@ -304,15 +373,8 @@ object SummaryRewrite {
     */
   def partialRollup(base: DataFrame, dims: Seq[String],
       measures: Seq[String],
-      sketches: Seq[SketchSpec] = Nil,
-      histograms: Seq[HistSpec] = Nil,
-      items: Seq[ItemsSpec] = Nil,
-      kmvs: Seq[KmvSpec] = Nil,
-      vecs: Seq[VecSpec] = Nil,
-      exprs: Seq[ExprMeasure] = Nil,
-      samples: Seq[SampleQSpec] = Nil,
-      hdrs: Seq[HdrSpec] = Nil,
-      cmss: Seq[CmsSpec] = Nil): DataFrame = {
+      sketches: Seq[Sketch] = Nil,
+      exprs: Seq[ExprMeasure] = Nil): DataFrame = {
     import org.apache.spark.sql.graftshim.GraftShims
     // an expression measure gets the SAME six partials as a bare
     // column — downstream (serve translation, the compact fold's
@@ -328,42 +390,8 @@ object SummaryRewrite {
       (measures.flatMap(m => measurePartials(m, col(m))) ++
        exprs.flatMap(em => measurePartials(em.name,
          org.apache.spark.sql.functions.expr(em.sql))) ++
-       sketches.map(sk => GraftShims
-         .column(graft.operators.HllSketch(
-           GraftShims.expression(col(sk.key)), sk.p)
-           .toAggregateExpression()).as(s"hll_${sk.key}")) ++
-       histograms.map(h => GraftShims
-         .column(graft.operators.HistSketch(
-           GraftShims.expression(col(h.col)), h.lo, h.hi, h.nbins)
-           .toAggregateExpression()).as(s"hist_${h.col}")) ++
-       items.map(it => GraftShims
-         .column(graft.operators.MgSketch(
-           GraftShims.expression(col(it.col).cast("string")),
-           it.capacity)
-           .toAggregateExpression()).as(it.colName)) ++
-       kmvs.map(kv => GraftShims
-         .column(graft.operators.KmvSketch(
-           GraftShims.expression(col(kv.key)), kv.k)
-           .toAggregateExpression()).as(kv.colName)) ++
-       vecs.map(v => GraftShims
-         .column(graft.operators.VectorSum(
-           GraftShims.expression(col(v.col)))
-           .toAggregateExpression()).as(v.colName)) ++
-       samples.map(sp => GraftShims
-         .column(graft.operators.SampleSketch(
-           GraftShims.expression(
-             org.apache.spark.sql.functions.expr(sp.id)),
-           GraftShims.expression(col(sp.value).cast("double")), sp.k)
-           .toAggregateExpression()).as(sp.colName)) ++
-       hdrs.map(h => GraftShims
-         .column(graft.operators.HdrSketch(
-           GraftShims.expression(
-             org.apache.spark.sql.functions.expr(h.sql)), h.p)
-           .toAggregateExpression()).as(h.colName)) ++
-       cmss.map(cs => GraftShims
-         .column(graft.operators.CmsSketch(
-           GraftShims.expression(col(cs.key)), cs.d, cs.w)
-           .toAggregateExpression()).as(cs.colName))))
+       sketches.map(sk => GraftShims.column(
+         sk.partial.toAggregateExpression()).as(sk.colName))))
     base.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -375,17 +403,10 @@ object SummaryRewrite {
     */
   def buildSummary(spark: SparkSession, basePath: String,
       summaryDir: String, dims: Seq[String],
-      measures: Seq[String], sketches: Seq[SketchSpec] = Nil,
-      histograms: Seq[HistSpec] = Nil,
-      items: Seq[ItemsSpec] = Nil,
-      kmvs: Seq[KmvSpec] = Nil,
-      vecs: Seq[VecSpec] = Nil,
-      exprs: Seq[ExprMeasure] = Nil,
-      samples: Seq[SampleQSpec] = Nil,
-      hdrs: Seq[HdrSpec] = Nil,
-      cmss: Seq[CmsSpec] = Nil): Unit = {
+      measures: Seq[String], sketches: Seq[Sketch] = Nil,
+      exprs: Seq[ExprMeasure] = Nil): Unit = {
     partialRollup(spark.read.parquet(basePath), dims, measures, sketches,
-        histograms, items, kmvs, vecs, exprs, samples, hdrs, cmss)
+        exprs)
       .withColumn("chunk", lit(-1L))
       .coalesce(8)
       .write.mode("overwrite").partitionBy("chunk").parquet(summaryDir)
@@ -393,9 +414,10 @@ object SummaryRewrite {
 
   /** Register `summaryDir` as the rollup of the parquet table at
     * `dataPath`, building it first if absent, and install the rewrite
-    * rule. Idempotent; re-registering after a base append without
-    * `refresh = true` serves STALE aggregates — freshness is the
-    * caller's contract, exactly as with any materialized view.
+    * rule; returns the registry entry. Idempotent; re-registering
+    * after a base append without `refresh = true` serves STALE
+    * aggregates — freshness is the caller's contract, exactly as with
+    * any materialized view.
     *
     * `declaredScale` is a per-measure data contract for FLOAT/DOUBLE
     * measures: declaring `m -> d` asserts every value of `m` has at
@@ -408,15 +430,8 @@ object SummaryRewrite {
       dims: Seq[String], measures: Seq[String],
       refresh: Boolean = false,
       declaredScale: Map[String, Int] = Map.empty,
-      sketches: Seq[SketchSpec] = Nil,
-      histograms: Seq[HistSpec] = Nil,
-      items: Seq[ItemsSpec] = Nil,
-      kmvs: Seq[KmvSpec] = Nil,
-      vecs: Seq[VecSpec] = Nil,
-      exprs: Seq[ExprMeasure] = Nil,
-      samples: Seq[SampleQSpec] = Nil,
-      hdrs: Seq[HdrSpec] = Nil,
-      cmss: Seq[CmsSpec] = Nil): Unit = {
+      sketches: Seq[Sketch] = Nil,
+      exprs: Seq[ExprMeasure] = Nil): Entry = {
     declaredScale.foreach { case (m, d) =>
       require(measures.contains(m), s"declaredScale for non-measure $m")
       require(d >= 0 && d <= 6,
@@ -442,7 +457,7 @@ object SummaryRewrite {
             s"${t.simpleString}")
       }
     }
-    hdrs.foreach { h =>
+    sketches.collect { case h: HdrSpec => h }.foreach { h =>
       // same fail-at-registration stance as expression measures: the
       // bucket expression must parse, resolve, be deterministic, and
       // be INTEGRAL — the sketch's integer-exact contract (float
@@ -470,14 +485,7 @@ object SummaryRewrite {
     val derived = Seq("cnt", "chunk") ++
       (measures ++ exprs.map(_.name)).flatMap(m =>
         Seq(s"s_$m", s"sd_$m", s"ss_$m", s"c_$m", s"mn_$m", s"mx_$m")) ++
-      sketches.map(sk => s"hll_${sk.key}") ++
-      histograms.map(h => s"hist_${h.col}") ++
-      items.map(_.colName) ++
-      kmvs.map(_.colName) ++
-      vecs.map(_.colName) ++
-      samples.map(_.colName) ++
-      hdrs.map(_.colName) ++
-      cmss.map(_.colName)
+      sketches.map(_.colName)
     val all = dims ++ measures ++ exprs.map(_.name)
     require(all.distinct.size == all.size,
       s"dims/measures/expression-measure names must be distinct, " +
@@ -499,7 +507,7 @@ object SummaryRewrite {
       registry.remove(key)
       spark.catalog.refreshByPath(dataPath)
       buildSummary(spark, dataPath, summaryDir, dims, measures, sketches,
-        histograms, items, kmvs, vecs, exprs, samples, hdrs, cmss)
+        exprs)
       // a refresh recomputes every partial from the (post-delete)
       // base, so any standing retraction restriction clears with it
       val rm = new org.apache.hadoop.fs.Path(summaryDir, RetractedMarker)
@@ -507,10 +515,11 @@ object SummaryRewrite {
       if (rfs.exists(rm)) rfs.delete(rm, false)
       spark.catalog.refreshByPath(summaryDir)
     }
-    registry.put(key, Entry(summaryDir, dims, measures, declaredScale,
-      sketches, histograms, items, kmvs, vecs, exprs, samples, hdrs,
-      cmss, retracted = retractedMarkerExists(spark, summaryDir)))
+    val entry = Entry(summaryDir, dims, measures, declaredScale,
+      sketches, exprs, retracted = retractedMarkerExists(spark, summaryDir))
+    registry.put(key, entry)
     ensureRule(spark)
+    entry
   }
 
   def unregister(spark: SparkSession, dataPath: String): Unit = {
@@ -538,21 +547,26 @@ object SummaryRewrite {
       groupDims: Seq[String], key: String,
       outCol: String = "est_distinct"): DataFrame = {
     import org.apache.spark.sql.graftshim.GraftShims
+    val sk = SketchSpec(key)
     val est = GraftShims.column(graft.operators.HllEstimate(
-      graft.operators.HllMerge(GraftShims.expression(col(s"hll_$key")))
+      sk.merge(GraftShims.expression(col(sk.colName)))
         .toAggregateExpression())).as(outCol)
     val rollup = spark.read.parquet(summaryDir)
     if (groupDims.isEmpty) rollup.agg(est)
     else rollup.groupBy(groupDims.map(col): _*).agg(est)
   }
 
-  /** Serve approximate quantiles of histogram column `col` from the
-    * rollup at `summaryDir`, grouped by `groupDims` (empty = global):
-    * per-chunk count arrays fold by elementwise sum, then the
-    * interpolated quantile is read per requested q. The [lo, hi,
-    * nbins] must match the registered [[HistSpec]] (they parameterize
-    * the bins the counts were taken over).
+  /** The stored sketch column `pick` selects among the kinds
+    * [[Sketch.parse]] recovers from the rollup's schema; throws naming
+    * `what`, the column the serve looked for, when none matches.
     */
+  private def storedSketch[S <: Sketch](rollup: DataFrame,
+      summaryDir: String, what: String)(
+      pick: PartialFunction[Sketch, S]): S =
+    rollup.schema.fieldNames.iterator.flatMap(Sketch.parse)
+      .collectFirst(pick).getOrElse(throw new IllegalArgumentException(
+        s"no $what column in the rollup at $summaryDir"))
+
   /** Serve approximate top-k frequent items of Misra–Gries column
     * `col` from the rollup at `summaryDir`, grouped by `groupDims`
     * (empty = global): per-chunk summaries fold with the mergeable
@@ -564,13 +578,11 @@ object SummaryRewrite {
       groupDims: Seq[String], itemsCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.graftshim.GraftShims
     val rollup = spark.read.parquet(summaryDir)
-    val pat = s"^mg(\\d+)_${java.util.regex.Pattern.quote(itemsCol)}$$".r
-    val (colName, capacity) = rollup.schema.fieldNames.collectFirst {
-      case n @ pat(cap) => (n, cap.toInt)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no mg<capacity>_$itemsCol column in the rollup at $summaryDir"))
+    val it = storedSketch(rollup, summaryDir, s"mg<capacity>_$itemsCol") {
+      case it: ItemsSpec if it.col == itemsCol => it
+    }
     val merged = GraftShims.column(graft.operators.MgMerge(
-      GraftShims.expression(col(colName)), capacity, topK = Some(k))
+      GraftShims.expression(col(it.colName)), it.capacity, topK = Some(k))
       .toAggregateExpression()).as("topk")
     val folded =
       if (groupDims.isEmpty) rollup.agg(merged)
@@ -600,13 +612,12 @@ object SummaryRewrite {
     import org.apache.spark.sql.graftshim.GraftShims
     require(groupDims.nonEmpty, "approxOverlap needs at least one group dim")
     val rollup = spark.read.parquet(summaryDir)
-    val pat = s"^kmv(\\d+)_${java.util.regex.Pattern.quote(key)}$$".r
-    val (colName, k) = rollup.schema.fieldNames.collectFirst {
-      case n @ pat(kk) => (n, kk.toInt)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no kmv<k>_$key column in the rollup at $summaryDir"))
-    val merged = GraftShims.column(graft.operators.KmvMerge(
-      GraftShims.expression(col(colName)), k)
+    val kv = storedSketch(rollup, summaryDir, s"kmv<k>_$key") {
+      case kv: KmvSpec if kv.key == key => kv
+    }
+    val k = kv.k
+    val merged = GraftShims.column(kv.merge(
+      GraftShims.expression(col(kv.colName)))
       .toAggregateExpression()).as("sk")
     val g = rollup.groupBy(groupDims.map(col): _*).agg(merged)
     val a = g.select(groupDims.map(c => col(c).as(s"${c}_a")) :+
@@ -646,8 +657,9 @@ object SummaryRewrite {
       groupDims: Seq[String], vecCol: String): DataFrame = {
     import org.apache.spark.sql.graftshim.GraftShims
     import org.apache.spark.sql.functions.transform
-    val merged = GraftShims.column(graft.operators.VectorSumMerge(
-      GraftShims.expression(col(s"vsum_$vecCol")))
+    val vs = VecSpec(vecCol)
+    val merged = GraftShims.column(vs.merge(
+      GraftShims.expression(col(vs.colName)))
       .toAggregateExpression()).as("vs")
     val rollup = spark.read.parquet(summaryDir)
     val folded =
@@ -659,13 +671,20 @@ object SummaryRewrite {
         .as("centroid")): _*)
   }
 
+  /** Serve approximate quantiles of histogram column `col` from the
+    * rollup at `summaryDir`, grouped by `groupDims` (empty = global):
+    * per-chunk count arrays fold by elementwise sum, then the
+    * interpolated quantile is read per requested q. The [lo, hi,
+    * nbins] must match the registered [[HistSpec]] (they parameterize
+    * the bins the counts were taken over).
+    */
   def approxQuantile(spark: SparkSession, summaryDir: String,
       groupDims: Seq[String], histCol: String, qs: Seq[Double],
       lo: Double, hi: Double): DataFrame = {
     import org.apache.spark.sql.graftshim.GraftShims
     require(qs.nonEmpty, "need at least one quantile")
-    val merged = graft.operators.HistMerge(
-      GraftShims.expression(col(s"hist_$histCol")))
+    val h = HistSpec(histCol, lo, hi)
+    val merged = h.merge(GraftShims.expression(col(h.colName)))
       .toAggregateExpression()
     val outs = qs.map(q => GraftShims.column(
       graft.operators.HistQuantile(merged, q, lo, hi))
@@ -695,13 +714,11 @@ object SummaryRewrite {
     import org.apache.spark.sql.graftshim.GraftShims
     require(qs.nonEmpty, "need at least one quantile")
     val rollup = spark.read.parquet(summaryDir)
-    val pat = s"^smp(\\d+)_${java.util.regex.Pattern.quote(valueCol)}$$".r
-    val (colName, k) = rollup.schema.fieldNames.collectFirst {
-      case n @ pat(kk) => (n, kk.toInt)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no smp<k>_$valueCol column in the rollup at $summaryDir"))
-    val merged = graft.operators.SampleMerge(
-      GraftShims.expression(col(colName)), k).toAggregateExpression()
+    val sp = storedSketch(rollup, summaryDir, s"smp<k>_$valueCol") {
+      case sp: SampleQSpec if sp.value == valueCol => sp
+    }
+    val merged = sp.merge(GraftShims.expression(col(sp.colName)))
+      .toAggregateExpression()
     val outs = GraftShims.column(
         graft.operators.SampleSize(merged)).as("n_sample") +:
       qs.map(q => GraftShims.column(
@@ -728,15 +745,13 @@ object SummaryRewrite {
     import org.apache.spark.sql.graftshim.GraftShims
     require(qs.nonEmpty, "need at least one quantile")
     val rollup = spark.read.parquet(summaryDir)
-    val pat = s"^hdr(\\d+)_${java.util.regex.Pattern.quote(name)}$$".r
-    val (colName, p) = rollup.schema.fieldNames.collectFirst {
-      case n @ pat(pp) => (n, pp.toInt)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no hdr<p>_$name column in the rollup at $summaryDir"))
-    val merged = graft.operators.HistMerge(
-      GraftShims.expression(col(colName))).toAggregateExpression()
+    val h = storedSketch(rollup, summaryDir, s"hdr<p>_$name") {
+      case h: HdrSpec if h.name == name => h
+    }
+    val merged = h.merge(GraftShims.expression(col(h.colName)))
+      .toAggregateExpression()
     val outs = qs.map { case (qn, qd) =>
-      GraftShims.column(graft.operators.HdrQuantile(merged, qn, qd, p))
+      GraftShims.column(graft.operators.HdrQuantile(merged, qn, qd, h.p))
         .as(s"p${qn * 100 / qd}")
     }
     if (groupDims.isEmpty) rollup.agg(outs.head, outs.tail: _*)
@@ -770,14 +785,11 @@ object SummaryRewrite {
       outCol: String = "est"): DataFrame = {
     import org.apache.spark.sql.graftshim.GraftShims
     val rollup = spark.read.parquet(summaryDir)
-    val pat =
-      s"^cms(\\d+)x(\\d+)_${java.util.regex.Pattern.quote(key)}$$".r
-    val (colName, d, w) = rollup.schema.fieldNames.collectFirst {
-      case n @ pat(dd, ww) => (n, dd.toInt, ww.toInt)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no cms<d>x<w>_$key column in the rollup at $summaryDir"))
-    val merged = GraftShims.column(graft.operators.HistMerge(
-      GraftShims.expression(col(colName))).toAggregateExpression())
+    val cs = storedSketch(rollup, summaryDir, s"cms<d>x<w>_$key") {
+      case cs: CmsSpec if cs.key == key => cs
+    }
+    val merged = GraftShims.column(cs.merge(
+      GraftShims.expression(col(cs.colName))).toAggregateExpression())
       .as("__cms")
     val folded =
       if (groupDims.isEmpty) rollup.agg(merged)
@@ -788,7 +800,7 @@ object SummaryRewrite {
       .select(groupDims.map(col) ++ Seq(col(key),
         GraftShims.column(graft.operators.CmsEstimate(
           GraftShims.expression(col("__cms")),
-          GraftShims.expression(col(key)), d, w)).as(outCol)): _*)
+          GraftShims.expression(col(key)), cs.d, cs.w)).as(outCol)): _*)
   }
 
   /** Rule health counters: (rewrites fired, rule-internal errors
@@ -983,12 +995,13 @@ object SummaryRewriteRule extends Rule[LogicalPlan] {
       * `percentile_approx(CAST(floor(x*100) AS BIGINT), q)` matches
       * the registered grid spelling and nothing else.
       */
-    private lazy val hdrExprs: Seq[(HdrSpec, Expression)] =
-      if (e.hdrs.isEmpty) Nil
+    private lazy val hdrExprs: Seq[(HdrSpec, Expression)] = {
+      val hdrs = e.sketches.collect { case h: HdrSpec => h }
+      if (hdrs.isEmpty) Nil
       else {
         val spark = SparkSession.active
         rewriting.set(true)
-        try e.hdrs.flatMap { h =>
+        try hdrs.flatMap { h =>
           try org.apache.spark.sql.graftshim.GraftShims
             .dataFrame(spark, rel)
             .selectExpr(s"(${h.sql}) AS __hdr")
@@ -998,10 +1011,17 @@ object SummaryRewriteRule extends Rule[LogicalPlan] {
           catch { case scala.util.control.NonFatal(_) => None }
         } finally rewriting.set(false)
       }
+    }
 
     /** The HDR sketch an aggregate input reads, if any. */
     def hdrSpecOf(c: Expression): Option[HdrSpec] =
       hdrExprs.collectFirst { case (h, r) if c.semanticEquals(r) => h }
+
+    /** The sample sketch of base column `value`, if registered. */
+    def sampleSpecOf(value: String): Option[SampleQSpec] =
+      e.sketches.collectFirst {
+        case sp: SampleQSpec if sp.value == value => sp
+      }
 
     /** Variance-family form of [[exprMeasureOf]]: unwrap Spark's own
       * implicit cast-to-double (CentralMomentAgg casts every input)
@@ -1121,13 +1141,14 @@ object SummaryRewriteRule extends Rule[LogicalPlan] {
           // so the estimate equals sketching the raw subset directly.
           case c: Count => c.children match {
             case Seq(ar: AttributeReference)
-                if e.sketches.exists(_.key == ar.name) &&
-                  SparkSession.active.conf
-                    .get("graft.mv.approxDistinct", "false") == "true" =>
-              return Some(graft.operators.HllEstimate(
-                graft.operators.HllMerge(sOut(s"hll_${ar.name}"))
-                  .toAggregateExpression(isDistinct = false,
-                    filter = filt)))
+                if SparkSession.active.conf
+                  .get("graft.mv.approxDistinct", "false") == "true" =>
+              return e.sketches.collectFirst {
+                case sk: SketchSpec if sk.key == ar.name =>
+                  graft.operators.HllEstimate(sk.merge(sOut(sk.colName))
+                    .toAggregateExpression(isDistinct = false,
+                      filter = filt))
+              }
             case _ => return None
           }
           case _ => return None
@@ -1303,11 +1324,10 @@ object SummaryRewriteRule extends Rule[LogicalPlan] {
                 .get("graft.mv.approxQuantile", "false") == "true" =>
           ap.child match {
             case ar: AttributeReference
-                if e.samples.exists(_.value == ar.name) =>
-              val sp = e.samples.find(_.value == ar.name).get
-              val merged = graft.operators.SampleMerge(
-                sOut(sp.colName), sp.k).toAggregateExpression(
-                  isDistinct = false, filter = filt)
+                if sampleSpecOf(ar.name).isDefined =>
+              val sp = sampleSpecOf(ar.name).get
+              val merged = sp.merge(sOut(sp.colName)).toAggregateExpression(
+                isDistinct = false, filter = filt)
               def read(d: Double, t: DataType): Expression =
                 Cast(graft.operators.SampleQuantile(merged, d), t)
               ap.percentageExpression.eval() match {
@@ -1330,7 +1350,7 @@ object SummaryRewriteRule extends Rule[LogicalPlan] {
             // a dim-cardinality fold. Rank rationals at 1/10000 grain.
             case c =>
               hdrSpecOf(c).flatMap { h =>
-                val merged = graft.operators.HistMerge(sOut(h.colName))
+                val merged = h.merge(sOut(h.colName))
                   .toAggregateExpression(isDistinct = false,
                     filter = filt)
                 def read(d: Double, t: DataType): Expression =

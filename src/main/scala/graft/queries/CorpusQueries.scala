@@ -89,7 +89,7 @@ object CorpusQueries {
     // distinct bigrams, so the summary carries exact counts and the
     // plain-aggregation oracle applies verbatim.
     "q_sketch_topk" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftSession.register(s)
       docs(s, dir).createOrReplaceTempView("documents")
       s.sql(
         """WITH bg AS (
@@ -110,7 +110,7 @@ object CorpusQueries {
     // (TopKByScore partial agg), vs a window that sorts every group
     // member. The "cheapest k per group" SQL staple at 100 TB.
     "q_topk_agg_sql" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftSession.register(s)
       docs(s, dir).createOrReplaceTempView("documents")
       s.sql(
         """SELECT lang, nn.id AS doc_id,

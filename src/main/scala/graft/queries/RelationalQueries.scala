@@ -927,9 +927,8 @@ object RelationalQueries {
       mvSummaryDir(dir) + "_orders",
       Seq("o_orderstatus", "o_orderdate"),
       Seq("o_totalprice"),
-      items = Seq(
-        graft.plans.SummaryRewrite.ItemsSpec("o_orderpriority", 64)),
-      kmvs = Seq(
+      sketches = Seq(
+        graft.plans.SummaryRewrite.ItemsSpec("o_orderpriority", 64),
         graft.plans.SummaryRewrite.KmvSpec("o_custkey", 2048)))
 
   /** Third rollup (events): carries the round's two new sketch
@@ -945,10 +944,9 @@ object RelationalQueries {
       mvSummaryDir(dir) + "_events",
       Seq("event_type"),
       Seq("value"),
-      hdrs = Seq(
+      sketches = Seq(
         graft.plans.SummaryRewrite.HdrSpec("value_c",
-          "CAST(floor(value * 100) AS BIGINT)", 5)),
-      cmss = Seq(
+          "CAST(floor(value * 100) AS BIGINT)", 5),
         graft.plans.SummaryRewrite.CmsSpec("user_id", 4, 512)))
 
   /** The registered DERIVED measure: TPC-H Q1's revenue, spelled with
@@ -971,10 +969,10 @@ object RelationalQueries {
       Seq("l_quantity", "l_extendedprice"),
       declaredScale = Map("l_extendedprice" -> 2),
       sketches = Seq(
-        graft.plans.SummaryRewrite.SketchSpec("l_orderkey", 8)),
-      histograms = Seq(
-        graft.plans.SummaryRewrite.HistSpec("l_quantity", 1.0, 51.0,
-          50)),
+        graft.plans.SummaryRewrite.SketchSpec("l_orderkey", 8),
+        graft.plans.SummaryRewrite.HistSpec("l_quantity", 1.0, 51.0, 50),
+        graft.plans.SummaryRewrite.SampleQSpec(mvSampleIdSql,
+          "l_extendedprice", 256)),
       exprs = Seq(
         graft.plans.SummaryRewrite.ExprMeasure("revenue",
           mvRevenueSql),
@@ -988,10 +986,7 @@ object RelationalQueries {
         graft.plans.SummaryRewrite.ExprMeasure("disc_price",
           "CAST(l_extendedprice AS DECIMAL(18,2)) * " +
             "(CAST(1 AS DECIMAL(18,2)) - " +
-            "CAST(l_discount AS DECIMAL(18,2)))")),
-      samples = Seq(
-        graft.plans.SummaryRewrite.SampleQSpec(mvSampleIdSql,
-          "l_extendedprice", 256)))
+            "CAST(l_discount AS DECIMAL(18,2)))")))
 
   /** Unique row id for the lineitem sample sketch: l_linenumber is
     * 1..7 in TPC-H, so orderkey*8+linenumber is injective — the same

@@ -56,7 +56,7 @@ object VectorQueries {
   private def registerEmbMv(s: SparkSession, dir: String): Unit =
     graft.plans.SummaryRewrite.register(s, s"$dir/embeddings.parquet",
       embMvDir(dir), Seq("label"), Nil,
-      vecs = Seq(graft.plans.SummaryRewrite.VecSpec("embedding")))
+      sketches = Seq(graft.plans.SummaryRewrite.VecSpec("embedding")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // F15 / vector_norm over the embeddings table.

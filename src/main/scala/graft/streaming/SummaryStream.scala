@@ -7,8 +7,7 @@ import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.plans.SummaryRewrite
-import graft.plans.SummaryRewrite.{CmsSpec, ExprMeasure, HdrSpec,
-  HistSpec, ItemsSpec, KmvSpec, SampleQSpec, SketchSpec, VecSpec}
+import graft.plans.SummaryRewrite.{ExprMeasure, Sketch}
 import graft.util.DirSwap
 
 /** Incrementally maintained materialized rollup — the streaming face
@@ -61,15 +60,8 @@ object SummaryStream {
   def registerStreaming(spark: SparkSession, basePath: String,
       summaryDir: String, dims: Seq[String], measures: Seq[String],
       declaredScale: Map[String, Int] = Map.empty,
-      sketches: Seq[SketchSpec] = Nil,
-      histograms: Seq[HistSpec] = Nil,
-      items: Seq[ItemsSpec] = Nil,
-      kmvs: Seq[KmvSpec] = Nil,
-      vecs: Seq[VecSpec] = Nil,
-      exprs: Seq[ExprMeasure] = Nil,
-      samples: Seq[SampleQSpec] = Nil,
-      hdrs: Seq[HdrSpec] = Nil,
-      cmss: Seq[CmsSpec] = Nil): Unit = {
+      sketches: Seq[Sketch] = Nil,
+      exprs: Seq[ExprMeasure] = Nil): Unit = {
     // write the 0-row build INTO the chunk=-1 partition dir (no
     // partitionBy: a partitioned write of zero rows writes no
     // partition dirs at all, leaving the rollup unreadable and every
@@ -78,7 +70,7 @@ object SummaryStream {
     // the rewrite serves correct EMPTY aggregates immediately
     SummaryRewrite.partialRollup(
         spark.read.parquet(basePath).limit(0), dims, measures, sketches,
-        histograms, items, kmvs, vecs, exprs, samples, hdrs, cmss)
+        exprs)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$summaryDir/chunk=-1")
     // register() keys the already-built check on a ROOT _SUCCESS
@@ -90,9 +82,7 @@ object SummaryStream {
     }
     spark.catalog.refreshByPath(summaryDir)
     SummaryRewrite.register(spark, basePath, summaryDir, dims, measures,
-      declaredScale = declaredScale, sketches = sketches,
-      histograms = histograms, items = items, kmvs = kmvs, vecs = vecs,
-      exprs = exprs, samples = samples, hdrs = hdrs, cmss = cmss)
+      declaredScale = declaredScale, sketches = sketches, exprs = exprs)
   }
 
   /** Start maintaining `summaryDir` from base files appearing under
@@ -104,15 +94,8 @@ object SummaryStream {
   def start(spark: SparkSession, basePath: String, summaryDir: String,
       dims: Seq[String], measures: Seq[String], checkpointDir: String,
       maxFilesPerTrigger: Int = 8,
-      sketches: Seq[SketchSpec] = Nil,
-      histograms: Seq[HistSpec] = Nil,
-      items: Seq[ItemsSpec] = Nil,
-      kmvs: Seq[KmvSpec] = Nil,
-      vecs: Seq[VecSpec] = Nil,
-      exprs: Seq[ExprMeasure] = Nil,
-      samples: Seq[SampleQSpec] = Nil,
-      hdrs: Seq[HdrSpec] = Nil,
-      cmss: Seq[CmsSpec] = Nil): StreamingQuery = {
+      sketches: Seq[Sketch] = Nil,
+      exprs: Seq[ExprMeasure] = Nil): StreamingQuery = {
     val schema = spark.read.parquet(basePath).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -121,7 +104,7 @@ object SummaryStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, summaryDir, dims, measures, sketches,
-          histograms, items, kmvs, vecs, exprs, samples, hdrs, cmss)
+          exprs)
         ()
       }
       .start()
@@ -134,18 +117,10 @@ object SummaryStream {
     */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       summaryDir: String, dims: Seq[String], measures: Seq[String],
-      sketches: Seq[SketchSpec] = Nil,
-      histograms: Seq[HistSpec] = Nil,
-      items: Seq[ItemsSpec] = Nil,
-      kmvs: Seq[KmvSpec] = Nil,
-      vecs: Seq[VecSpec] = Nil,
-      exprs: Seq[ExprMeasure] = Nil,
-      samples: Seq[SampleQSpec] = Nil,
-      hdrs: Seq[HdrSpec] = Nil,
-      cmss: Seq[CmsSpec] = Nil): Unit = {
+      sketches: Seq[Sketch] = Nil,
+      exprs: Seq[ExprMeasure] = Nil): Unit = {
     val spark = batch.sparkSession
-    SummaryRewrite.partialRollup(batch, dims, measures, sketches,
-        histograms, items, kmvs, vecs, exprs, samples, hdrs, cmss)
+    SummaryRewrite.partialRollup(batch, dims, measures, sketches, exprs)
       .withColumn("chunk", lit(batchId))
       .coalesce(1)
       .write.mode("overwrite")
@@ -180,44 +155,20 @@ object SummaryStream {
     // carry one) would otherwise be aggregated AND grouped
     val dimSet = dims.toSet + "chunk"
     val aggs: Seq[Column] = schema.fieldNames.toSeq
-      .filterNot(dimSet.contains).collect {
+      .filterNot(dimSet.contains).map {
       case "cnt" => typed("cnt", sum(col("cnt")))
       case n if n.startsWith("s_") || n.startsWith("sd_") ||
           n.startsWith("ss_") || n.startsWith("c_") =>
         typed(n, sum(col(n)))
       case n if n.startsWith("mn_") => typed(n, min(col(n)))
       case n if n.startsWith("mx_") => typed(n, max(col(n)))
-      case n if n.startsWith("hll_") =>
-        GraftShims.column(graft.operators.HllMerge(
+      case n => SummaryRewrite.Sketch.parse(n) match {
+        case Some(sk) => GraftShims.column(sk.merge(
           GraftShims.expression(col(n))).toAggregateExpression()).as(n)
-      case n if n.startsWith("hist_") =>
-        GraftShims.column(graft.operators.HistMerge(
-          GraftShims.expression(col(n))).toAggregateExpression()).as(n)
-      // HDR log2-bucket and count-min register arrays fold by the
-      // same elementwise sum as fixed-bin histograms — HistMerge's
-      // equal-length guard doubles as the p / d×w compatibility check
-      case n if n.matches("^hdr\\d+_.*") ||
-          n.matches("^cms\\d+x\\d+_.*") =>
-        GraftShims.column(graft.operators.HistMerge(
-          GraftShims.expression(col(n))).toAggregateExpression()).as(n)
-      case n if n.matches("^kmv\\d+_.*") =>
-        val k = "^kmv(\\d+)_".r.findFirstMatchIn(n).get.group(1).toInt
-        GraftShims.column(graft.operators.KmvMerge(
-          GraftShims.expression(col(n)), k)
-          .toAggregateExpression()).as(n)
-      case n if n.matches("^smp\\d+_.*") =>
-        val k = "^smp(\\d+)_".r.findFirstMatchIn(n).get.group(1).toInt
-        GraftShims.column(graft.operators.SampleMerge(
-          GraftShims.expression(col(n)), k)
-          .toAggregateExpression()).as(n)
-      case n if n.startsWith("vsum_") =>
-        GraftShims.column(graft.operators.VectorSumMerge(
-          GraftShims.expression(col(n))).toAggregateExpression()).as(n)
-      case n if n.matches("^mg\\d+_.*") =>
-        val cap = "^mg(\\d+)_".r.findFirstMatchIn(n).get.group(1).toInt
-        GraftShims.column(graft.operators.MgMerge(
-          GraftShims.expression(col(n)), cap)
-          .toAggregateExpression()).as(n)
+        case None => throw new IllegalArgumentException(
+          s"rollup column '$n' at $summaryDir is not a dim, a measure " +
+            "partial or a sketch kind: no combiner folds it")
+      }
     }
     require(aggs.nonEmpty, s"$summaryDir does not look like a rollup")
     roll.groupBy(dims.map(col): _*)
@@ -238,15 +189,6 @@ object SummaryStream {
         true).close()
     spark.catalog.refreshByPath(summaryDir)
   }
-
-  /** Back-compat shim for the (basePath, dims, measures) spelling:
-    * basePath and measures are no longer needed — the fold derives
-    * every combiner from the rollup's own schema and never reads the
-    * base.
-    */
-  def compact(spark: SparkSession, basePath: String, summaryDir: String,
-      dims: Seq[String], measures: Seq[String]): Unit =
-    compact(spark, summaryDir, dims)
 
   // ---- deletes -----------------------------------------------------
   // Two lifecycles, matching how data actually leaves a 100 TB fact:

@@ -168,9 +168,8 @@ object VectorIngestStream {
       .exists(sdPath)
     if (!hasStream) base
     else {
-      val arrivals = base.kind.encode(spark.read
-          .option("basePath", sd)
-          .parquet(s"$sd/batch_id=*")
+      val arrivals = base.kind.encode(
+        graft.util.IndexDir.scan(spark, sd, "batch_id")
           .select(col(idCol), col(vecCol), col("cell_id")), idCol, vecCol)
       base.copy(assigned = base.assigned.select(stored(base).map(col): _*)
         .unionByName(arrivals))

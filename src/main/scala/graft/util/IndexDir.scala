@@ -41,20 +41,25 @@ private[graft] object IndexDir {
   def open(spark: SparkSession, path: String): Unit =
     DirSwap.recover(fsOf(spark, path), new Path(path))
 
-  /** Whether `root` holds a `partCol=` directory: one driver filesystem
+  /** The `partCol=` directories under `root`: one driver filesystem
     * call, no Spark job.
     */
-  private def hasPartitions(fs: FileSystem, root: Path,
-      partCol: String): Boolean =
-    Option(fs.globStatus(new Path(root, s"$partCol=*"))).exists(_.nonEmpty)
+  private def partitions(fs: FileSystem, root: Path,
+      partCol: String): Seq[String] =
+    Option(fs.globStatus(new Path(root, s"$partCol=*")))
+      .fold(Seq.empty[String])(_.toSeq.map(_.getPath.toString))
 
-  /** Every stored row, tombstones not applied: the `partCol=*` glob, or
-    * the `_schema` marker's 0 rows when no partition directory exists.
+  /** Every stored row, tombstones not applied: the `partCol=`
+    * directories, or the `_schema` marker's 0 rows when there are none.
+    * The directories are passed as listed, not as the glob: Spark probes
+    * a single glob path for a streaming-sink `_spark_metadata` log, a
+    * probe that fails on the `*` and logs a warning with a stack trace.
     */
   def scan(spark: SparkSession, path: String, partCol: String): DataFrame =
-    if (hasPartitions(fsOf(spark, path), new Path(path), partCol))
-      spark.read.option("basePath", path).parquet(s"$path/$partCol=*")
-    else spark.read.parquet(schemaMarker(path))
+    partitions(fsOf(spark, path), new Path(path), partCol) match {
+      case Seq() => spark.read.parquet(schemaMarker(path))
+      case dirs => spark.read.option("basePath", path).parquet(dirs: _*)
+    }
 
   def hasTombstones(spark: SparkSession, path: String): Boolean =
     fsOf(spark, path).exists(new Path(tombstones(path)))
@@ -157,7 +162,7 @@ private[graft] object IndexDir {
     rows.repartition(keys: _*)
       .write.partitionBy(partCol).mode(mode).parquet(dest)
     val fs = fsOf(rows.sparkSession, dest)
-    if (!hasPartitions(fs, new Path(dest), partCol))
+    if (partitions(fs, new Path(dest), partCol).isEmpty)
       rows.limit(0).coalesce(1).write.mode("overwrite")
         .parquet(schemaMarker(dest))
   }

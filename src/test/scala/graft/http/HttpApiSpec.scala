@@ -1044,7 +1044,7 @@ class HttpApiSpec extends SparkSuite {
     graft.streaming.SummaryStream.processBatch(
       spark.read.parquet(ordPath).limit(7), 9L, sumDir,
       Seq("o_orderstatus"), Seq("o_totalprice", "o_custkey"),
-      samples = Seq(graft.plans.SummaryRewrite.SampleQSpec(
+      sketches = Seq(graft.plans.SummaryRewrite.SampleQSpec(
         "o_orderkey", "o_totalprice", 64)))
     assert(get("/collections/ord_mv_del/summary/stats").body()
       .contains("\"chunk\":9"))
@@ -1119,6 +1119,28 @@ class HttpApiSpec extends SparkSuite {
       .agg(ssum(expr("l_quantity * 2")).as("s2"))
       .orderBy(col("l_returnflag")).collect().map(_.toSeq)
     assert(served.toSeq === raw.toSeq)
+  }
+
+  test("advise {apply:true} over a distinct workload registers the " +
+      "HLL sketch that /summary/distinct serves") {
+    spark.read.parquet(s"$sf0001/lineitem.parquet")
+      .createOrReplaceTempView("li_mv_dst")
+    val ap = post("/collections/li_mv_dst/summary/advise",
+      """{"apply":true,"queries":[
+        |"SELECT l_returnflag, sum(l_quantity) FROM li_mv_dst GROUP BY 1",
+        |"SELECT count(DISTINCT l_orderkey) FROM li_mv_dst"
+        |]}""".stripMargin.replace("\n", ""))
+    assert(ap.statusCode() === 200, ap.body())
+    assert(ap.body().contains(""""applied":true"""), ap.body())
+    val d = post("/collections/li_mv_dst/summary/distinct",
+      """{"key":"l_orderkey"}""")
+    assert(d.statusCode() === 200, d.body())
+    val sumDir = s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_http_summary_${java.lang.ProcessHandle.current().pid()}_li_mv_dst"
+    val want = graft.plans.SummaryRewrite.approxDistinct(spark, sumDir,
+      Nil, "l_orderkey").collect().head.getLong(0)
+    assert(d.body() === s"""{"results":[{"est_distinct":$want}]}""")
+    assert(delete("/collections/li_mv_dst/summary").statusCode() === 200)
   }
 
   test("advise rejects command statements (never executes the " +

@@ -144,9 +144,9 @@ class HdrCmsSpec extends SparkSuite {
     events.repartition(2).write.parquet(base)
     SummaryRewrite.register(spark, base, s"$dir/roll",
       Seq("event_type"), Seq("value"),
-      hdrs = Seq(SummaryRewrite.HdrSpec("value_c",
-        "CAST(floor(value * 100) AS BIGINT)", 5)),
-      cmss = Seq(SummaryRewrite.CmsSpec("user_id", 4, 512)))
+      sketches = Seq(SummaryRewrite.HdrSpec("value_c",
+        "CAST(floor(value * 100) AS BIGINT)", 5),
+        SummaryRewrite.CmsSpec("user_id", 4, 512)))
     try {
       // rollup-served quantiles == direct sketch over the base
       val served = SummaryRewrite.hdrQuantiles(spark, s"$dir/roll",
@@ -176,7 +176,7 @@ class HdrCmsSpec extends SparkSuite {
       val err = intercept[IllegalArgumentException] {
         SummaryRewrite.register(spark, base, s"$dir/roll2",
           Seq("event_type"), Nil,
-          hdrs = Seq(SummaryRewrite.HdrSpec("bad", "value * 100", 5)))
+          sketches = Seq(SummaryRewrite.HdrSpec("bad", "value * 100", 5)))
       }
       assert(err.getMessage.contains("integral"))
     } finally SummaryRewrite.unregister(spark, base)

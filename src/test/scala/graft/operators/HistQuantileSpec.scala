@@ -111,11 +111,11 @@ class HistQuantileSpec extends SparkSuite {
     mk(0, 120).write.mode("append").parquet(baseDir)
     SummaryStream.registerStreaming(spark, baseDir, sumDir,
       Seq("flag"), Seq("v"),
-      histograms = Seq(HistSpec("v", 0.0, 100.0, 25)))
+      sketches = Seq(HistSpec("v", 0.0, 100.0, 25)))
     SummaryStream.processBatch(mk(0, 120), 0L, sumDir, Seq("flag"),
-      Seq("v"), histograms = Seq(HistSpec("v", 0.0, 100.0, 25)))
+      Seq("v"), sketches = Seq(HistSpec("v", 0.0, 100.0, 25)))
     SummaryStream.processBatch(mk(120, 80), 1L, sumDir, Seq("flag"),
-      Seq("v"), histograms = Seq(HistSpec("v", 0.0, 100.0, 25)))
+      Seq("v"), sketches = Seq(HistSpec("v", 0.0, 100.0, 25)))
     val allRows = mk(0, 120).unionByName(mk(120, 80))
     graft.functions.VectorFunctions.register(spark)
     val direct = allRows.groupBy($"flag")

@@ -97,7 +97,7 @@ class KmvSpec extends SparkSuite {
     (1L to 900L).map(x => (if (x % 3 == 0) "a" else "b", x % 400))
       .toDF("g", "u").write.parquet(base)
     SummaryRewrite.register(spark, base, roll, Seq("g"), Nil,
-      kmvs = Seq(SummaryRewrite.KmvSpec("u", 512)))
+      sketches = Seq(SummaryRewrite.KmvSpec("u", 512)))
     def overlap() = SummaryRewrite
       .approxOverlap(spark, roll, Seq("g"), "u")
       .select($"g_a", $"g_b", $"est_a", $"est_b", $"est_common")
@@ -111,7 +111,7 @@ class KmvSpec extends SparkSuite {
     // appended delta chunk + compact fold must serve identical reads
     graft.streaming.SummaryStream.processBatch(
       (901L to 1000L).map(x => ("a", x % 400)).toDF("g", "u"), 7L,
-      roll, Seq("g"), Nil, kmvs = Seq(SummaryRewrite.KmvSpec("u", 512)))
+      roll, Seq("g"), Nil, sketches = Seq(SummaryRewrite.KmvSpec("u", 512)))
     val withDelta = overlap()
     graft.streaming.SummaryStream.compact(spark, roll, Seq("g"))
     assert(overlap() == withDelta)

@@ -528,9 +528,9 @@ class ScaleGrowthSpec extends SparkSuite {
     val dirB = mkBase(500000, "b")
     val items = Seq(SummaryRewrite.ItemsSpec("item", 32))
     SummaryRewrite.register(spark, dirS, s"$tmp/roll_s",
-      Seq("flag", "day"), Seq("m"), items = items)
+      Seq("flag", "day"), Seq("m"), sketches = items)
     SummaryRewrite.register(spark, dirB, s"$tmp/roll_b",
-      Seq("flag", "day"), Seq("m"), items = items)
+      Seq("flag", "day"), Seq("m"), sketches = items)
     try {
       def serve(dir: String) = spark.read.parquet(dir)
         .groupBy($"flag")
@@ -592,9 +592,9 @@ class ScaleGrowthSpec extends SparkSuite {
     val dirB = mkBase(500000, "b")
     val smp = Seq(SummaryRewrite.SampleQSpec("id", "m", 1024))
     SummaryRewrite.register(spark, dirS, s"$tmp/roll_s",
-      Seq("flag"), Seq("m"), samples = smp)
+      Seq("flag"), Seq("m"), sketches = smp)
     SummaryRewrite.register(spark, dirB, s"$tmp/roll_b",
-      Seq("flag"), Seq("m"), samples = smp)
+      Seq("flag"), Seq("m"), sketches = smp)
     try {
       // quantile serving reads |dims| * k pairs whatever the base is
       def serve(roll: String) = SummaryRewrite.sampleQuantiles(
@@ -753,8 +753,8 @@ class ScaleGrowthSpec extends SparkSuite {
     val dirB = mkBase(500000, "b")
     def reg(base: String, roll: String): Unit =
       SummaryRewrite.register(spark, base, roll, Seq("flag"), Nil,
-        hdrs = Seq(SummaryRewrite.HdrSpec("lat", "lat", 5)),
-        cmss = Seq(SummaryRewrite.CmsSpec("uid", 4, 512)))
+        sketches = Seq(SummaryRewrite.HdrSpec("lat", "lat", 5),
+          SummaryRewrite.CmsSpec("uid", 4, 512)))
     reg(dirS, s"$tmp/roll_s"); reg(dirB, s"$tmp/roll_b")
     try {
       def srvQ(roll: String) = SummaryRewrite.hdrQuantiles(spark, roll,

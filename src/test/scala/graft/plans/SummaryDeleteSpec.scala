@@ -45,7 +45,7 @@ class SummaryDeleteSpec extends SparkSuite {
       refresh = refresh, declaredScale = Map("v" -> 1),
       // k = 64 >= every per-flag row count here: the sample IS the
       // data, so quantile reads below are exact order statistics
-      samples = Seq(SummaryRewrite.SampleQSpec("id", "v", 64)))
+      sketches = Seq(SummaryRewrite.SampleQSpec("id", "v", 64)))
 
   private def sumQuery = base.groupBy($"flag")
     .agg(count(lit(1)).as("n"), sum($"k").as("sk"),
@@ -152,7 +152,7 @@ class SummaryDeleteSpec extends SparkSuite {
     register(refresh = true)
     graft.streaming.SummaryStream.processBatch(batch1, 7L, sumDir,
       Seq("flag"), Seq("k", "v"),
-      samples = Seq(SummaryRewrite.SampleQSpec("id", "v", 64)))
+      sketches = Seq(SummaryRewrite.SampleQSpec("id", "v", 64)))
     // ...batch1 expires
     graft.streaming.SummaryStream.deleteChunk(spark, sumDir, 7L)
     val q = minQuery

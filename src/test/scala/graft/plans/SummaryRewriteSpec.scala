@@ -53,13 +53,13 @@ class SummaryRewriteSpec extends SparkSuite {
       exprs = Seq(SummaryRewrite.ExprMeasure("rev", "qty * price"),
         SummaryRewrite.ExprMeasure("drev",
           "CAST(qty AS DECIMAL(10,1)) * 2")),
-      // k=1024 >= every row count here: the sample IS the data, so
-      // opt-in percentile serves are exact order statistics
-      samples = Seq(SummaryRewrite.SampleQSpec("k", "price", 1024)),
-      // HDR sketch over an integral grid of qty: the rule-path serve
-      // for percentile_approx(CAST(qty AS BIGINT), q)
-      hdrs = Seq(SummaryRewrite.HdrSpec("qty_g",
-        "CAST(qty AS BIGINT)")))
+      sketches = Seq(
+        // k=1024 >= every row count here: the sample IS the data, so
+        // opt-in percentile serves are exact order statistics
+        SummaryRewrite.SampleQSpec("k", "price", 1024),
+        // HDR sketch over an integral grid of qty: the rule-path serve
+        // for percentile_approx(CAST(qty AS BIGINT), q)
+        SummaryRewrite.HdrSpec("qty_g", "CAST(qty AS BIGINT)")))
 
   writeBase()
   reRegister()

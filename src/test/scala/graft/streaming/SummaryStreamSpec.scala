@@ -290,11 +290,11 @@ class SummaryStreamSpec extends SparkSuite {
     val hdrs = Seq(SummaryRewrite.HdrSpec("k", "k", 5))
     val cmss = Seq(SummaryRewrite.CmsSpec("k", 4, 128))
     SummaryStream.registerStreaming(spark, baseDir, sumDir,
-      Seq("flag"), Seq("qty"), hdrs = hdrs, cmss = cmss)
+      Seq("flag"), Seq("qty"), sketches = hdrs ++ cmss)
     SummaryStream.processBatch(mkRows(0, 150), 0L, sumDir,
-      Seq("flag"), Seq("qty"), hdrs = hdrs, cmss = cmss)
+      Seq("flag"), Seq("qty"), sketches = hdrs ++ cmss)
     SummaryStream.processBatch(mkRows(150, 150), 1L, sumDir,
-      Seq("flag"), Seq("qty"), hdrs = hdrs, cmss = cmss)
+      Seq("flag"), Seq("qty"), sketches = hdrs ++ cmss)
     def hdrServed() = SummaryRewrite.hdrQuantiles(spark, sumDir,
       Seq("flag"), "k", Seq((50L, 100L), (99L, 100L)))
       .orderBy($"flag").collect().map(_.toSeq).toSeq
@@ -334,11 +334,11 @@ class SummaryStreamSpec extends SparkSuite {
     mk(0, 90).write.mode("append").parquet(baseDir)
     val vecs = Seq(VecSpec("vec"))
     SummaryStream.registerStreaming(spark, baseDir, sumDir,
-      Seq("flag"), Seq("qty"), vecs = vecs)
+      Seq("flag"), Seq("qty"), sketches = vecs)
     SummaryStream.processBatch(mk(0, 90), 0L, sumDir, Seq("flag"),
-      Seq("qty"), vecs = vecs)
+      Seq("qty"), sketches = vecs)
     SummaryStream.processBatch(mk(90, 60), 1L, sumDir, Seq("flag"),
-      Seq("qty"), vecs = vecs)
+      Seq("qty"), sketches = vecs)
     val all = mk(0, 90).unionByName(mk(90, 60))
     def expect = all.where($"vec".isNotNull)
       .select($"flag", posexplode($"vec").as(Seq("j", "x")))
@@ -376,11 +376,11 @@ class SummaryStreamSpec extends SparkSuite {
     mk(0, 140).write.mode("append").parquet(baseDir)
     val items = Seq(ItemsSpec("item", 32))
     SummaryStream.registerStreaming(spark, baseDir, sumDir,
-      Seq("flag"), Seq("qty"), items = items)
+      Seq("flag"), Seq("qty"), sketches = items)
     SummaryStream.processBatch(mk(0, 140), 0L, sumDir, Seq("flag"),
-      Seq("qty"), items = items)
+      Seq("qty"), sketches = items)
     SummaryStream.processBatch(mk(140, 60), 1L, sumDir, Seq("flag"),
-      Seq("qty"), items = items)
+      Seq("qty"), sketches = items)
     val all = mk(0, 140).unionByName(mk(140, 60))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"flag").orderBy($"count".desc, $"item")
@@ -406,5 +406,66 @@ class SummaryStreamSpec extends SparkSuite {
     }
     assert(e.getMessage.contains("mg<capacity>_nope"))
     SummaryRewrite.clear()
+  }
+
+  test("a rollup carrying all eight sketch kinds streams in three " +
+      "chunks and compacts to the one-shot build's sketches") {
+    val baseDir = tmp("graft_ss8_base") + "/fact.parquet"
+    val sumDir = tmp("graft_ss8_sum") + "/rollup"
+    val oneShotDir = tmp("graft_ss8_once") + "/rollup"
+    def mk(from: Int, n: Int) = (from until from + n).map { i =>
+      (if (i % 2 == 0) "A" else "B", i.toLong, (i % 7 + 1).toDouble,
+        s"it${i % 5}", Array(i.toFloat, (i % 3).toFloat))
+    }.toDF("flag", "k", "qty", "item", "vec")
+    val chunks = Seq(mk(0, 100), mk(100, 120), mk(220, 80))
+    chunks.foreach(_.write.mode("append").parquet(baseDir))
+    val sketches = Seq(
+      SketchSpec("k", 6),
+      SummaryRewrite.HistSpec("qty", 0.0, 10.0, 10),
+      ItemsSpec("item", 32),
+      SummaryRewrite.KmvSpec("k", 64),
+      VecSpec("vec"),
+      SummaryRewrite.SampleQSpec("k", "qty", 32),
+      SummaryRewrite.HdrSpec("k", "k", 5),
+      SummaryRewrite.CmsSpec("k", 4, 128))
+    // the one-shot build first: once the streamed rollup is registered,
+    // the rule would see the build's own aggregate over the base
+    SummaryRewrite.buildSummary(spark, baseDir, oneShotDir, Seq("flag"),
+      Seq("qty"), sketches)
+    SummaryStream.registerStreaming(spark, baseDir, sumDir,
+      Seq("flag"), Seq("qty"), sketches = sketches)
+    chunks.zipWithIndex.foreach { case (rows, i) =>
+      SummaryStream.processBatch(rows, i.toLong, sumDir, Seq("flag"),
+        Seq("qty"), sketches = sketches)
+    }
+    SummaryStream.compact(spark, sumDir, Seq("flag"))
+    val names = sketches.map(_.colName)
+    def read(dir: String) = spark.read.parquet(dir)
+      .select(($"flag" +: names.map(col)): _*).orderBy($"flag").collect()
+    val (folded, once) = (read(sumDir), read(oneShotDir))
+    assert(folded.map(_.getString(0)).toSeq == Seq("A", "B"))
+    assert(once.map(_.getString(0)).toSeq == Seq("A", "B"))
+    for ((f, o) <- folded.zip(once); (n, i) <- names.zipWithIndex) {
+      if (n == "vsum_vec") {
+        val (fv, ov) = (f.getStruct(i + 1), o.getStruct(i + 1))
+        assert(fv.getLong(0) == ov.getLong(0))
+        fv.getSeq[Double](1).zip(ov.getSeq[Double](1)).foreach {
+          case (a, b) => assert(math.abs(a - b) <= 1e-6 * math.abs(b), n)
+        }
+      } else assert(f.get(i + 1) == o.get(i + 1), n)
+    }
+    SummaryRewrite.clear()
+  }
+
+  test("compact refuses a rollup column no sketch kind claims, " +
+      "naming the column") {
+    val sumDir = tmp("graft_ss_unk") + "/rollup"
+    Seq(("A", 3L, 7L), ("A", 2L, 1L)).toDF("flag", "cnt", "zz_mystery")
+      .withColumn("chunk", lit(-1L))
+      .write.partitionBy("chunk").parquet(sumDir)
+    val e = intercept[IllegalArgumentException] {
+      SummaryStream.compact(spark, sumDir, Seq("flag"))
+    }
+    assert(e.getMessage.contains("zz_mystery"))
   }
 }
