@@ -70,11 +70,14 @@ object SparkEntry {
       case None => queries
     }
 
-  /** Write [[oracleSql]] to `path` as one JSON object (name → SQL). */
-  def writeOracleJson(path: String): Unit = {
+  /** Write [[oracleSql]] to `path` as one JSON object (name → SQL),
+    * each SQL passed through `resolve`.
+    */
+  def writeOracleJson(path: String,
+      resolve: String => String = identity): Unit = {
     import graft.util.Json.quote
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-      oracleSql.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
+      oracleSql.map { case (k, v) => s"${quote(k)}: ${quote(resolve(v))}" }
         .mkString("{", ",", "}"))
   }
 }

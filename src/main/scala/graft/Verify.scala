@@ -16,7 +16,9 @@ object Verify {
       }
       spark.catalog.clearCache()
     }
-    SparkEntry.writeOracleJson(s"$outDir/oracle_sql.json")
+    // the sink faces' oracles read the sinks this JVM wrote
+    SparkEntry.writeOracleJson(s"$outDir/oracle_sql.json",
+      graft.queries.SourceQueries.resolveSinks)
     spark.stop()
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StringType}
 
-import graft.operators.MgSketch
+import graft.operators.{CmsKind, HdrKind, HistKind, HllKind, HllRegisters,
+  KmvKind, LongCounts, MgKind, SampleKind, SketchAggregate}
 
 /** Column-level API over the Catalyst vector expressions, mirroring the
   * reference's SQL surface (`l2sq_dist`, `cos_dist`, `hamming_dist` and
@@ -143,33 +144,32 @@ object VectorFunctions {
       // item cast to string up front: frequent-items identity is the
       // textual value, and the cast is deterministic for every
       // atomic type (vs a runtime class cast failing on non-strings)
-      "mg_sketch" -> ((e: Seq[Expression]) =>
-        MgSketch(Cast(e(0), StringType), lit(e(1), "capacity"))),
-      "sketch_topk" -> ((e: Seq[Expression]) =>
-        MgSketch(Cast(e(0), StringType), lit(e(2), "capacity"),
-          topK = Some(lit(e(1), "k")))),
+      "mg_sketch" -> ((e: Seq[Expression]) => SketchAggregate.partial(
+        MgKind(lit(e(1), "capacity")), Cast(e(0), StringType))),
+      "sketch_topk" -> ((e: Seq[Expression]) => SketchAggregate.partial(
+        MgKind(lit(e(2), "capacity"), topK = Some(lit(e(1), "k"))),
+        Cast(e(0), StringType))),
       // fold persisted Misra-Gries summaries (per day/partition/rollup
       // chunk) back into one: mg_merge(entries, capacity) /
       // mg_merge_topk(entries, k, capacity)
       "mg_merge" -> ((e: Seq[Expression]) =>
-        graft.operators.MgMerge(e(0), lit(e(1), "capacity"))),
-      "mg_merge_topk" -> ((e: Seq[Expression]) =>
-        graft.operators.MgMerge(e(0), lit(e(2), "capacity"),
-          topK = Some(lit(e(1), "k")))),
+        SketchAggregate.merge(MgKind(lit(e(1), "capacity")), e(0))),
+      "mg_merge_topk" -> ((e: Seq[Expression]) => SketchAggregate.merge(
+        MgKind(lit(e(2), "capacity"), topK = Some(lit(e(1), "k"))), e(0))),
       // HyperLogLog distinct sketch: hll_sketch(key, p) -> ARRAY<INT>
       // registers (mergeable: zip_with(a, b, greatest) or
       // hll_merge(regs)), and hll_estimate(registers) -> BIGINT.
       // Compose for a one-call distinct estimate:
-      // hll_estimate(hll_sketch(x, 8)). Key typing lives in HllSketch
+      // hll_estimate(hll_sketch(x, 8)). Key typing lives in HllKind
       // itself (integral -> 64-bit value, string -> FNV-1a; anything
       // else rejected at analysis — the r9 builder cast every key to
       // LongType, silently nulling and dropping text keys).
-      "hll_sketch" -> ((e: Seq[Expression]) =>
-        graft.operators.HllSketch(e(0), lit(e(1), "precision"))),
+      "hll_sketch" -> ((e: Seq[Expression]) => SketchAggregate.partial(
+        HllKind(lit(e(1), "precision")), e(0))),
       "hll_estimate" -> ((e: Seq[Expression]) =>
         graft.operators.HllEstimate(e.head)),
       "hll_merge" -> ((e: Seq[Expression]) =>
-        graft.operators.HllMerge(e.head)),
+        SketchAggregate.merge(HllRegisters, e.head)),
       // KMV (k-minimum-values) distinct sketch — the set-operation
       // sibling of HLL: kmv_sketch(key, k) -> sorted ARRAY<BIGINT> of
       // the k smallest unsigned key hashes; kmv_merge(arr, k) folds
@@ -180,9 +180,9 @@ object VectorFunctions {
       // A and day B" shape no union-only sketch can answer. Key
       // typing matches hll_sketch (integral value / string FNV-1a).
       "kmv_sketch" -> ((e: Seq[Expression]) =>
-        graft.operators.KmvSketch(e(0), lit(e(1), "k"))),
+        SketchAggregate.partial(KmvKind(lit(e(1), "k")), e(0))),
       "kmv_merge" -> ((e: Seq[Expression]) =>
-        graft.operators.KmvMerge(e(0), lit(e(1), "k"))),
+        SketchAggregate.merge(KmvKind(lit(e(1), "k")), e(0))),
       "kmv_estimate" -> ((e: Seq[Expression]) =>
         graft.operators.KmvEstimate(e(0), lit(e(1), "k"))),
       "kmv_intersect" -> ((e: Seq[Expression]) =>
@@ -196,11 +196,11 @@ object VectorFunctions {
       // hist_quantile(counts, q, lo, hi) reads the interpolated
       // quantile. Compose: hist_quantile(hist_sketch(x, 0, 100, 64),
       // 0.5, 0, 100).
-      "hist_sketch" -> ((e: Seq[Expression]) =>
-        graft.operators.HistSketch(e(0), dlit(e(1), "lo"),
-          dlit(e(2), "hi"), lit(e(3), "nbins"))),
+      "hist_sketch" -> ((e: Seq[Expression]) => SketchAggregate.partial(
+        HistKind(dlit(e(1), "lo"), dlit(e(2), "hi"), lit(e(3), "nbins")),
+        e(0))),
       "hist_merge" -> ((e: Seq[Expression]) =>
-        graft.operators.HistMerge(e.head)),
+        SketchAggregate.merge(LongCounts, e.head)),
       "hist_quantile" -> ((e: Seq[Expression]) =>
         graft.operators.HistQuantile(e(0), dlit(e(1), "q"),
           dlit(e(2), "lo"), dlit(e(3), "hi"))),
@@ -213,7 +213,7 @@ object VectorFunctions {
       // quantile as the holding bucket's lower bound. Compose:
       // hdr_quantile(hdr_sketch(micros, 5), 99, 100, 5).
       "hdr_sketch" -> ((e: Seq[Expression]) =>
-        graft.operators.HdrSketch(e(0), lit(e(1), "p"))),
+        SketchAggregate.partial(HdrKind(lit(e(1), "p")), e(0))),
       "hdr_quantile" -> ((e: Seq[Expression]) =>
         graft.operators.HdrQuantile(e(0), lit(e(1), "qNum").toLong,
           lit(e(2), "qDen").toLong, lit(e(3), "p"))),
@@ -223,8 +223,8 @@ object VectorFunctions {
       // one-sided frequency estimate (>= true count). Affine hashes
       // mod 2^31-1 with fixed published constants — exact integer
       // arithmetic, oracle-restatable.
-      "cms_sketch" -> ((e: Seq[Expression]) =>
-        graft.operators.CmsSketch(e(0), lit(e(1), "d"), lit(e(2), "w"))),
+      "cms_sketch" -> ((e: Seq[Expression]) => SketchAggregate.partial(
+        CmsKind(lit(e(1), "d"), lit(e(2), "w")), e(0))),
       "cms_estimate" -> ((e: Seq[Expression]) =>
         graft.operators.CmsEstimate(e(0), e(1), lit(e(2), "d"),
           lit(e(3), "w"))),
@@ -237,12 +237,11 @@ object VectorFunctions {
       // it — and DETERMINISTIC in both regimes, membership being a
       // pure function of the id hashes); sample_n(s) the sample size.
       // Compose: sample_quantile(sample_sketch(pk, x, 1024), 0.5).
-      "sample_sketch" -> ((e: Seq[Expression]) =>
-        graft.operators.SampleSketch(e(0),
-          Cast(e(1), org.apache.spark.sql.types.DoubleType),
-          lit(e(2), "k"))),
+      "sample_sketch" -> ((e: Seq[Expression]) => SketchAggregate.partial(
+        SampleKind(lit(e(2), "k")), e(0),
+        Cast(e(1), org.apache.spark.sql.types.DoubleType))),
       "sample_merge" -> ((e: Seq[Expression]) =>
-        graft.operators.SampleMerge(e(0), lit(e(1), "k"))),
+        SketchAggregate.merge(SampleKind(lit(e(1), "k")), e(0))),
       "sample_quantile" -> ((e: Seq[Expression]) =>
         graft.operators.SampleQuantile(e(0), dlit(e(1), "q"))),
       "sample_n" -> ((e: Seq[Expression]) =>

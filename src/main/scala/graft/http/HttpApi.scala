@@ -5,13 +5,14 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.embed.HashEmbeddingRuntime
 import graft.operators.Knn
+import graft.plans.SummaryRewrite
 import graft.plans.SummaryRewrite.{CmsSpec, Entry, HdrSpec, HistSpec,
-  ItemsSpec, KmvSpec, SampleQSpec, SketchSpec, VecSpec}
+  ItemsSpec, KmvSpec, SampleQSpec, Sketch, SketchSpec, VecSpec}
 import graft.util.{Json, MiniJson}
 
 /** Minimal REST facade over the engine (SURVEY §2.12), built on the
@@ -349,6 +350,65 @@ class HttpApi(spark: SparkSession, port: Int = 0,
     else { respond(ex, 404, error(s"no collection $name")); None }
 
   private def error(msg: String): String = s"""{"error":${Json.quote(msg)}}"""
+
+  /** The prelude every `/summary/<read>` route shares: a 404 unless
+    * `name` has a summary; then the body's `field`, `dims` and the
+    * read's own `params`, in that order; then a 400 unless `field`
+    * names one of the sketches `pick` selects from the registration
+    * (the error lists them as `label`), or unless the dims are rollup
+    * dims (a non-empty subset for a `pairwise` read). Some(entry, dims,
+    * the picked name, params) when the read may go ahead.
+    */
+  private def summaryRead[P](ex: HttpExchange, name: String,
+      body: MiniJson.Fields, field: String, label: String,
+      pick: PartialFunction[Sketch, String], pairwise: Boolean = false)(
+      params: => P): Option[(Entry, Seq[String], String, P)] =
+    Option(summaries.get(name)) match {
+      case None =>
+        respond(ex, 404, error(s"no summary on $name")); None
+      case Some((_, reg)) =>
+        val picked = body.str(field)
+        val gdims = body.strings("dims").getOrElse(Nil)
+        val p = params
+        val choices = reg.sketches.collect(pick)
+        if (!picked.exists(choices.contains)) {
+          respond(ex, 400,
+            s"""{"error":"$field must be one of the registered """ +
+              s"""$label: ${choices.mkString(",")}"}""")
+          None
+        } else if (pairwise && gdims.isEmpty ||
+            !gdims.forall(reg.dims.contains)) {
+          respond(ex, 400,
+            if (pairwise) """{"error":"dims must be a non-empty """ +
+              """subset of rollup dims"}"""
+            else """{"error":"dims must be rollup dims"}""")
+          None
+        } else Some((reg, gdims, picked.get, p))
+    }
+
+  /** Answer a `/summary/<read>` with its rows: each one is its dims (the
+    * `_a` then the `_b` group's for a `pairwise` read) followed by
+    * `fields(row, i)`, i the row's first value column.
+    */
+  private def respondRows(ex: HttpExchange, gdims: Seq[String],
+      rows: DataFrame, pairwise: Boolean = false)(
+      fields: (Row, Int) => Seq[String]): Unit = {
+    val groups = if (pairwise) Seq("_a", "_b") else Seq("")
+    val items = rows.collect().map { r =>
+      val ds = groups.zipWithIndex.flatMap { case (suffix, g) =>
+        gdims.indices.map(i => s""""${gdims(i)}$suffix":${
+          jsonId(r.get(g * gdims.size + i))}""")
+      }
+      (ds ++ fields(r, groups.size * gdims.size)).mkString("{", ",", "}")
+    }.mkString("[", ",", "]")
+    respond(ex, 200, s"""{"results":$items}""")
+  }
+
+  private def quantiles(body: MiniJson.Fields): Seq[Double] =
+    body.floats("qs").map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
+
+  private def quantileField(q: Double, v: Any): String =
+    s""""p${math.round(q * 100)}":${if (v == null) "null" else v.toString}"""
 
   // names and column types reach SQL text — admit identifiers and a
   // type whitelist only (the reference quotes table names instead;
@@ -1615,72 +1675,28 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // registers: {"key":"user_id","dims":["day"]} — dims empty or
       // absent = global
       case ("POST", List("collections", name, "summary", "distinct")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val key = body.str("key")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val hllKeys = reg.sketches.collect { case h: SketchSpec => h.key }
-            if (!key.exists(hllKeys.contains))
-              respond(ex, 400,
-                s"""{"error":"key must be one of the registered """ +
-                  s"""hll_keys: ${hllKeys.mkString(",")}"}""")
-            else if (!gdims.forall(reg.dims.contains))
-              respond(ex, 400,
-                s"""{"error":"dims must be rollup dims"}""")
-            else {
-              val rows = graft.plans.SummaryRewrite.approxDistinct(
-                spark, reg.summaryDir, gdims, key.get).collect()
-              val items = rows.map { r =>
-                val ds = gdims.indices.map(i =>
-                  s""""${gdims(i)}":${jsonId(r.get(i))}""")
-                val est = s""""est_distinct":${r.getLong(gdims.size)}"""
-                (ds :+ est).mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
+        summaryRead(ex, name, body, "key", "hll_keys",
+            { case h: SketchSpec => h.key })(()).foreach {
+          case (reg, gdims, key, _) =>
+            respondRows(ex, gdims, SummaryRewrite.approxDistinct(
+                spark, reg.summaryDir, gdims, key)) { (r, i) =>
+              Seq(s""""est_distinct":${r.getLong(i)}""")
             }
         }
 
       // serve approximate quantiles from the rollup's histogram
       // counts: {"col":"latency","qs":[0.5,0.99],"dims":["day"]}
       case ("POST", List("collections", name, "summary", "quantile")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val colName = body.str("col")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val qs = body.floats("qs")
-              .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
-            val histograms = reg.sketches.collect { case h: HistSpec => h }
-            val spec = colName.flatMap(c => histograms.find(_.col == c))
-            if (spec.isEmpty)
-              respond(ex, 400,
-                s"""{"error":"col must be one of the registered """ +
-                  s"""histograms: ${histograms.map(_.col)
-                    .mkString(",")}"}""")
-            else if (!gdims.forall(reg.dims.contains))
-              respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
-            else if (qs.isEmpty || qs.exists(q => q <= 0 || q > 1))
-              respond(ex, 400,
-                """{"error":"qs must be in (0, 1]"}""")
-            else {
-              val h = spec.get
-              val rows = graft.plans.SummaryRewrite.approxQuantile(
-                spark, reg.summaryDir, gdims, h.col, qs, h.lo, h.hi)
-                .collect()
-              val items = rows.map { r =>
-                val ds = gdims.indices.map(i =>
-                  s""""${gdims(i)}":${jsonId(r.get(i))}""")
-                val vs = qs.indices.map { i =>
-                  val v = r.get(gdims.size + i)
-                  s""""p${math.round(qs(i) * 100)}":${
-                    if (v == null) "null" else v.toString}"""
-                }
-                (ds ++ vs).mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
+        summaryRead(ex, name, body, "col", "histograms",
+            { case h: HistSpec => h.col })(quantiles(body)).foreach {
+          case (_, _, _, qs) if qs.isEmpty || qs.exists(q => q <= 0 || q > 1) =>
+            respond(ex, 400, """{"error":"qs must be in (0, 1]"}""")
+          case (reg, gdims, c, qs) =>
+            val h = reg.sketches.collectFirst {
+              case h: HistSpec if h.col == c => h }.get
+            respondRows(ex, gdims, SummaryRewrite.approxQuantile(
+                spark, reg.summaryDir, gdims, c, qs, h.lo, h.hi)) { (r, i) =>
+              qs.indices.map(j => quantileField(qs(j), r.get(i + j)))
             }
         }
 
@@ -1692,41 +1708,16 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // always). dims empty or absent = global
       case ("POST",
           List("collections", name, "summary", "samplequantile")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val colName = body.str("col")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val qs = body.floats("qs")
-              .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
-            val sampleCols =
-              reg.sketches.collect { case sp: SampleQSpec => sp.value }
-            if (!colName.exists(sampleCols.contains))
-              respond(ex, 400,
-                s"""{"error":"col must be one of the registered """ +
-                  s"""sample_cols: ${sampleCols.mkString(",")}"}""")
-            else if (!gdims.forall(reg.dims.contains))
-              respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
-            else if (qs.isEmpty || qs.exists(q => q < 0 || q > 1))
-              respond(ex, 400, """{"error":"qs must be in [0, 1]"}""")
-            else {
-              val rows = graft.plans.SummaryRewrite.sampleQuantiles(
-                spark, reg.summaryDir, gdims, colName.get, qs).collect()
-              val items = rows.map { r =>
-                val ds = gdims.indices.map(i =>
-                  s""""${gdims(i)}":${jsonId(r.get(i))}""")
-                val n = s""""n_sample":${
-                  if (r.isNullAt(gdims.size)) "null"
-                  else r.getInt(gdims.size).toString}"""
-                val vs = qs.indices.map { i =>
-                  val v = r.get(gdims.size + 1 + i)
-                  s""""p${math.round(qs(i) * 100)}":${
-                    if (v == null) "null" else v.toString}"""
-                }
-                (ds ++ (n +: vs)).mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
+        summaryRead(ex, name, body, "col", "sample_cols",
+            { case sp: SampleQSpec => sp.value })(quantiles(body)).foreach {
+          case (_, _, _, qs) if qs.isEmpty || qs.exists(q => q < 0 || q > 1) =>
+            respond(ex, 400, """{"error":"qs must be in [0, 1]"}""")
+          case (reg, gdims, c, qs) =>
+            respondRows(ex, gdims, SummaryRewrite.sampleQuantiles(
+                spark, reg.summaryDir, gdims, c, qs)) { (r, i) =>
+              s""""n_sample":${
+                if (r.isNullAt(i)) "null" else r.getInt(i).toString}""" +:
+                qs.indices.map(j => quantileField(qs(j), r.get(i + 1 + j)))
             }
         }
 
@@ -1737,41 +1728,17 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // dims empty or absent = global
       case ("POST",
           List("collections", name, "summary", "hdrquantile")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val colName = body.str("col")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val qs = body.floats("qs")
-              .map(_.toSeq.map(_.toDouble)).getOrElse(Seq(0.5))
-            val hdrCols = reg.sketches.collect { case h: HdrSpec => h.name }
-            if (!colName.exists(hdrCols.contains))
-              respond(ex, 400,
-                s"""{"error":"col must be one of the registered """ +
-                  s"""hdr_cols: ${hdrCols.mkString(",")}"}""")
-            else if (!gdims.forall(reg.dims.contains))
-              respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
-            else if (qs.isEmpty || qs.exists(q => q <= 0 || q > 1))
-              respond(ex, 400, """{"error":"qs must be in (0, 1]"}""")
-            else {
-              // rationals at 1/10000 grain: the read is integer-exact
-              // in (qNum, qDen), so the REST float only picks the rank
-              val rats = qs.map(q => (math.round(q * 10000), 10000L))
-              val rows = graft.plans.SummaryRewrite.hdrQuantiles(
-                spark, reg.summaryDir, gdims, colName.get, rats)
-                .collect()
-              val items = rows.map { r =>
-                val ds = gdims.indices.map(i =>
-                  s""""${gdims(i)}":${jsonId(r.get(i))}""")
-                val vs = qs.indices.map { i =>
-                  val v = r.get(gdims.size + i)
-                  s""""p${math.round(qs(i) * 100)}":${
-                    if (v == null) "null" else v.toString}"""
-                }
-                (ds ++ vs).mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
+        summaryRead(ex, name, body, "col", "hdr_cols",
+            { case h: HdrSpec => h.name })(quantiles(body)).foreach {
+          case (_, _, _, qs) if qs.isEmpty || qs.exists(q => q <= 0 || q > 1) =>
+            respond(ex, 400, """{"error":"qs must be in (0, 1]"}""")
+          case (reg, gdims, c, qs) =>
+            // rationals at 1/10000 grain: the read is integer-exact
+            // in (qNum, qDen), so the REST float only picks the rank
+            val rats = qs.map(q => (math.round(q * 10000), 10000L))
+            respondRows(ex, gdims, SummaryRewrite.hdrQuantiles(
+                spark, reg.summaryDir, gdims, c, rats)) { (r, i) =>
+              qs.indices.map(j => quantileField(qs(j), r.get(i + j)))
             }
         }
 
@@ -1779,35 +1746,16 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // registers: {"key":"user_id","values":[7,42],"dims":["day"]} —
       // one-sided (est >= true count). dims empty or absent = global
       case ("POST", List("collections", name, "summary", "freq")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val key = body.str("key")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val values = body.longs("values").map(_.toSeq).getOrElse(Nil)
-            val cmsKeys = reg.sketches.collect { case cs: CmsSpec => cs.key }
-            if (!key.exists(cmsKeys.contains))
-              respond(ex, 400,
-                s"""{"error":"key must be one of the registered """ +
-                  s"""cms_keys: ${cmsKeys.mkString(",")}"}""")
-            else if (!gdims.forall(reg.dims.contains))
-              respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
-            else if (values.isEmpty)
-              respond(ex, 400,
-                """{"error":"values array is required"}""")
-            else {
-              val rows = graft.plans.SummaryRewrite.approxFreq(
-                spark, reg.summaryDir, gdims, key.get, values)
-                .collect()
-              val items = rows.map { r =>
-                val ds = gdims.indices.map(i =>
-                  s""""${gdims(i)}":${jsonId(r.get(i))}""")
-                val kv = s""""${key.get}":${r.getLong(gdims.size)}"""
-                val est = s""""est":${r.getLong(gdims.size + 1)}"""
-                (ds ++ Seq(kv, est)).mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
+        summaryRead(ex, name, body, "key", "cms_keys",
+            { case cs: CmsSpec => cs.key })(
+            body.longs("values").map(_.toSeq).getOrElse(Nil)).foreach {
+          case (_, _, _, values) if values.isEmpty =>
+            respond(ex, 400, """{"error":"values array is required"}""")
+          case (reg, gdims, key, values) =>
+            respondRows(ex, gdims, SummaryRewrite.approxFreq(
+                spark, reg.summaryDir, gdims, key, values)) { (r, i) =>
+              Seq(s""""$key":${r.getLong(i)}""",
+                s""""est":${r.getLong(i + 1)}""")
             }
         }
 
@@ -1883,75 +1831,34 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // summaries fold with the mergeable cut at the registered
       // capacity; dims empty or absent = global
       case ("POST", List("collections", name, "summary", "topitems")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val colName = body.str("col")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val k = body.int("k").getOrElse(10)
-            val itemCols = reg.sketches.collect { case it: ItemsSpec => it.col }
-            if (!colName.exists(itemCols.contains))
-              respond(ex, 400,
-                s"""{"error":"col must be one of the registered """ +
-                  s"""items: ${itemCols.mkString(",")}"}""")
-            else if (!gdims.forall(reg.dims.contains))
-              respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
-            else if (k <= 0 || k > 1000)
+        summaryRead(ex, name, body, "col", "items",
+            { case it: ItemsSpec => it.col })(body.int("k").getOrElse(10))
+          .foreach {
+            case (_, _, _, k) if k <= 0 || k > 1000 =>
               respond(ex, 400, """{"error":"k must be in [1, 1000]"}""")
-            else {
-              val rows = graft.plans.SummaryRewrite.approxTopItems(
-                spark, reg.summaryDir, gdims, colName.get, k).collect()
-              val items = rows.map { r =>
-                val ds = gdims.indices.map(i =>
-                  s""""${gdims(i)}":${jsonId(r.get(i))}""")
-                val rest = Seq(
-                  s""""rank":${r.getInt(gdims.size)}""",
-                  s""""item":${jsonId(r.getString(gdims.size + 1))}""",
-                  s""""est":${r.getLong(gdims.size + 2)}""")
-                (ds ++ rest).mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
-            }
-        }
+            case (reg, gdims, c, k) =>
+              respondRows(ex, gdims, SummaryRewrite.approxTopItems(
+                  spark, reg.summaryDir, gdims, c, k)) { (r, i) =>
+                Seq(s""""rank":${r.getInt(i)}""",
+                  s""""item":${jsonId(r.getString(i + 1))}""",
+                  s""""est":${r.getLong(i + 2)}""")
+              }
+          }
 
       // serve the pairwise distinct-key overlap of dim groups from
       // the rollup's KMV sketches: {"key":"o_custkey",
       // "dims":["o_orderstatus"]} — every unordered group pair gets
       // est_a/est_b/est_common/jaccard without touching the base
       case ("POST", List("collections", name, "summary", "overlap")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val key = body.str("key")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val kmvKeys = reg.sketches.collect { case kv: KmvSpec => kv.key }
-            if (!key.exists(kmvKeys.contains))
-              respond(ex, 400,
-                s"""{"error":"key must be one of the registered """ +
-                  s"""kmv_keys: ${kmvKeys.mkString(",")}"}""")
-            else if (gdims.isEmpty || !gdims.forall(reg.dims.contains))
-              respond(ex, 400,
-                s"""{"error":"dims must be a non-empty subset of """ +
-                  s"""rollup dims"}""")
-            else {
-              val rows = graft.plans.SummaryRewrite.approxOverlap(
-                spark, reg.summaryDir, gdims, key.get).collect()
-              val n = gdims.size
-              val items = rows.map { r =>
-                val da = gdims.indices.map(i =>
-                  s""""${gdims(i)}_a":${jsonId(r.get(i))}""")
-                val db = gdims.indices.map(i =>
-                  s""""${gdims(i)}_b":${jsonId(r.get(n + i))}""")
-                val rest = Seq(
-                  s""""est_a":${r.getLong(2 * n)}""",
-                  s""""est_b":${r.getLong(2 * n + 1)}""",
-                  s""""est_common":${r.getLong(2 * n + 2)}""",
-                  s""""jaccard":${r.getDouble(2 * n + 3)}""")
-                (da ++ db ++ rest).mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
+        summaryRead(ex, name, body, "key", "kmv_keys",
+            { case kv: KmvSpec => kv.key }, pairwise = true)(()).foreach {
+          case (reg, gdims, key, _) =>
+            respondRows(ex, gdims, SummaryRewrite.approxOverlap(
+                spark, reg.summaryDir, gdims, key), pairwise = true) {
+              (r, i) => Seq(s""""est_a":${r.getLong(i)}""",
+                s""""est_b":${r.getLong(i + 1)}""",
+                s""""est_common":${r.getLong(i + 2)}""",
+                s""""jaccard":${r.getDouble(i + 3)}""")
             }
         }
 
@@ -1960,37 +1867,17 @@ class HttpApi(spark: SparkSession, port: Int = 0,
       // empty or absent = global corpus centroid. The read is dim-
       // cardinality-sized; the base table is never touched.
       case ("POST", List("collections", name, "summary", "centroid")) =>
-        Option(summaries.get(name)) match {
-          case None =>
-            respond(ex, 404, error(s"no summary on $name"))
-          case Some((_, reg)) =>
-            val colName = body.str("col")
-            val gdims = body.strings("dims").getOrElse(Nil)
-            val vecCols = reg.sketches.collect { case v: VecSpec => v.col }
-            if (!colName.exists(vecCols.contains))
-              respond(ex, 400,
-                s"""{"error":"col must be one of the registered """ +
-                  s"""vec_cols: ${vecCols.mkString(",")}"}""")
-            else if (!gdims.forall(reg.dims.contains))
-              respond(ex, 400, s"""{"error":"dims must be rollup dims"}""")
-            else {
-              val rows = graft.plans.SummaryRewrite.groupCentroids(
-                spark, reg.summaryDir, gdims, colName.get).collect()
-              val items = rows.map { r =>
-                val ds = gdims.indices.map(i =>
-                  s""""${gdims(i)}":${jsonId(r.get(i))}""")
-                // an all-null vector group serves n=0, centroid=null
-                val n = s""""n":${
-                  if (r.isNullAt(gdims.size)) 0L
-                  else r.getLong(gdims.size)}"""
-                val cent =
-                  if (r.isNullAt(gdims.size + 1)) "null"
-                  else r.getSeq[Double](gdims.size + 1)
-                    .mkString("[", ",", "]")
-                (ds ++ Seq(n, s""""centroid":$cent"""))
-                  .mkString("{", ",", "}")
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"results":$items}""")
+        summaryRead(ex, name, body, "col", "vec_cols",
+            { case v: VecSpec => v.col })(()).foreach {
+          case (reg, gdims, c, _) =>
+            respondRows(ex, gdims, SummaryRewrite.groupCentroids(
+                spark, reg.summaryDir, gdims, c)) { (r, i) =>
+              // an all-null vector group serves n=0, centroid=null
+              val cent =
+                if (r.isNullAt(i + 1)) "null"
+                else r.getSeq[Double](i + 1).mkString("[", ",", "]")
+              Seq(s""""n":${if (r.isNullAt(i)) 0L else r.getLong(i)}""",
+                s""""centroid":$cent""")
             }
         }
 

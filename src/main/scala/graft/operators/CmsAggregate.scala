@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Count–min sketch (Cormode–Muthukrishnan 2005) over integer keys —
@@ -26,10 +25,10 @@ import org.apache.spark.sql.types._
   * stays below 2^62, so the arithmetic is exact BIGINT in any engine:
   * the DuckDB oracle restates the registers and the min-over-rows
   * estimate bit for bit, the same oracle-able-approximation stance as
-  * [[HllSketch]]/[[Hdr]]. Registers live in a dense d·w long array
+  * [[Hll]]/[[Hdr]]. Registers live in a dense d·w long array
   * (row-major), so partials merge by elementwise sum — the
   * associative rollup-combiner contract — and persisted sketches fold
-  * with [[HistMerge]], making CMS a valid rollup measure
+  * with `hist_merge` ([[LongCounts]]), making CMS a valid rollup measure
   * ([[graft.plans.SummaryRewrite.CmsSpec]]): per-day / per-source
   * frequency sketches over a 100 TB corpus are persisted at dim
   * cardinality and any key's frequency in any dim slice is served
@@ -74,93 +73,44 @@ object Cms {
   }
 }
 
-/** `cms_sketch(x, d, w)` — aggregate over integral keys returning the
-  * d·w count-min registers as ARRAY<BIGINT> (row-major). Nulls are
-  * skipped.
+/** `cms_sketch(x, d, w)` — the d·w count-min registers of integral
+  * keys as ARRAY<BIGINT> (row-major), folded by `hist_merge`. Nulls
+  * are skipped.
   */
-case class CmsSketch(
-    child: Expression,
-    d: Int,
-    w: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+private[graft] case class CmsKind(d: Int, w: Int) extends LongCounts {
+  def name: String = "cms_sketch"
+  def width: Int = d * w
 
-  require(d >= 1 && d <= Cms.maxDepth,
-    s"depth d must be in [1, ${Cms.maxDepth}], got $d")
-  require(w >= 2 && w <= (1 << 20),
-    s"width w must be in [2, 2^20], got $w")
+  override def requireValid(name: String): Unit = {
+    require(d >= 1 && d <= Cms.maxDepth,
+      s"depth d must be in [1, ${Cms.maxDepth}], got $d")
+    require(w >= 2 && w <= (1 << 20),
+      s"width w must be in [2, 2^20], got $w")
+  }
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def inputError(types: Seq[DataType]): Option[String] =
+    if (SketchInput.integral(types.head)) None
+    else Some(s"an integral key, got ${types.head.simpleString}")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an integral key, got ${other.simpleString}")
+  def update(inputs: Seq[Expression])
+      : (Array[Long], InternalRow) => Array[Long] = {
+    val child = inputs.head
+    val toLong = SketchInput.toLong(child.dataType)
+    (buf, row) => {
+      val v = child.eval(row)
+      if (v != null) {
+        val x = toLong(v)
+        var r = 0
+        while (r < d) { buf(r * w + Cms.slot(x, r, w)) += 1L; r += 1 }
+      }
+      buf
     }
-
-  @transient private lazy val toLong: Any => Long =
-    child.dataType match {
-      case ByteType => v => v.asInstanceOf[Byte].toLong
-      case ShortType => v => v.asInstanceOf[Short].toLong
-      case IntegerType => v => v.asInstanceOf[Int].toLong
-      case LongType => v => v.asInstanceOf[Long]
-      case other => throw new IllegalStateException(
-        s"unreachable: checkInputDataTypes admitted $other")
-    }
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](d * w)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val x = toLong(v)
-      var r = 0
-      while (r < d) { buf(r * w + Cms.slot(x, r, w)) += 1L; r += 1 }
-    }
-    buf
   }
-
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var j = 0
-    while (j < b1.length) { b1(j) += b2(j); j += 1 }
-    b1
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-    var j = 0
-    while (j < buf.length) { bb.putLong(buf(j)); j += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](bytes.length / 8)
-    var j = 0
-    while (j < buf.length) { buf(j) = bb.getLong(); j += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): CmsSketch =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CmsSketch =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "cms_sketch"
 }
 
 /** `cms_estimate(counts, x, d, w)` — scalar companion reading the
   * min-over-rows point estimate for key x off registers from
-  * [[CmsSketch]] or a [[HistMerge]] fold. Null if either side is
+  * `cms_sketch` or a `hist_merge` fold. Null if either side is
   * null. Delegated codegen (the [[KmvIntersect]] binary stance) keeps
   * containing stages whole-stage compiled.
   */
@@ -173,23 +123,14 @@ case class CmsEstimate(left: Expression, right: Expression, d: Int,
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _),
-          ByteType | ShortType | IntegerType | LongType) =>
+      case (ArrayType(LongType, _), k) if SketchInput.integral(k) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (ARRAY<BIGINT> counts, integral key), " +
           s"got (${l.simpleString}, ${r.simpleString})")
     }
 
-  @transient private lazy val keyToLong: Any => Long =
-    right.dataType match {
-      case ByteType => v => v.asInstanceOf[Byte].toLong
-      case ShortType => v => v.asInstanceOf[Short].toLong
-      case IntegerType => v => v.asInstanceOf[Int].toLong
-      case LongType => v => v.asInstanceOf[Long]
-      case other => throw new IllegalStateException(
-        s"unreachable: checkInputDataTypes admitted $other")
-    }
+  @transient private lazy val keyToLong = SketchInput.toLong(right.dataType)
 
   /** Public bridge for the generated call. */
   final def compute(cv: Any, kv: Any): Long = {

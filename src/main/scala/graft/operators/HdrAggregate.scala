@@ -3,14 +3,13 @@ package graft.operators
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Log2-bucketed ("HDR-histogram-style") quantile sketch over
   * NON-NEGATIVE integer values — the relative-error complement of the
-  * fixed-bin [[HistSketch]]: where fixed bins bound ABSOLUTE error by
+  * fixed-bin [[HistKind]]: where fixed bins bound ABSOLUTE error by
   * `(hi-lo)/nbins` and need a declared range, log2 buckets bound
   * RELATIVE error by `2^-p` over the whole long range with no
   * declaration at all — the right contract for latency/size/duration
@@ -32,8 +31,9 @@ import org.apache.spark.sql.types._
   * libm rounding cannot move a boundary). Counts live in a dense
   * `(64-p)·2^p` long array — 15 KB at p=5 — so partials merge by
   * elementwise sum: the same associative-combiner contract as
-  * [[HistSketch]], making the sketch a valid rollup measure
-  * ([[graft.plans.SummaryRewrite.HdrSpec]]) foldable by [[HistMerge]].
+  * [[HistKind]], making the sketch a valid rollup measure
+  * ([[graft.plans.SummaryRewrite.HdrSpec]]) foldable by `hist_merge`
+  * ([[LongCounts]]).
   *
   * The quantile read is integer-exact too: rank target
   * `ceil(total·qNum/qDen)` by integer division, cumulative walk,
@@ -95,87 +95,37 @@ object Hdr {
   }
 }
 
-/** `hdr_sketch(x, p)` — aggregate over integral x returning the dense
-  * log2-bucket counts as ARRAY<BIGINT> (length (64-p)*2^p). Nulls are
-  * skipped; negative values clamp into bucket 0.
+/** `hdr_sketch(x, p)` — the dense log2-bucket counts of integral x as
+  * ARRAY<BIGINT> (length (64-p)*2^p), folded by `hist_merge`. Nulls
+  * are skipped; negative values clamp into bucket 0.
   */
-case class HdrSketch(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+private[graft] case class HdrKind(p: Int) extends LongCounts {
+  def name: String = "hdr_sketch"
+  def width: Int = Hdr.nBuckets(p)
 
-  require(p >= 1 && p <= 8, s"sub-bucket bits p must be in [1, 8], got $p")
+  override def requireValid(name: String): Unit =
+    require(p >= 1 && p <= 8, s"sub-bucket bits p must be in [1, 8], got $p")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def inputError(types: Seq[DataType]): Option[String] =
+    if (SketchInput.integral(types.head)) None
+    else Some("an integral value (cast floats to a fixed grid first — " +
+      s"the sketch is integer-exact), got ${types.head.simpleString}")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an integral value (cast floats to a " +
-          s"fixed grid first — the sketch is integer-exact), got " +
-          other.simpleString)
+  def update(inputs: Seq[Expression])
+      : (Array[Long], InternalRow) => Array[Long] = {
+    val child = inputs.head
+    val toLong = SketchInput.toLong(child.dataType)
+    (buf, row) => {
+      val v = child.eval(row)
+      if (v != null) buf(Hdr.bucket(toLong(v), p)) += 1L
+      buf
     }
-
-  @transient private lazy val toLong: Any => Long =
-    child.dataType match {
-      case ByteType => v => v.asInstanceOf[Byte].toLong
-      case ShortType => v => v.asInstanceOf[Short].toLong
-      case IntegerType => v => v.asInstanceOf[Int].toLong
-      case LongType => v => v.asInstanceOf[Long]
-      case other => throw new IllegalStateException(
-        s"unreachable: checkInputDataTypes admitted $other")
-    }
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](Hdr.nBuckets(p))
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) buf(Hdr.bucket(toLong(v), p)) += 1L
-    buf
   }
-
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var j = 0
-    while (j < b1.length) { b1(j) += b2(j); j += 1 }
-    b1
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-    var j = 0
-    while (j < buf.length) { bb.putLong(buf(j)); j += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](bytes.length / 8)
-    var j = 0
-    while (j < buf.length) { buf(j) = bb.getLong(); j += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): HdrSketch =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HdrSketch =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "hdr_sketch"
 }
 
 /** `hdr_quantile(counts, qNum, qDen, p)` — scalar companion reading
   * the integer-exact qNum/qDen-quantile (bucket lower bound) off a
-  * count array from [[HdrSketch]] or a [[HistMerge]] fold. Null on an
+  * count array from `hdr_sketch` or a `hist_merge` fold. Null on an
   * empty sketch. Delegated codegen keeps containing stages
   * whole-stage compiled.
   */

@@ -11,7 +11,7 @@ import graft.functions.VectorFunctions
   * A plain `GROUP BY item ORDER BY count DESC LIMIT k` (q_top_words)
   * shuffles one row per DISTINCT item; on a web-scale corpus the n-gram
   * vocabulary is billions of keys and that shuffle is the bottleneck.
-  * Here pass 1 runs a Misra–Gries summary ([[MgSketch]]) as a real
+  * Here pass 1 runs a Misra–Gries summary ([[MgKind]]) as a real
   * partial aggregate — each partition emits one ≤capacity-entry sketch,
   * so shuffle volume is capacity × partitions regardless of vocabulary
   * size — and pass 2 exactly counts ONLY the ≤capacity candidates (a
@@ -32,7 +32,8 @@ object HeavyHitters {
   /** Aggregate column: Misra–Gries summary of `item` at `capacity`. */
   def mg_sketch(item: Column, capacity: Int): Column =
     VectorFunctions.col(
-      MgSketch(VectorFunctions.expr(item), capacity).toAggregateExpression())
+      SketchAggregate.partial(MgKind(capacity), VectorFunctions.expr(item))
+        .toAggregateExpression())
 
   /** Exact top-k items of `items(df)` by count, via sketch candidates +
     * exact recount. Output: (item STRING, c BIGINT) ordered by

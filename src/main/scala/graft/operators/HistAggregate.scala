@@ -3,13 +3,12 @@ package graft.operators
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Fixed-bin histogram sketch — the mergeable, 100 TB shape for
-  * approximate quantiles/percentiles, exactly as [[HllSketch]] is for
+  * approximate quantiles/percentiles, exactly as [[HllKind]] is for
   * COUNT(DISTINCT): each partition ships `nbins` longs instead of its
   * value stream, partials merge by elementwise SUM (associative and
   * commutative, so the sketch is also a valid rollup measure — see
@@ -69,171 +68,46 @@ object Hist {
   }
 }
 
-/** `hist_sketch(x, lo, hi, nbins)` — aggregate over numeric x
-  * returning bin counts as ARRAY<BIGINT>. Nulls are skipped;
+/** `hist_sketch(x, lo, hi, nbins)` — bin counts of numeric x as
+  * ARRAY<BIGINT>, folded by `hist_merge`. Nulls are skipped;
   * out-of-range values clamp into the edge bins.
   */
-case class HistSketch(
-    child: Expression,
-    lo: Double,
-    hi: Double,
-    nbins: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+private[graft] case class HistKind(lo: Double, hi: Double, nbins: Int)
+    extends LongCounts {
+  def name: String = "hist_sketch"
+  def width: Int = nbins
 
-  require(nbins >= 1 && nbins <= 65536,
-    s"nbins must be in [1, 65536], got $nbins")
-  require(lo < hi, s"need lo < hi, got [$lo, $hi]")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case _: NumericType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a numeric value, got ${other.simpleString}")
-    }
-
-  @transient private lazy val toDouble: Any => Double =
-    child.dataType match {
-      case ByteType => v => v.asInstanceOf[Byte].toDouble
-      case ShortType => v => v.asInstanceOf[Short].toDouble
-      case IntegerType => v => v.asInstanceOf[Int].toDouble
-      case LongType => v => v.asInstanceOf[Long].toDouble
-      case FloatType => v => v.asInstanceOf[Float].toDouble
-      case DoubleType => v => v.asInstanceOf[Double]
-      case _: DecimalType =>
-        v => v.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
-      case other => throw new IllegalStateException(
-        s"unreachable: checkInputDataTypes admitted $other")
-    }
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](nbins)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val x = toDouble(v)
-      // NaN carries no rank — skipped like null (a clamped NaN would
-      // silently inflate an edge bin)
-      if (!x.isNaN) buf(Hist.bin(x, lo, hi, nbins)) += 1L
-    }
-    buf
+  override def requireValid(name: String): Unit = {
+    require(nbins >= 1 && nbins <= 65536,
+      s"nbins must be in [1, 65536], got $nbins")
+    require(lo < hi, s"need lo < hi, got [$lo, $hi]")
   }
 
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var j = 0
-    while (j < nbins) { b1(j) += b2(j); j += 1 }
-    b1
+  def inputError(types: Seq[DataType]): Option[String] = types.head match {
+    case _: NumericType => None
+    case other => Some(s"a numeric value, got ${other.simpleString}")
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-    var j = 0
-    while (j < buf.length) { bb.putLong(buf(j)); j += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](bytes.length / 8)
-    var j = 0
-    while (j < buf.length) { buf(j) = bb.getLong(); j += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): HistSketch =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HistSketch =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "hist_sketch"
-}
-
-/** `hist_merge(counts)` — aggregate folding persisted count arrays by
-  * elementwise sum: the re-aggregation face of [[HistSketch]] for
-  * sketches stored per partition / day / rollup chunk. Null rows are
-  * skipped; an all-null group yields null.
-  */
-case class HistMerge(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<BIGINT> counts, got " +
-          other.simpleString)
-    }
-
-  override def createAggregationBuffer(): Array[Long] =
-    Array.emptyLongArray
-
-  private def mergeInto(buf: Array[Long],
-      counts: Array[Long]): Array[Long] =
-    if (buf.isEmpty) counts
-    else {
-      require(counts.isEmpty || counts.length == buf.length,
-        s"$prettyName: bin widths differ " +
-          s"(${buf.length} vs ${counts.length}) — histograms with " +
-          "different bin counts cannot merge")
-      var j = 0
-      while (j < counts.length) { buf(j) += counts(j); j += 1 }
+  def update(inputs: Seq[Expression])
+      : (Array[Long], InternalRow) => Array[Long] = {
+    val child = inputs.head
+    val toDouble = SketchInput.toDouble(child.dataType)
+    (buf, row) => {
+      val v = child.eval(row)
+      if (v != null) {
+        val x = toDouble(v)
+        // NaN carries no rank — skipped like null (a clamped NaN would
+        // silently inflate an edge bin)
+        if (!x.isNaN) buf(Hist.bin(x, lo, hi, nbins)) += 1L
+      }
       buf
     }
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else mergeInto(buf, v.asInstanceOf[ArrayData].toLongArray())
   }
-
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] =
-    mergeInto(b1, b2)
-
-  override def eval(buf: Array[Long]): Any =
-    if (buf.isEmpty) null else new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-    var j = 0
-    while (j < buf.length) { bb.putLong(buf(j)); j += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](bytes.length / 8)
-    var j = 0
-    while (j < buf.length) { buf(j) = bb.getLong(); j += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): HistMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HistMerge =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "hist_merge"
 }
 
 /** `hist_quantile(counts, q, lo, hi)` — scalar companion reading the
-  * interpolated q-quantile off a count array (from [[HistSketch]] or
-  * a [[HistMerge]] fold). Delegated codegen keeps containing stages
+  * interpolated q-quantile off a count array (from `hist_sketch` or a
+  * `hist_merge` fold). Delegated codegen keeps containing stages
   * whole-stage compiled.
   */
 case class HistQuantile(child: Expression, q: Double, lo: Double,

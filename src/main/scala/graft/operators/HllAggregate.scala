@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -107,107 +106,112 @@ object Hll {
   }
 }
 
-/** `hll_sketch(x, p)` — aggregate over integral or string keys
-  * returning the `m = 2^p` registers as `ARRAY<INT>`. Integral keys
-  * enter the hash as their 64-bit value (the DuckDB-restatable path
-  * the oracled faces pin); string keys are first mapped to the u64
-  * domain by FNV-1a over their UTF-8 bytes — NOT silently cast to
-  * numeric null and dropped (the r9 behavior, which undercounted text
-  * keys to ~0). Any other key type is rejected at analysis.
-  * Composable: registers from disjoint slices merge by elementwise max
-  * (`zip_with(a, b, greatest)` in SQL, [[HllMerge]] as an aggregate),
-  * so sketches can be persisted per partition/day and unioned without
+/** HLL registers (`ARRAY<INT>`) folded by elementwise max, one byte a
+  * register on the wire (every register is <= 64-p+1 <= 61). A partial
+  * starts from `2^p` zero registers. The merge form (`hll_merge`)
+  * starts from the zero-length "unseen" array, takes the width of the
+  * first stored value and refuses another one, so an all-null group
+  * merges to null. Registers from disjoint slices merge exactly
+  * (`zip_with(a, b, greatest)` in SQL does the same), so sketches can
+  * be persisted per partition / day / rollup chunk and unioned without
   * rescanning — the property the merge spec pins.
   */
-case class HllSketch(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Int]] {
+private[graft] abstract class HllRegisters extends SketchKind[Array[Int]] {
+  final def mergeName: String = "hll_merge"
+  final def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  final def storedDesc: String = "ARRAY<INT> registers"
+  final override def mergeEmpty: Array[Int] = Array.emptyIntArray
 
-  require(p >= 4 && p <= 16, s"precision must be in [4, 16], got $p")
-  private val m = 1 << p
+  final def decode(stored: Any): Array[Int] =
+    stored.asInstanceOf[ArrayData].toIntArray()
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires an integral or string key, got " +
-              other.simpleString)
+  final def combine(a: Array[Int], b: Array[Int]): Array[Int] =
+    if (a.isEmpty) b
+    else {
+      require(b.isEmpty || b.length == a.length,
+        s"$mergeName: register widths differ " +
+          s"(${a.length} vs ${b.length}) — sketches built at " +
+          "different precisions cannot merge")
+      var j = 0
+      while (j < b.length) { if (b(j) > a(j)) a(j) = b(j); j += 1 }
+      a
     }
 
-  // resolved once per plan: how a non-null input value reaches the
-  // u64 hash domain
-  @transient private lazy val toU64: Any => Long = child.dataType match {
-    case ByteType => v => v.asInstanceOf[Byte].toLong
-    case ShortType => v => v.asInstanceOf[Short].toLong
-    case IntegerType => v => v.asInstanceOf[Int].toLong
-    case LongType => v => v.asInstanceOf[Long]
-    case StringType => v => graft.functions.TextHash.fnv1a(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    case other => throw new IllegalStateException(
-      s"unreachable: checkInputDataTypes admitted $other")
-  }
+  final def isEmpty(buf: Array[Int]): Boolean = buf.isEmpty
+  final def eval(buf: Array[Int]): Any = new GenericArrayData(buf)
 
-  override def createAggregationBuffer(): Array[Int] = new Array[Int](m)
-
-  override def update(buf: Array[Int], input: InternalRow): Array[Int] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = Hll.hash64(toU64(v))
-      val b = Hll.bucket(h, p)
-      val r = Hll.rho(h, p)
-      if (r > buf(b)) buf(b) = r
-    }
-    buf
-  }
-
-  override def merge(b1: Array[Int], b2: Array[Int]): Array[Int] = {
+  final def toBytes(buf: Array[Int]): Array[Byte] = {
+    val out = new Array[Byte](buf.length)
     var j = 0
-    while (j < m) { if (b2(j) > b1(j)) b1(j) = b2(j); j += 1 }
-    b1
-  }
-
-  override def eval(buf: Array[Int]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Int]): Array[Byte] = {
-    // every register is <= 64-p+1 <= 61 — one byte each
-    val out = new Array[Byte](m)
-    var j = 0
-    while (j < m) { out(j) = buf(j).toByte; j += 1 }
+    while (j < buf.length) { out(j) = buf(j).toByte; j += 1 }
     out
   }
 
-  override def deserialize(bytes: Array[Byte]): Array[Int] = {
+  final def fromBytes(bytes: Array[Byte]): Array[Int] = {
     val buf = new Array[Int](bytes.length)
     var j = 0
     while (j < bytes.length) { buf(j) = bytes(j).toInt; j += 1 }
     buf
   }
 
-  override def withNewMutableAggBufferOffset(o: Int): HllSketch =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllSketch =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "hll_sketch"
+  final override def merger: SketchKind[Array[Int]] = HllRegisters
+}
+
+/** `hll_merge(registers)`: the merge form every HLL partial shares
+  * (e.g. [[graft.plans.SummaryRewrite]] sketch measures, whose delta
+  * chunks fold with it). It reads no precision, and has no partial of
+  * its own.
+  */
+private[graft] object HllRegisters extends HllRegisters {
+  def name: String = mergeName
+  def inputError(types: Seq[DataType]): Option[String] = None
+  def empty: Array[Int] = mergeEmpty
+  def update(inputs: Seq[Expression])
+      : (Array[Int], InternalRow) => Array[Int] =
+    throw new UnsupportedOperationException(s"$mergeName has no partial form")
+}
+
+/** `hll_sketch(x, p)` — the `m = 2^p` registers of integral or string
+  * keys. Integral keys enter the hash as their 64-bit value (the
+  * DuckDB-restatable path the oracled faces pin); string keys are
+  * first mapped to the u64 domain by FNV-1a over their UTF-8 bytes —
+  * NOT silently cast to numeric null and dropped (the r9 behavior,
+  * which undercounted text keys to ~0). Any other key type is
+  * rejected at analysis.
+  */
+private[graft] case class HllKind(p: Int) extends HllRegisters {
+  def name: String = "hll_sketch"
+
+  override def requireValid(name: String): Unit =
+    require(p >= 4 && p <= 16, s"precision must be in [4, 16], got $p")
+
+  def inputError(types: Seq[DataType]): Option[String] =
+    if (SketchInput.key(types.head)) None
+    else Some(s"an integral or string key, got ${types.head.simpleString}")
+
+  def empty: Array[Int] = new Array[Int](1 << p)
+
+  def update(inputs: Seq[Expression])
+      : (Array[Int], InternalRow) => Array[Int] = {
+    val child = inputs.head
+    val toU64 = SketchInput.toLong(child.dataType)
+    (buf, row) => {
+      val v = child.eval(row)
+      if (v != null) {
+        val h = Hll.hash64(toU64(v))
+        val b = Hll.bucket(h, p)
+        val r = Hll.rho(h, p)
+        if (r > buf(b)) buf(b) = r
+      }
+      buf
+    }
+  }
 }
 
 /** `hll_estimate(registers)` — scalar companion turning a register
-  * array (from [[HllSketch]] or a `zip_with` merge of several) into the
-  * distinct-count estimate. Delegated codegen so a containing stage
-  * stays whole-stage compiled.
+  * array (from `hll_sketch`, `hll_merge` or a `zip_with` merge of
+  * several) into the distinct-count estimate. Delegated codegen so a
+  * containing stage stays whole-stage compiled.
   */
 case class HllEstimate(child: Expression)
     extends UnaryExpression with graft.functions.EvalDelegatingCodegen {
@@ -241,88 +245,4 @@ case class HllEstimate(child: Expression)
 
   override protected def withNewChildInternal(c: Expression): HllEstimate =
     copy(child = c)
-}
-
-/** `hll_merge(registers)` — aggregate over ARRAY<INT> register rows,
-  * merging them by elementwise max: the re-aggregation face of
-  * [[HllSketch]] for sketches persisted per partition / day / rollup
-  * chunk (e.g. [[graft.plans.SummaryRewrite]] sketch measures, whose
-  * delta chunks fold with exactly this combiner). Null rows are
-  * skipped; an all-null/empty group yields null (there is no register
-  * width to synthesize).
-  */
-case class HllMerge(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Int]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires ARRAY<INT> registers, got " +
-              other.simpleString)
-    }
-
-  // the empty buffer carries no register width yet — Array.empty is
-  // the "unseen" sentinel (a real sketch always has >= 16 registers)
-  override def createAggregationBuffer(): Array[Int] = Array.emptyIntArray
-
-  private def mergeInto(buf: Array[Int], regs: Array[Int]): Array[Int] =
-    if (buf.isEmpty) regs
-    else {
-      require(regs.isEmpty || regs.length == buf.length,
-        s"$prettyName: register widths differ " +
-          s"(${buf.length} vs ${regs.length}) — sketches built at " +
-          "different precisions cannot merge")
-      var j = 0
-      while (j < regs.length) {
-        if (regs(j) > buf(j)) buf(j) = regs(j); j += 1
-      }
-      buf
-    }
-
-  override def update(buf: Array[Int], input: InternalRow): Array[Int] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else mergeInto(buf, v.asInstanceOf[ArrayData].toIntArray())
-  }
-
-  override def merge(b1: Array[Int], b2: Array[Int]): Array[Int] =
-    mergeInto(b1, b2)
-
-  override def eval(buf: Array[Int]): Any =
-    if (buf.isEmpty) null else new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Int]): Array[Byte] = {
-    val out = new Array[Byte](buf.length)
-    var j = 0
-    while (j < buf.length) { out(j) = buf(j).toByte; j += 1 }
-    out
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Int] = {
-    val buf = new Array[Int](bytes.length)
-    var j = 0
-    while (j < bytes.length) { buf(j) = bytes(j).toInt; j += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): HllMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMerge =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "hll_merge"
 }

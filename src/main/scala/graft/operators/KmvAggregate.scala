@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -49,25 +48,6 @@ object Kmv {
 
   def newBuffer(): java.util.TreeSet[java.lang.Long] =
     new java.util.TreeSet[java.lang.Long](cmp)
-
-  /** How a non-null key reaches the u64 hash domain — the same typing
-    * as [[HllSketch]] (integral value, FNV-1a for strings).
-    */
-  def toU64(dt: DataType): Any => Long = dt match {
-    case ByteType => v => v.asInstanceOf[Byte].toLong
-    case ShortType => v => v.asInstanceOf[Short].toLong
-    case IntegerType => v => v.asInstanceOf[Int].toLong
-    case LongType => v => v.asInstanceOf[Long]
-    case StringType => v => graft.functions.TextHash.fnv1a(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    case other => throw new IllegalStateException(
-      s"unreachable: checkInputDataTypes admitted $other")
-  }
-
-  def keyTypeOk(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | StringType => true
-    case _ => false
-  }
 
   private def unsigned(h: Long): BigInt =
     (BigInt(h) + (BigInt(1) << 64)) % (BigInt(1) << 64)
@@ -141,20 +121,6 @@ object Kmv {
     if (mLen == 0) 0.0 else c.toDouble / mLen
   }
 
-  def serializeSet(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.size * 8)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next())
-    bb.array()
-  }
-
-  def deserializeSet(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
-    val out = newBuffer()
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    while (bb.remaining() >= 8) out.add(bb.getLong)
-    out
-  }
-
   def toSortedArray(buf: java.util.TreeSet[java.lang.Long]): Array[Long] = {
     val out = new Array[Long](buf.size)
     val it = buf.iterator()
@@ -167,157 +133,70 @@ object Kmv {
     require(k >= 2 && k <= MaxK, s"$name: k must be in [2, $MaxK], got $k")
 }
 
-/** `kmv_sketch(x, k)` — aggregate over integral or string keys
-  * returning the k smallest distinct unsigned hashes as a sorted
+/** `kmv_sketch(x, k)` / `kmv_merge(arr, k)` — the k smallest distinct
+  * unsigned hashes of integral or string keys as a sorted
   * ARRAY<BIGINT>. With fewer than k distinct keys the array is the
-  * exact hash set (the oracled regime); see [[Kmv]].
+  * exact hash set (the oracled regime); see [[Kmv]]. The merge folds
+  * persisted arrays (one per partition / day / rollup chunk) into the
+  * k smallest of their union, and an all-null group merges to null.
   */
-case class KmvSketch(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
+private[graft] case class KmvKind(k: Int)
+    extends SketchKind[java.util.TreeSet[java.lang.Long]] {
+  private type Buf = java.util.TreeSet[java.lang.Long]
 
-  Kmv.checkK(k, "kmv_sketch")
+  def name: String = "kmv_sketch"
+  def mergeName: String = "kmv_merge"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def storedDesc: String = "an ARRAY<BIGINT> sketch"
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def requireValid(name: String): Unit = Kmv.checkK(k, name)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Kmv.keyTypeOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an integral or string key, got " +
-        child.dataType.simpleString)
+  def inputError(types: Seq[DataType]): Option[String] =
+    if (SketchInput.key(types.head)) None
+    else Some(s"an integral or string key, got ${types.head.simpleString}")
 
-  @transient private lazy val toU64 = Kmv.toU64(child.dataType)
+  def empty: Buf = Kmv.newBuffer()
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    Kmv.newBuffer()
-
-  override def update(buf: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = Hll.hash64(toU64(v))
-      // skip hashes that cannot enter a full sketch (keeps the hot
-      // path O(log k) with no churn once saturated)
-      if (buf.size < k ||
-          java.lang.Long.compareUnsigned(h, buf.last()) < 0) {
-        buf.add(java.lang.Long.valueOf(h))
-        if (buf.size > k) buf.pollLast()
-      }
+  /** Adds hash h unless it cannot enter a full sketch (keeps the hot
+    * path O(log k) with no churn once saturated).
+    */
+  private def offer(buf: Buf, h: Long): Unit =
+    if (buf.size < k || java.lang.Long.compareUnsigned(h, buf.last()) < 0) {
+      buf.add(java.lang.Long.valueOf(h))
+      if (buf.size > k) buf.pollLast()
     }
+
+  def update(inputs: Seq[Expression]): (Buf, InternalRow) => Buf = {
+    val child = inputs.head
+    val toU64 = SketchInput.toLong(child.dataType)
+    (buf, row) => {
+      val v = child.eval(row)
+      if (v != null) offer(buf, Hll.hash64(toU64(v)))
+      buf
+    }
+  }
+
+  def decode(stored: Any): Buf =
+    fromArray(stored.asInstanceOf[ArrayData].toLongArray())
+
+  private def fromArray(hs: Array[Long]): Buf = {
+    val buf = Kmv.newBuffer()
+    hs.foreach(h => offer(buf, h))
     buf
   }
 
-  override def merge(b1: java.util.TreeSet[java.lang.Long],
-      b2: java.util.TreeSet[java.lang.Long])
-      : java.util.TreeSet[java.lang.Long] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      val h = it.next()
-      if (b1.size < k || java.lang.Long.compareUnsigned(h, b1.last()) < 0) {
-        b1.add(h)
-        if (b1.size > k) b1.pollLast()
-      }
-    }
-    b1
+  def combine(a: Buf, b: Buf): Buf = {
+    val it = b.iterator()
+    while (it.hasNext) offer(a, it.next())
+    a
   }
 
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any =
-    new GenericArrayData(Kmv.toSortedArray(buf))
-
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] =
-    Kmv.serializeSet(buf)
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeSet[java.lang.Long] = Kmv.deserializeSet(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvSketch =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvSketch =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "kmv_sketch"
-}
-
-/** `kmv_merge(arr, k)` — aggregate folding persisted KMV arrays (one
-  * per partition / day / rollup chunk) into the k smallest of their
-  * union: the re-aggregation face of [[KmvSketch]], used by the rollup
-  * serve path and the chunk compact fold. Null rows are skipped; an
-  * all-null group yields null.
-  */
-case class KmvMerge(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
-
-  Kmv.checkK(k, "kmv_merge")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an ARRAY<BIGINT> sketch, got " +
-          other.simpleString)
-    }
-
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    Kmv.newBuffer()
-
-  private def addAll(buf: java.util.TreeSet[java.lang.Long],
-      arr: Array[Long]): java.util.TreeSet[java.lang.Long] = {
-    var i = 0
-    while (i < arr.length) {
-      val h = arr(i)
-      if (buf.size < k || java.lang.Long.compareUnsigned(h, buf.last()) < 0) {
-        buf.add(java.lang.Long.valueOf(h))
-        if (buf.size > k) buf.pollLast()
-      }
-      i += 1
-    }
-    buf
-  }
-
-  override def update(buf: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else addAll(buf, v.asInstanceOf[ArrayData].toLongArray())
-  }
-
-  override def merge(b1: java.util.TreeSet[java.lang.Long],
-      b2: java.util.TreeSet[java.lang.Long])
-      : java.util.TreeSet[java.lang.Long] =
-    addAll(b1, Kmv.toSortedArray(b2))
-
-  // the empty set is the "no information" sentinel (all-null or
-  // zero-row group): null out, matching HllMerge's contract. A real
-  // sketch of a non-empty key set is never empty.
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any =
-    if (buf.isEmpty) null
-    else new GenericArrayData(Kmv.toSortedArray(buf))
-
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] =
-    Kmv.serializeSet(buf)
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeSet[java.lang.Long] = Kmv.deserializeSet(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvMerge =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "kmv_merge"
+  def isEmpty(buf: Buf): Boolean = buf.isEmpty
+  def eval(buf: Buf): Any = new GenericArrayData(Kmv.toSortedArray(buf))
+  def toBytes(buf: Buf): Array[Byte] =
+    LongCounts.writeLongs(Kmv.toSortedArray(buf))
+  def fromBytes(bytes: Array[Byte]): Buf =
+    fromArray(LongCounts.readLongs(bytes))
 }
 
 /** `kmv_estimate(arr, k)` — scalar distinct-count read of a KMV

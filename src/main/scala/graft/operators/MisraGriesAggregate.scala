@@ -6,8 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -66,58 +65,69 @@ final class MgBuffer(val capacity: Int) {
     counts.toArray.sortBy { case (k, c) => (-c, k) }
 }
 
-/** `mg_sketch(item, capacity)` — aggregate returning the Misra–Gries
-  * summary as `ARRAY<STRUCT<item: STRING, est: BIGINT>>`, ordered by
-  * (est DESC, item). A real Catalyst aggregate, so Spark plans the
-  * partial before the shuffle: each partition emits one ≤capacity-entry
-  * summary instead of its full item stream.
+/** `mg_sketch(item, capacity)` / `mg_merge(entries, capacity)` — the
+  * Misra–Gries summary as `ARRAY<STRUCT<item: STRING, est: BIGINT>>`,
+  * ordered by (est DESC, item). Spark plans the partial before the
+  * shuffle: each partition emits one ≤capacity-entry summary instead
+  * of its full item stream. The merge folds PERSISTED summaries back
+  * into one: counters sum, then the standard over-capacity cut
+  * (Agarwal et al., PODS 2012) — the same mergeable-summaries step the
+  * in-flight partial merge uses, so summaries persisted per day /
+  * partition / rollup chunk fold with the identical N/(capacity+1)
+  * undercount bound. Pass the capacity the source sketches were built
+  * at.
   *
-  * `topK` (the SQL surface's `sketch_topk(item, k, capacity)`) keeps
-  * only the first k summary entries at eval — the sketch itself still
-  * runs at full `capacity`, so the N/(capacity+1) undercount bound is
-  * unchanged; the slice only trims the returned array.
+  * `topK` (the SQL surface's `sketch_topk(item, k, capacity)` and
+  * `mg_merge_topk(entries, k, capacity)`) keeps only the first k
+  * summary entries at eval — the sketch itself still runs at full
+  * `capacity`, so the N/(capacity+1) undercount bound is unchanged;
+  * the slice only trims the returned array.
   */
-case class MgSketch(
-    itemExpr: Expression,
-    capacity: Int,
-    topK: Option[Int] = None,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MgBuffer] {
+private[graft] case class MgKind(capacity: Int, topK: Option[Int] = None)
+    extends SketchKind[MgBuffer] {
+  def name: String = if (topK.isDefined) "sketch_topk" else "mg_sketch"
+  def mergeName: String = "mg_merge"
+  def dataType: DataType = MgKind.resultType
+  override def mergeNullable: Boolean = false
+  def storedDesc: String =
+    "ARRAY<STRUCT<item: STRING, est: BIGINT>> summaries"
 
-  require(capacity > 0, "capacity must be positive")
-  require(topK.forall(_ > 0), "k must be positive")
+  override def requireValid(name: String): Unit = {
+    require(capacity > 0, "capacity must be positive")
+    require(topK.forall(_ > 0), "k must be positive")
+  }
 
-  override def children: Seq[Expression] = Seq(itemExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = MgSketch.resultType
+  def inputError(types: Seq[DataType]): Option[String] =
+    if (types.head == StringType) None
+    else Some(s"a STRING item (cast first), got ${types.head.simpleString}")
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    itemExpr.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires a STRING item (cast first), got " +
-              other.simpleString)
+  def empty: MgBuffer = new MgBuffer(capacity)
+
+  def update(inputs: Seq[Expression]): (MgBuffer, InternalRow) => MgBuffer = {
+    val item = inputs.head
+    (buf, row) => {
+      val v = item.eval(row)
+      if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
+      buf
     }
+  }
 
-  override def createAggregationBuffer(): MgBuffer = new MgBuffer(capacity)
-
-  override def update(buf: MgBuffer, input: InternalRow): MgBuffer = {
-    val v = itemExpr.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
+  def decode(stored: Any): MgBuffer = {
+    val arr = stored.asInstanceOf[ArrayData]
+    val buf = new MgBuffer(capacity)
+    var i = 0
+    while (i < arr.numElements()) {
+      val row = arr.getStruct(i, 2)
+      buf.counts.update(row.getUTF8String(0).toString, row.getLong(1))
+      i += 1
+    }
     buf
   }
 
-  override def merge(b1: MgBuffer, b2: MgBuffer): MgBuffer = {
-    b1.mergeFrom(b2); b1
-  }
+  def combine(a: MgBuffer, b: MgBuffer): MgBuffer = { a.mergeFrom(b); a }
+  def isEmpty(buf: MgBuffer): Boolean = buf.counts.isEmpty
 
-  override def eval(buf: MgBuffer): Any = {
+  def eval(buf: MgBuffer): Any = {
     val entries = topK.fold(buf.sorted)(buf.sorted.take)
     val rows = entries.map { case (k, c) =>
       InternalRow(UTF8String.fromString(k), c)
@@ -125,7 +135,7 @@ case class MgSketch(
     new GenericArrayData(rows.asInstanceOf[Array[Any]])
   }
 
-  override def serialize(buf: MgBuffer): Array[Byte] = {
+  def toBytes(buf: MgBuffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeInt(buf.capacity); out.writeInt(buf.counts.size)
@@ -133,7 +143,7 @@ case class MgSketch(
     out.flush(); bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): MgBuffer = {
+  def fromBytes(bytes: Array[Byte]): MgBuffer = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val buf = new MgBuffer(in.readInt())
     val n = in.readInt()
@@ -141,114 +151,10 @@ case class MgSketch(
     while (i < n) { buf.counts.update(in.readUTF(), in.readLong()); i += 1 }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(o: Int): MgSketch =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MgSketch =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(itemExpr = c(0))
-  override def prettyName: String =
-    if (topK.isDefined) "sketch_topk" else "mg_sketch"
 }
 
-object MgSketch {
+private[graft] object MgKind {
   val resultType: DataType = ArrayType(StructType(Seq(
     StructField("item", StringType, nullable = false),
     StructField("est", LongType, nullable = false))), containsNull = false)
-}
-
-/** `mg_merge(entries, capacity)` — aggregate folding PERSISTED
-  * Misra–Gries summaries (the `ARRAY<STRUCT<item, est>>` rows
-  * [[MgSketch]] emits) back into one summary: counters sum, then the
-  * standard over-capacity cut (Agarwal et al., PODS 2012) — the same
-  * mergeable-summaries step the in-flight partial merge uses, so
-  * summaries persisted per day / partition / rollup chunk fold with
-  * the identical N/(capacity+1) undercount bound. Pass the capacity
-  * the source sketches were built at. `topK` trims the returned
-  * array only (the fold still runs at full capacity).
-  */
-case class MgMerge(
-    child: Expression,
-    capacity: Int,
-    topK: Option[Int] = None,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MgBuffer] {
-
-  require(capacity > 0, "capacity must be positive")
-  require(topK.forall(_ > 0), "k must be positive")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = MgSketch.resultType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(s: StructType, _) if s.length == 2 &&
-          s(0).dataType == StringType && s(1).dataType == LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires ARRAY<STRUCT<item: STRING, " +
-              s"est: BIGINT>> summaries, got ${other.simpleString}")
-    }
-
-  override def createAggregationBuffer(): MgBuffer = new MgBuffer(capacity)
-
-  override def update(buf: MgBuffer, input: InternalRow): MgBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val tmp = new MgBuffer(capacity)
-      var i = 0
-      while (i < arr.numElements()) {
-        val row = arr.getStruct(i, 2)
-        tmp.counts.update(row.getUTF8String(0).toString, row.getLong(1))
-        i += 1
-      }
-      buf.mergeFrom(tmp)
-    }
-    buf
-  }
-
-  override def merge(b1: MgBuffer, b2: MgBuffer): MgBuffer = {
-    b1.mergeFrom(b2); b1
-  }
-
-  override def eval(buf: MgBuffer): Any = {
-    val entries = topK.fold(buf.sorted)(buf.sorted.take)
-    val rows = entries.map { case (k, c) =>
-      InternalRow(UTF8String.fromString(k), c)
-    }
-    new GenericArrayData(rows.asInstanceOf[Array[Any]])
-  }
-
-  override def serialize(buf: MgBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.capacity); out.writeInt(buf.counts.size)
-    buf.counts.foreach { case (k, c) => out.writeUTF(k); out.writeLong(c) }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): MgBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new MgBuffer(in.readInt())
-    val n = in.readInt()
-    var i = 0
-    while (i < n) { buf.counts.update(in.readUTF(), in.readLong()); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): MgMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MgMerge =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "mg_merge"
 }

@@ -47,7 +47,7 @@ import org.apache.spark.sql.types._
   * Reference tie-in: the reference's sampling surface is LIMIT-style
   * row sampling (autotune's ctid sample); weighted priority sampling
   * is the beyond-reference pipeline extension, sibling to
-  * [[SampleSketch]] (uniform) for the weighted case.
+  * `sample_sketch` ([[SampleKind]], uniform) for the weighted case.
   */
 object PrioritySample {
 
@@ -93,7 +93,7 @@ case class PriorityKey(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (!Kmv.keyTypeOk(left.dataType))
+    if (!SketchInput.key(left.dataType))
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires an integral or string id, got " +
           left.dataType.simpleString)
@@ -103,7 +103,7 @@ case class PriorityKey(left: Expression, right: Expression)
           right.dataType.simpleString)
     else TypeCheckResult.TypeCheckSuccess
 
-  @transient private lazy val toU64 = Kmv.toU64(left.dataType)
+  @transient private lazy val toU64 = SketchInput.toLong(left.dataType)
 
   /** Public bridge for the generated call (the [[KmvIntersect]]
     * stance: delegate through an object reference so the containing

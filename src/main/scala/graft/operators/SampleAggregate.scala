@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -113,37 +112,20 @@ object Smp {
     out
   }
 
-  /** Evaluate a buffer to the struct (null for the empty "no rows"
-    * sentinel, matching KmvMerge / HllMerge).
-    */
+  /** A buffer as the stored struct. */
   def toStruct(buf: java.util.TreeMap[java.lang.Long, java.lang.Double])
-      : Any =
-    if (buf.isEmpty) null
-    else {
-      val hs = new Array[Long](buf.size)
-      val vs = new Array[Double](buf.size)
-      val it = buf.entrySet().iterator()
-      var i = 0
-      while (it.hasNext) {
-        val e = it.next()
-        hs(i) = e.getKey.longValue(); vs(i) = e.getValue.doubleValue()
-        i += 1
-      }
-      new GenericInternalRow(Array[Any](
-        new GenericArrayData(hs), new GenericArrayData(vs)))
-    }
-
-  /** Rebuild a buffer from a stored struct (sorted arrays round-trip
-    * through the tree in one pass).
-    */
-  def fromStruct(row: InternalRow)
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] = {
-    val hs = row.getArray(0).toLongArray()
-    val vs = row.getArray(1).toDoubleArray()
-    val out = newBuffer()
+      : InternalRow = {
+    val hs = new Array[Long](buf.size)
+    val vs = new Array[Double](buf.size)
+    val it = buf.entrySet().iterator()
     var i = 0
-    while (i < hs.length) { out.put(hs(i), vs(i)); i += 1 }
-    out
+    while (it.hasNext) {
+      val e = it.next()
+      hs(i) = e.getKey.longValue(); vs(i) = e.getValue.doubleValue()
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](
+      new GenericArrayData(hs), new GenericArrayData(vs)))
   }
 
   /** Lower order statistic of the sample's values: sort ascending,
@@ -168,152 +150,64 @@ object Smp {
     require(k >= 2 && k <= MaxK, s"$name: k must be in [2, $MaxK], got $k")
 }
 
-/** `sample_sketch(id, value, k)` — aggregate keeping the k rows with
-  * the smallest unsigned id hashes as STRUCT(hs ARRAY<BIGINT>,
+/** `sample_sketch(id, value, k)` / `sample_merge(sketch, k)` — the k
+  * rows with the smallest unsigned id hashes as STRUCT(hs ARRAY<BIGINT>,
   * vs ARRAY<DOUBLE>). `id` must be a unique row key (integral or
   * string); rows with a null id or null value are skipped (SQL
-  * aggregates ignore nulls). See [[Smp]].
+  * aggregates ignore nulls). The merge folds persisted sketches (one
+  * per partition / day / rollup chunk) into the k hash-smallest of
+  * their union. Both forms answer null for a group without a row. See
+  * [[Smp]].
   */
-case class SampleSketch(
-    id: Expression,
-    value: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[
-    java.util.TreeMap[java.lang.Long, java.lang.Double]] {
+private[graft] case class SampleKind(k: Int)
+    extends SketchKind[java.util.TreeMap[java.lang.Long, java.lang.Double]] {
+  private type Buf = java.util.TreeMap[java.lang.Long, java.lang.Double]
 
-  Smp.checkK(k, "sample_sketch")
-
-  override def children: Seq[Expression] = Seq(id, value)
+  def name: String = "sample_sketch"
+  def mergeName: String = "sample_merge"
+  def dataType: DataType = Smp.dataType
   override def nullable: Boolean = true
-  override def dataType: DataType = Smp.dataType
+  def storedDesc: String =
+    "a STRUCT(hs ARRAY<BIGINT>, vs ARRAY<DOUBLE>) sketch"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!Kmv.keyTypeOk(id.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an integral or string id, got " +
-          id.dataType.simpleString)
-    else if (value.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a DOUBLE value, got " +
-          value.dataType.simpleString)
-    else TypeCheckResult.TypeCheckSuccess
+  override def requireValid(name: String): Unit = Smp.checkK(k, name)
 
-  @transient private lazy val toU64 = Kmv.toU64(id.dataType)
+  def inputError(types: Seq[DataType]): Option[String] =
+    if (!SketchInput.key(types(0)))
+      Some(s"an integral or string id, got ${types(0).simpleString}")
+    else if (types(1) != DoubleType)
+      Some(s"a DOUBLE value, got ${types(1).simpleString}")
+    else None
 
-  override def createAggregationBuffer()
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] =
-    Smp.newBuffer()
+  def empty: Buf = Smp.newBuffer()
 
-  override def update(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Double],
-      input: InternalRow)
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] = {
-    val i = id.eval(input)
-    val v = value.eval(input)
-    if (i != null && v != null)
-      Smp.put(buf, k, Hll.hash64(toU64(i)), v.asInstanceOf[Double])
-    buf
-  }
-
-  override def merge(
-      b1: java.util.TreeMap[java.lang.Long, java.lang.Double],
-      b2: java.util.TreeMap[java.lang.Long, java.lang.Double])
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] =
-    Smp.mergeInto(b1, b2, k)
-
-  override def eval(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Double]): Any =
-    Smp.toStruct(buf)
-
-  override def serialize(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Double])
-      : Array[Byte] = Smp.serialize(buf)
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] =
-    Smp.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): SampleSketch =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SampleSketch =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression =
-    copy(id = c(0), value = c(1))
-  override def prettyName: String = "sample_sketch"
-}
-
-/** `sample_merge(sketch, k)` — aggregate folding persisted sample
-  * sketches (one per partition / day / rollup chunk) into the k
-  * hash-smallest of their union: the re-aggregation face of
-  * [[SampleSketch]], used by the rollup serve path and the chunk
-  * compact fold. Null rows are skipped; an all-null group yields null.
-  */
-case class SampleMerge(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[
-    java.util.TreeMap[java.lang.Long, java.lang.Double]] {
-
-  Smp.checkK(k, "sample_merge")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = Smp.dataType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Smp.structTypeOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a STRUCT(hs ARRAY<BIGINT>, vs " +
-        s"ARRAY<DOUBLE>) sketch, got ${child.dataType.simpleString}")
-
-  override def createAggregationBuffer()
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] =
-    Smp.newBuffer()
-
-  override def update(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Double],
-      input: InternalRow)
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val row = v.asInstanceOf[InternalRow]
-      val hs = row.getArray(0).toLongArray()
-      val vs = row.getArray(1).toDoubleArray()
-      var i = 0
-      while (i < hs.length) { Smp.put(buf, k, hs(i), vs(i)); i += 1 }
+  def update(inputs: Seq[Expression]): (Buf, InternalRow) => Buf = {
+    val Seq(id, value) = inputs
+    val toU64 = SketchInput.toLong(id.dataType)
+    (buf, row) => {
+      val i = id.eval(row)
+      val v = value.eval(row)
+      if (i != null && v != null)
+        Smp.put(buf, k, Hll.hash64(toU64(i)), v.asInstanceOf[Double])
       buf
     }
   }
 
-  override def merge(
-      b1: java.util.TreeMap[java.lang.Long, java.lang.Double],
-      b2: java.util.TreeMap[java.lang.Long, java.lang.Double])
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] =
-    Smp.mergeInto(b1, b2, k)
+  def decode(stored: Any): Buf = {
+    val row = stored.asInstanceOf[InternalRow]
+    val hs = row.getArray(0).toLongArray()
+    val vs = row.getArray(1).toDoubleArray()
+    val buf = Smp.newBuffer()
+    var i = 0
+    while (i < hs.length) { Smp.put(buf, k, hs(i), vs(i)); i += 1 }
+    buf
+  }
 
-  override def eval(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Double]): Any =
-    Smp.toStruct(buf)
-
-  override def serialize(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Double])
-      : Array[Byte] = Smp.serialize(buf)
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeMap[java.lang.Long, java.lang.Double] =
-    Smp.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): SampleMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SampleMerge =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-  override def prettyName: String = "sample_merge"
+  def combine(a: Buf, b: Buf): Buf = Smp.mergeInto(a, b, k)
+  def isEmpty(buf: Buf): Boolean = buf.isEmpty
+  def eval(buf: Buf): Any = Smp.toStruct(buf)
+  def toBytes(buf: Buf): Array[Byte] = Smp.serialize(buf)
+  def fromBytes(bytes: Array[Byte]): Buf = Smp.deserialize(bytes)
 }
 
 /** `sample_quantile(sketch, q)` — scalar quantile read of a sample
@@ -336,8 +230,8 @@ case class SampleQuantile(child: Expression, q: Double)
 
   override protected def nullSafeEval(v: Any): Any = {
     val vs = v.asInstanceOf[InternalRow].getArray(1).toDoubleArray()
-    // a stored sketch is never empty ([[Smp.toStruct]] nulls the
-    // empty sentinel), but a hand-built struct could be
+    // a stored sketch is never empty (both forms null the empty
+    // sentinel), but a hand-built struct could be
     if (vs.isEmpty) null else Smp.quantile(vs, q)
   }
 

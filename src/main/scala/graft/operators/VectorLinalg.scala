@@ -153,76 +153,74 @@ case class VectorMoments(
 /** Partial vector sum as a rollup measure: struct(n, sums) over an
   * ARRAY<FLOAT>/ARRAY<DOUBLE> column — the mergeable form of a group
   * centroid (centroid = sums / n). Carried per dim-group in a
-  * materialized rollup ([[graft.plans.SummaryRewrite.VecSpec]]) and
-  * folded across chunks by [[VectorSumMerge]]: elementwise sum + count
-  * add, exactly the associative-partial contract every other rollup
-  * column obeys. O(d) buffer per group per partition.
+  * materialized rollup ([[graft.plans.SummaryRewrite.VecSpec]]); its
+  * merge form folds the stored partials across chunks: elementwise
+  * sum + count add, exactly the associative-partial contract every
+  * other rollup column obeys. O(d) buffer per group per partition. A
+  * group without a vector answers null.
   */
-case class VectorSum(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[VecSumBuffer] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def prettyName: String = "vector_sum"
-  override def dataType: DataType = VectorSum.outType
-
-  private lazy val isF64: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def createAggregationBuffer(): VecSumBuffer =
-    new VecSumBuffer(null, 0L)
-
-  override def update(buf: VecSumBuffer, input: InternalRow): VecSumBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val a = v.asInstanceOf[ArrayData]
-      if (isF64) {
-        // VecSumBuffer.add reads floats; fold doubles inline
-        val n = a.numElements()
-        if (buf.sums == null) buf.sums = new Array[Double](n)
-        else require(n == buf.sums.length,
-          s"ragged vector column: got dimension $n after " +
-            s"${buf.sums.length}")
-        var i = 0
-        while (i < n) { buf.sums(i) += a.getDouble(i); i += 1 }
-        buf.count += 1L
-      } else buf.add(a)
-    }
-    buf
-  }
-
-  override def merge(b1: VecSumBuffer, b2: VecSumBuffer): VecSumBuffer = {
-    b1.merge(b2); b1
-  }
-
-  override def eval(buf: VecSumBuffer): Any =
-    if (buf.sums == null || buf.count == 0L) null
-    else InternalRow(buf.count, new GenericArrayData(buf.sums))
-
-  override def serialize(buf: VecSumBuffer): Array[Byte] =
-    VectorSum.ser(buf)
-  override def deserialize(bytes: Array[Byte]): VecSumBuffer =
-    VectorSum.deser(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): VectorSum =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): VectorSum =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
-}
-
-object VectorSum {
-  val outType: StructType = StructType(Seq(
+private[graft] case object VecSumKind extends SketchKind[VecSumBuffer] {
+  def name: String = "vector_sum"
+  def mergeName: String = "vector_sum_merge"
+  val dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("sums", ArrayType(DoubleType, containsNull = false))))
+  override def nullable: Boolean = true
+  def storedDesc: String = "STRUCT(n BIGINT, sums ARRAY<DOUBLE>) partials"
+  def inputError(types: Seq[DataType]): Option[String] = None
+  def empty: VecSumBuffer = new VecSumBuffer(null, 0L)
 
-  private[operators] def ser(buf: VecSumBuffer): Array[Byte] = {
+  def update(inputs: Seq[Expression])
+      : (VecSumBuffer, InternalRow) => VecSumBuffer = {
+    val child = inputs.head
+    val isF64 = child.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }
+    (buf, row) => {
+      val v = child.eval(row)
+      if (v != null) {
+        val a = v.asInstanceOf[ArrayData]
+        if (isF64) {
+          // VecSumBuffer.add reads floats; fold doubles inline
+          val n = a.numElements()
+          if (buf.sums == null) buf.sums = new Array[Double](n)
+          else require(n == buf.sums.length,
+            s"ragged vector column: got dimension $n after " +
+              s"${buf.sums.length}")
+          var i = 0
+          while (i < n) { buf.sums(i) += a.getDouble(i); i += 1 }
+          buf.count += 1L
+        } else buf.add(a)
+      }
+      buf
+    }
+  }
+
+  def decode(stored: Any): VecSumBuffer = {
+    val row = stored.asInstanceOf[InternalRow]
+    new VecSumBuffer(row.getArray(1).toDoubleArray(), row.getLong(0))
+  }
+
+  def combine(a: VecSumBuffer, b: VecSumBuffer): VecSumBuffer =
+    if (b.sums == null) a
+    else if (a.sums == null) b
+    else {
+      require(b.sums.length == a.sums.length,
+        s"ragged vector partials: got dimension ${b.sums.length} after " +
+          s"${a.sums.length}")
+      var i = 0
+      while (i < a.sums.length) { a.sums(i) += b.sums(i); i += 1 }
+      a.count += b.count
+      a
+    }
+
+  def isEmpty(buf: VecSumBuffer): Boolean =
+    buf.sums == null || buf.count == 0L
+  def eval(buf: VecSumBuffer): Any =
+    InternalRow(buf.count, new GenericArrayData(buf.sums))
+
+  def toBytes(buf: VecSumBuffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     if (buf.sums == null) out.writeInt(-1)
@@ -234,69 +232,12 @@ object VectorSum {
     out.flush(); bos.toByteArray
   }
 
-  private[operators] def deser(bytes: Array[Byte]): VecSumBuffer = {
+  def fromBytes(bytes: Array[Byte]): VecSumBuffer = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val n = in.readInt()
     val sums = if (n < 0) null else Array.fill(n)(in.readDouble())
     new VecSumBuffer(sums, in.readLong())
   }
-}
-
-/** Fold persisted [[VectorSum]] partials (struct(n, sums) rows) back
-  * into one — the serve/compact combiner: n adds, sums add
-  * elementwise.
-  */
-case class VectorSumMerge(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[VecSumBuffer] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def prettyName: String = "vector_sum_merge"
-  override def dataType: DataType = VectorSum.outType
-
-  override def createAggregationBuffer(): VecSumBuffer =
-    new VecSumBuffer(null, 0L)
-
-  override def update(buf: VecSumBuffer, input: InternalRow): VecSumBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val row = v.asInstanceOf[InternalRow]
-      val n = row.getLong(0)
-      val a = row.getArray(1)
-      val d = a.numElements()
-      if (buf.sums == null) buf.sums = new Array[Double](d)
-      else require(d == buf.sums.length,
-        s"ragged vector partials: got dimension $d after " +
-          s"${buf.sums.length}")
-      var i = 0
-      while (i < d) { buf.sums(i) += a.getDouble(i); i += 1 }
-      buf.count += n
-    }
-    buf
-  }
-
-  override def merge(b1: VecSumBuffer, b2: VecSumBuffer): VecSumBuffer = {
-    b1.merge(b2); b1
-  }
-
-  override def eval(buf: VecSumBuffer): Any =
-    if (buf.sums == null || buf.count == 0L) null
-    else InternalRow(buf.count, new GenericArrayData(buf.sums))
-
-  override def serialize(buf: VecSumBuffer): Array[Byte] =
-    VectorSum.ser(buf)
-  override def deserialize(bytes: Array[Byte]): VecSumBuffer =
-    VectorSum.deser(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): VectorSumMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): VectorSumMerge =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression = copy(child = c(0))
 }
 
 /** Cyclic Jacobi eigensolver for small symmetric matrices — the

@@ -21,6 +21,9 @@ import org.apache.spark.sql.execution.datasources.{
 import org.apache.spark.sql.functions.{col, count, lit, max, min, struct, sum}
 import org.apache.spark.sql.types._
 
+import graft.operators.{CmsKind, HdrKind, HistKind, HllKind, KmvKind,
+  MgKind, SampleKind, SketchAggregate, SketchKind, VecSumKind}
+
 /** Materialized-rollup aggregate rewrite: queries that group a
   * registered base table by (a subset of) the rollup's dimension
   * columns are transparently re-planned to re-aggregate the rollup
@@ -105,11 +108,12 @@ import org.apache.spark.sql.types._
   * Optional HLL sketch measures ([[SketchSpec]]) store per-group
   * HyperLogLog registers (`hll_<key>` ARRAY<INT>) so distinct counts
   * are servable at the rollup grain: registers from partial chunks
-  * merge by elementwise max ([[graft.operators.HllMerge]] — exactly
-  * the associative-combiner contract every other rollup column
-  * follows). Never auto-rewritten (an estimate must be asked for
-  * explicitly): serve via [[approxDistinct]], or OPT IN per session
-  * with `spark.conf.set("graft.mv.approxDistinct", "true")` — then
+  * merge by elementwise max (`hll_merge`,
+  * [[graft.operators.HllRegisters]] — exactly the associative-combiner
+  * contract every other rollup column follows). Never auto-rewritten
+  * (an estimate must be asked for explicitly): serve via
+  * [[approxDistinct]], or OPT IN per session with
+  * `spark.conf.set("graft.mv.approxDistinct", "true")` — then
   * `COUNT(DISTINCT key)` for a sketched key re-plans to the rollup's
   * register estimate (the BigQuery/Calcite approximate-query-
   * processing contract: the caller, not the optimizer, decides that
@@ -130,8 +134,13 @@ object SummaryRewrite {
     */
   sealed trait Sketch {
     def colName: String
-    private[graft] def partial: AggregateFunction
-    private[graft] def merge(c: Expression): AggregateFunction
+    private[graft] def kind: SketchKind[_]
+    /** The base-row inputs the partial sketches. */
+    private[graft] def inputs: Seq[Column]
+    private[graft] def partial: AggregateFunction =
+      SketchAggregate.partial(kind, inputs.map(toExpr): _*)
+    private[graft] def merge(c: Expression): AggregateFunction =
+      SketchAggregate.merge(kind, c)
   }
 
   object Sketch {
@@ -173,9 +182,8 @@ object SummaryRewrite {
     */
   case class SketchSpec(key: String, p: Int = 8) extends Sketch {
     def colName: String = s"hll_$key"
-    private[graft] def partial =
-      graft.operators.HllSketch(toExpr(col(key)), p)
-    private[graft] def merge(c: Expression) = graft.operators.HllMerge(c)
+    private[graft] def kind = HllKind(p)
+    private[graft] def inputs = Seq(col(key))
   }
 
   /** A quantile sketch carried by the rollup: fixed-bin histogram
@@ -188,9 +196,8 @@ object SummaryRewrite {
   case class HistSpec(col: String, lo: Double, hi: Double,
       nbins: Int = 64) extends Sketch {
     def colName: String = s"hist_$col"
-    private[graft] def partial = graft.operators.HistSketch(
-      toExpr(functions.col(col)), lo, hi, nbins)
-    private[graft] def merge(c: Expression) = graft.operators.HistMerge(c)
+    private[graft] def kind = HistKind(lo, hi, nbins)
+    private[graft] def inputs = Seq(functions.col(col))
   }
 
   /** A frequent-items sketch carried by the rollup: Misra–Gries
@@ -202,10 +209,8 @@ object SummaryRewrite {
     */
   case class ItemsSpec(col: String, capacity: Int = 256) extends Sketch {
     def colName: String = s"mg${capacity}_$col"
-    private[graft] def partial = graft.operators.MgSketch(
-      toExpr(functions.col(col).cast("string")), capacity)
-    private[graft] def merge(c: Expression) =
-      graft.operators.MgMerge(c, capacity)
+    private[graft] def kind = MgKind(capacity)
+    private[graft] def inputs = Seq(functions.col(col).cast("string"))
   }
 
   /** A set-operation distinct sketch carried by the rollup: KMV
@@ -220,9 +225,8 @@ object SummaryRewrite {
     */
   case class KmvSpec(key: String, k: Int = 2048) extends Sketch {
     def colName: String = s"kmv${k}_$key"
-    private[graft] def partial =
-      graft.operators.KmvSketch(toExpr(col(key)), k)
-    private[graft] def merge(c: Expression) = graft.operators.KmvMerge(c, k)
+    private[graft] def kind = KmvKind(k)
+    private[graft] def inputs = Seq(col(key))
   }
 
   /** A vector-sum measure carried by the rollup: per-dim-group
@@ -238,10 +242,8 @@ object SummaryRewrite {
     */
   case class VecSpec(col: String) extends Sketch {
     def colName: String = s"vsum_$col"
-    private[graft] def partial =
-      graft.operators.VectorSum(toExpr(functions.col(col)))
-    private[graft] def merge(c: Expression) =
-      graft.operators.VectorSumMerge(c)
+    private[graft] def kind = VecSumKind
+    private[graft] def inputs = Seq(functions.col(col))
   }
 
   /** A range-free quantile sketch carried by the rollup: a bottom-k
@@ -260,10 +262,9 @@ object SummaryRewrite {
   case class SampleQSpec(id: String, value: String, k: Int = 1024)
       extends Sketch {
     def colName: String = s"smp${k}_$value"
-    private[graft] def partial = graft.operators.SampleSketch(
-      toExpr(functions.expr(id)), toExpr(col(value).cast("double")), k)
-    private[graft] def merge(c: Expression) =
-      graft.operators.SampleMerge(c, k)
+    private[graft] def kind = SampleKind(k)
+    private[graft] def inputs =
+      Seq(functions.expr(id), col(value).cast("double"))
   }
 
   /** A relative-error quantile sketch carried by the rollup: dense
@@ -281,10 +282,9 @@ object SummaryRewrite {
   case class HdrSpec(name: String, sql: String, p: Int = 5)
       extends Sketch {
     def colName: String = s"hdr${p}_$name"
-    private[graft] def partial =
-      graft.operators.HdrSketch(toExpr(functions.expr(sql)), p)
-    // HistMerge's equal-length guard doubles as the p compatibility check
-    private[graft] def merge(c: Expression) = graft.operators.HistMerge(c)
+    // hist_merge's equal-width guard doubles as the p compatibility check
+    private[graft] def kind = HdrKind(p)
+    private[graft] def inputs = Seq(functions.expr(sql))
   }
 
   /** A point-frequency sketch carried by the rollup: count-min
@@ -300,11 +300,10 @@ object SummaryRewrite {
   case class CmsSpec(key: String, d: Int = 4, w: Int = 512)
       extends Sketch {
     def colName: String = s"cms${d}x${w}_$key"
-    private[graft] def partial =
-      graft.operators.CmsSketch(toExpr(col(key)), d, w)
-    // HistMerge's equal-length guard doubles as the d×w compatibility
+    // hist_merge's equal-width guard doubles as the d×w compatibility
     // check
-    private[graft] def merge(c: Expression) = graft.operators.HistMerge(c)
+    private[graft] def kind = CmsKind(d, w)
+    private[graft] def inputs = Seq(col(key))
   }
 
   /** A DERIVED (expression) measure carried by the rollup: the named
@@ -360,6 +359,13 @@ object SummaryRewrite {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.makeQualified(p).toString
   }
+
+  /** The sign-foldable measure partials a rollup stores per measure
+    * (see [[partialRollup]]): they fold by SUM, so the compact fold sums
+    * them and a retraction chunk negates them.
+    */
+  private[graft] def isSumPartial(colName: String): Boolean =
+    Seq("s_", "sd_", "ss_", "c_").exists(colName.startsWith)
 
   /** The partial-rollup aggregation of `base`: cnt + per-measure exact
     * decimal sum (s_m), native-typed sum (sd_m), non-null count (c_m),
@@ -581,9 +587,10 @@ object SummaryRewrite {
     val it = storedSketch(rollup, summaryDir, s"mg<capacity>_$itemsCol") {
       case it: ItemsSpec if it.col == itemsCol => it
     }
-    val merged = GraftShims.column(graft.operators.MgMerge(
-      GraftShims.expression(col(it.colName)), it.capacity, topK = Some(k))
-      .toAggregateExpression()).as("topk")
+    val merged = GraftShims.column(SketchAggregate.merge(
+      MgKind(it.capacity, topK = Some(k)),
+      GraftShims.expression(col(it.colName))).toAggregateExpression())
+      .as("topk")
     val folded =
       if (groupDims.isEmpty) rollup.agg(merged)
       else rollup.groupBy(groupDims.map(col): _*).agg(merged)
@@ -647,11 +654,11 @@ object SummaryRewrite {
 
   /** Serve per-group embedding CENTROIDS from the rollup's vector-sum
     * column: struct(n, sums) partials fold by elementwise sum across
-    * rollup rows ([[graft.operators.VectorSumMerge]]), then centroid =
-    * sums / n. Grouping by a dim subset stays exact (sum-of-sums).
-    * Cost is dim-cardinality × d — never a base scan: the "mean
-    * embedding per source/day" read a drift monitor or SemDeDup
-    * seeding pass runs over a 100 TB corpus.
+    * rollup rows (`vector_sum_merge`, [[graft.operators.VecSumKind]]),
+    * then centroid = sums / n. Grouping by a dim subset stays exact
+    * (sum-of-sums). Cost is dim-cardinality × d — never a base scan:
+    * the "mean embedding per source/day" read a drift monitor or
+    * SemDeDup seeding pass runs over a 100 TB corpus.
     */
   def groupCentroids(spark: SparkSession, summaryDir: String,
       groupDims: Seq[String], vecCol: String): DataFrame = {

@@ -85,7 +85,7 @@ object CorpusQueries {
 
     // The same sketch driven ENTIRELY from SQL: sketch_topk(item, k,
     // capacity) registered by VectorFunctions — the SQL/HTTP surface of
-    // [[graft.operators.MgSketch]]. Capacity 2048 ≫ the corpus's ~920
+    // [[graft.operators.MgKind]]. Capacity 2048 ≫ the corpus's ~920
     // distinct bigrams, so the summary carries exact counts and the
     // plain-aggregation oracle applies verbatim.
     "q_sketch_topk" -> ((s, dir) => {

@@ -22,14 +22,18 @@ object SourceQueries {
   private val FixtureRows = 256
 
   // per-JVM (PID-keyed, same convention as IvfIndex's tmp indexes):
-  // the oracle SQL dumped by a Verify run is built in the SAME JVM
-  // that writes the sink, so the static SQL still points at the right
-  // file, while concurrent gate/bench/verify runs (separate JVMs) can
-  // no longer clobber each other's sink or read a stale one
-  private val CsvSinkPath =
-    s"/tmp/graft_csv_sink_${java.lang.ProcessHandle.current().pid()}"
-  private val JsonlSinkPath =
-    s"/tmp/graft_jsonl_sink_${java.lang.ProcessHandle.current().pid()}"
+  // concurrent gate/bench/verify runs (separate JVMs) cannot clobber
+  // each other's sink or read a stale one. The oracle SQL names the
+  // pid through PidPlaceholder, so every dump of one commit is the
+  // same bytes; Verify, whose JVM wrote the sinks, resolves it
+  // ([[resolveSinks]]) in the oracle_sql.json it writes
+  private val PidPlaceholder = "<pid>"
+  private val pid = java.lang.ProcessHandle.current().pid().toString
+  private def csvSink(pid: String) = s"/tmp/graft_csv_sink_$pid"
+  private def jsonlSink(pid: String) = s"/tmp/graft_jsonl_sink_$pid"
+
+  /** `sql` with the sink paths naming this JVM's sinks. */
+  def resolveSinks(sql: String): String = sql.replace(PidPlaceholder, pid)
 
   /** Bounded fixture slice (FixtureRows vectors, a model-sized collect
     * like the PQ codebook, NOT corpus-sized), in vec_id order so
@@ -78,7 +82,7 @@ object SourceQueries {
         .where($"vec_id" < FixtureRows)
         .select($"vec_id", $"embedding")
       VecsFiles.writeCsvEmbeddings(emb, "vec_id", "embedding",
-        CsvSinkPath)
+        csvSink(pid))
       emb.select($"vec_id", posexplode($"embedding"))
         .toDF("vec_id", "pos", "val")
     }),
@@ -94,7 +98,7 @@ object SourceQueries {
         .select($"doc_id", $"source", $"text")
       docs.write.mode("overwrite")
         .option("maxRecordsPerFile", 100)
-        .json(JsonlSinkPath)
+        .json(jsonlSink(pid))
       docs
     }),
 
@@ -148,7 +152,7 @@ object SourceQueries {
          |  SELECT column0,
          |    string_split(substr(column1, 2, length(column1) - 2), ',')
          |      AS p
-         |  FROM read_csv('$CsvSinkPath/*.csv', header=false,
+         |  FROM read_csv('${csvSink(PidPlaceholder)}/*.csv', header=false,
          |    columns={'column0': 'BIGINT', 'column1': 'VARCHAR'})) _c
          |ORDER BY vec_id, pos""".stripMargin,
 
@@ -157,7 +161,7 @@ object SourceQueries {
     "q_jsonl_sink" ->
       s"""SELECT CAST(doc_id AS BIGINT) AS doc_id,
          |  CAST(source AS VARCHAR) AS source, CAST(text AS VARCHAR) AS text
-         |FROM read_json('$JsonlSinkPath/*.json',
+         |FROM read_json('${jsonlSink(PidPlaceholder)}/*.json',
          |  format='newline_delimited',
          |  columns={'doc_id': 'BIGINT', 'source': 'VARCHAR',
          |           'text': 'VARCHAR'})

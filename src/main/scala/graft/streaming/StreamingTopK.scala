@@ -8,7 +8,7 @@ import graft.operators.HeavyHitters
 
 /** Continuous top-k frequent items over an unbounded stream with
   * O(capacity) state — the streaming face of [[HeavyHitters]] /
-  * [[graft.operators.MgSketch]].
+  * `mg_sketch` ([[graft.operators.MgKind]]).
   *
   * The whole aggregation state is ONE Misra–Gries buffer (≤ capacity
   * entries, serialized into the state store by the

@@ -157,9 +157,7 @@ object SummaryStream {
     val aggs: Seq[Column] = schema.fieldNames.toSeq
       .filterNot(dimSet.contains).map {
       case "cnt" => typed("cnt", sum(col("cnt")))
-      case n if n.startsWith("s_") || n.startsWith("sd_") ||
-          n.startsWith("ss_") || n.startsWith("c_") =>
-        typed(n, sum(col(n)))
+      case n if SummaryRewrite.isSumPartial(n) => typed(n, sum(col(n)))
       case n if n.startsWith("mn_") => typed(n, min(col(n)))
       case n if n.startsWith("mx_") => typed(n, max(col(n)))
       case n => SummaryRewrite.Sketch.parse(n) match {
@@ -248,9 +246,7 @@ object SummaryStream {
     val part = SummaryRewrite.partialRollup(deleted, dims, measures,
       exprs = exprs)
     val have = part.columns.toSet
-    val needed = live.fieldNames.filter(n =>
-      n.startsWith("s_") || n.startsWith("sd_") ||
-        n.startsWith("ss_") || n.startsWith("c_"))
+    val needed = live.fieldNames.filter(SummaryRewrite.isSumPartial)
     val missing = needed.filterNot(have.contains)
     require(missing.isEmpty,
       s"retract must cover every sign-foldable partial of the rollup " +

@@ -82,7 +82,7 @@ class HeavyHittersSpec extends SparkSuite {
   }
 
   test("mg_sketch / sketch_topk are usable straight from SQL") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     (0 until 500).map(i => s"w_${i % 20}").toDF("item")
       .createOrReplaceTempView("hh_items")
     // capacity 256 > 20 distinct items -> estimates are exact counts

@@ -43,7 +43,7 @@ class HistQuantileSpec extends SparkSuite {
     val summed = countsOf(a, 0, 40, 20).zip(countsOf(b, 0, 40, 20))
       .map { case (x, y) => x + y }
     assert(summed.toSeq == countsOf(a ++ b, 0, 40, 20).toSeq)
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val got = (a ++ b).toDF("x").repartition(8)
       .selectExpr("hist_sketch(x, 0, 40, 20) AS c")
       .as[Seq[Long]].head()
@@ -52,7 +52,7 @@ class HistQuantileSpec extends SparkSuite {
 
   test("SQL surface: per-day persisted sketches fold with hist_merge " +
       "to the one-shot sketch; quantile reads off the fold") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val rows = (1 to 2000).map(i => (s"d${i % 3}", (i % 100).toDouble))
     rows.toDF("day", "x").createOrReplaceTempView("vals")
     val folded = spark.sql(
@@ -73,7 +73,7 @@ class HistQuantileSpec extends SparkSuite {
   }
 
   test("nulls and NaN are skipped, never clamped into edge bins") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val got = Seq[Option[Double]](Some(1.0), None, Some(Double.NaN),
       Some(2.0)).toDF("x")
       .selectExpr("hist_sketch(x, 0, 4, 4) AS c").as[Seq[Long]].head()
@@ -82,7 +82,7 @@ class HistQuantileSpec extends SparkSuite {
 
   test("mixed bin widths refuse to merge; non-numeric keys rejected " +
       "at analysis") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val mixed = Seq(Seq(1L, 2L), Seq(1L, 2L, 3L)).toDF("c")
     val e = intercept[Exception] {
       mixed.selectExpr("hist_merge(c)").collect()
@@ -117,7 +117,7 @@ class HistQuantileSpec extends SparkSuite {
     SummaryStream.processBatch(mk(120, 80), 1L, sumDir, Seq("flag"),
       Seq("v"), sketches = Seq(HistSpec("v", 0.0, 100.0, 25)))
     val allRows = mk(0, 120).unionByName(mk(120, 80))
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val direct = allRows.groupBy($"flag")
       .agg(expr("hist_quantile(hist_sketch(v, 0, 100, 25), 0.5, 0, 100)")
         .as("p50"))

@@ -26,7 +26,7 @@ class HllSpec extends SparkSuite {
     val merged = ra.zip(rb).map { case (x, y) => math.max(x, y) }
     assert(merged.toSeq == regsOf(a ++ b, 10).toSeq)
     // and the distributed aggregate agrees with the model
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val df = (a ++ b).toDF("x").repartition(8)
     val got = df.selectExpr("hll_sketch(x, 10) AS r")
       .selectExpr("r").as[Seq[Int]].head()
@@ -54,7 +54,7 @@ class HllSpec extends SparkSuite {
   }
 
   test("SQL surface: zip_with-merged day sketches match the total") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val day1 = (1L to 3000L).map(("d1", _))
     val day2 = (2000L to 6000L).map(("d2", _))
     (day1 ++ day2).toDF("day", "x").createOrReplaceTempView("hits")
@@ -74,10 +74,11 @@ class HllSpec extends SparkSuite {
   }
 
   test("serialization roundtrip and null handling") {
-    val agg = HllSketch(org.apache.spark.sql.catalyst.expressions.Literal(1L), 8)
+    val agg = SketchAggregate.partial(HllKind(8),
+      org.apache.spark.sql.catalyst.expressions.Literal(1L))
     val buf = regsOf((1L to 500L).toSeq, 8)
     assert(agg.deserialize(agg.serialize(buf)).toSeq == buf.toSeq)
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val withNulls = Seq[Option[Long]](Some(1L), None, Some(2L), None)
       .toDF("x")
     val got = withNulls.selectExpr("hll_sketch(x, 8) AS r")
@@ -86,7 +87,7 @@ class HllSpec extends SparkSuite {
   }
 
   test("precision out of range is rejected at construction") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT hll_sketch(x, 2) FROM VALUES (1L) t(x)").collect()
     }
@@ -95,7 +96,7 @@ class HllSpec extends SparkSuite {
 
   test("string keys are hashed, not null-cast away: the estimate " +
       "tracks the true distinct count and differs per value") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val n = 5000
     val df = (1 to n).map(i => s"user-$i").toDF("name")
     val est = df.selectExpr("hll_estimate(hll_sketch(name, 10)) AS e")
@@ -137,7 +138,7 @@ class HllSpec extends SparkSuite {
 
   test("hll_merge aggregate: merges register rows by elementwise max, " +
       "skips nulls, rejects mixed widths") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val a = (1L to 3000L).toSeq
     val b = (2000L to 7000L).toSeq
     val parts = Seq(regsOf(a, 8).toSeq, regsOf(b, 8).toSeq)

@@ -45,7 +45,7 @@ class KmvSpec extends SparkSuite {
     val merged = Kmv.mergeArrays(sketchOf(a, 256), sketchOf(b, 256), 256)
     assert(merged.toSeq == sketchOf(a ++ b, 256).toSeq)
     // and the distributed aggregate agrees with the model
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val got = (a ++ b).toDF("x").repartition(8)
       .selectExpr("kmv_sketch(x, 256) AS s")
       .as[Seq[Long]].head()
@@ -69,7 +69,7 @@ class KmvSpec extends SparkSuite {
   }
 
   test("SQL surface: merge of day sketches, string keys, null keys") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val day1 = (1L to 300L).map(x => ("d1", s"user$x"))
     val day2 = (200L to 500L).map(x => ("d2", s"user$x"))
     (day1 ++ day2).toDF("day", "u").createOrReplaceTempView("kv_hits")
@@ -89,7 +89,7 @@ class KmvSpec extends SparkSuite {
 
   test("rollup carries kmv columns; compact fold preserves overlap reads") {
     import graft.plans.SummaryRewrite
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val dir = java.nio.file.Files
       .createTempDirectory("kmv_mv").toString
     val base = s"$dir/base"

@@ -57,7 +57,7 @@ class PrioritySampleSpec extends SparkSuite {
 
   test("null and non-positive weights are excluded; SQL surface " +
       "agrees with the DataFrame helper") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val d = Seq((1L, Option(10L)), (2L, Option(0L)), (3L, Option(-5L)),
       (4L, Option.empty[Long]), (5L, Option(10L)))
       .toDF("id", "w")

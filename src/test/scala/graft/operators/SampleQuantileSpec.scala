@@ -77,7 +77,7 @@ class SampleQuantileSpec extends SparkSuite {
   }
 
   test("SQL surface: sketch -> merge -> quantile round-trips") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val df = (1L to 2000L).map(i => (i, (i % 100).toDouble))
       .toDF("id", "v")
     // unsaturated: quantile over the sketch == exact order statistic
@@ -105,7 +105,7 @@ class SampleQuantileSpec extends SparkSuite {
   }
 
   test("null ids and values are skipped; empty group yields null") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftSession.register(spark)
     val df = Seq[(java.lang.Long, java.lang.Double)](
       (1L, 1.0), (null, 2.0), (2L, null), (3L, 3.0))
       .toDF("id", "v")

@@ -125,8 +125,7 @@ class EmbedToIndexSpec extends SparkSuite {
       q.processAllAvailable(); q.stop()
     }
     def streamedIds(): Seq[Long] = {
-      val sd = s"$idx/_stream"
-      spark.read.option("basePath", sd).parquet(s"$sd/batch_id=*")
+      graft.util.IndexDir.scan(spark, s"$idx/_stream", "batch_id")
         .select($"id").as[Long].collect().toSeq
     }
 
