@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,12 +15,18 @@ import org.apache.spark.sql.functions._
   * dense search). Document frequencies are persisted as a `_stats`
   * sidecar (≤ vocab rows) next to a one-row `_meta`, so reopening the
   * index needs no corpus scan and scoring needs no full-posting df
-  * recount.
+  * recount. Every in-place rewrite — [[compact]] of the directory,
+  * [[append]]'s refresh of each sidecar — publishes through
+  * [[graft.util.DirSwap.replace]].
   */
 object SparseIndex {
 
   case class Model(path: String, postings: DataFrame, stats: DataFrame,
       nDocs: Long, vocab: Int, nBuckets: Int)
+
+  // append swaps each in place, compact copies or recomputes both, load
+  // heals both
+  private val Sidecars = Seq("_stats", "_meta")
 
   /** One aggregation job over a posting set that returns BOTH sidecar
     * facts: per-term document frequencies (rollup leaf rows) and the
@@ -106,8 +113,9 @@ object SparseIndex {
     *
     * The df sidecar and meta are refreshed from the BATCH alone
     * (batch df summed into the persisted sidecar, batch doc count
-    * added to n_docs) — never a full posting rescan — and published
-    * with [[graft.util.DirSwap]]'s crash-safe two-rename swap.
+    * added to n_docs) — never a full posting rescan — and each is
+    * published through [[graft.util.DirSwap.replace]]'s crash-safe
+    * two-rename swap, which [[load]] heals.
     *
     * Contract: arriving `idCol` values must be NEW document ids
     * (appending an existing id duplicates its postings, exactly as in
@@ -127,36 +135,25 @@ object SparseIndex {
         .repartition(col("bucket"))
         .write.partitionBy("bucket").mode("append")
         .parquet(model.path)
-      val fs = new org.apache.hadoop.fs.Path(model.path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = new Path(model.path).getFileSystem(conf)
       // sidecar refresh from the batch alone: df_new = df_old + df_batch
       // and n_docs_new = n_docs_old + batch doc count, both facts from
       // ONE vocab-bounded aggregation over the batch postings; the old
       // df sidecar is itself vocab-bounded, so the merge is a
       // driver-local sum — no posting rescan, no second shuffle
       val (batchDf, newDocs) = dfAndDocCount(post)
-      val statsLive = new org.apache.hadoop.fs.Path(s"${model.path}/_stats")
-      graft.util.DirSwap.recover(fs, statsLive)
-      graft.util.DirSwap.clearSiblings(fs, statsLive)
-      val oldDf = model.stats.collect()
-        .map(r => (r.getInt(0), r.getLong(1)))
-      val merged = (oldDf ++ batchDf).groupBy(_._1)
-        .map { case (idx, xs) => (idx, xs.map(_._2).sum) }
-        .toSeq.sortBy(_._1)
-      writeStats(spark, merged,
-        graft.util.DirSwap.rebuildPath(statsLive.toString))
-      graft.util.DirSwap.publish(fs, statsLive)
-      val metaLive = new org.apache.hadoop.fs.Path(s"${model.path}/_meta")
-      graft.util.DirSwap.recover(fs, metaLive)
-      graft.util.DirSwap.clearSiblings(fs, metaLive)
-      locally {
-        import spark.implicits._
-        Seq((model.nDocs + newDocs, model.vocab, model.nBuckets))
-          .toDF("n_docs", "vocab", "n_buckets")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(graft.util.DirSwap.rebuildPath(metaLive.toString))
+      graft.util.DirSwap.replace(fs, new Path(model.path, "_stats")) { fresh =>
+        val oldDf = model.stats.collect()
+          .map(r => (r.getInt(0), r.getLong(1)))
+        val merged = (oldDf ++ batchDf).groupBy(_._1)
+          .map { case (idx, xs) => (idx, xs.map(_._2).sum) }
+          .toSeq.sortBy(_._1)
+        writeStats(spark, merged, fresh)
       }
-      graft.util.DirSwap.publish(fs, metaLive)
+      graft.util.DirSwap.replace(fs, new Path(model.path, "_meta"))(fresh =>
+        graft.util.SidecarIO.writeSparseMeta(conf, fresh,
+          model.nDocs + newDocs, model.vocab, model.nBuckets))
     } finally post.unpersist()
     buildMemo.invalidate(_.path == model.path)
     spark.catalog.refreshByPath(model.path)
@@ -205,8 +202,7 @@ object SparseIndex {
       if (!purged)
         // pure data move: df and n_docs are properties of the posting
         // set — sidecars travel unchanged
-        graft.util.IndexDir.copySidecars(spark, indexDir, fresh,
-          Seq("_stats", "_meta"))
+        graft.util.IndexDir.copySidecars(spark, indexDir, fresh, Sidecars)
       else {
         // the purge changed the posting set: RECOMPUTE df and n_docs
         // from the surviving postings (idf heals here — the Lucene
@@ -225,12 +221,17 @@ object SparseIndex {
 
   /** Reopen a built artifact: postings off the bucket-partitioned
     * parquet, df sidecar, meta. No corpus, no recount. Heals an
-    * interrupted compaction swap first.
+    * interrupted compaction swap first, then an interrupted sidecar
+    * swap of [[append]].
     */
   def load(spark: SparkSession, indexDir: String): Model = {
     graft.util.IndexDir.open(spark, indexDir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(indexDir).getFileSystem(conf)
+    Sidecars.foreach(n =>
+      graft.util.DirSwap.recover(fs, new Path(indexDir, n)))
     val (nDocs, vocab, nBuckets) = graft.util.SidecarIO.readSparseMeta(
-      spark.sessionState.newHadoopConf(), s"$indexDir/_meta")
+      conf, s"$indexDir/_meta")
     Model(indexDir, graft.util.IndexDir.live(spark, indexDir, "bucket"),
       spark.read.parquet(s"$indexDir/_stats"),
       nDocs, vocab, nBuckets)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -68,24 +66,10 @@ case class VectorAvg(
     else new GenericArrayData(
       buf.sums.map(s => (s / buf.count).toFloat))
 
-  override def serialize(buf: VecSumBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    if (buf.sums == null) out.writeInt(-1)
-    else {
-      out.writeInt(buf.sums.length)
-      buf.sums.foreach(out.writeDouble)
-    }
-    out.writeLong(buf.count)
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): VecSumBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val sums = if (n < 0) null else Array.fill(n)(in.readDouble())
-    new VecSumBuffer(sums, in.readLong())
-  }
+  override def serialize(buf: VecSumBuffer): Array[Byte] =
+    VecSumKind.toBytes(buf)
+  override def deserialize(bytes: Array[Byte]): VecSumBuffer =
+    VecSumKind.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): VectorAvg =
     copy(mutableAggBufferOffset = o)

@@ -130,26 +130,24 @@ object IndexedKnn {
     * the artifact's existing cell count), atomically swap the durable
     * directory, and re-register. The build lands in a sibling
     * `.rebuild` dir first, so a crash mid-build leaves the live index
-    * untouched; the swap is two FileSystem renames.
+    * untouched; [[graft.util.DirSwap.replace]] heals an interrupted
+    * swap first and publishes with two FileSystem renames.
     */
   def reindex(spark: SparkSession, name: String,
       maxIter: Int = 5): IndexInfo = {
     val (path, e) = entryFor(name)
-    graft.util.IndexDir.open(spark, e.indexDir) // heal an interrupted swap
     val corpus = spark.read.parquet(path)
     val old = model(spark, e)
     val nCells = old.centroids.length
     val live = new org.apache.hadoop.fs.Path(e.indexDir)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.util.DirSwap.clearSiblings(fs, live)
-    val rebuildDir = graft.util.DirSwap.rebuildPath(e.indexDir)
     // a quantized artifact must rebuild AS its kind, or every search
     // after the reindex silently loses the quantized path; an SQ8
     // scalar model refits on the current corpus like the centroids
-    IvfIndex.build(corpus, e.idCol, e.vecCol, nCells,
-      maxIter = maxIter, indexDir = Some(rebuildDir), force = true,
-      kind = IvfIndex.StorageKind.byName(old.kind.name))
-    graft.util.DirSwap.publish(fs, live)
+    graft.util.DirSwap.replace(fs, live)(fresh =>
+      IvfIndex.build(corpus, e.idCol, e.vecCol, nCells,
+        maxIter = maxIter, indexDir = Some(fresh), force = true,
+        kind = IvfIndex.StorageKind.byName(old.kind.name)))
     register(spark, path, e.indexDir, e.idCol, e.vecCol, e.nprobe, name,
       e.shortlist)
     IndexInfo(name, path, e.indexDir, e.idCol, e.vecCol, e.nprobe)

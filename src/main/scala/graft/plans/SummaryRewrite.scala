@@ -502,6 +502,9 @@ object SummaryRewrite {
     }
     val marker = new org.apache.hadoop.fs.Path(summaryDir, "_SUCCESS")
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    // heal a rollup compaction torn between its renames, so the rollup
+    // (and its retraction marker) is reopened, not rebuilt from the base
+    graft.util.DirSwap.recover(fs, marker.getParent)
     val key = qualify(spark, dataPath)
     if (refresh || !fs.exists(marker)) {
       // the rebuild's own aggregate matches this very rule (dims ⊆

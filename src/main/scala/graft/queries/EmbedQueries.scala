@@ -120,7 +120,7 @@ object EmbedQueries {
     // max/sum scoring. Scale shape: chunk explode → codegen embed →
     // two bounded aggregations; query vectors are literals.
     "q_maxsim_search" -> ((s, dir) => {
-      EmbeddingPipeline.register(s)
+      graft.GraftSession.register(s)
       Tables(s, dir, "documents").createOrReplaceTempView("documents")
       val chunks = s.sql(graft.operators.PipelineOps.chunkSql(
         graft.operators.TextAnalysis.SparkDialect))
@@ -144,7 +144,7 @@ object EmbedQueries {
 
     // F1 SQL surface: text_embedding(model, text) as a SQL function.
     "q_text_embedding_sql" -> ((s, dir) => {
-      EmbeddingPipeline.register(s)
+      graft.GraftSession.register(s)
       Tables(s, dir, "documents").createOrReplaceTempView("documents")
       s.sql("""SELECT doc_id,
               | round(vector_norm(text_embedding('hash/bow-64', text)), 4) AS nrm

@@ -38,12 +38,12 @@ import graft.util.DirSwap
   * column is an associative partial (that is what makes serve-time
   * merging correct), so the fold is sum-of-sums / min-of-mins /
   * register-max at dim-cardinality cost. The base table is never
-  * read (at 100 TB a base rescan is a full fact-table pass; the r9
-  * compact did exactly that while claiming to be cheap — the round-9
-  * judge's one scale-dishonesty finding). Published via the shared
-  * [[graft.util.DirSwap]] two-rename protocol, so a crash mid-swap
-  * heals on the next call. `SummaryRewrite.register(refresh = true)`
-  * remains the explicit full-rebuild ("retrain") path.
+  * read (at 100 TB a base rescan is a full fact-table pass; an
+  * earlier compact did exactly that while claiming to be cheap).
+  * Published through [[graft.util.DirSwap.replace]]'s two-rename
+  * protocol, so a crash mid-swap heals on the next call.
+  * `SummaryRewrite.register(refresh = true)` remains the explicit
+  * full-rebuild ("retrain") path.
   */
 object SummaryStream {
 
@@ -133,58 +133,57 @@ object SummaryStream {
   /** Fold all delta chunks back into a single chunk=-1 build by
     * re-aggregating the ROLLUP's rows with the serve-side combiners —
     * dim-cardinality cost, zero base-table I/O (the base may not even
-    * exist anymore; the spec pins both). Crash-safe via [[DirSwap]]:
-    * the folded build lands in `summaryDir.rebuild` and is published
-    * over the live dir with the two-rename protocol, healing any
-    * previously interrupted swap first.
+    * exist anymore; the spec pins both). Crash-safe via
+    * [[DirSwap.replace]]: the folded build and a retraction marker land
+    * in `summaryDir.rebuild`, which is published over the live dir with
+    * the two-rename protocol, healing any previously interrupted swap
+    * first.
     */
   def compact(spark: SparkSession, summaryDir: String,
       dims: Seq[String]): Unit = {
     val live = new Path(summaryDir)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    DirSwap.recover(fs, live)
-    DirSwap.clearSiblings(fs, live)
-    spark.catalog.refreshByPath(summaryDir)
-    val roll = spark.read.parquet(summaryDir)
-    val schema = roll.schema
-    def typed(name: String, c: Column): Column =
-      c.cast(schema(name).dataType).as(name)
-    // dims (the group keys) and the chunk partition column must never
-    // fall into the prefix dispatch — a dim NAMED like a derived
-    // column (register refuses new ones, but an old artifact might
-    // carry one) would otherwise be aggregated AND grouped
-    val dimSet = dims.toSet + "chunk"
-    val aggs: Seq[Column] = schema.fieldNames.toSeq
-      .filterNot(dimSet.contains).map {
-      case "cnt" => typed("cnt", sum(col("cnt")))
-      case n if SummaryRewrite.isSumPartial(n) => typed(n, sum(col(n)))
-      case n if n.startsWith("mn_") => typed(n, min(col(n)))
-      case n if n.startsWith("mx_") => typed(n, max(col(n)))
-      case n => SummaryRewrite.Sketch.parse(n) match {
-        case Some(sk) => GraftShims.column(sk.merge(
-          GraftShims.expression(col(n))).toAggregateExpression()).as(n)
-        case None => throw new IllegalArgumentException(
-          s"rollup column '$n' at $summaryDir is not a dim, a measure " +
-            "partial or a sketch kind: no combiner folds it")
+    DirSwap.replace(fs, live) { fresh =>
+      spark.catalog.refreshByPath(summaryDir)
+      val roll = spark.read.parquet(summaryDir)
+      val schema = roll.schema
+      def typed(name: String, c: Column): Column =
+        c.cast(schema(name).dataType).as(name)
+      // dims (the group keys) and the chunk partition column must never
+      // fall into the prefix dispatch — a dim NAMED like a derived
+      // column (register refuses new ones, but an old artifact might
+      // carry one) would otherwise be aggregated AND grouped
+      val dimSet = dims.toSet + "chunk"
+      val aggs: Seq[Column] = schema.fieldNames.toSeq
+        .filterNot(dimSet.contains).map {
+        case "cnt" => typed("cnt", sum(col("cnt")))
+        case n if SummaryRewrite.isSumPartial(n) => typed(n, sum(col(n)))
+        case n if n.startsWith("mn_") => typed(n, min(col(n)))
+        case n if n.startsWith("mx_") => typed(n, max(col(n)))
+        case n => SummaryRewrite.Sketch.parse(n) match {
+          case Some(sk) => GraftShims.column(sk.merge(
+            GraftShims.expression(col(n))).toAggregateExpression()).as(n)
+          case None => throw new IllegalArgumentException(
+            s"rollup column '$n' at $summaryDir is not a dim, a measure " +
+              "partial or a sketch kind: no combiner folds it")
+        }
       }
+      require(aggs.nonEmpty, s"$summaryDir does not look like a rollup")
+      roll.groupBy(dims.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumn("chunk", lit(-1L))
+        .coalesce(1)
+        .write.mode("overwrite").partitionBy("chunk")
+        .parquet(fresh)
+      // retraction restriction survives compaction: the folded mn_/mx_
+      // still include deleted rows' extremes (min over chunk minima
+      // skips the retraction chunks' nulls), so only a refresh rebuild
+      // from the post-delete base may clear the marker. It is written
+      // into the rebuild, so the publish makes it visible with the fold.
+      val marker = SummaryRewrite.RetractedMarker
+      if (fs.exists(new Path(live, marker)))
+        fs.create(new Path(fresh, marker), true).close()
     }
-    require(aggs.nonEmpty, s"$summaryDir does not look like a rollup")
-    roll.groupBy(dims.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("chunk", lit(-1L))
-      .coalesce(1)
-      .write.mode("overwrite").partitionBy("chunk")
-      .parquet(DirSwap.rebuildPath(summaryDir))
-    // retraction restriction survives compaction: the folded mn_/mx_
-    // still include deleted rows' extremes (min over chunk minima
-    // skips the retraction chunks' nulls), so only a refresh rebuild
-    // from the post-delete base may clear the marker
-    val wasRetracted = fs.exists(
-      new Path(summaryDir, SummaryRewrite.RetractedMarker))
-    DirSwap.publish(fs, live)
-    if (wasRetracted)
-      fs.create(new Path(summaryDir, SummaryRewrite.RetractedMarker),
-        true).close()
     spark.catalog.refreshByPath(summaryDir)
   }
 

@@ -4,11 +4,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Crash-safe publication of a rebuilt directory artifact over a live
   * one via two renames, plus the recovery that heals an interrupted
-  * swap. Its users are index compaction ([[IndexDir.compact]], for the
-  * IVF and sparse indexes) and index reindex
-  * (`graft.plans.IndexedKnn.reindex`): both rebuild a durable directory
-  * in a `.rebuild` sibling and then publish it. The summary rebuild and
-  * the sparse index's sidecar refresh swap the same way.
+  * swap. [[replace]] is the one protocol: every rebuild that swaps a
+  * durable directory goes through it. Its callers are index compaction
+  * ([[IndexDir.compact]], for the IVF and sparse indexes), index
+  * reindex (`graft.plans.IndexedKnn.reindex`), the sparse index's
+  * `_stats` and `_meta` refresh (`graft.operators.SparseIndex.append`)
+  * and the rollup compaction (`graft.streaming.SummaryStream.compact`).
+  * Readers that open one of these directories call [[recover]] first.
   *
   * Protocol: `live` -> `live.old` (rename #1), `live.rebuild` -> `live`
   * (rename #2), delete `live.old`. A crash before rename #1 leaves the
@@ -22,24 +24,23 @@ object DirSwap {
   def rebuildPath(live: String): String = live + ".rebuild"
   def oldPath(live: String): String = live + ".old"
 
-  /** Delete leftover `.rebuild`/`.old` siblings so a fresh rebuild can
-    * start from a clean slate. Call AFTER [[recover]], never before —
-    * an un-healed `.old` is the only surviving copy of the index.
+  /** Rebuild `live` and publish the result: heal an interrupted swap,
+    * delete leftover `.rebuild`/`.old` siblings, call `build` with the
+    * `.rebuild` path, then publish it over `live`. Returns what `build`
+    * returned. If `build` throws, nothing is published.
     */
-  def clearSiblings(fs: FileSystem, live: Path): Unit = {
-    fs.delete(new Path(rebuildPath(live.toString)), true)
-    fs.delete(new Path(oldPath(live.toString)), true)
-  }
-
-  /** Publish `live.rebuild` over `live`. Throws if either rename is
-    * refused; a crash inside this window is healed by [[recover]].
-    */
-  def publish(fs: FileSystem, live: Path): Unit = {
+  private[graft] def replace[T](fs: FileSystem, live: Path)(
+      build: String => T): T = {
     val fresh = new Path(rebuildPath(live.toString))
     val old = new Path(oldPath(live.toString))
+    recover(fs, live) // before the clear: an un-healed .old is the only copy
+    fs.delete(fresh, true)
+    fs.delete(old, true)
+    val out = build(fresh.toString)
     if (!fs.rename(live, old) || !fs.rename(fresh, live))
       throw new java.io.IOException(s"directory swap failed for $live")
     fs.delete(old, true)
+    out
   }
 
   /** Heal a swap interrupted between its two renames: if the live dir

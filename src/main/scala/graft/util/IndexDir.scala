@@ -26,7 +26,7 @@ final case class CompactionStats(partitions: Int, filesBefore: Int,
   *    through [[compact]]'s hook.
   *
   * Compaction rebuilds the directory in a `.rebuild` sibling and
-  * publishes it with [[DirSwap]]; [[open]] heals a swap interrupted
+  * publishes it with [[DirSwap.replace]]; [[open]] heals a swap interrupted
   * between its two renames.
   */
 private[graft] object IndexDir {
@@ -181,16 +181,13 @@ private[graft] object IndexDir {
       sidecars: (String, Boolean) => Unit): CompactionStats = {
     val root = new Path(path)
     val fs = fsOf(spark, path)
-    DirSwap.recover(fs, root)
-    DirSwap.clearSiblings(fs, root)
-    spark.catalog.refreshByPath(path)
-    val before = dataFiles(fs, root, partCol)
-    val purged = hasTombstones(spark, path)
-    val fresh = DirSwap.rebuildPath(path)
-    rewrite(live(spark, path, partCol), partCol, idCol, targetFiles, fresh,
-      SaveMode.Overwrite)
-    sidecars(fresh, purged)
-    DirSwap.publish(fs, root)
+    val before = DirSwap.replace(fs, root) { fresh =>
+      spark.catalog.refreshByPath(path)
+      rewrite(live(spark, path, partCol), partCol, idCol, targetFiles,
+        fresh, SaveMode.Overwrite)
+      sidecars(fresh, hasTombstones(spark, path))
+      dataFiles(fs, root, partCol) // the live files: untouched until publish
+    }
     spark.catalog.refreshByPath(path)
     val after = dataFiles(fs, root, partCol)
     CompactionStats(after.map(_.getParent.getName).distinct.size,

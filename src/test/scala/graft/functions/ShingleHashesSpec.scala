@@ -84,7 +84,7 @@ class ShingleHashesSpec extends SparkSuite {
 
   test("SQL registration works") {
     import spark.implicits._
-    TextFunctions.register(spark)
+    graft.GraftSession.register(spark)
     Seq("a b c d").toDF("t").createOrReplaceTempView("sh_t")
     val r = spark.sql("SELECT shingle_hashes(t) AS hs FROM sh_t")
       .collect()(0).getSeq[Long](0)

@@ -106,7 +106,7 @@ class WinnowSpec extends SparkSuite {
   }
 
   test("shorter than one window yields no fingerprints; SQL registration") {
-    TextFunctions.register(spark)
+    graft.GraftSession.register(spark)
     Seq("a b c d e").toDF("t").createOrReplaceTempView("wn_t")
     // 3 grams < w=4 -> empty
     val r = spark.sql(

@@ -148,6 +148,36 @@ class SparseIndexSpec extends SparkSuite {
       .as[(Long, Long)].collect().toSeq === before)
   }
 
+  test("load heals a sidecar swap of append torn between its two " +
+      "renames: _stats and _meta come back, search is unchanged") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_sparse_side").toString + "/idx"
+    val corpus = docs.where($"doc_id" < 200)
+    val base = SparseIndex.build(corpus.where($"doc_id" % 2 === 0),
+      "doc_id", "text", dir, nBuckets = 8)
+    val m = SparseIndex.append(base, corpus.where($"doc_id" % 2 =!= 0),
+      "doc_id", "text")
+    val words = Seq("table", "scan", "fast")
+    val before = SparseIndex.search(m, words, 15)
+      .as[(Long, Long)].collect().toSeq
+    for (name <- Seq("_stats", "_meta")) {
+      // the torn state: the sidecar renamed away, its refresh not yet
+      // published
+      val live = new java.io.File(s"$dir/$name")
+      val old = new java.io.File(graft.util.DirSwap.oldPath(live.getPath))
+      val fresh = new java.io.File(
+        graft.util.DirSwap.rebuildPath(live.getPath))
+      assert(live.renameTo(old))
+      assert(fresh.mkdirs()) // half-written refresh, must be discarded
+      spark.catalog.refreshByPath(dir)
+      val healed = SparseIndex.load(spark, dir)
+      assert(live.exists() && !old.exists() && !fresh.exists(), name)
+      assert(healed.nDocs === m.nDocs, name)
+      assert(SparseIndex.search(healed, words, 15)
+        .as[(Long, Long)].collect().toSeq === before, name)
+    }
+  }
+
   test("build validates nBuckets and the meta round-trips") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sparse_idx2").toString + "/idx"

@@ -144,6 +144,57 @@ class SummaryDeleteSpec extends SparkSuite {
       .orderBy($"flag").collect().toSeq)
   }
 
+  test("a compaction that fails to write the retraction marker " +
+      "publishes nothing: the restriction stands") {
+    allRows.write.mode("overwrite").parquet(baseDir)
+    register(refresh = true)
+    graft.streaming.SummaryStream.retract(spark, baseDir, sumDir,
+      doomed(allRows), Seq("flag"), Seq("k", "v"), chunk = -2L)
+    survivors(allRows).write.mode("overwrite").parquet(baseDir)
+    spark.catalog.refreshByPath(baseDir)
+
+    // a session whose local filesystem refuses to create the marker
+    val refusing = spark.newSession()
+    refusing.conf.set("fs.file.impl", classOf[RefuseMarkerFs].getName)
+    refusing.conf.set("fs.file.impl.disable.cache", "true")
+    intercept[java.io.IOException] {
+      graft.streaming.SummaryStream.compact(refusing, sumDir, Seq("flag"))
+    }
+    spark.catalog.refreshByPath(sumDir)
+    register(refresh = false) // re-register; marker must survive
+    assert(scanPaths(minQuery).exists(_.contains(baseDir)),
+      "a failed compaction must not drop the retraction restriction")
+    assert(sumQuery.collect().toSeq == truth(survivors(allRows)))
+
+    // a retry on a working filesystem compacts and keeps the marker
+    graft.streaming.SummaryStream.compact(spark, sumDir, Seq("flag"))
+    register(refresh = false)
+    assert(scanPaths(minQuery).exists(_.contains(baseDir)))
+    assert(sumQuery.collect().toSeq == truth(survivors(allRows)))
+  }
+
+  test("register heals a compaction torn between its two renames: the " +
+      "retracted rollup is reopened, not rebuilt from the base") {
+    allRows.write.mode("overwrite").parquet(baseDir)
+    register(refresh = true)
+    graft.streaming.SummaryStream.retract(spark, baseDir, sumDir,
+      doomed(allRows), Seq("flag"), Seq("k", "v"), chunk = -2L)
+    survivors(allRows).write.mode("overwrite").parquet(baseDir)
+    spark.catalog.refreshByPath(baseDir)
+    // the torn state: live renamed away, the fold not yet published
+    val live = new java.io.File(sumDir)
+    val old = new java.io.File(graft.util.DirSwap.oldPath(sumDir))
+    val fresh = new java.io.File(graft.util.DirSwap.rebuildPath(sumDir))
+    assert(live.renameTo(old))
+    assert(fresh.mkdirs())
+    spark.catalog.refreshByPath(sumDir)
+    register(refresh = false)
+    assert(live.exists() && !old.exists() && !fresh.exists())
+    assert(scanPaths(minQuery).exists(_.contains(baseDir)),
+      "the healed rollup keeps its retraction restriction")
+    assert(sumQuery.collect().toSeq == truth(survivors(allRows)))
+  }
+
   test("deleteChunk subtracts a whole ingest batch exactly — min/max " +
       "and the sample sketch keep serving") {
     val batch0 = allRows.where($"k" <= 20)
@@ -184,4 +235,19 @@ class SummaryDeleteSpec extends SparkSuite {
         doomed(allRows), Seq("flag"), Seq("k", "v"), chunk = 3L)
     }
   }
+}
+
+/** The local filesystem, except that it refuses to create the rollup's
+  * retraction marker: stands in for a write that fails at that step.
+  */
+class RefuseMarkerFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def create(f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream =
+    if (f.getName == SummaryRewrite.RetractedMarker)
+      throw new java.io.IOException(s"refused to create $f")
+    else super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
 }
